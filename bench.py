@@ -79,8 +79,8 @@ def _dbg(msg: str) -> None:
 # ann1m fixture). ARROW: a fixed-work warm mapInPandas pass (4M rows,
 # 2*CPUS partitions, one pandas multiply per batch) through the Python
 # workers — the JVM sum cannot see Python-worker/Arrow-path degradation,
-# which is exactly what the PIP refine and every pandas-UDF query
-# exercise (round-3 verdict: an 11 s pip_join recorded under a clean
+# which is exactly what every pandas-UDF query exercises (round-3
+# verdict: an 11 s pip_join recorded under a clean
 # D=1.0 JVM probe). D = max of the three ratios; mid-run collapses
 # remain possible and are handled by the dynamic re-checks.
 PROBE_REF_1T = 0.4

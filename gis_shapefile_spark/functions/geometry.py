@@ -15,10 +15,12 @@ per row): flattened vertex arrays + ring-size offsets —
 ``xs: array<double>, ys: array<double>, ring_sizes: array<int>`` — which map
 1:1 onto Arrow ListArrays, so pandas_udf batches see contiguous buffers.
 
-The PIP kernel is the *refine* phase of the cell-join (coarse phase =
-cell equi-join planned by Catalyst); it vectorizes across the whole Arrow
-batch: one flat edge table for all (point, polygon) candidate rows, one
-``np.add.reduceat``-free bincount per ring — no per-row Python loops.
+The numpy PIP kernel (``polygon_contains_points``) classifies cells and
+sub-cells when the polygon index is built, and is the oracle of the tests;
+it evaluates one (points x edges) crossing matrix per ring — no per-row
+Python loops. The join's exact refine runs in the JVM:
+``polygon_contains_sql`` is the same ray-cast as a Spark SQL
+higher-order-function expression.
 """
 
 from __future__ import annotations
@@ -72,71 +74,35 @@ def _ring_crossings(px_e, py_e, x1, y1, x2, y2) -> np.ndarray:
     return straddles & (px_e < xint)
 
 
-def points_in_rings(
-    px: np.ndarray,
-    py: np.ndarray,
-    flat_xs: np.ndarray,
-    flat_ys: np.ndarray,
-    ring_sizes: np.ndarray,
-    ring_row: np.ndarray,
-    ring_is_shell: np.ndarray,
-) -> np.ndarray:
-    """Batch PIP over heterogeneous candidate rows.
+def ring_crossing_sql(px: str, py: str, e: str) -> str:
+    """Spark SQL twin of ``_ring_crossings`` for one edge struct ``e``
+    with fields ``x1, y1`` (vertex i) and ``x2, y2`` (the previous vertex).
 
-    Inputs describe R rows (point, polygon candidate) whose rings were
-    flattened into one global vertex buffer:
-
-    * ``px, py``          — (R,) point coords per row
-    * ``flat_xs/flat_ys`` — all vertices of all rings of all rows, concat'd
-    * ``ring_sizes``      — (G,) vertex count per ring (global ring order)
-    * ``ring_row``        — (G,) owning row index of each ring
-    * ``ring_is_shell``   — (G,) True for ring 0 of its row (positional role)
-
-    Returns (R,) bool: inside shell AND inside no hole (geometry.cpp:106-118).
+    The intersection is the numpy arithmetic token for token, so both
+    engines round identically. The division runs only when the edge
+    straddles ``py`` (ANSI mode raises on a zero divisor, and a
+    non-straddling edge is never a crossing).
     """
-    R = px.shape[0]
-    G = ring_sizes.shape[0]
-    if G == 0 or flat_xs.size == 0:
-        return np.zeros(R, dtype=bool)
+    return (
+        f"(CASE WHEN ({e}.y1 > {py}) != ({e}.y2 > {py}) "
+        f"THEN {px} < ({e}.x2 - {e}.x1) * ({py} - {e}.y1) / ({e}.y2 - {e}.y1) + {e}.x1 "
+        f"ELSE false END)"
+    )
 
-    ring_sizes = ring_sizes.astype(np.int64)
-    starts = np.zeros(G, dtype=np.int64)
-    np.cumsum(ring_sizes[:-1], out=starts[1:])
 
-    # Edge i of a ring connects vertex i (pi) to the previous vertex (pj),
-    # wrapping so vertex 0 pairs with the last — mirrors j=size-1 init at
-    # geometry.cpp:89-101. One edge per vertex.
-    n_vert = int(flat_xs.size)
-    vert_ring = np.repeat(np.arange(G, dtype=np.int64), ring_sizes)
+def polygon_contains_sql(px: str, py: str, shell: str, holes: str) -> str:
+    """Spark SQL ray-cast over edge-struct arrays: inside ``shell`` (ring 0)
+    AND inside none of ``holes`` (the later rings, one edge array each) —
+    ``polygon_contains_points`` semantics for any number of rings.
 
-    prev_idx = np.arange(n_vert, dtype=np.int64) - 1
-    ring_last = starts + ring_sizes - 1
-    prev_idx[starts] = ring_last  # wrap within each ring
+    Each ring's crossing parity folds with ``aggregate`` (JVM codegen, no
+    UDF). Callers may omit edges that cannot straddle ``py`` and rings
+    left with no edges: neither changes any parity.
+    """
+    def parity(ring: str) -> str:
+        return f"aggregate({ring}, false, (odd, e) -> odd != {ring_crossing_sql(px, py, 'e')})"
 
-    x1, y1 = flat_xs, flat_ys                      # pi
-    x2, y2 = flat_xs[prev_idx], flat_ys[prev_idx]  # pj
-
-    edge_row = ring_row[vert_ring]
-    crossings = _ring_crossings(px[edge_row], py[edge_row], x1, y1, x2, y2)
-
-    # odd number of crossings per ring => inside that ring
-    ring_cross = np.bincount(vert_ring, weights=crossings, minlength=G)
-    inside_ring = (ring_cross.astype(np.int64) & 1).astype(bool)
-
-    in_shell = np.zeros(R, dtype=bool)
-    shell_rows = ring_row[ring_is_shell]
-    # a row has exactly one shell (ring 0); scatter is safe
-    in_shell[shell_rows] = inside_ring[ring_is_shell]
-
-    in_hole = np.zeros(R, dtype=bool)
-    hole_mask = ~ring_is_shell
-    if hole_mask.any():
-        hole_hits = np.bincount(
-            ring_row[hole_mask], weights=inside_ring[hole_mask], minlength=R
-        )
-        in_hole = hole_hits > 0
-
-    return in_shell & ~in_hole
+    return f"({parity(shell)} AND NOT exists({holes}, h -> {parity('h')}))"
 
 
 def polygon_contains_points(

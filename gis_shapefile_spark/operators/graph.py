@@ -88,9 +88,11 @@ def shortest_paths(
 
 def reachable_counts(paths: DataFrame) -> DataFrame:
     """Rollup of a ``shortest_paths`` result: per root, how many nodes
-    are reachable inside the hop bound and the max/mean shortest
-    distance — the coverage statistic a dispatch/geofence planner reads
-    (integer-exact: sum/count/max over BIGINTs)."""
+    are reachable inside the hop bound, and the max and the sum of their
+    shortest distances (``max_dist_u``, ``sum_dist_u``; the mean is
+    ``sum_dist_u / n_reached``) — the coverage statistic a
+    dispatch/geofence planner reads (integer-exact: sum/count/max over
+    BIGINTs)."""
     return paths.groupBy("root").agg(
         F.count("*").cast("long").alias("n_reached"),
         F.max("dist_u").alias("max_dist_u"),

@@ -692,6 +692,15 @@ def _interp_xy_u_sql(a: str, b: str, target: str, cum0: str,
     )
 
 
+def _check_fracs(fracs: tuple[int, ...]) -> None:
+    """Fractions are distinct integer percents in (0, 100]; a float like
+    25.5 is rejected, never truncated."""
+    if not fracs or any(p != int(p) or not 0 < p <= 100 for p in fracs):
+        raise ValueError(f"fracs must be integer percents in (0, 100]: {fracs}")
+    if len(set(int(p) for p in fracs)) != len(fracs):
+        raise ValueError(f"fracs must be distinct: {fracs}")
+
+
 def line_interpolate(segments: DataFrame, fracs: tuple[int, ...]) -> DataFrame:
     """Locate the point at ``pct``% of each road's length, for each pct
     in ``fracs`` (integer percents — exactness by construction).
@@ -706,12 +715,11 @@ def line_interpolate(segments: DataFrame, fracs: tuple[int, ...]) -> DataFrame:
     (their interpolation would divide by zero) but still contribute
     their (zero) length to the walk.
 
-    Output: (road_id, pct, x_u, y_u), one row per road x fraction.
+    Output: (road_id, pct, x_u, y_u), one row per road x fraction. A road
+    whose segments are all zero-length (``total_u = 0``) has no segment
+    that can host a milepost and emits no rows.
     """
-    if not fracs or any(not 0 < int(p) <= 100 for p in fracs):
-        raise ValueError(f"fracs must be integer percents in (0, 100]: {fracs}")
-    if len(set(int(p) for p in fracs)) != len(fracs):
-        raise ValueError(f"fracs must be distinct: {fracs}")
+    _check_fracs(fracs)
     segs = segments.selectExpr(
         "road_id", "seg_id", "ax", "ay", "bx", "by",
         f"{seg_len_u_sql()} AS len_u",
@@ -754,10 +762,7 @@ def line_interpolate_oracle_sql(segment_values_sql: str,
     """DuckDB twin: identical length/target/interpolation text over the
     VALUES segment table; the window sums run over BIGINTs so engine
     window-evaluation order cannot matter."""
-    if not fracs or any(not 0 < int(p) <= 100 for p in fracs):
-        raise ValueError(f"fracs must be integer percents in (0, 100]: {fracs}")
-    if len(set(int(p) for p in fracs)) != len(fracs):
-        raise ValueError(f"fracs must be distinct: {fracs}")
+    _check_fracs(fracs)
     pcts = ", ".join(f"({int(p)})" for p in fracs)
     return f"""
         WITH segs AS MATERIALIZED (

@@ -290,10 +290,13 @@ def bloom_contains(
     0 = DEFINITELY not): the probe's k bit positions join the broadcast
     bit set; membership requires ALL k bits present. Never a false
     negative; false positives at the documented (1 - e^(-kn/m))^k
-    rate — the caller's exact verify join runs only on the passers."""
+    rate — the caller's exact verify join runs only on the passers.
+
+    The probe items are deduplicated before the explode, so an item that
+    repeats counts its k bit hits once, not once per row."""
     h = TA.hash60_sql(item_col, "spark")
     bits = ", ".join(bloom_bit_sql(h, j, m) for j in range(k))
-    ex = probes.selectExpr(
+    ex = probes.select(item_col).distinct().selectExpr(
         item_col, f"explode(array({bits})) AS bit"
     )
     hits = (

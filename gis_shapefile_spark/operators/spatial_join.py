@@ -10,29 +10,29 @@ Re-expresses the reference's R-tree query paths as Catalyst-planned joins
 
 Scale design (10^12-point table, dimension-scale polygon side):
 
-* The point side is NEVER exploded, NEVER touches Python except the PIP
-  refine on boundary-cell candidates; its cell key is a pure integer
-  expression inside whole-stage codegen.
+* The point side is NEVER exploded and NEVER touches Python; its cell key
+  is a pure integer expression inside whole-stage codegen.
 * All covering/cell enumeration happens on the polygon side (driver numpy —
   thousands of rows), which then broadcasts. When the dimension outgrows
   broadcast, ``salt_buckets > 0`` replicates dimension rows per salt bucket
   and keys points by ``pmod(xxhash64(point_id), S)`` so one hot urban cell
   spreads over S shuffle partitions (AQE skew-join is the backstop).
 * Cells fully interior to a polygon are classified FULL at prep time: points
-  landing there match with no exact test. Only boundary (PARTIAL) cells pay
-  the vectorized ray-cast, and polygon rings travel once per executor via a
-  Spark broadcast variable — not once per candidate row.
+  landing there match with no exact test. Each boundary (PARTIAL) cell
+  carries a FULL/PARTIAL/EMPTY classification of its 64 sub-cells at
+  res+3 and the ring edges of its y-band. A point keys at res+3 once: the
+  parent is the join cell, the low bits the sub-cell. Only a point in a
+  PARTIAL sub-cell runs the exact ray-cast — a Spark SQL ``aggregate``
+  over those few edges, in the same filter as the mask test. One scan,
+  one join, no Python.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..functions import cells as C
@@ -55,86 +55,150 @@ def _rings_of_row(row) -> tuple[list[np.ndarray], list[np.ndarray]]:
     return rx, ry
 
 
-def _cell_fully_inside(rx, ry, cminx, cminy, cmaxx, cmaxy) -> bool:
-    """Conservative FULL test: 4 corners inside AND no ring edge crosses the
-    cell bbox. Sound because a boundary entering the cell implies an edge
-    whose own bbox intersects the cell bbox."""
-    corners_x = np.array([cminx, cmaxx, cmaxx, cminx])
-    corners_y = np.array([cminy, cminy, cmaxy, cmaxy])
-    if not G.polygon_contains_points(rx, ry, corners_x, corners_y).all():
-        return False
-    for x, y in zip(rx, ry):
-        ex0 = np.minimum(x, np.roll(x, 1))
-        ex1 = np.maximum(x, np.roll(x, 1))
-        ey0 = np.minimum(y, np.roll(y, 1))
-        ey1 = np.maximum(y, np.roll(y, 1))
-        hit = (ex0 <= cmaxx) & (ex1 >= cminx) & (ey0 <= cmaxy) & (ey1 >= cminy)
-        if hit.any():
-            return False
-    return True
+SUB_LEVELS = 3  # sub-cells at res + 3: 8 x 8 = 64 per cell, one BIGINT mask each
+_N_SUB = 4 ** SUB_LEVELS
+_PAD = 1e-9  # degrees: boxes and bands widen by this, far above quantization error
+_BLOCK = 1 << 21  # elements per (edges x boxes) block in the prep kernels
+
+_EDGE = "struct<x1:double,y1:double,x2:double,y2:double>"
+DIM_DDL = (
+    "cell bigint, record_number bigint, full_mask bigint, part_mask bigint, "
+    f"shell array<{_EDGE}>, holes array<array<{_EDGE}>>"
+)
+_DIM_COLS = ["cell", "record_number", "is_full", "full_mask", "part_mask", "shell", "holes"]
+
+
+def _edge_table(rx, ry) -> dict[str, np.ndarray]:
+    """Every ring edge of one polygon: vertex i ``(x1, y1)``, the previous
+    vertex ``(x2, y2)`` (the ray-cast's pairing), and the owning ring."""
+    x1, y1 = np.concatenate(rx), np.concatenate(ry)
+    x2 = np.concatenate([np.roll(x, 1) for x in rx])
+    y2 = np.concatenate([np.roll(y, 1) for y in ry])
+    ring = np.repeat(np.arange(len(rx)), [len(x) for x in rx])
+    return {"ring": ring, "x1": x1, "y1": y1, "x2": x2, "y2": y2,
+            "ex0": np.minimum(x1, x2), "ex1": np.maximum(x1, x2),
+            "ey0": np.minimum(y1, y2), "ey1": np.maximum(y1, y2)}
+
+
+def _classify_boxes(rx, ry, edges, x0, y0, x1, y1) -> tuple[np.ndarray, np.ndarray]:
+    """(full, keep) for closed boxes.
+
+    FULL: all four corners inside and no ring-edge bbox overlapping the
+    box. Kept: FULL, or a corner inside, or an overlapping edge; the rest
+    is EMPTY. Sound because a boundary entering a box implies an edge whose
+    own bbox meets it, so a box no edge bbox meets is wholly inside or
+    wholly outside. The overlap test widens each box by ``_PAD``: that
+    covers a point which quantizes into a box while lying an ulp outside
+    it, and keeps every tested corner ``_PAD`` away from any edge. Only
+    boxes no edge enters test their corners.
+    """
+    n = len(x0)
+    hit = np.zeros(n, dtype=bool)
+    step = max(1, _BLOCK // max(len(edges["ex0"]), 1))
+    ex0, ex1 = edges["ex0"][:, None], edges["ex1"][:, None]
+    ey0, ey1 = edges["ey0"][:, None], edges["ey1"][:, None]
+    for i in range(0, n, step):
+        b = slice(i, i + step)
+        hit[b] = ((ex0 <= x1[None, b] + _PAD) & (ex1 >= x0[None, b] - _PAD)
+                  & (ey0 <= y1[None, b] + _PAD) & (ey1 >= y0[None, b] - _PAD)).any(axis=0)
+    idx = np.flatnonzero(~hit)
+    cx = np.concatenate([x0[idx], x1[idx], x1[idx], x0[idx]])
+    cy = np.concatenate([y0[idx], y0[idx], y1[idx], y1[idx]])
+    corner_in = np.zeros(len(cx), dtype=bool)
+    for i in range(0, len(cx), step):
+        b = slice(i, i + step)
+        corner_in[b] = G.polygon_contains_points(rx, ry, cx[b], cy[b])
+    corner_in = corner_in.reshape(4, len(idx))
+    full = np.zeros(n, dtype=bool)
+    full[idx] = corner_in.all(axis=0)
+    keep = hit.copy()
+    keep[idx] = corner_in.any(axis=0)
+    return full, keep
+
+
+def _sub_masks(rx, ry, edges, cells: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray]:
+    """(full_mask, part_mask) of each cell: bit ``s`` is set when sub-cell
+    ``s`` — the low 6 bits of the point's res+3 morton key — is FULL,
+    resp. PARTIAL. EMPTY sub-cells set neither bit."""
+    sub = np.arange(_N_SUB, dtype=np.int64)
+    morton = (cells & C.MORTON_MASK)[:, None] << (2 * SUB_LEVELS)
+    fine = ((res + SUB_LEVELS) << C.RES_SHIFT) | morton | sub[None, :]
+    full, keep = _classify_boxes(rx, ry, edges, *C.cell_bounds(fine.ravel()))
+    bits = np.uint64(1) << sub.astype(np.uint64)
+
+    def mask(flags: np.ndarray) -> np.ndarray:
+        return (flags.reshape(-1, _N_SUB) * bits).sum(axis=1, dtype=np.uint64).view(np.int64)
+
+    return mask(full), mask(keep & ~full)
+
+
+def _band_edges(edges, y0: float, y1: float) -> tuple[list, list]:
+    """(shell, holes) edge lists whose y-span meets the widened band
+    ``[y0, y1]``. Exact for any point in the band: an edge whose y-span
+    misses it cannot straddle the point's y. Holes with no edge in the
+    band are dropped (their parity is even)."""
+    band = (edges["ey0"] <= y1 + _PAD) & (edges["ey1"] >= y0 - _PAD)
+    rows = np.stack([edges[k][band] for k in ("x1", "y1", "x2", "y2")], axis=1).tolist()
+    rings = edges["ring"][band]
+    per_ring: dict[int, list] = {}
+    for r, e in zip(rings.tolist(), rows):
+        per_ring.setdefault(r, []).append(tuple(e))
+    return per_ring.pop(0, []), [per_ring[r] for r in sorted(per_ring)]
 
 
 def prepare_polygon_cells(
     features_pdf: pd.DataFrame, res: int = DEFAULT_RES
 ) -> pd.DataFrame:
-    """Explode each polygon into covering cells at ``res`` with a FULL flag.
+    """Explode each polygon into covering cells at ``res``: the join dimension.
 
-    Returns a pandas frame ``(cell, record_number, is_full)`` — the join
-    dimension. Covering = every cell whose extent intersects the polygon
-    bbox AND (corner-inside OR edge-crossing OR full) — cells disjoint from
-    the polygon are pruned so the dimension stays tight.
+    Returns a pandas frame, one row per (cell, polygon):
+
+    * ``cell, record_number, is_full`` — covering = every cell whose extent
+      intersects the polygon bbox AND is FULL, has a corner inside or is
+      entered by an edge (``_classify_boxes``); disjoint cells are pruned so
+      the dimension stays tight.
+    * ``full_mask, part_mask`` — the 64 sub-cells at res+3 classified the
+      same way (``_sub_masks``); a FULL cell has every sub-cell FULL.
+    * ``shell, holes`` — for a PARTIAL cell, the ring edges that can decide
+      a point in the cell's y-band (``_band_edges``); empty for FULL cells.
     """
-    out_cells, out_recs, out_fulls = [], [], []
+    if res + SUB_LEVELS > C.MAX_RES:
+        raise ValueError(f"res must be <= {C.MAX_RES - SUB_LEVELS} (sub-cells at res + {SUB_LEVELS})")
+    parts = []
     for _, row in features_pdf.iterrows():
         if row["shape_type"] != 5 or len(row["ring_sizes"]) == 0:
             continue
         rx, ry = _rings_of_row(row)
+        edges = _edge_table(rx, ry)
         cover = C.cover_bbox(row["minx"], row["miny"], row["maxx"], row["maxy"], res)
-        x0, y0, x1, y1 = C.cell_bounds(cover)
-        n_cells = len(cover)
-
-        # all 4 corners of all cells in one vectorized PIP call
-        cx = np.concatenate([x0, x1, x1, x0])
-        cy = np.concatenate([y0, y0, y1, y1])
-        corner_in = G.polygon_contains_points(rx, ry, cx, cy).reshape(4, n_cells)
-        all_in = corner_in.all(axis=0)
-        any_in = corner_in.any(axis=0)
-
-        # (edges x cells) bbox-overlap: does any ring edge cross each cell?
-        ex0 = np.concatenate([np.minimum(x, np.roll(x, 1)) for x in rx])
-        ex1 = np.concatenate([np.maximum(x, np.roll(x, 1)) for x in rx])
-        ey0 = np.concatenate([np.minimum(y, np.roll(y, 1)) for y in ry])
-        ey1 = np.concatenate([np.maximum(y, np.roll(y, 1)) for y in ry])
-        edge_hit = (
-            (ex0[:, None] <= x1[None, :])
-            & (ex1[:, None] >= x0[None, :])
-            & (ey0[:, None] <= y1[None, :])
-            & (ey1[:, None] >= y0[None, :])
-        ).any(axis=0)
-
-        full = all_in & ~edge_hit
-        keep = full | any_in | edge_hit
-        out_cells.append(cover[keep])
-        out_recs.append(np.full(int(keep.sum()), int(row["record_number"]), np.int64))
-        out_fulls.append(full[keep])
-    if not out_cells:
-        return pd.DataFrame({"cell": [], "record_number": [], "is_full": []}).astype(
-            {"cell": np.int64, "record_number": np.int64, "is_full": bool}
+        full, keep = _classify_boxes(rx, ry, edges, *C.cell_bounds(cover))
+        cells, full = cover[keep], full[keep]
+        full_mask = np.full(len(cells), -1, dtype=np.int64)
+        part_mask = np.zeros(len(cells), dtype=np.int64)
+        shell: list = [[]] * len(cells)
+        holes: list = [[]] * len(cells)
+        partial = np.flatnonzero(~full)
+        if len(partial):
+            full_mask[partial], part_mask[partial] = _sub_masks(
+                rx, ry, edges, cells[partial], res)
+            _, y0, _, y1 = C.cell_bounds(cells[partial])
+            bands = {}
+            for i, lo, hi in zip(partial.tolist(), y0.tolist(), y1.tolist()):
+                if lo not in bands:
+                    bands[lo] = _band_edges(edges, lo, hi)
+                shell[i], holes[i] = bands[lo]
+        parts.append(pd.DataFrame({
+            "cell": cells, "record_number": np.int64(row["record_number"]),
+            "is_full": full, "full_mask": full_mask, "part_mask": part_mask,
+            "shell": pd.Series(shell, dtype=object),
+            "holes": pd.Series(holes, dtype=object),
+        }))
+    if not parts:
+        return pd.DataFrame({c: [] for c in _DIM_COLS}).astype(
+            {"cell": np.int64, "record_number": np.int64, "is_full": bool,
+             "full_mask": np.int64, "part_mask": np.int64}
         )
-    return pd.DataFrame(
-        {"cell": np.concatenate(out_cells),
-         "record_number": np.concatenate(out_recs),
-         "is_full": np.concatenate(out_fulls)}
-    )
-
-
-def rings_broadcast(spark: SparkSession, features_pdf: pd.DataFrame):
-    """Broadcast {record_number: (ring_xs, ring_ys)} once per executor."""
-    lookup = {}
-    for _, row in features_pdf.iterrows():
-        if row["shape_type"] == 5 and len(row["ring_sizes"]) > 0:
-            lookup[int(row["record_number"])] = _rings_of_row(row)
-    return spark.sparkContext.broadcast(lookup)
+    return pd.concat(parts, ignore_index=True)
 
 
 # ---------------------------------------------------------------------------
@@ -144,8 +208,13 @@ def rings_broadcast(spark: SparkSession, features_pdf: pd.DataFrame):
 class PolygonIndex:
     """The engine's replacement for the reference's R-tree build
     (spatial_index.cpp:295-306): a one-time materialization of the
-    covering-cell dimension (Spark DataFrame, broadcastable) plus the
-    ring-array broadcast used by the exact refine kernel.
+    covering-cell dimension (Spark DataFrame, broadcastable). Each row
+    carries its sub-cell masks and y-band edges, so the exact refine is a
+    JVM expression on the joined row.
+
+    ``cells_pdf`` is the ``(cell, record_number, is_full)`` view of it.
+    Salted copies of ``dim`` are built once per salt factor
+    (``salted_dim``).
 
     Build once, join any number of point batches against it — at
     10^12-point scale the index build cost (dimension-scale) is noise and
@@ -156,9 +225,17 @@ class PolygonIndex:
         self.spark = spark
         self.features_pdf = features_pdf
         self.res = res
-        self.cells_pdf = prepare_polygon_cells(features_pdf, res)
-        self.dim = spark.createDataFrame(self.cells_pdf)
-        self.rings_bc = rings_broadcast(spark, features_pdf)
+        dim_pdf = prepare_polygon_cells(features_pdf, res)
+        self.cells_pdf = dim_pdf[["cell", "record_number", "is_full"]]
+        self.dim = spark.createDataFrame(dim_pdf.drop(columns="is_full"), DIM_DDL)
+        self._salted: dict[int, DataFrame] = {}
+
+    def salted_dim(self, s: int) -> DataFrame:
+        """``dim`` replicated once per salt bucket ``0..s-1`` (column ``salt``)."""
+        if s not in self._salted:
+            salts = self.spark.range(s).select(F.col("id").cast("int").alias("salt"))
+            self._salted[s] = self.dim.crossJoin(salts)
+        return self._salted[s]
 
 
 def auto_salt_buckets(
@@ -222,8 +299,9 @@ def point_in_polygon_join(
     """Inner-join points to the polygons that exactly contain them.
 
     Plan: cell equi-join (broadcast, or salted shuffle when requested) →
-    FULL cells pass through → PARTIAL cells refine with the vectorized
-    ray-cast (geometry.cpp:82-119 semantics) → deterministic tie-break
+    one JVM filter: points in FULL sub-cells pass, points in EMPTY
+    sub-cells drop, points in PARTIAL sub-cells run the SQL ray-cast
+    (geometry.cpp:82-119 semantics) → deterministic tie-break
     ``min(record_number)`` when ``dedup_first`` (the engine's defensible
     replacement for the reference's traversal-order-dependent first hit,
     spatial_index.cpp:367-375).
@@ -264,28 +342,21 @@ def point_in_polygon_join(
             raise ValueError("res conflicts with the prebuilt PolygonIndex")
     else:
         index = PolygonIndex(spark, features_pdf, res)
-    cells_pdf = index.cells_pdf
-    pts = points.withColumn("__cell", C.cell_col(lng_col, lat_col, index.res))
-
     if salt_buckets > 0:
         # Shuffle-join variant for a dimension too big to broadcast: the
         # dimension replicates per salt bucket (dim-scale cost), points key
         # by (cell, hash(point_id) % S) so a hot cell spreads S-ways.
         s = salt_buckets
-        salted = pd.concat(
-            [cells_pdf.assign(salt=np.int32(i)) for i in range(s)],
-            ignore_index=True,
-        )
-        dim = spark.createDataFrame(salted)
-        pts = pts.withColumn(
+        dim = index.salted_dim(s)
+        pts = _keyed_points(points, lng_col, lat_col, index.res).withColumn(
             "__psalt", F.pmod(F.xxhash64(F.col(point_id_col)), F.lit(s)).cast("int")
         )
         joined = pts.join(
             dim.hint("shuffle_hash"),
             (pts["__cell"] == dim["cell"]) & (pts["__psalt"] == dim["salt"]),
             "inner",
-        ).drop("cell", "salt", "__psalt")
-        matched = _split_refine(joined, index.rings_bc, lng_col, lat_col)
+        ).drop("salt", "__psalt")
+        matched = _refine(joined, lng_col, lat_col)
     else:
         matched = pip_matches_stateless(points, index, lng_col, lat_col)
 
@@ -307,12 +378,29 @@ def point_in_polygon_join(
     return matched
 
 
-def _split_refine(joined: DataFrame, rings_bc, lng_col: str, lat_col: str) -> DataFrame:
-    """FULL cells pass through; PARTIAL cells pay the vectorized ray-cast."""
-    full = joined.where(F.col("is_full")).drop("is_full", "__cell")
-    partial = joined.where(~F.col("is_full")).drop("is_full", "__cell")
-    refined = _pip_refine_bc(partial, rings_bc, lng_col, lat_col)
-    return full.unionByName(refined)
+def _keyed_points(points: DataFrame, lng_col: str, lat_col: str, res: int) -> DataFrame:
+    """Points with their join cell ``__cell`` and sub-cell index ``__sub``,
+    both derived from ONE res+3 key. Quantizing multiplies by a power of
+    two, so the parent of the fine key IS the res key, clamp included."""
+    fine = C.cell_col(lng_col, lat_col, res + SUB_LEVELS)
+    mask = (1 << (2 * SUB_LEVELS)) - 1
+    return points.withColumn("__fine", fine).select(
+        "*",
+        C.parent_col("__fine", res + SUB_LEVELS, res).alias("__cell"),
+        F.expr(f"CAST(__fine & {mask} AS INT)").alias("__sub"),
+    ).drop("__fine")
+
+
+def _refine(joined: DataFrame, lng_col: str, lat_col: str) -> DataFrame:
+    """Exact refine on joined (point, cell, polygon) rows, in one filter: a
+    point in a FULL sub-cell matches, one in an EMPTY sub-cell does not,
+    and only one in a PARTIAL sub-cell runs the ray-cast over the cell's
+    band edges."""
+    contains = G.polygon_contains_sql(lng_col, lat_col, "shell", "holes")
+    return joined.where(
+        f"(shiftright(full_mask, __sub) & 1) = 1 OR "
+        f"((shiftright(part_mask, __sub) & 1) = 1 AND {contains})"
+    ).drop("cell", "full_mask", "part_mask", "shell", "holes", "__cell", "__sub")
 
 
 def pip_matches_stateless(
@@ -324,58 +412,12 @@ def pip_matches_stateless(
     """All exact (point, polygon) matches via the broadcast cell dimension —
     the stateless core shared by the batch join's broadcast path and the
     streaming leg (streaming/geocode_stream.py). No window/tie-break, so it
-    runs unchanged on a streaming DataFrame in append mode."""
-    pts = points.withColumn("__cell", C.cell_col(lng_col, lat_col, index.res))
+    runs unchanged on a streaming DataFrame in append mode. One scan, one
+    broadcast join, one filter; no Python."""
+    pts = _keyed_points(points, lng_col, lat_col, index.res)
     dim = index.dim
-    joined = pts.join(
-        F.broadcast(dim), pts["__cell"] == dim["cell"], "inner"
-    ).drop("cell")
-    return _split_refine(joined, index.rings_bc, lng_col, lat_col)
-
-
-def _pip_refine(
-    spark: SparkSession,
-    candidates: DataFrame,
-    features_pdf: pd.DataFrame,
-    lng_col: str,
-    lat_col: str,
-) -> DataFrame:
-    return _pip_refine_bc(
-        candidates, rings_broadcast(spark, features_pdf), lng_col, lat_col
-    )
-
-
-def _pip_refine_bc(
-    candidates: DataFrame,
-    bc,
-    lng_col: str,
-    lat_col: str,
-) -> DataFrame:
-    """Exact ray-cast refine over (point, record_number) candidate rows.
-
-    ``mapInPandas`` + broadcast ring lookup: Arrow batches in, vectorized
-    numpy per polygon-group, no per-row Python.
-    """
-    schema = candidates.schema
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lookup = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            recs = pdf["record_number"].to_numpy()
-            px = pdf[lng_col].to_numpy(np.float64)
-            py = pdf[lat_col].to_numpy(np.float64)
-            for rec in np.unique(recs):
-                rings = lookup.get(int(rec))
-                if rings is None:
-                    continue
-                m = recs == rec
-                keep[m] = G.polygon_contains_points(rings[0], rings[1], px[m], py[m])
-            yield pdf[keep]
-
-    return candidates.mapInPandas(refine, schema=schema)
+    joined = pts.join(F.broadcast(dim), pts["__cell"] == dim["cell"], "inner")
+    return _refine(joined, lng_col, lat_col)
 
 
 # ---------------------------------------------------------------------------

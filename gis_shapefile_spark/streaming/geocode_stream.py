@@ -8,9 +8,10 @@ the SAME point-in-polygon join the batch engine uses
 over a Structured Streaming source, two ways:
 
 * ``streaming_pip_matches`` — pure stream-static join: the point stream
-  equi-joins the broadcast covering-cell dimension, FULL cells pass
-  through, PARTIAL cells refine with the same vectorized ray-cast
-  ``mapInPandas`` kernel. Fully stateless ⇒ append mode, no state store;
+  equi-joins the broadcast covering-cell dimension and one JVM filter
+  refines it: FULL sub-cells pass, EMPTY ones drop, PARTIAL ones run the
+  Spark SQL ray-cast. No Python worker. Fully stateless ⇒ append mode,
+  no state store;
   emits ALL (point, polygon) matches. This is the shape that scales: a
   1000-executor stream keeps the dimension broadcast-resident and pays
   zero shuffle on the point side.

@@ -8,8 +8,8 @@ unchanged on a Structured Streaming source:
 
 * every per-row stage is STATELESS (Arrow-batched ``mapInPandas`` decode/
   verify, codegen cell expression, broadcast stream-static cell join +
-  ray-cast refine) — append mode, no state store, so a 1000-executor
-  stream pays zero shuffle on the image side;
+  JVM sub-cell/ray-cast refine) — append mode, no state store, so a
+  1000-executor stream pays zero shuffle on the image side;
 * the only stateful operator is the per-tile aggregation, which is the
   standard streaming groupBy (update/complete mode; state keyed by
   (record_number, cell) — bounded by the tile universe, not by images).

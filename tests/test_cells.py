@@ -341,3 +341,52 @@ def test_demorton_roundtrip_three_way(spark, res):
     # centers fall inside their own cell
     assert ((sp.cx.to_numpy() >= minx) & (sp.cx.to_numpy() < maxx)).all()
     assert ((sp.cy.to_numpy() >= miny) & (sp.cy.to_numpy() < maxy)).all()
+
+
+def _parent_probe_points(res: int) -> tuple[np.ndarray, np.ndarray]:
+    """Random points, points on (and one ulp off) cell and sub-cell
+    borders at res+3, and points at and beyond the ±180/±90 clamp."""
+    rng = np.random.default_rng(res)
+    fine = 1 << (res + 3)
+    bx = rng.integers(0, fine + 1, 300) * (360.0 / fine) - 180.0
+    by = rng.integers(0, fine + 1, 300) * (180.0 / fine) - 90.0
+    lng = np.concatenate([
+        rng.uniform(-180, 180, 300), bx, np.nextafter(bx, -np.inf),
+        np.nextafter(bx, np.inf), [-180.0, 180.0, -180.5, 181.0, 0.0, 1e6, -1e6],
+    ])
+    lat = np.concatenate([
+        rng.uniform(-90, 90, 300), by, np.nextafter(by, np.inf),
+        np.nextafter(by, -np.inf), [-90.0, 90.0, 90.5, -91.0, 0.0, -1e6, 1e6],
+    ])
+    return lng, lat
+
+
+@pytest.mark.parametrize("res", [0, 5, 8, 10, 23])
+def test_parent_of_subcell_key_is_cell_key(spark, res):
+    """parent(cell(res+3)) == cell(res) bit for bit, in numpy and in
+    Spark: the PIP join keys a point once at res+3 and derives its join
+    cell from that key."""
+    lng, lat = _parent_probe_points(res)
+    fine = C.cell_of_numpy(lng, lat, res + 3)
+    parent = (res << C.RES_SHIFT) | ((fine & C.MORTON_MASK) >> 6)
+    np.testing.assert_array_equal(parent, C.cell_of_numpy(lng, lat, res))
+
+    df = spark.createDataFrame(pd.DataFrame({"lng": lng, "lat": lat}))
+    rows = df.select(
+        C.parent_col(C.cell_col("lng", "lat", res + 3), res + 3, res).alias("p"),
+        C.cell_col("lng", "lat", res).alias("c"),
+    ).collect()
+    assert all(r.p == r.c for r in rows)
+    np.testing.assert_array_equal([r.c for r in rows], C.cell_of_numpy(lng, lat, res))
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.floats(-200, 200, allow_nan=False),
+    st.floats(-100, 100, allow_nan=False),
+    st.integers(0, C.MAX_RES - 3),
+)
+def test_property_parent_of_subcell_key(lng, lat, res):
+    fine = C.cell_of_numpy([lng], [lat], res + 3)
+    parent = (res << C.RES_SHIFT) | ((fine & C.MORTON_MASK) >> 6)
+    np.testing.assert_array_equal(parent, C.cell_of_numpy([lng], [lat], res))

@@ -20,7 +20,7 @@ import pandas as pd
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as E  # noqa: E402
-from tools.check_correctness import canon, dtype_mismatches  # noqa: E402
+from tools.check_correctness import canon, dtype_mismatches, split_args  # noqa: E402
 
 # Driver-green ledger, read from the checked-in artifacts themselves: a
 # query is "driver-green" if any CORRECTNESS_r*.json records rows +
@@ -200,3 +200,13 @@ def test_canon_allows_nullable_int_promotion():
     _, _, _, kla = canon(a)
     _, _, _, klb = canon(b)
     assert dtype_mismatches(kla, klb) == []
+
+
+def test_gate_cli_first_argument_is_sf_dir_only_when_a_directory(tmp_path):
+    """A query name in first position is a query, not the data path."""
+    sf = str(tmp_path)
+    assert split_args([sf, "pip_anti", "--no-arrow"]) == ([sf], {"pip_anti"}, True)
+    assert split_args(["pip_anti", "zonal_stats"]) == (
+        [], {"pip_anti", "zonal_stats"}, False)
+    assert split_args(["--no-arrow"]) == ([], set(), True)
+    assert split_args([]) == ([], set(), False)

@@ -598,3 +598,21 @@ def test_line_interpolate_rejects_bad_fracs(spark):
         LN.line_interpolate(None, fracs=(0,))
     with _pytest.raises(ValueError):
         LN.line_interpolate_oracle_sql("s", fracs=(101,))
+
+
+def test_line_interpolate_rejects_float_fracs_and_skips_zero_length_roads(spark):
+    """A non-integer fraction is rejected, never truncated; a road whose
+    segments are all zero-length emits no rows (documented)."""
+    import pytest as _pytest
+
+    with _pytest.raises(ValueError):
+        LN.line_interpolate(None, fracs=(25.5,))
+    with _pytest.raises(ValueError):
+        LN.line_interpolate_oracle_sql("s", fracs=(50, 99.9))
+    segs = [(1, 0, 0.0, 0.0, 1.0, 0.0), (2, 0, 3.0, 3.0, 3.0, 3.0)]
+    df = spark.createDataFrame(
+        segs, "road_id long, seg_id long, ax double, ay double, "
+        "bx double, by double"
+    )
+    got = {(r.road_id, r.pct) for r in LN.line_interpolate(df, fracs=(50.0,)).collect()}
+    assert got == {(1, 50)}

@@ -238,6 +238,17 @@ def test_bloom_no_false_negatives_and_twin_bits(spark):
     assert len(fps) < len(others) * 0.2               # small-m honest bound
 
 
+def test_bloom_repeated_probe_member_is_not_a_false_negative(spark):
+    """A member that appears twice among the probes still passes: its k
+    bit hits are counted once per distinct item, not once per row."""
+    members = [f"ban{i}" for i in range(10)]
+    bloom = SK.bloom_build(_tok_df(spark, members), "token")
+    probes = _tok_df(spark, ["ban3", "ban3", "ban7"])
+    got = [(r.token, r.in_bloom) for r in SK.bloom_contains(
+        probes, bloom, "token").collect()]
+    assert sorted(got) == [("ban3", 1), ("ban3", 1), ("ban7", 1)]
+
+
 def test_bloom_union_merge_is_set_or(spark):
     a = [f"x{i}" for i in range(30)]
     b = [f"y{i}" for i in range(30)]

@@ -588,3 +588,127 @@ def test_pip_anti_join_is_exact_complement(spark, features, points_pdf):
     all_ids = set(points_pdf["image_id"])
     assert anti_ids == all_ids - oracle_in
     assert anti_ids and oracle_in  # both sides non-trivial on the fixture
+
+
+# --- sub-cell masks + SQL ray-cast: exactness and plan shape ----------------
+
+EX_RES = 8
+SUB_W = 360.0 / (1 << (EX_RES + 3))  # sub-cell width at res+3
+SUB_H = 180.0 / (1 << (EX_RES + 3))
+
+
+def _poly(rec, rings):
+    xs = [x for r in rings for x, _ in r]
+    ys = [y for r in rings for _, y in r]
+    return dict(record_number=rec, shape_type=5, xs=xs, ys=ys,
+                ring_sizes=[len(r) for r in rings], minx=min(xs), miny=min(ys),
+                maxx=max(xs), maxy=max(ys), deleted=False)
+
+
+def _box(x0, y0, x1, y1):
+    return [(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]
+
+
+def _grid_x(k):
+    return k * SUB_W - 180.0
+
+
+def _grid_y(k):
+    return k * SUB_H - 90.0
+
+
+@pytest.fixture(scope="module")
+def exact_case():
+    """Polygons that stress the refine, and points on its hard cases.
+
+    * 1: a shell with 70 holes, all crossing one res-8 cell's y-band;
+    * 2: overlaps polygon 1, vertices on sub-cell grid corners;
+    * 3: a concave polygon with vertices and edges on sub-cell borders.
+    """
+    y_hole = 31.7  # the res-8 row 31.640625 .. 32.34375
+    holes = [_box(-99.9 + 0.12 * i, y_hole, -99.9 + 0.12 * i + 0.05, y_hole + 0.03)
+             for i in range(70)]
+    p1 = _poly(1, [_box(-100.0, 30.0, -90.0, 35.0)] + holes)
+    gx = [_grid_x(k) for k in (440, 470, 500)]
+    gy = [_grid_y(k) for k in (1370, 1390, 1415)]
+    p2 = _poly(2, [[(gx[0], gy[0]), (gx[2], gy[0]), (gx[2], gy[2]), (gx[1], gy[1]),
+                    (gx[0], gy[2]), (gx[0], gy[0])]])
+    p3 = _poly(3, [[(gx[1], gy[0]), (gx[2], gy[1]), (gx[1], gy[2]), (gx[0], gy[1]),
+                    (gx[1], gy[0])],
+                   _box(_grid_x(468), _grid_y(1388), _grid_x(472), _grid_y(1392))])
+    feats = pd.DataFrame([p1, p2, p3])
+
+    rng = np.random.default_rng(11)
+    xs, ys = [rng.uniform(-101, -84, 3000)], [rng.uniform(29, 36, 3000)]
+    kx = rng.integers(425, 515, 600)
+    ky = rng.integers(1360, 1425, 600)
+    xs += [_grid_x(kx), rng.uniform(-101, -84, 600), _grid_x(kx)]   # sub-cell borders
+    ys += [rng.uniform(29, 36, 600), _grid_y(ky), _grid_y(ky)]      # and grid corners
+    for r in (p1, p2, p3):
+        vx, vy = np.asarray(r["xs"]), np.asarray(r["ys"])
+        xs += [vx, (vx + np.roll(vx, 1)) / 2]                         # vertices, edges
+        ys += [vy, (vy + np.roll(vy, 1)) / 2]
+    for h in holes:
+        xs.append(np.array([(h[0][0] + h[1][0]) / 2]))                # hole centers
+        ys.append(np.array([(h[0][1] + h[2][1]) / 2]))
+    lng, lat = np.concatenate(xs), np.concatenate(ys)
+    pts = pd.DataFrame({"image_id": np.arange(len(lng)), "lng": lng, "lat": lat})
+
+    want = set()
+    for _, r in feats.iterrows():
+        rx, ry = _rings(r)
+        hit = G.polygon_contains_points(rx, ry, lng, lat)
+        want |= {(int(i), int(r["record_number"])) for i in np.flatnonzero(hit)}
+    return feats, pts, want
+
+
+def test_pip_refine_exact_on_borders_holes_and_overlaps(spark, exact_case):
+    """Broadcast and salted paths return exactly the numpy kernel's
+    (point, polygon) matches, on sub-cell borders, vertices and edges, in
+    holes, in overlaps, and with 70 holes crossing one cell's band."""
+    feats, pts_pdf, want = exact_case
+    index = SJ.PolygonIndex(spark, feats, EX_RES)
+    dim = index.dim.toPandas()
+    assert dim["holes"].map(len).max() >= 64
+    assert (dim["part_mask"] != 0).any() and (dim["full_mask"] == -1).any()
+    ids = {rec for _, rec in want}
+    assert ids == {1, 2, 3}
+    assert len({pid for pid, rec in want if rec == 2} & {pid for pid, rec in want if rec == 1})
+
+    pts = spark.createDataFrame(pts_pdf)
+    for salt in (0, 3):
+        got = SJ.point_in_polygon_join(spark, pts, index, res=EX_RES,
+                                       salt_buckets=salt, dedup_first=False)
+        assert {(r.image_id, r.record_number) for r in got.collect()} == want, salt
+    first = SJ.point_in_polygon_join(spark, pts, index, res=EX_RES, salt_buckets=3)
+    best: dict[int, int] = {}
+    for pid, rec in want:
+        best[pid] = min(rec, best.get(pid, rec))
+    assert {(r.image_id, r.record_number) for r in first.collect()} == set(best.items())
+
+
+PYTHON_NODES = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "PythonUDF")
+
+
+def _executed_plan(df) -> str:
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.finalPhysicalPlan()
+    return plan.toString()
+
+
+def test_pip_plan_has_no_python_and_scans_points_once(spark, exact_case, tmp_path):
+    feats, pts_pdf, _ = exact_case
+    index = SJ.PolygonIndex(spark, feats, EX_RES)
+    path = str(tmp_path / "pts")
+    spark.createDataFrame(pts_pdf).write.parquet(path)
+    pts = spark.read.parquet(path)
+    plan = _executed_plan(SJ.point_in_polygon_join(spark, pts, index, res=EX_RES))
+    assert not [n for n in PYTHON_NODES if n in plan], plan
+    assert plan.count("FileScan parquet") == 1, plan
+    salted = _executed_plan(SJ.point_in_polygon_join(
+        spark, pts, index, res=EX_RES, salt_buckets=3))
+    assert not [n for n in PYTHON_NODES if n in salted], salted
+    streamed = _executed_plan(SJ.pip_matches_stateless(pts, index))
+    assert not [n for n in PYTHON_NODES if n in streamed], streamed

@@ -171,11 +171,23 @@ def check_queries(spark, con, sf_dir: str, only=None, verbose=True) -> list[str]
     return failures
 
 
+def split_args(args: list[str]) -> tuple[list[str], set[str], bool]:
+    """([sf_dir] or [], query names, no_arrow) from the command line.
+
+    The first argument is the data directory only when it is an existing
+    directory; otherwise it is a query name and the default directory is
+    used, so ``check_correctness.py pip_anti`` checks ``pip_anti`` instead
+    of reading ``pip_anti`` as a data path.
+    """
+    no_arrow = "--no-arrow" in args
+    rest = [a for a in args if a != "--no-arrow"]
+    n_dir = 1 if rest and os.path.isdir(rest[0]) else 0
+    return rest[:n_dir], set(rest[n_dir:]), no_arrow
+
+
 def main() -> int:
-    argv = [a for a in sys.argv[1:] if a != "--no-arrow"]
-    no_arrow = "--no-arrow" in sys.argv[1:]
+    argv, only, no_arrow = split_args(sys.argv[1:])
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
-    only = set(argv[1:])
     conf = {"spark.driver.memory": "8g",
             "spark.ui.showConsoleProgress": "false"}
     if no_arrow:
