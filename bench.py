@@ -1,40 +1,35 @@
 """Benchmark harness: spatial-join + tiling throughput and scaling evidence.
 
-Prints ONE JSON line:
-  {"metric": "spatial_join_tiling_suite", "value": <total sec>, "unit": "sec",
-   "queries": {...per-query sec...}, "sf": <sf>,
-   "images_per_sec": ..., "cells_per_sec": ...,
-   "scaling": {"t_n": ..., "t_4n": ..., "efficiency": ...}}
+Prints ONE JSON line: warm-min seconds per entry (``queries``), their
+``counts``, ``value`` = the sum over CORE, the N-vs-4N ``scaling`` pairs,
+the ``host`` shape and the ``budget`` (elapsed, shed entries).
 
 The point side is synthesized in-Spark (deterministic integer expressions,
-~10 images per lineitem row at the given SF — sf0.1 -> 6M points) with a
-20% Zipfian hot cluster in one urban cell, exercising the skew path. The
-polygon side is the 51 jittered+holed state fixture (real ray-cast work,
-FULL/PARTIAL classification).
+sf0.1 -> 6M points) with a 20% hot cluster in one urban cell; the polygon
+side is the 51 jittered+holed state fixture.
 
-Scaling rule evidence (BASELINE.json north_rule; no real cluster in this
-sandbox): the same PIP join runs at local[N] and local[4N] (default
-N=2 — see BENCH/BASELINE.md "Host characterization" for why the shared
-memory bus makes 2->8 the executor-scaling proxy) on identical input
-(generated in-plan, sized by an in-window calibration so the 4N leg
-targets ~6 s, stretched adaptively to 10x the MEASURED per-job floor
-capped at 8 s when a degraded window inflates the floor itself — the
-floor stays ~10% of the leg and the single host's parquet/page-cache
-bus — which a real cluster scales per-executor — stays out of the
-ratio); efficiency per pair = (T_N / T_4N) / 4,
-headline = median of pairs, measured per-job floor recorded per pair.
+Order: the scaling pairs first, then one suite session runs ENTRIES in
+table order, CORE first and never shed, so ``value`` always sums the
+same entries. Anything else runs only if ``admit`` says it still fits.
+
+Scaling (BASELINE.json north rule; no real cluster here): the same PIP
+join over identical generated input at local[N] and local[4N] with
+4N <= CPUS; efficiency per pair = (T_N / T_4N) / 4, headline = median.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
-     SPARK_GRAFT_BENCH_SCALING=0 to skip the two-parallelism pass.
+     SPARK_GRAFT_CPUS (default nproc).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
+from concurrent.futures import ThreadPoolExecutor
+from functools import cached_property
+from typing import Callable, NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -42,67 +37,50 @@ import numpy as np
 from pyspark.sql import SparkSession, functions as F
 
 from gis_shapefile_spark.functions import cells as C
+from gis_shapefile_spark.operators import dedup as DD
+from gis_shapefile_spark.operators import multimodal as MM
+from gis_shapefile_spark.operators import sessionize as SE
+from gis_shapefile_spark.operators import similarity as SIM
 from gis_shapefile_spark.operators import spatial_join as SJ
+from gis_shapefile_spark.operators import tiling as TI
+from gis_shapefile_spark.session import get_spark, host_cpus, mem_total_mb
 from gis_shapefile_spark.sources import fixtures as FX
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-DO_SCALING = os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") != "0"
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cpus())
 
-# Graceful-degradation wall-clock budget: this sandbox's throughput
-# swings 5-10x between host windows (BENCH/BASELINE.md), and a degraded
-# window can stretch the full run past an external timeout — which would
-# record NOTHING. Round 2 overran (625 s vs 420) by shedding reactively:
-# entries were admitted until the clock ran out, so the cheap head of the
-# suite consumed the budget and the EVIDENCE entries (ann1m pair,
-# image_tiling, dedup_components, sessionize) were the ones skipped.
-# Round 3 plans up front instead: a fixed-work host probe measures this
-# window's degradation factor, every entry carries a best-window cost
-# estimate and a priority, and admission reserves the scaling pass +
-# sheds the cheap relational tail FIRST (see plan_entries()).
-BENCH_BUDGET = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "420"))
-_T0 = time.time()
-
-
-def _dbg(msg: str) -> None:
-    """Terse stage trace on stderr: keeps the stdout JSON line clean and
-    makes 'where did the budget go' answerable from the artifact tail."""
-    print(f"[bench +{time.time() - _T0:6.1f}s] {msg}", file=sys.stderr)
-
-# Fixed-work host probe references, measured in clean windows
-# (loadavg < 2). CPU: warm single-partition 100M-row JVM sum inside the
-# local[CPUS] session, 0.36-0.45 s clean, up to ~9 s ballooning. MEMORY:
-# first-touch page faults over a fresh 160 MB allocation, ~0.22 s clean,
-# ~25x slower when the hypervisor balloons (BENCH/BASELINE.md "Host
-# characterization") — the failure mode the CPU probe CANNOT see (a
-# D=1.0 CPU window has measured a 9x cold-read collapse on the 512 MB
-# ann1m fixture). ARROW: a fixed-work warm mapInPandas pass (4M rows,
-# 2*CPUS partitions, one pandas multiply per batch) through the Python
-# workers — the JVM sum cannot see Python-worker/Arrow-path degradation,
-# which is exactly what every pandas-UDF query exercises (round-3
-# verdict: an 11 s pip_join recorded under a clean
-# D=1.0 JVM probe). D = max of the three ratios; mid-run collapses
-# remain possible and are handled by the dynamic re-checks.
-PROBE_REF_1T = 0.4
-PROBE_REF_MEM = 0.25
-PROBE_REF_ARROW = 0.75  # min-of-2 warm passes, 0.70-0.92 s measured clean
+# Wall-clock budget for the whole run; an external timeout past it would
+# record nothing, so entries that no longer fit are shed and listed.
+BUDGET_S = 420.0
+# Recorded pair count (r05's); the median needs >= 2 to survive one spike.
+SCALING_PAIRS = 2
+# Best-window wall of one scaling pair: two sessions (start, warm-up,
+# floor) plus 2 reps of each leg, and the one-off calibration on pair 0.
+PAIR_EST_S = 90.0
+# 4N-leg target: at 6 s the ~0.5 s per-job floor is ~10% of the leg; the
+# calibration stretches it to 10 x the measured floor, capped at 8 s.
+T4N_TARGET_S = 6.0
+# Watchdog per scaling job: a hung leg (a crashed Python worker) is
+# cancelled instead of eating the budget.
+SCALE_JOB_TIMEOUT_S = 240.0
 
 # points per SF: sf encodes via lineitem rows ~ 6M * sf
 _SF = 0.1 if "sf0.1" in SF_DIR else (0.01 if "sf0.01" in SF_DIR else 0.001)
 N_POINTS = int(60_000_000 * _SF)  # sf0.1 -> 6M synthetic image points
+PYR_LEVELS = [10, 7, 4]
+
+
+def _dbg(msg: str) -> None:
+    """Stage trace on stderr; stdout carries only the JSON line."""
+    print(f"[bench {time.strftime('%H:%M:%S')}] {msg}", file=sys.stderr)
 
 
 def _session(master: str) -> SparkSession:
-    from gis_shapefile_spark.session import get_spark
-
     return get_spark(
         app_name="bench",
         master=master,
         shuffle_partitions=max(8, int(master.split("[")[1].rstrip("]"))),
-        extra_conf={
-            "spark.ui.showConsoleProgress": "false",
-            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "20g"),
-        },
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
 
 
@@ -181,702 +159,191 @@ def warm_python_workers(spark: SparkSession) -> None:
     ).count()
 
 
-def host_probe(spark: SparkSession) -> dict:
-    """Fixed-work calibration probe, recorded in the artifact.
+class Inputs:
+    """Inputs shared between entries. Each builder's own setup runs only
+    once its entry is admitted, so a shed entry never pays for it."""
 
-    A 100M-row JVM sum on ONE partition (single-thread work inside the
-    local[CPUS] session) and on 2*CPUS partitions. probe_1t / PROBE_REF_1T
-    is this window's degradation factor D: every cost estimate and every
-    documented range scales by D, so a 26 s pip_join in a 2.7x-degraded
-    window is self-normalizing in the artifact instead of requiring
-    archaeology against BENCH/BASELINE.md (round-2 verdict item 5).
+    def __init__(self, spark: SparkSession):
+        self.spark = spark
+        self.pts = spark.read.parquet(points_parquet(spark, N_POINTS))
+        self.feats = FX.make_features()
+        # documents + a mangled copy (the driver-contract corpus); a
+        # single-file source has 1-2 splits, so spread the signatures
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        self.corpus = docs.select("doc_id", "text").unionByName(docs.select(
+            (F.col("doc_id") + 1000000).alias("doc_id"),
+            F.expr("substr(text, instr(text, ' ') + 1)").alias("text"),
+        )).repartition(CPUS)
+        self.emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+        self.emb_q = self.emb.where(F.col("vec_id") < 32).select(
+            F.col("vec_id").alias("query_id"), "embedding")
 
-    The Arrow leg (round-3 verdict item 5) times a warm fixed-work
-    mapInPandas pass so Python-worker/Arrow-path degradation — invisible
-    to the JVM sum — feeds D and the `within_calibrated_range`
-    annotations on Python-boundary queries mean something."""
-    def _sum(parts: int) -> float:
-        t0 = time.time()
-        spark.range(0, 100_000_000, 1, parts).agg(F.sum("id")).collect()
-        return time.time() - t0
+    @cached_property
+    def dedup_pairs(self):
+        """Eager localCheckpoint: paid only when a components entry runs."""
+        return DD.near_duplicate_pairs(self.corpus, threshold=0.5).localCheckpoint()
 
-    def _arrow_pass() -> float:
-        import pandas as pd  # noqa: F401 — worker-side dependency
 
-        def _mul(it):
-            for pdf in it:
-                yield pdf.assign(id=pdf["id"] * 2 + 1)
+def _pip_join(b: Inputs):
+    idx = SJ.PolygonIndex(b.spark, b.feats, res=10)
+    return lambda: SJ.point_in_polygon_join(
+        b.spark, b.pts, idx, res=10, point_id_col="point_id", dedup_first=False)
 
-        t0 = time.time()
-        (
-            spark.range(0, 4_000_000, 1, 2 * CPUS)
-            .mapInPandas(_mul, schema="id long")
-            .agg(F.sum("id"))
-            .collect()
-        )
-        return time.time() - t0
 
-    _sum(2 * CPUS)  # warm the JVM / codegen once, untimed
-    p_mt = _sum(2 * CPUS)
-    p_1t = _sum(1)
-    _arrow_pass()  # warm: spawns the Python workers on every core, untimed
-    p_arrow = min(_arrow_pass(), _arrow_pass())  # single-pass noise ~30%
-    t0 = time.time()
-    arr = np.zeros(20_000_000, dtype=np.float64)  # 160 MB, lazy pages
-    arr[::512] = 1.0  # touch every 4 KiB page once
-    p_mem = time.time() - t0
-    del arr
+def _tiling(b: Inputs):
+    cell = F.expr(C.cell_sql("lng", "lat", 10, "spark")).alias("cell")
+    return lambda: b.pts.groupBy(cell).agg(
+        F.count(F.lit(1)).alias("n_images"),
+        F.min("lng").alias("minx"), F.max("lng").alias("maxx"),
+        F.min("lat").alias("miny"), F.max("lat").alias("maxy"))
+
+
+def _image_tiling(b: Inputs):
+    """input_hint table -> cells -> PIP join -> tile rollup with in-plan
+    phash invariant verification."""
+    images = b.spark.read.parquet(FX.images_parquet_path(n=20000))
+    return lambda: TI.image_tiling_pipeline(
+        b.spark, images, FX.make_grid_features(), res=8)
+
+
+def _knn3(b: Inputs):
+    pts = b.pts.where(F.col("point_id") % 6 == 0)
+    return lambda: SJ.knn_join(
+        b.spark, pts, b.feats, k=3, res=6, point_id_col="point_id")
+
+
+def _pip_skew(b: Inputs):
+    """The engine's explicit salting (16 buckets vs 1) on 4M points with
+    50% in ONE res-8 cell: unsalted, the hot cell's refine is one
+    straggler task. Salting held its direction in every measured window
+    while AQE's skew split flipped sign (BENCH/BASELINE.md "Skew
+    handling"), so the pair runs with the AQE split off (ENTRIES conf)
+    and equal counts are an in-artifact correctness check."""
+    idx = SJ.PolygonIndex(b.spark, b.feats, res=8)
+    hot = b.spark.read.parquet(points_parquet(b.spark, 4_000_000, hot_mod=2))
+
+    def join(salt: int):
+        return lambda: SJ.point_in_polygon_join(
+            b.spark, hot, idx, res=8, point_id_col="point_id",
+            salt_buckets=salt, dedup_first=False)
+
+    return {"pip_skew_salted": join(16), "pip_skew_unsalted": join(1)}
+
+
+def _sessionize(b: Inputs):
+    ev = b.spark.read.parquet(f"{SF_DIR}/events.parquet")
+    return lambda: SE.session_stats(ev, gap_s=1800)
+
+
+def _ann_ivf(b: Inputs):
+    cents = SIM.make_centroids(64, 8)
+    return lambda: SIM.ivf_topk(b.emb, b.emb_q, k=10, centroids=cents, nprobe=2)
+
+
+def _image_neardup(b: Inputs):
+    """Decode + phash recompute + pigeonhole hamming block join over 20k
+    images + 2k planted perturbed copies."""
+    images = b.spark.read.parquet(
+        FX.near_dup_images_parquet_path(n=20000, n_dup=2000))
+    return lambda: MM.image_near_pairs(images, max_hamming=6)
+
+
+def _pyramid_delta(b: Inputs):
+    """Maintaining the pyramid for a 1% crawl batch must cost O(batch):
+    the batch is the hot-cluster slice (spatially localized, like new
+    imagery of one city), stored as its own parquet."""
+    path = os.path.join(FX.FIXTURE_DIR, f"bench_pyr_batch_n{N_POINTS}")
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        b.pts.where(F.col("point_id") % 100 == 0).coalesce(8) \
+            .write.mode("overwrite").parquet(path)
+    batch = b.spark.read.parquet(path)
+    stored = TI.tile_pyramid(
+        b.pts.where(F.col("point_id") % 100 != 0), PYR_LEVELS).localCheckpoint()
+    return lambda: TI.tile_pyramid_delta(stored, batch, PYR_LEVELS)
+
+
+def _pricing_summary(b: Inputs):
+    li = b.spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    return lambda: li.where(F.col("l_shipdate") <= F.lit("1998-09-02")).groupBy(
+        "l_returnflag", "l_linestatus").agg(
+        F.sum("l_quantity").alias("sum_qty"),
+        F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("rev"),
+        F.count(F.lit(1)).alias("n"))
+
+
+def _ann1m(b: Inputs):
+    """IVF payoff regime: 1M x 64-dim vectors, 64 data-trained centroids,
+    prebuilt bucket-partitioned index (untimed). Brute scans the corpus
+    per query batch; IVF reads only the probed 1/16 of the files. 16
+    queries keep brute's 16M dot products well above the job floor."""
+    big = b.spark.read.parquet(vectors_1m_parquet(b.spark))
+    sample = np.stack([
+        r["embedding"]
+        for r in big.where(F.pmod(F.xxhash64("vec_id"), F.lit(101)) == 0)
+        .limit(8192).collect()
+    ])
+    cents = SIM.kmeans_fit(sample, 64, iters=5)
+    idx = os.path.join(FX.FIXTURE_DIR, "bench_ivf_index_1m")
+    if not os.path.exists(os.path.join(idx, "_SUCCESS")):
+        SIM.ivf_write_index(big, cents, idx)
+    q = big.where(F.col("vec_id") % 62500 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding")
     return {
-        "probe_1t_sec": round(p_1t, 3),
-        "probe_mt_sec": round(p_mt, 3),
-        "probe_mem_sec": round(p_mem, 3),
-        "probe_arrow_sec": round(p_arrow, 3),
-        "ref_1t_sec": PROBE_REF_1T,
-        "ref_mem_sec": PROBE_REF_MEM,
-        "ref_arrow_sec": PROBE_REF_ARROW,
-        "degradation": round(
-            max(
-                1.0,
-                p_1t / PROBE_REF_1T,
-                p_mem / PROBE_REF_MEM,
-                p_arrow / PROBE_REF_ARROW,
-            ),
-            2,
-        ),
+        "ann1m_brute": lambda: SIM.cosine_topk(big, q, k=10),
+        "ann1m_ivf": lambda: SIM.ivf_topk_indexed(
+            b.spark, idx, q, k=10, centroids=cents, nprobe=4),
     }
 
 
-# (name, priority, best-window est sec per timed run, base reps).
-# Priority 0 = headline metrics (always admitted: images_per_sec /
-# cells_per_sec derive from them), 1 = round-over-round + IVF-payoff
-# evidence the verdict requires in the artifact, 2 = sheddable tail.
-ENTRY_PLAN = [
-    ("pip_join", 0, 2.5, 3),
-    ("tiling", 0, 1.0, 3),
-    ("image_tiling", 1, 4.0, 2),
-    ("dedup_components", 1, 3.0, 2),
-    ("sessionize", 1, 0.8, 2),
-    ("dedup_minhash", 1, 2.5, 2),
-    ("knn3", 1, 2.0, 3),
-    # ann1m shrunk 32 -> 16 queries (round-3 verdict item 2: the pair
-    # missed the artifact two rounds running; half the brute work fits
-    # its priority-1 slot deterministically and the IVF payoff ratio is
-    # unchanged — both legs scale with the query batch)
-    ("ann1m_brute", 1, 10.0, 1),
-    ("ann1m_ivf", 1, 4.0, 2),
-    # skew pair promoted to priority 1 in round 4 (it IS verdict-item
-    # evidence; a priority-2 slot lost it to the toy tail in the first
-    # validation run). It runs AFTER the ann1m bundle: round-4 window
-    # measurements show a realized-2.4x window fits the core suite plus
-    # exactly ONE evidence bundle, and the ann1m pair — the verdict's
-    # top ask, missed two rounds running — wins that conflict; clean
-    # windows fit both. The contrast is the ENGINE's explicit salting
-    # (salt_buckets=16 vs 1) on a straggler-dominated 50%-hot-cell
-    # table: across repeated interleaved measurements AQE's on/off
-    # contrast FLIPPED SIGN with the host window (1.91x for ON quiet,
-    # 0.53x — ON slower — loaded) while salting held direction in
-    # every sample (1.44-2.22x) — sign-stable evidence is what a
-    # driver artifact needs; see BENCH/BASELINE.md "Skew handling".
-    # est model note: the bundle shares ONE warm (the (reps+1) model
-    # charges each leg its own), so per-leg ests are set to make the
-    # bundle total (3*10 + 3*12 = 66) match the measured best-window
-    # wall (warm ~12 + 2x9 + 2x17 = 64) rather than out-of-context
-    # per-leg costs
-    ("pip_skew_salted", 1, 10.0, 2),
-    ("pip_skew_unsalted", 1, 12.0, 2),
-    ("ann_topk", 2, 1.3, 2),
-    # reps trimmed 2 -> 1 on the three priciest priority-2 demos
-    # (round-4 validation: a D=1.28 window fit 14/18 — the ~15 s these
-    # extra reps cost is exactly the margin the evidence entries need)
-    ("ann_ivf", 2, 1.8, 1),
-    ("dedup_components_star", 2, 3.0, 1),
-    ("image_neardup", 2, 8.0, 1),
-    ("pricing_summary", 2, 0.3, 3),
-    ("pyramid_full", 2, 2.0, 2),
-    ("pyramid_delta", 2, 0.5, 2),
+class Entry(NamedTuple):
+    name: str
+    est_s: float  # best-window (32 vCPU) sec per timed round, all legs
+    reps: int  # timed rounds after one warm run of each leg
+    build: Callable  # Inputs -> df thunk, or {leg: df thunk} for a pair
+    legs: tuple = ()  # a pair's artifact keys; admitted or shed as one
+    conf: dict | None = None  # session conf held for the timed runs
+
+    @property
+    def keys(self) -> tuple:
+        return self.legs or (self.name,)
+
+
+CORE = ("pip_join", "tiling", "image_tiling", "knn3", "dedup_minhash")
+
+ENTRIES = [
+    Entry("pip_join", 2.5, 3, _pip_join),
+    Entry("tiling", 1.0, 3, _tiling),
+    Entry("image_tiling", 4.0, 2, _image_tiling),
+    Entry("knn3", 2.0, 3, _knn3),
+    Entry("dedup_minhash", 2.5, 2,
+          lambda b: lambda: DD.near_duplicate_pairs(b.corpus, threshold=0.5)),
+    Entry("pip_skew", 22.0, 2, _pip_skew,
+          legs=("pip_skew_salted", "pip_skew_unsalted"),
+          conf={"spark.sql.shuffle.partitions": "128",
+                "spark.sql.adaptive.skewJoin.enabled": "false"}),
+    Entry("dedup_components", 3.0, 2, lambda b: lambda: DD.connected_components(
+        b.corpus.select("doc_id"), b.dedup_pairs)),
+    # the scale default (O(log^2 n) rounds on any diameter)
+    Entry("dedup_components_star", 3.0, 1,
+          lambda b: lambda: DD.connected_components_star(
+              b.corpus.select("doc_id"), b.dedup_pairs)),
+    Entry("sessionize", 0.8, 2, _sessionize),
+    Entry("ann_topk", 1.3, 2,
+          lambda b: lambda: SIM.cosine_topk(b.emb, b.emb_q, k=10)),
+    Entry("ann_ivf", 1.8, 1, _ann_ivf),
+    Entry("image_neardup", 8.0, 1, _image_neardup),
+    Entry("pyramid_full", 2.0, 2,
+          lambda b: lambda: TI.tile_pyramid(b.pts, PYR_LEVELS)),
+    Entry("pyramid_delta", 0.5, 2, _pyramid_delta),
+    Entry("pricing_summary", 0.3, 3, _pricing_summary),
+    # last: its cost is the least predictable across host shapes (~10 s
+    # per brute run on 32 vCPUs, ~63 s on 4 cores), so an overrun here
+    # costs no other entry
+    Entry("ann1m", 14.0, 2, _ann1m, legs=("ann1m_brute", "ann1m_ivf")),
 ]
 
-# Best-window wall for ONE scaling pair at the T4N_TARGET=4 leg size:
-# 4N session (start + warm + index + warmup + floor + 2 reps x ~6 s,
-# + the one-off calibration leg on pair 0) + N session (same, 2 reps x
-# ~16 s). Round-3 lesson: the old 110 s figure was ~2x under the
-# measured ~170 s at target 7 and the reserve was never enforced as a
-# cap — the pass overran to ~340 s and shed every priority-1 entry.
-# The estimate seeds the reserve; the pair loop is ALSO hard-capped by
-# it now (see run_scaling_pass), so an underestimate costs recorded
-# pairs, never the suite. Measured this round: 53 s/pair at target 4,
-# ~80 s at the shipped target 6 (+ ~8 s calibration on pair 0).
-PAIR_EST = 90.0
-
-# Ratio-pair bundles: each admits and sheds ALL-OR-NOTHING — the
-# artifact claim for each is the ratio between its legs, so one leg
-# alone is wasted budget (round-3 lesson for ann1m; this round's first
-# validation run shed pip_skew_noaqe while pip_skew_aqe recorded).
-BUNDLES = [
-    ("ann1m_brute", "ann1m_ivf"),
-    ("pip_skew_salted", "pip_skew_unsalted"),
-]
-
-
-def scaling_reserve(degradation: float, scaling_pairs: int) -> float:
-    """Budget fenced off for the scaling pass: ``scaling_pairs`` pairs
-    (round-3 lesson: reserving ONE pair left a single noisy ratio as the
-    median with no clock to extend — two pairs minimum make the median
-    robust to one bad window), capped at half the budget so a badly
-    degraded window can never reserve everything away from the
-    priority-0 headline entries, and ZERO when the scaling pass is
-    disabled (SPARK_GRAFT_BENCH_SCALING=0)."""
-    if scaling_pairs <= 0:
-        return 0.0
-    # NO degradation multiplier (changed late round 4): the pass
-    # SELF-CALIBRATES its leg size to a wall-clock target, so its cost
-    # is nearly window-independent — measured pair walls 95.1/68.0/41.8 s
-    # in a D=2.27 window and 82.3/86.9 s in a D=23.0 window, vs the
-    # D-multiplied estimate of 204+ s/pair that starved the ann1m and
-    # skew bundles out of two otherwise-clean validation runs. The pair
-    # loop is still hard-capped by this reserve, so an underestimate
-    # costs recorded pairs, never the suite.
-    return min(
-        0.5 * BENCH_BUDGET,
-        scaling_pairs * PAIR_EST * 1.1,
-    )
-
-
-def plan_entries(degradation: float, scaling_pairs: int,
-                 only: set | None = None) -> tuple[set, dict]:
-    """Up-front admission control (round-2 verdict item 4).
-
-    Reserves ONE scaling pair first (the north-rule evidence — extra
-    pairs come out of whatever clock is left when the pair loop runs),
-    then admits entries in priority order against the remaining budget
-    using probe-calibrated costs. The shed list is decided BEFORE
-    anything runs, so a degraded window drops the cheap relational tail
-    instead of whatever happened to sit late in the suite. Ratio pairs
-    (BUNDLES: ann1m brute/ivf, the skew AQE on/off pair) admit
-    all-or-nothing: one leg without the other proves no ratio.
-
-    ``only``: second-chance retry mode — consider just these names (no
-    other entry consumes budget, priority-0 auto-admission is OFF so a
-    retry never re-runs a recorded headline)."""
-    d = max(1.0, degradation)
-    reserve = scaling_reserve(degradation, scaling_pairs)
-    left = BENCH_BUDGET - (time.time() - _T0) - reserve
-    admitted, reps_of = set(), {}
-
-    def _reps(base):
-        if d >= 3.0:
-            return 1
-        if d >= 1.5:
-            return min(base, 2)
-        return base
-
-    plan = {name: (prio, est, _reps(reps)) for name, prio, est, reps in ENTRY_PLAN}
-    costs = {n: est * d * (reps + 1) for n, (_, est, reps) in plan.items()}
-    partner_of = {}
-    for a, b in BUNDLES:
-        partner_of[a], partner_of[b] = b, a
-    for name, prio, est, _ in ENTRY_PLAN:
-        if only is not None and name not in only:
-            continue
-        reps = plan[name][2]
-        if name in partner_of and name in admitted:
-            continue  # already admitted with its bundle's first leg
-        if any(name == b for _, b in BUNDLES):
-            continue  # admission decided at the bundle's first leg
-        cost = costs[name]
-        if any(name == a for a, _ in BUNDLES):
-            cost += costs[partner_of[name]]
-        if (prio == 0 and only is None) or cost <= left:
-            admitted.add(name)
-            reps_of[name] = reps
-            if any(name == a for a, _ in BUNDLES):
-                b = partner_of[name]
-                admitted.add(b)
-                reps_of[b] = plan[b][2]
-            left -= cost
-    return admitted, reps_of
-
-
-def realized_degradation(mults: dict) -> tuple[float, float | None]:
-    """(typical, worst) realized cost multiplier from a completed suite.
-
-    The probe's single global D mis-prices SPLIT windows: the D=18.6
-    validation run (BENCH/BASELINE.md round-4 table) had pip_join
-    realize 16.8x its best-window estimate while tiling realized 1.04x
-    — one collapsed bottleneck (memory bandwidth) scaled EVERY
-    second-chance estimate 18.6x, so image_tiling was priced at 148 s,
-    realized 2.0 s, and ~145 s of budget went unused. Per-entry
-    realized multipliers are within-run evidence (no cross-window
-    classification claims — CLAUDE.md measurement discipline): the
-    MEDIAN prices the typical entry, the MAX guards the worst case
-    (an entry that tracks the collapsed bottleneck must still fit the
-    absolute budget). Returns (max(1, median), max(median, max)); with
-    no completed entries, (1.0, None) — callers fall back to probe D.
-    """
-    import statistics
-
-    if not mults:
-        return 1.0, None
-    med = max(1.0, statistics.median(mults.values()))
-    return med, max(med, max(mults.values()))
-
-
-def run_suite(spark: SparkSession, n_points: int, degradation: float,
-              scaling_pairs: int, only: set | None = None,
-              worst_mult: float | None = None) -> dict:
-    """``only``: retry mode (the second-chance pass) — plan and run just
-    these names against whatever budget remains, no scaling reserve.
-    ``worst_mult``: worst realized per-entry multiplier from the main
-    suite (second-chance mode) — an entry admits only if even at that
-    multiplier it stays inside the absolute budget."""
-    feats = FX.make_features()
-    timings: dict[str, float] = {}
-    counts: dict[str, int] = {}
-    mults: dict[str, float] = {}
-
-    admitted, reps_of = plan_entries(degradation, scaling_pairs, only=only)
-    skipped: list[str] = [
-        n for n, _, _, _ in ENTRY_PLAN
-        if n not in admitted and (only is None or n in only)
-    ]
-
-    pts = spark.read.parquet(points_parquet(spark, n_points))
-    warm_python_workers(spark)
-    _dbg(f"setup done; admitted={sorted(admitted)} shed={skipped}")
-
-    est_of = {n: e for n, _, e, _ in ENTRY_PLAN}
-    prio_of = {n: p for n, p, _, _ in ENTRY_PLAN}
-    reserve = scaling_reserve(degradation, scaling_pairs)
-
-    # Adaptive overhead ratio (round-3 lesson #2): plan-time estimates
-    # cover (reps+1) timed runs but not fixture reads, corpus prep, or a
-    # window that degrades AFTER the probe (measured: a D=1.0 probe
-    # followed by a 2-3x degraded suite — twice). Track realized wall
-    # per unit of estimated cost and scale the REMAINING estimates by
-    # it, so a degraded window sheds the expensive tail (ann1m) instead
-    # of whatever happens to sit behind the moment the clock dies.
-    est_spent = {"v": 0.0}
-    suite_t0 = time.time()  # NOT _T0: a scale-first pass before the
-    # suite is budgeted clock, not suite overhead — counting it in the
-    # ratio starved the suite's own entries (measured)
-
-    def overhead_ratio() -> float:
-        spent = time.time() - suite_t0
-        # 30 s allowance for session + probe + parquet setup
-        return max(1.0, spent / max(est_spent["v"] + 30.0, 30.0))
-
-    def entry_est(name):
-        return est_of[name] * max(1.0, degradation) * (reps_of[name] + 1)
-
-    def fits(name, extra_est=0.0, est_override=None,
-             reserve_override=None):
-        # 8 s end margin: the artifact assembly + session stop run after
-        # the last entry, and a last admit whose realized cost lands a
-        # few seconds over its estimate must not push `elapsed` past the
-        # budget (measured this round: 420.3 s elapsed, pyramid_delta
-        # admitted at 414.7 against est ~3 s, realized 5.6 s)
-        r = overhead_ratio()
-        spent = time.time() - _T0
-        base = (entry_est(name) + extra_est
-                if est_override is None else est_override)
-        est = base * r
-        # worst-case guard (second-chance mode): entry_est scales by the
-        # TYPICAL realized multiplier (the median, passed as this run's
-        # `degradation`); an entry that instead tracks the window's worst
-        # observed multiplier must still fit the absolute budget.
-        # entry_est is proportional to max(1, degradation), so rescaling
-        # by worst/typical prices the same entry at the worst multiplier.
-        if worst_mult is not None:
-            worst = base * worst_mult / max(1.0, degradation)
-            if spent + worst > BENCH_BUDGET - 8.0:
-                return False
-        # second clause: late-window overrun guard (round-4 validation:
-        # pyramid_full admitted at 400.9 s against a realized-overhead-
-        # scaled ~9 s estimate, realized 18 s in a degraded patch ->
-        # elapsed 425.7 vs the 420 budget). An entry only admits if its
-        # scaled estimate PLUS an overrun allowance — half the estimate,
-        # capped at 15 s absolute (the observed overrun class is ~9-15 s;
-        # a proportional-only 1.5x form wrongly blocked a ~85 s bundle
-        # while 100+ s remained) — stays inside the budget. In the early
-        # suite this never binds; near the end it blocks exactly the
-        # admits whose overrun has nowhere to go.
-        rsv = reserve if reserve_override is None else reserve_override
-        return (spent + est <= BENCH_BUDGET - rsv - 8.0
-                and spent + est + min(est * 0.5, 15.0)
-                <= BENCH_BUDGET - 8.0)
-
-    def timed(name, df_builder, force=False):
-        """Warm once then report min of planned reps — this sandbox has
-        ~25x slower first-touch page faults, so cold runs measure the
-        host's memory ballooning, not the plan. A dynamic re-check
-        protects the scaling reserve even if earlier entries overran
-        their calibrated estimate; priority-0 entries are never
-        dynamically skipped (the headline metrics derive from them —
-        main() would crash with nothing recorded at all), and ``force``
-        bypasses the re-check for a bundle's second leg whose partner's
-        cost is already sunk."""
-        if name not in admitted:
-            return
-        if prio_of[name] > 0 and not force and not fits(name):
-            admitted.discard(name)
-            skipped.append(name)
-            _dbg(f"SKIP {name} (dynamic: est {entry_est(name):.0f}s won't fit)")
-            return
-        _dbg(f"warm {name}")
-        df_builder().count()
-        best = float("inf")
-        for _ in range(reps_of[name]):
-            t0 = time.time()
-            counts[name] = df_builder().count()
-            best = min(best, time.time() - t0)
-        timings[name] = best
-        # realized-vs-best-window multiplier: within-run evidence the
-        # second-chance pass re-prices with (see realized_degradation)
-        mults[name] = best / est_of[name]
-        est_spent["v"] += entry_est(name)
-        _dbg(f"done {name}: {best:.2f}s x{reps_of[name]}")
-
-    # --- priority 0: headline throughput metrics ---
-    pip_index = SJ.PolygonIndex(spark, feats, res=10)  # built once, reused
-    timed("pip_join", lambda: SJ.point_in_polygon_join(
-        spark, pts, pip_index, res=10, point_id_col="point_id", dedup_first=False))
-
-    def tiles():
-        return (
-            pts.groupBy(F.expr(C.cell_sql("lng", "lat", 10, "spark")).alias("cell"))
-            .agg(
-                F.count(F.lit(1)).alias("n_images"),
-                F.min("lng").alias("minx"),
-                F.max("lng").alias("maxx"),
-                F.min("lat").alias("miny"),
-                F.max("lat").alias("maxy"),
-            )
-        )
-
-    timed("tiling", tiles)
-
-    # --- priority 1: IVF payoff regime (VERDICT r1 #7 / r2 #6): 1M x
-    # 64-dim vectors, 64 data-trained centroids, prebuilt
-    # bucket-partitioned index. Brute scans the whole corpus per query
-    # batch; indexed IVF reads only the probed partitions (nprobe/C =
-    # 1/16 of the files). 16 queries: enough brute work (16M dot
-    # products) to rise clearly above the per-job floor while fitting
-    # the priority-1 slot deterministically (round-3 verdict item 2).
-    from gis_shapefile_spark.operators import dedup as DD
-    from gis_shapefile_spark.operators import similarity as SIM
-
-    # (Ordering history: round 3 moved the ann1m bundle LAST among
-    # priority 1 because a degraded window once overran its estimate and
-    # the dynamic re-check starved every cheaper entry behind it — but
-    # two round-4 validation runs showed the inverse failure dominates
-    # now that the 1M fixture/index are cached on disk: the cheap tail
-    # accumulated ~135 s before the bundles and the reserve-adjusted fit
-    # check shed BOTH verdict-named bundles even in a D=2.3 window with
-    # 286 s left. The bundles are the round-4 artifact's named evidence
-    # (verdict items 2 and 6, third attempt), so they now run FIRST
-    # among priority 1, each still self-shedding atomically via its own
-    # pre-check; the cheap entries behind them re-admit from whatever
-    # clock remains and have r1-r3 artifact rows to stand on.)
-
-    # image payload leg: input_hint table -> cells -> PIP join -> tile
-    # rollup with in-plan phash invariant verification
-    from gis_shapefile_spark.operators import tiling as TI
-
-    if "image_tiling" in admitted:
-        images = spark.read.parquet(FX.images_parquet_path(n=20000))
-        timed("image_tiling", lambda: TI.image_tiling_pipeline(
-            spark, images, FX.make_grid_features(), res=8))
-
-    # training-data pipeline leg: MinHash-LSH near-dup over documents + a
-    # mangled copy (the driver-contract corpus), components over the
-    # verified pairs
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    # single-file source => 1-2 splits; spread the signature compute
-    corpus = docs.select("doc_id", "text").unionByName(
-        docs.select(
-            (F.col("doc_id") + 1000000).alias("doc_id"),
-            F.expr("substr(text, instr(text, ' ') + 1)").alias("text"),
-        )
-    ).repartition(CPUS)
-
-    def shed(names, why):
-        """Dynamic shed with bookkeeping: an entry dropped by a setup-cost
-        gate must land in ``skipped`` or the artifact reports it as
-        neither timed nor shed (budget accounting would silently lie)."""
-        dropped = [n for n in names if n in admitted]
-        for n in dropped:
-            admitted.discard(n)
-            skipped.append(n)
-        if dropped:
-            _dbg(f"SKIP {dropped} ({why})")
-
-    # IVF payoff bundle — FIRST among the priority-1 evidence (see the
-    # ordering history above). Dynamic re-check BEFORE the fixture
-    # work: if the pair no longer fits together, drop BOTH (one
-    # without the other proves no ratio) and don't spend untimed
-    # minutes on the 1M fixture/index.
-    # The ann1m pre-check may borrow the SECOND scaling pair's
-    # reservation (one pair stays sacrosanct — the north-rule sample;
-    # pair 2 then comes only from end-of-budget leftovers): in degraded
-    # suite-first windows (D ~ 2.2 validation run) the 2-pair reserve
-    # priced the verdict's named evidence out at +148 s with 130+ s of
-    # real room, while the bundle outranks a second pair in the round-4
-    # priority order (>= 1 pair, then ann1m, then extras).
-    if "ann1m_brute" in admitted and not fits(
-        "ann1m_brute", extra_est=entry_est("ann1m_ivf"),
-        # min(): the borrow may only RELAX the gate. In scale-first
-        # windows (D <= 1.5) or with SPARK_GRAFT_BENCH_SCALING=0,
-        # run_suite's own reserve is 0 — an unconditional one-pair
-        # override would RAISE the bundle's effective reserve to ~99 s,
-        # making the verdict-named evidence harder to admit than every
-        # other entry in exactly the windows that were reserve-free.
-        reserve_override=min(reserve, scaling_reserve(degradation, 1)),
-    ):
-        for n in ("ann1m_brute", "ann1m_ivf"):
-            admitted.discard(n)
-            skipped.append(n)
-        _dbg("SKIP ann1m bundle (dynamic: pair won't fit together)")
-    if {"ann1m_brute", "ann1m_ivf"} & admitted:
-        big = spark.read.parquet(vectors_1m_parquet(spark))
-        sample = np.stack([
-            r["embedding"]
-            for r in big.where(F.pmod(F.xxhash64("vec_id"), F.lit(101)) == 0)
-            .limit(8192).collect()
-        ])
-        cents64 = SIM.kmeans_fit(sample, 64, iters=5)
-        _dbg("ann1m fixture ready")
-        idx_path = os.path.join(FX.FIXTURE_DIR, "bench_ivf_index_1m")
-        if not os.path.exists(os.path.join(idx_path, "_SUCCESS")):
-            SIM.ivf_write_index(big, cents64, idx_path)  # untimed: index build
-        qbig = big.where(F.col("vec_id") % 62500 == 0).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )  # 16 queries (was 32 — see ENTRY_PLAN note)
-        timed("ann1m_brute", lambda: SIM.cosine_topk(big, qbig, k=10))
-        if "ann1m_brute" in timings:
-            # brute's cost is sunk; the ratio IS the evidence — the ivf
-            # leg (cheap by construction) always follows, even if a
-            # mid-run host collapse blew the budget during brute's warmup
-            timed("ann1m_ivf", lambda: SIM.ivf_topk_indexed(
-                spark, idx_path, qbig, k=10, centroids=cents64, nprobe=4),
-                force=True)
-        elif "ann1m_ivf" in admitted:  # keep the bundle atomic
-            admitted.discard("ann1m_ivf")
-            skipped.append("ann1m_ivf")
-
-    # skew-handling evidence (round-3 verdict item 6): explicit SALTING
-    # on the hot-cell PIP join, the engine's own mechanism and the one
-    # the north rule names ("skew from dense urban cells handled with
-    # explicit salting"). 4M points with 50% in ONE res-8 cell — the
-    # straggler-dominated regime: the 2M-row hot partition's vectorized
-    # ray-cast refine is ~13-17 s on one core while the other 2M rows
-    # cost ~1 s of wall across 31 cores, so the unsalted shuffle-hash
-    # join (salt_buckets=1 disables the broadcast) IS its straggler.
-    # salt_buckets=16 rewrites the join key to (cell, salt) BEFORE the
-    # shuffle (dimension replicated 16x — cheap, it is 51 polygons) and
-    # the hot cell's refine spreads across 16 tasks at shuffle time.
-    # Controlled interleaved measurement (this round): salting wins
-    # 1.94x min-of-2 with EVERY salted leg faster than every unsalted
-    # leg (8.6/12.1 vs 16.6/26.9 s) and held direction in every
-    # in-harness sample (1.44-2.22x). AQE's byte-gated split on the
-    # same table is window-SIGN-UNSTABLE on this shared host (1.91x
-    # for ON in a quiet window, 0.53x — ON slower — in a loaded one:
-    # the OFF straggler monopolizes one core steadily while the ON
-    # split's extra concurrent Python workers queue behind background
-    # load), so it stays enabled as the engine default but is not
-    # usable as single-sample artifact evidence — BENCH/BASELINE.md
-    # "Skew handling" has the full multi-window account. Both legs
-    # here run with AQE skew-split OFF to isolate the salting
-    # mechanism; equal output counts are an in-artifact correctness
-    # invariant.
-    # INTERLEAVED legs (round-4 validation defect: sequential legs
-    # recorded an INVERTED contrast when the window drifted between
-    # them). One shared warm (same table, same dimension; the salted
-    # plan is warmed separately by its own first-round run), then
-    # rounds of both legs back-to-back with the leg ORDER alternating
-    # per round — the same symmetric min-per-leg estimator the scaling
-    # pairs use.
-    # Admission prices the MINIMAL completable measurement (shared warm
-    # + round 0's two legs — the runner's round 1 already self-gates on
-    # the clock per leg, so the extension never needs admission cover):
-    # the full-extension estimate x the realized overhead ratio priced
-    # the bundle at ~151 s in a D=1.38 validation window where the
-    # realized pair cost ~80 s, shedding verdict-item-6 evidence with
-    # 130 s of budget left.
-    skew_min_est = (
-        (est_of["pip_skew_salted"] + est_of["pip_skew_unsalted"])
-        * max(1.0, degradation)
-    )
-    if "pip_skew_salted" in admitted and not fits(
-        "pip_skew_salted", est_override=skew_min_est
-    ):
-        shed(["pip_skew_salted", "pip_skew_unsalted"],
-             "dynamic: skew pair won't fit together")
-    if {"pip_skew_salted", "pip_skew_unsalted"} & admitted:
-        skew_idx = SJ.PolygonIndex(spark, feats, res=8)
-        hot_pts = spark.read.parquet(
-            points_parquet(spark, 4_000_000, hot_mod=2)
-        )
-
-        def skew_join(salt: int):
-            return SJ.point_in_polygon_join(
-                spark, hot_pts, skew_idx, res=8,
-                point_id_col="point_id", salt_buckets=salt,
-                dedup_first=False,
-            )
-
-        saved = {
-            k: spark.conf.get(k, None)
-            for k in (
-                "spark.sql.adaptive.skewJoin.enabled",
-                "spark.sql.shuffle.partitions",
-            )
-        }
-
-        def _skew_leg(salt: int) -> float:
-            t0 = time.time()
-            n = skew_join(salt).count()
-            counts[
-                "pip_skew_salted" if salt > 1 else "pip_skew_unsalted"
-            ] = n
-            return time.time() - t0
-
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "128")
-            spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-            _dbg("warm pip_skew pair (shared)")
-            skew_join(16).count()  # warms scan, dim broadcast, workers
-            t_salt, t_nosalt = float("inf"), float("inf")
-            for rnd in range(2):
-                # round 0 always completes (both legs need a time for a
-                # ratio to exist at all); round 1 checks the clock per
-                # leg so a mid-bundle window collapse costs one round,
-                # not the budget
-                if rnd > 0 and time.time() - _T0 > BENCH_BUDGET - 8.0:
-                    _dbg("skew round 1 skipped (budget)")
-                    break
-                legs = (16, 1) if rnd % 2 == 0 else (1, 16)
-                for salt in legs:
-                    t = _skew_leg(salt)
-                    if salt > 1:
-                        t_salt = min(t_salt, t)
-                    else:
-                        t_nosalt = min(t_nosalt, t)
-            timings["pip_skew_salted"] = round(t_salt, 3)
-            timings["pip_skew_unsalted"] = round(t_nosalt, 3)
-            est_spent["v"] += (entry_est("pip_skew_salted")
-                               + entry_est("pip_skew_unsalted"))
-            _dbg(f"done pip_skew pair: salt16={t_salt:.2f}s "
-                 f"unsalted={t_nosalt:.2f}s (interleaved min-of-2 per leg)")
-        finally:
-            for k, v in saved.items():
-                if v is not None:
-                    spark.conf.set(k, v)
-
-
-    # the pairs localCheckpoint is EAGER (~10 s best window) — don't pay
-    # it when the components entries are about to be dynamically shed.
-    # Gate on an entry actually ADMITTED (entry_est KeyErrors otherwise).
-    comp = [n for n in ("dedup_components", "dedup_components_star")
-            if n in admitted]
-    if comp and not fits(comp[0]):
-        shed(comp, "dynamic: components setup gate won't fit")
-    elif comp:
-        pairs = DD.near_duplicate_pairs(corpus, threshold=0.5).localCheckpoint()
-        timed("dedup_components", lambda: DD.connected_components(
-            corpus.select("doc_id"), pairs))
-        # the scale default (O(log^2 n) rounds on any diameter; used by
-        # checkpointed_corpus_curation) benched alongside label propagation
-        timed("dedup_components_star", lambda: DD.connected_components_star(
-            corpus.select("doc_id"), pairs))
-
-    # temporal leg: gap-based sessions over the events table
-    from gis_shapefile_spark.operators import sessionize as SE
-
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    timed("sessionize", lambda: SE.session_stats(ev, gap_s=1800))
-
-    timed("dedup_minhash", lambda: DD.near_duplicate_pairs(corpus, threshold=0.5))
-
-    timed("knn3", lambda: SJ.knn_join(
-        spark,
-        pts.where(F.col("point_id") % 6 == 0),
-        feats,
-        k=3,
-        res=6,
-        point_id_col="point_id",
-    ))
-
-    # --- priority 2: sheddable tail ---
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    q = emb.where(F.col("vec_id") < 32).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    timed("ann_topk", lambda: SIM.cosine_topk(emb, q, k=10))
-
-    cents = SIM.make_centroids(64, 8)
-    timed("ann_ivf", lambda: SIM.ivf_topk(emb, q, k=10, centroids=cents,
-                                          nprobe=2))
-
-    # image near-dup leg: decode + phash recompute + pigeonhole hamming
-    # block join over 20k images + 2k planted perturbed copies
-    from gis_shapefile_spark.operators import multimodal as MM
-
-    if "image_neardup" in admitted:
-        nd_images = spark.read.parquet(
-            FX.near_dup_images_parquet_path(n=20000, n_dup=2000)
-        )
-        timed("image_neardup", lambda: MM.image_near_pairs(
-            nd_images, max_hamming=6))
-
-    # relational leg on the driver-provided parquet
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    # incremental-pyramid payoff: maintaining the tile pyramid for a 1%
-    # crawl batch must cost O(batch), not O(corpus) — full rebuild vs
-    # churn-bounded delta over identical state in the same window. The
-    # batch is the hot-cluster 1% slice (a crawl batch is spatially
-    # LOCALIZED — new imagery of one city, a handful of tiles), written
-    # to its own parquet once so the delta reads a batch table, not a
-    # filter over the corpus.
-    pyr = [n for n in ("pyramid_full", "pyramid_delta") if n in admitted]
-    if pyr and not fits(pyr[0]):
-        shed(pyr, "dynamic: pyramid gate won't fit")
-    elif pyr:
-        from gis_shapefile_spark.operators import tiling as TI
-
-        pyr_levels = [10, 7, 4]
-        timed("pyramid_full", lambda: TI.tile_pyramid(pts, pyr_levels))
-        # the batch fixture + stored-pyramid localCheckpoint (an untimed
-        # near-full-rebuild cost) exist only for the delta leg — never pay
-        # them when only pyramid_full runs
-        if "pyramid_delta" in admitted:
-            bpath = os.path.join(FX.FIXTURE_DIR, f"bench_pyr_batch_n{n_points}")
-            if not os.path.exists(os.path.join(bpath, "_SUCCESS")):
-                pts.where(F.col("point_id") % 100 == 0).coalesce(8) \
-                    .write.mode("overwrite").parquet(bpath)
-            batch = spark.read.parquet(bpath)
-            stored_pyr = TI.tile_pyramid(
-                pts.where(F.col("point_id") % 100 != 0), pyr_levels
-            ).localCheckpoint()
-            timed("pyramid_delta", lambda: TI.tile_pyramid_delta(
-                stored_pyr, batch, pyr_levels))
-
-    timed("pricing_summary", lambda: (
-        li.where(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("l_quantity").alias("sum_qty"),
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("rev"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    ))
-
-    return {"timings": timings, "counts": counts, "skipped": skipped,
-            "mults": mults}
-
-
-# documented best-worst window bounds (BENCH/BASELINE.md); the artifact
-# annotates each measured number as in-range against bounds scaled by the
-# probe's degradation factor, so a degraded-window sample self-documents
+# documented best-worst bounds (BENCH/BASELINE.md, 32-vCPU windows); the
+# artifact marks each measured number in or out of range, beside `host`
 DOC_RANGES = {
     "pip_join": [1.7, 13.0],
     "tiling": [0.8, 7.7],
@@ -885,9 +352,8 @@ DOC_RANGES = {
     "dedup_minhash": [2.2, 12.0],
     "ann_topk": [0.8, 1.7],
     "ann_ivf": [1.5, 3.5],
-    # lower bound re-measured round 5: a D=1.15 quiet window ran the
-    # warmed 1M brute scan in 6.8 s (prior floor 9.0 came from windows
-    # where the fixture was cold on disk)
+    # lower bound re-measured round 5: a quiet window ran the warmed 1M
+    # brute scan in 6.8 s (the prior 9.0 floor had the fixture cold)
     "ann1m_brute": [6.5, 28.0],
     "ann1m_ivf": [2.2, 12.0],
     "pip_skew_salted": [4.0, 35.0],
@@ -896,7 +362,6 @@ DOC_RANGES = {
     "dedup_components_star": [1.2, 8.0],
     "image_tiling": [1.1, 42.0],
     # lower bound re-measured after the 4.2x JPEG lookahead decoder
-    # (was 6.0 with the bit-by-bit entropy loop)
     "image_neardup": [4.3, 45.0],
     "sessionize": [0.28, 2.0],
     "pyramid_full": [1.7, 25.0],
@@ -904,588 +369,214 @@ DOC_RANGES = {
 }
 
 
-def prio01_suite_est(degradation: float) -> float:
-    """Estimated clock the priority-0/1 suite entries need (the floor
-    the scale-first pass must leave on the clock)."""
-    d = max(1.0, degradation)
-    tot = 30.0  # session + probe + parquet setup allowance
-    for _name, prio, est, reps in ENTRY_PLAN:
-        if prio <= 1:
-            r = 1 if d >= 3.0 else (min(reps, 2) if d >= 1.5 else reps)
-            tot += est * d * (r + 1)
-    return tot
+def realized_ratio(done: list[tuple[float, float]]) -> float:
+    """Realized over estimated wall across the (est, wall) pairs of
+    everything completed so far; 1.0 before anything has run."""
+    est = sum(e for e, _ in done)
+    return sum(w for _, w in done) / est if est else 1.0
 
 
-class _PassBudgetExceeded(Exception):
-    """Raised mid-pair when the scaling pass's hard reserve is spent."""
+def admit(cost: float, ratio: float, now: float, t0: float,
+          budget: float = BUDGET_S, core: bool = False) -> bool:
+    """The one admission rule: a core entry always runs; any other runs
+    only if its estimated cost, scaled by the realized ratio, still fits
+    the budget."""
+    return core or (now - t0) + ratio * cost <= budget
 
 
-def run_scaling_pass(degradation: float, n_pairs_target: int,
-                     clock_floor: float, mandatory_first: bool = True,
-                     preset_n_big: int | None = None,
-                     leg_est: dict | None = None,
-                     seed_pair_cost: float | None = None,
-                     reps: int = 2) -> dict:
-    """The N-vs-4N pair loop (north-rule evidence).
+def run_plan(entries, run: Callable, done: list, shed: list, t0: float,
+             budget: float = BUDGET_S, clock: Callable = time.time) -> None:
+    """Run ``entries`` in order under ``admit``; a shed entry's keys go to
+    ``shed`` and later entries still get their chance. ``done`` carries
+    the (est, wall) ledger in and out (the scaling pairs start it)."""
+    for e in entries:
+        cost, ratio = e.est_s * (e.reps + 1), realized_ratio(done)
+        if not admit(cost, ratio, clock(), t0, budget, e.name in CORE):
+            shed.extend(e.keys)
+            _dbg(f"shed {e.name} (est {cost:.0f}s x ratio {ratio:.2f})")
+            continue
+        start = clock()
+        run(e)
+        done.append((cost, clock() - start))
 
-    Round-4 policy (verdict item 1 + advice): the pair COUNT is fixed
-    up-front (``n_pairs_target``, default 2) — no ratio-dependent
-    stopping or extension, so the reported median of all completed pairs
-    carries no optional-stopping bias. The pass is HARD-CAPPED at its
-    reserve (scaling_reserve), enforced mid-flight: pair 0 always
-    completes (each leg watchdog-bounded), later pairs abort between
-    jobs the moment the reserve is spent — an abort costs recorded
-    pairs, never the suite's clock. ``clock_floor`` = seconds that must
-    remain unspent for work scheduled AFTER this pass (the suite, when
-    scaling runs first). No SparkSession may be active on entry (each
-    level builds its own).
 
-    ``mandatory_first=False`` (the end-of-budget TOP-UP pass): even the
-    first pair checks the deadline before every job and may abort —
-    nothing after this pass needs protecting, but the budget end does.
-    ``preset_n_big`` skips re-calibration so every pair in the artifact
-    (first pass + top-up) runs the identical input size."""
-    # Same job (the headline spatial-join + tiling suite), identical
-    # input, two parallelism levels N and 4N (driver-mandated proxy for
-    # cluster sizes; no real cluster in this sandbox). N defaults to 2:
-    # host characterization (BENCH/BASELINE.md) shows this sandbox's
-    # shared memory bus saturates around 8-12 threads, so N=2 vs 4N=8
-    # is the pair where parallel efficiency measures the ENGINE rather
-    # than the host's bandwidth ceiling; the 8-vs-32 pair is also
-    # reported in BENCH/BASELINE.md with that caveat.
-    scale_n = int(os.environ.get("SPARK_GRAFT_SCALE_N", "2"))
+def run_entry(b: Inputs, e: Entry, out: dict) -> None:
+    """Warm each leg once, then ``reps`` rounds with the leg order
+    alternating per round; keep the minimum per leg. Warm runs are not
+    timed: the host's first-touch page faults measure memory ballooning,
+    not the plan. A failure is recorded under ``errors``, not raised."""
+    conf = e.conf or {}
+    saved = {k: b.spark.conf.get(k) for k in conf}
+    load = round(os.getloadavg()[0], 2)
+    try:
+        legs = e.build(b)
+        if callable(legs):
+            legs = {e.name: legs}
+        for k, v in conf.items():
+            b.spark.conf.set(k, v)
+        for thunk in legs.values():
+            thunk().count()
+        best, counts = dict.fromkeys(legs, float("inf")), {}
+        order = list(legs)
+        for rnd in range(e.reps):
+            for leg in order if rnd % 2 == 0 else order[::-1]:
+                t = time.time()
+                counts[leg] = legs[leg]().count()
+                best[leg] = min(best[leg], time.time() - t)
+        out["timings"].update(best)
+        out["counts"].update(counts)
+        out["loadavg"].update(dict.fromkeys(legs, load))
+        _dbg(f"done {e.name}: " + ", ".join(f"{k}={v:.2f}s" for k, v in best.items()))
+    except Exception as exc:  # one broken entry must not lose the artifact
+        out["errors"][e.name] = f"{type(exc).__name__}: {exc}"[:500]
+        _dbg(f"FAILED {e.name}: {exc}")
+    finally:
+        for k, v in saved.items():
+            b.spark.conf.set(k, v)
 
-    # Round-3 methodology fix, measured in two steps this round:
-    # (1) the old pair ran TWO actions over the bare 6M parquet
-    # points — decomposing its own numbers (t_n 14.27, t_4n 5.40)
-    # gives work scaling EXACTLY 4.0x but a 2.4s per-JOB fixed floor
-    # (scheduler + broadcast + count collect) that was 45% of the 4N
-    # time, capping raw efficiency at ~0.66 on a FAST window (the
-    # floor shrinks relative to work on slow hosts — r2's 0.978 was
-    # partly that). (2) With the floor amortized (4x work), the
-    # PARQUET scan of 24M rows still measured 0.705 — the single
-    # host's shared memory bus, which on a real cluster scales WITH
-    # executors (each brings its own disks/NICs/memory channels), so
-    # a local[N] parquet scan UNDERSTATES real-cluster scaling by
-    # construction. The scaling job therefore generates the SAME
-    # point table in-plan (synth_points: identical distribution incl.
-    # the Zipfian hot cell, pure integer expressions) at WORK_X times
-    # the suite size — one action, floor < 5%, CPU-bound like a
-    # cluster-shaped scan. Each session also times the identical plan
-    # at 512 rows — the measured floor, recorded per pair so the
-    # artifact can audit the floor fraction (the raw ratio stays the
-    # headline).
-    # Window-adaptive work size (round-3 lesson #3): a FIXED work
-    # multiplier either drowns in the per-job floor on fast windows
-    # or blows the wall budget on slow ones (measured: the same
-    # 16x-work pair cost 100 s in one window and 350 s two hours
-    # later). The first session times the suite-sized job once and
-    # sizes n_big so the 4N leg lands near T4N_TARGET seconds —
-    # large enough that the floor is <10%, small enough that a pair
-    # stays ~2 minutes even degraded. The SAME n_big is reused for
-    # every level and every pair (identical input per the rule).
-    # 6 s: measured floor tradeoff (this round, clean window) — at a 4 s
-    # target the ~0.7-1.0 s per-job floor is 16-24% of the 4N leg and
-    # drags the RAW ratio to 0.75-0.78 (floor-adjusted 0.85-0.98) even
-    # when the work scales ~4x; at 6 s the floor is ~12% and the raw
-    # ratio reads the engine again. 7 s (round 3) made pairs ~170 s and
-    # blew the reserve. 6 is the BASE: the calibration leg measures the
-    # floor in-window and stretches the target to 10*floor (capped 8 s:
-    # at 9 s a pair cost ~98 s and pair 1 landed just OUTSIDE the
-    # scale-first deadline in adaptive-target windows — one recorded
-    # pair; at 8 s the floor share rises 12% -> 13.5% (negligible on
-    # the ratio) and the ~88 s pair flips those windows to TWO pairs)
-    # when a degraded window inflates the floor itself — see the
-    # calibration branch below.
-    T4N_TARGET = float(os.environ.get("SPARK_GRAFT_SCALE_T4N", "6"))
-    cal = {"n_big": preset_n_big}
 
-    # Hard cap (round-3 lesson: the reserve existed but nothing enforced
-    # it — the pass ran ~340 s against a ~187 s reserve and the dynamic
-    # re-check then shed all 13 remaining suite entries). The deadline is
-    # the smaller of (pass start + reserve) and (budget end - the floor
-    # owed to the suite); pair 0 ignores it (one pair is mandatory
-    # north-rule evidence, each leg watchdog-bounded), later pairs check
-    # it before every Spark job and abort mid-flight when it passes.
-    pass_t0 = time.time()
-    deadline = min(
-        pass_t0 + scaling_reserve(degradation, n_pairs_target),
-        _T0 + BENCH_BUDGET - clock_floor,
-    )
-    # armed after pair 0 completes; a top-up pass arms it from the start
-    enforce = {"on": not mandatory_first}
+def scale_sizes(cpus: int) -> tuple[int, int] | None:
+    """(N, 4N) core counts for the scaling pair: N = min(2, cpus // 4),
+    so 4N never exceeds the host (2 vs 8 on 32 vCPUs, where the shared
+    memory bus saturates past ~8-12 threads; 1 vs 4 on 4 cores). None
+    below 4 CPUs: no honest pair exists."""
+    n = min(2, cpus // 4)
+    return (n, 4 * n) if n >= 1 else None
 
-    def timed_job(master: str) -> tuple[float, float]:
-        # leg-aware deadline (round-4 top-up fix): when the caller knows
-        # this window's leg times (a top-up does — the first pass
-        # measured them), a level that cannot FINISH by the deadline is
-        # aborted before it starts, not after it overruns. 12 s covers
-        # session + warmup + floor; unknown legs keep the bare check.
-        est = 12.0 + reps * (leg_est or {}).get(master, 0.0)
-        if enforce["on"] and time.time() + (
-            est if leg_est else 0.0
-        ) > deadline:
-            raise _PassBudgetExceeded(
-                f"reserve spent before {master} leg"
-            )
-        s = _session(master)
+
+def _watchdog(spark: SparkSession, action: Callable) -> None:
+    """Run ``action`` on a thread; past SCALE_JOB_TIMEOUT_S cancel every
+    job and raise, so a hung leg costs one pair, not the artifact."""
+    pool = ThreadPoolExecutor(1)
+    try:
+        pool.submit(action).result(SCALE_JOB_TIMEOUT_S)
+    except TimeoutError:
+        spark.sparkContext.cancelAllJobs()
+        raise
+    finally:
+        pool.shutdown(wait=False)
+
+
+def scaling_leg(cores: int, cal: dict) -> tuple[float, float]:
+    """(min of 2 timed runs, per-job floor) of the PIP join at
+    local[cores] over ``cal["n_points"]`` in-plan generated points.
+
+    The points are generated, not read: a local[N] parquet scan measures
+    the single host's memory bus, which a real cluster scales per
+    executor. The first leg calibrates n_big from one suite-sized run so
+    the 4N leg lands near the target; every later leg reuses it."""
+    s = _session(f"local[{cores}]")
+    try:
         warm_python_workers(s)
         idx = SJ.PolygonIndex(s, FX.make_features(), res=10)
 
-        def run(df):
-            # Watchdog (round-3 lesson #5: one measured window HUNG a
-            # scaling leg for 14 minutes — hypervisor memory event
-            # crashed the Python workers — which without a kill would
-            # have eaten the whole budget and recorded NOTHING): the
-            # action runs on a thread; on timeout every job is
-            # cancelled and the pair aborts instead of the artifact.
-            import threading
+        def run(n: int) -> float:
+            t = time.time()
+            _watchdog(s, lambda: SJ.point_in_polygon_join(
+                s, synth_points(s, n), idx, res=10, point_id_col="point_id",
+                dedup_first=False).count())
+            return time.time() - t
 
-            err: dict = {}
-
-            def target():
-                try:
-                    SJ.point_in_polygon_join(
-                        s, df, idx, res=10, point_id_col="point_id",
-                        dedup_first=False,
-                    ).count()
-                except Exception as e:  # surfaced on the main thread
-                    err["e"] = e
-
-            th = threading.Thread(target=target, daemon=True)
-            th.start()
-            th.join(float(os.environ.get("SPARK_GRAFT_SCALE_JOB_TIMEOUT",
-                                         "240")))
-            if th.is_alive():
-                s.sparkContext.cancelAllJobs()
-                th.join(30)
-                raise TimeoutError("scaling job exceeded watchdog")
-            if "e" in err:
-                raise err["e"]
-
-        # warmup: compiles the join codegen, ships the ring
-        # broadcast, spawns Arrow workers — floor-sized, not billed
-        run(synth_points(s, 500_000))
-        t0 = time.time()
-        run(synth_points(s, 512))
-        floor = time.time() - t0
-        if cal["n_big"] is None:
-            # calibration leg (4N level — pair 0 starts there): time
-            # the suite-sized job, size n_big for the target.
-            # Floor-ADAPTIVE target (round-4 validation: a D=1.28 window
-            # inflated the per-job floor itself to 0.87-1.2 s — 15-21%
-            # of a 6 s 4N leg — compressing raw pairs to 0.709-0.771
-            # while the floor-subtracted ratios read 0.82-0.89; the
-            # floor is measured right here, so size the leg to keep it
-            # ~10%: target = clamp(T4N_TARGET, 10*floor, 8). Clean
-            # windows (floor 0.3-0.6 s) are unchanged; the cap was 9 s
-            # first — at 9 a pair cost ~98 s and pair 1 landed just
-            # OUTSIDE the scale-first deadline in adaptive-target
-            # windows (six validation runs recorded exactly one pair
-            # each); at 8 the floor share rises 12% -> 13.5%
-            # (negligible on the ratio) and the ~88 s pair flips those
-            # windows to two recorded pairs.
-            eff_t4n = max(T4N_TARGET, min(8.0, 10.0 * floor))
-            cal["t4n_target"] = eff_t4n
-            t0 = time.time()
-            run(synth_points(s, N_POINTS))
-            t_cal = time.time() - t0
-            # recorded so later pairs (which skip calibration) can be
-            # priced at pair-0's wall MINUS this one-off cost
-            cal["cal_wall"] = t_cal
-            rate = max(t_cal - floor, 0.2) / N_POINTS
-            cal["n_big"] = int(
-                max(N_POINTS, min(eff_t4n / rate, 32 * N_POINTS))
-            )
-            _dbg(
-                f"scaling calibration: {t_cal:.1f}s @{N_POINTS} "
-                f"floor={floor:.2f}s -> t4n_target={eff_t4n:.1f}s "
-                f"n_big={cal['n_big']}"
-            )
-        # min of 2 reps — the suite's own steady-state estimator. One
-        # measured run had back-to-back pairs read 0.43 and 1.02 purely
-        # from 4N-leg contention spikes; min-of-reps per LEG (symmetric,
-        # so no direction bias) filters the spike without touching the
-        # ratio's meaning.
-        # reps=1 (top-up pairs): a single-rep leg is noisier than the
-        # min-of-2, but the cross-pair MEDIAN is the spike filter there,
-        # the per-pair "reps" field discloses it, and halving the pair
-        # cost is what lets leftover clock buy the 2nd/3rd north-rule
-        # pair at all (validated: leftovers ran 85-105 s vs ~95 s for a
-        # 2-rep pair and ~60 s for a 1-rep pair)
-        t = float("inf")
-        for rep in range(reps):
-            if rep > 0 and enforce["on"] and time.time() > deadline:
-                s.stop()
-                raise _PassBudgetExceeded("reserve spent mid-leg")
-            t0 = time.time()
-            run(synth_points(s, cal["n_big"]))
-            t = min(t, time.time() - t0)
+        run(500_000)  # warm-up: join codegen, ring broadcast, workers
+        floor = run(512)
+        if "n_points" not in cal:
+            cal["t4n_target_sec"] = round(max(T4N_TARGET_S, min(8.0, 10.0 * floor)), 2)
+            cal["cal_wall_sec"] = round(run(N_POINTS), 1)
+            rate = max(cal["cal_wall_sec"] - floor, 0.2) / N_POINTS
+            cal["n_points"] = int(
+                max(N_POINTS, min(cal["t4n_target_sec"] / rate, 32 * N_POINTS)))
+            _dbg(f"scaling calibration: floor={floor:.2f}s -> {cal}")
+        return min(run(cal["n_points"]) for _ in range(2)), floor
+    finally:
         s.stop()
-        return t, floor
 
-    # Per-PAIR ratios over interleaved phases: the host's throughput
-    # drifts 5-10x on ~minutes timescales (see BENCH/BASELINE.md), so
-    # one min-vs-min ratio across time-separated phases couples the
-    # efficiency number to the drift direction — r01 recorded 0.675
-    # that way while adjacent-phase pairs measured 0.80-0.94. Each
-    # pair runs N and 4N back-to-back (alternating order so neither
-    # level systematically lands on the degraded side). The HEADLINE
-    # efficiency is the MEDIAN of all completed pairs (round-2 advice:
-    # max over noisy ratios is upward-biased); the best pair is
-    # reported alongside, and every pair stays in the artifact for
-    # audit. The pair count is FIXED before any ratio is seen (round-3
-    # advice: the old extend-while-median-below-rule policy was an
-    # optional-stopping rule that biased the median upward) — the only
-    # thing that ends the loop early is the hard reserve cap.
-    import statistics
 
-    pair_stats = []
-    pairs_capped = False
-    # a top-up seeds the price with the first pass's realized net pair
-    # cost (within-run evidence); otherwise the probe estimate applies
-    pair_cost = (seed_pair_cost if seed_pair_cost
-                 else PAIR_EST * max(1.0, degradation))
-    # True while pair_cost is the PROBE-seeded estimate; once a pair has
-    # completed in THIS pass (or the seed is realized), pricing is
-    # within-run evidence
-    cost_is_probe = seed_pair_cost is None
-
-    policy = (
-        f"fixed {n_pairs_target} pairs decided before any ratio is seen; "
-        "no ratio-dependent stopping or extension; the pair loop "
-        "hard-stops (pairs_capped) when its reserve is spent"
-    )
-
-    for i in range(n_pairs_target):
-        if pair_stats or not mandatory_first:
-            # measured-cost gate BEFORE committing to a new pair (a
-            # top-up pass gates even its first pair — nothing after it
-            # needs protecting, but the budget end does). The 1.3
-            # margin makes mid-flight aborts rare rather than merely
-            # bounded: a pair that starts and aborts wastes its whole
-            # leg (measured 115 s in one window), while a pair skipped
-            # here is retried by the end-of-budget top-up pass for
-            # free.
-            # margin stacking fixed this round: the 1.3 safety factor
-            # belongs to the PROBE estimate only. A realized-pair price
-            # already carries its own 1.15 (below); multiplying it by
-            # another 1.3 (1.495x total) skipped a pair that fit — the
-            # clean-window validation run had 105.6 s of its 191.6 s
-            # reserve left after an 86.0 s pair 0 (which includes the
-            # one-off ~10 s calibration later pairs skip), priced pair 1
-            # at 128.6 s, and recorded one pair where two fit.
-            margin = 1.3 if cost_is_probe else 1.0
-            if time.time() + pair_cost * margin > deadline:
-                pairs_capped = True
-                _dbg(f"scaling pair {i} not started (reserve spent)")
-                break
-        pair_t0 = time.time()
-        # pair 0 starts at the 4N level (the calibration leg sizes
-        # n_big there); order still alternates so neither level
-        # systematically lands on the degraded side of a pair
+def run_scaling(done: list, shed: list, t0: float) -> dict:
+    """SCALING_PAIRS N-vs-4N pairs, legs back-to-back with the order
+    alternating per pair so neither level sits on the degraded side of
+    a drifting window. Pair 0 always runs; later pairs pass ``admit``.
+    The count is fixed before any ratio is seen, so the median carries
+    no optional-stopping bias. No SparkSession may be active on entry."""
+    sizes = scale_sizes(CPUS)
+    if sizes is None:
+        return {"efficiency": None,
+                "error": f"an N-vs-4N pair needs >= 4 CPUs, host has {CPUS}"}
+    n, n4 = sizes
+    cal, pairs, error = {}, [], None
+    for i in range(SCALING_PAIRS):
+        if not admit(PAIR_EST_S, realized_ratio(done), time.time(), t0, core=i == 0):
+            shed.append(f"scaling_pair_{i}")
+            break
+        start = time.time()
         try:
-            if i % 2 == 0:
-                t_4n, fl_4n = timed_job(f"local[{scale_n * 4}]")
-                t_n, fl_n = timed_job(f"local[{scale_n}]")
-            else:
-                t_n, fl_n = timed_job(f"local[{scale_n}]")
-                t_4n, fl_4n = timed_job(f"local[{scale_n * 4}]")
-        except _PassBudgetExceeded as e:
-            pairs_capped = True
-            _dbg(f"scaling pair {i} ABORTED mid-flight: {e}")
-            break
+            got = {c: scaling_leg(c, cal) for c in ((n4, n) if i % 2 == 0 else (n, n4))}
         except Exception as e:  # watchdog timeout / worker crash
-            _dbg(f"scaling pair {i} ABORTED: {e}")
+            error = f"pair {i} aborted: {type(e).__name__}: {e}"[:500]
+            _dbg(error)
             break
-        enforce["on"] = True  # pair 0 (mandatory) done — arm the cap
-        pair_stats.append(
-            {
-                "t_n_sec": round(t_n, 3),
-                "t_4n_sec": round(t_4n, 3),
-                "efficiency": round((t_n / t_4n) / 4.0, 3),
-                # measured per-job fixed floor (LIMIT 512 through the
-                # identical plan) + the floor-subtracted ratio — a
-                # DIAGNOSTIC for the audit, never the headline
-                "floor_n_sec": round(fl_n, 3),
-                "floor_4n_sec": round(fl_4n, 3),
-                "efficiency_floor_adj": round(
-                    ((t_n - fl_n) / max(t_4n - fl_4n, 1e-9)) / 4.0, 3
-                ),
-                "reps": reps,
-            }
-        )
-        # refine the cost model with the measured pair's actual wall,
-        # NET of the one-off calibration leg (pair 0 only) that later
-        # pairs skip; the 0.5*wall floor bounds the subtraction if a
-        # degraded window made calibration the bulk of the pair
-        wall = time.time() - pair_t0
-        net = wall - (cal.get("cal_wall") or 0.0) if i == 0 else wall
-        pair_cost = max(net, 0.5 * wall) * 1.15
-        cost_is_probe = False
-        _dbg(f"scaling pair {i}: {pair_stats[-1]} "
-             f"(wall {wall:.1f}s, next-pair est {pair_cost:.1f}s)")
-    if not pair_stats:
-        # every pair aborted (hung window): record the fact, not a crash
-        return {
-            "n_cores": scale_n,
-            "efficiency": None,
-            "headline": "median-of-pairs",
-            "pairs_policy": policy,
-            "pairs": [],
-            "error": "all pairs aborted (watchdog)",
-        }
-    best = max(pair_stats, key=lambda p: p["efficiency"])
-    med = round(statistics.median(p["efficiency"] for p in pair_stats), 3)
-    return {
-        "n_cores": scale_n,
-        "t_n_sec": best["t_n_sec"],
-        "t_4n_sec": best["t_4n_sec"],
-        "efficiency": med,
-        "efficiency_best": best["efficiency"],
-        "headline": "median-of-pairs",
-        "pairs_policy": policy,
-        "pairs": pair_stats,
-        "pairs_target": n_pairs_target,
-        "pairs_capped": pairs_capped,
-        "reserve_sec": round(deadline - pass_t0, 1),
-        "pass_elapsed_sec": round(time.time() - pass_t0, 1),
-        "n_points": cal["n_big"],
-        "cal_wall_sec": round(cal.get("cal_wall") or 0.0, 1),
-        "t4n_target_sec": cal.get("t4n_target", T4N_TARGET),
-        "floor_note": (
-            "floor_*_sec = measured per-job fixed cost (LIMIT 512, "
-            "identical plan); headline efficiency is the RAW ratio — "
-            "the floor-adjusted ratio is recorded per pair as an "
-            "audit diagnostic only"
-        ),
-    }
+        done.append((PAIR_EST_S, time.time() - start))
+        (t_n, fl_n), (t_4n, fl_4n) = got[n], got[n4]
+        pairs.append({
+            "t_n_sec": round(t_n, 3),
+            "t_4n_sec": round(t_4n, 3),
+            "efficiency": round((t_n / t_4n) / 4.0, 3),
+            # per-job fixed floor (512 points, identical plan), for audit
+            "floor_n_sec": round(fl_n, 3),
+            "floor_4n_sec": round(fl_4n, 3),
+        })
+        _dbg(f"scaling pair {i}: {pairs[-1]} (wall {time.time() - start:.1f}s)")
+    out = {"n_cores": n, "efficiency": None, "pairs": pairs, **cal}
+    if error:
+        out["error"] = error
+    if pairs:
+        best = max(pairs, key=lambda p: p["efficiency"])
+        out.update(
+            t_n_sec=best["t_n_sec"], t_4n_sec=best["t_4n_sec"],
+            efficiency=round(statistics.median(p["efficiency"] for p in pairs), 3),
+            efficiency_best=best["efficiency"])
+    return out
 
 
 def main() -> None:
+    t0 = time.time()
+    host = {"nproc": host_cpus(), "cpus": CPUS, "mem_total_mb": mem_total_mb(),
+            "loadavg_start": round(os.getloadavg()[0], 2)}
+    done: list[tuple[float, float]] = []
+    shed: list[str] = []
+    scaling = run_scaling(done, shed, t0)
+
     spark = _session(f"local[{CPUS}]")
-    _dbg("session up")
-    probe = host_probe(spark)
-    _dbg(f"probe {probe}")
-    degradation = probe["degradation"]
-    # 3 pairs: fixed BEFORE any ratio is seen (no optional stopping —
-    # round-3 advice); a median of 3 is robust to one host-collapsed
-    # pair (this round measured pairs 0.624/0.945 back-to-back in a
-    # D=2.42 window — median-of-2 read 0.784 off a single spike). The
-    # hard reserve cap trims the count ratio-blind when the window is
-    # slow, so the cost risk is bounded.
-    n_pairs_target = int(os.environ.get("SPARK_GRAFT_SCALE_PAIRS", "3"))
-
-    # Scale-first (round-3 lesson #4): five instrumented runs this round
-    # all probed clean (D=1.0) and three collapsed MID-run — the scaling
-    # pair, when it ran last, sampled the collapsed tail of the window
-    # (0.44-0.66) while the identical pair measured 0.93 mid-window. The
-    # north-rule scalar is the most variance-sensitive number in the
-    # artifact, so it runs FIRST, right after the probe characterizes
-    # the window, leaving a clock floor for the priority-0/1 suite. In
-    # an already-degraded window (D > 1.5) the old order stands: entries
-    # (short, rep-protected) first, scaling out of the reserve.
-    scaling = None
-    scale_first = DO_SCALING and degradation <= 1.5
-    if scale_first:
-        spark.stop()
-        # ONE pair up front (round-4 ordering fix): the early pair is
-        # the window sample the north rule needs; running ALL target
-        # pairs here makes the pass compete with the priority-1 suite
-        # for the same clock (measured: a 179 s 2-pair pass shed the
-        # skew bundle that an 86 s 1-pair pass left room for). Pairs
-        # 2..target come from the end-of-budget TOP-UP out of true
-        # leftovers, after the suite and the second-chance pass have
-        # taken what they need — count still clock-decided, never
-        # ratio-decided.
-        scaling = run_scaling_pass(
-            degradation, 1,
-            clock_floor=prio01_suite_est(degradation),
-        )
-        if scaling.get("efficiency") is None:
-            scaling = None  # all pairs aborted — retry after the suite
-        else:
-            # the artifact's target/policy describe the WHOLE run
-            # (1 early pair + top-up to target), not the first pass
-            scaling["pairs_target"] = n_pairs_target
-            scaling["pairs_capped"] = (
-                len(scaling.get("pairs", [])) < n_pairs_target
-            )
-            scaling["pairs_policy"] = (
-                f"fixed {n_pairs_target} pairs decided before any ratio "
-                "is seen: one mandatory min-of-2-rep pair first (early "
-                "window sample), the rest as single-rep pairs from the "
-                "end-of-budget top-up (per-pair reps recorded); the "
-                "CLOCK decides the completed count (hard reserve + "
-                "budget deadlines), never a ratio"
-            )
-        spark = _session(f"local[{CPUS}]")
-
-    res = run_suite(
-        spark, N_POINTS, degradation,
-        scaling_pairs=0 if (scale_first or not DO_SCALING)
-        else min(n_pairs_target, 2),
-    )
-    timings, counts = res["timings"], res["counts"]
-
-    # priority-0 entries are never skipped, but belt-and-braces: a
-    # missing headline must degrade the metric to null, not crash the
-    # whole artifact away
-    images_per_sec = (
-        round(N_POINTS / timings["pip_join"], 1) if "pip_join" in timings else None
-    )
-    cells_per_sec = (
-        round(counts["tiling"] / timings["tiling"], 1) if "tiling" in timings else None
-    )
-
-    calibrated = {}
-    for k, t in timings.items():
-        lo, hi = DOC_RANGES.get(k, (None, None))
-        if hi is not None:
-            calibrated[k] = bool(t <= hi * max(1.0, degradation))
-
+    warm_python_workers(spark)
+    out = {"timings": {}, "counts": {}, "loadavg": {}, "errors": {}}
+    b = Inputs(spark)
+    run_plan(ENTRIES, lambda e: run_entry(b, e, out), done, shed, t0)
     spark.stop()
-    if DO_SCALING and scaling is None:
-        scaling = run_scaling_pass(degradation, n_pairs_target,
-                                   clock_floor=0.0)
 
-    # Second-chance pass (round-4 validation: a D=1.87 suite-first run
-    # shed the ann1m bundle while protecting the 210 s scaling reserve,
-    # then the scaling pass finished at 281 s and ~130 s of budget went
-    # UNUSED). Whatever clock remains after scaling goes back to the
-    # shed entries, re-planned in priority order against the real
-    # remaining budget (reserve = 0 now); recorded results merge into
-    # the artifact, still-unfitting names stay in `skipped`.
-    skipped = list(res["skipped"])
-    left = BENCH_BUDGET - (time.time() - _T0)
-    if skipped and left > 40.0:
-        # re-price with the suite's REALIZED per-entry multipliers, not
-        # the probe's global D: in a split window (D=18.6 run: memory
-        # probe collapsed 18.6x, pip_join realized 16.8x, but the cpu-
-        # bound tail realized 1-3x) the global D priced every shed entry
-        # at the collapsed bottleneck and ~145 s of budget went unused.
-        # Median prices the typical entry; the max is a per-admit
-        # worst-case budget guard inside run_suite's fits().
-        d_eff, d_worst = realized_degradation(res.get("mults", {}))
-        if d_worst is None:
-            d_eff = degradation
-        _dbg(
-            f"second-chance pass: {left:.0f}s left for shed={skipped} "
-            f"(realized mult median {d_eff:.2f}, worst "
-            f"{d_worst if d_worst is not None else degradation:.2f})"
-        )
-        spark = _session(f"local[{CPUS}]")
-        res2 = run_suite(spark, N_POINTS, d_eff,
-                         scaling_pairs=0, only=set(skipped),
-                         worst_mult=d_worst)
-        spark.stop()
-        timings.update(res2["timings"])
-        counts.update(res2["counts"])
-        for k, t in res2["timings"].items():
-            lo, hi = DOC_RANGES.get(k, (None, None))
-            if hi is not None:
-                calibrated[k] = bool(t <= hi * max(1.0, degradation))
-        skipped = [n for n in skipped if n not in res2["timings"]]
-
-    # Scaling TOP-UP: if fewer than the target pairs recorded (the
-    # reserve or the suite's clock floor trimmed the count) and budget
-    # still remains, run the missing pairs now — ratio-blind by
-    # construction (the CLOCK decides the count, never a ratio, so the
-    # median stays bias-free), same preset input size so every pair in
-    # the artifact ran identical work. Even the top-up's first pair
-    # checks the deadline (mandatory_first=False): an abort costs
-    # nothing already recorded.
-    if DO_SCALING and scaling and scaling.get("efficiency") is not None:
-        have = scaling.get("pairs", [])
-        want = n_pairs_target - len(have)
-        left = BENCH_BUDGET - (time.time() - _T0)
-        # price a top-up pair by what this window's pairs actually cost
-        # when pairs completed (the D=18.6 run priced a pair at 90 x
-        # 18.6 = 1674 s off the probe while the realized pass had just
-        # run one at ~90 s — the 145 s left could have bought a second
-        # north-rule pair); probe-D pricing stays the no-evidence
-        # fallback and the realized price never goes BELOW it/3 so one
-        # lucky pair cannot admit a doomed top-up.
-        probe_cost = PAIR_EST * max(1.0, degradation)
-        pair_cost, seed, legs = probe_cost, None, None
-        if have and scaling.get("pass_elapsed_sec"):
-            # a top-up pair skips calibration (preset input size), so
-            # price it at the pass's calibration-net per-pair wall —
-            # UNcushioned: the 1.1 admission margin below is the only
-            # one (round-4 fix: realized*1.2 admitted at *1.2 again =
-            # 1.44x stacked, which skipped a ~89 s pair with 105 s
-            # left TWICE in validation), and the leg-aware deadline
-            # inside the pass bounds a mispriced pair to an abort
-            # before its expensive leg, never a budget overrun
-            realized_pair = (
-                scaling["pass_elapsed_sec"]
-                - scaling.get("cal_wall_sec", 0.0)
-            ) / len(have)
-            # top-up pairs run SINGLE-rep legs: subtract one rep of each
-            # measured leg from the realized (2-rep) pair wall
-            seed = max(
-                realized_pair - scaling["t_n_sec"] - scaling["t_4n_sec"],
-                probe_cost / 3.0,
-            )
-            pair_cost = seed
-            scale_n = scaling.get("n_cores", 2)
-            legs = {
-                f"local[{scale_n}]": scaling["t_n_sec"],
-                f"local[{scale_n * 4}]": scaling["t_4n_sec"],
-            }
-        if want > 0 and left > pair_cost * 1.1:
-            _dbg(f"scaling top-up: {left:.0f}s left for {want} more pairs")
-            top = run_scaling_pass(
-                degradation, want, clock_floor=8.0,
-                mandatory_first=False,
-                preset_n_big=scaling.get("n_points"),
-                leg_est=legs, seed_pair_cost=seed, reps=1,
-            )
-            if top.get("pairs"):
-                import statistics
-
-                pairs = have + top["pairs"]
-                best = max(pairs, key=lambda p: p["efficiency"])
-                scaling.update(
-                    {
-                        "pairs": pairs,
-                        "efficiency": round(
-                            statistics.median(
-                                p["efficiency"] for p in pairs
-                            ),
-                            3,
-                        ),
-                        "efficiency_best": best["efficiency"],
-                        "t_n_sec": best["t_n_sec"],
-                        "t_4n_sec": best["t_4n_sec"],
-                        "pairs_capped": len(pairs) < n_pairs_target,
-                        "topup_pass_elapsed_sec": top.get(
-                            "pass_elapsed_sec"
-                        ),
-                    }
-                )
-
-    out = {
+    timings, counts = out["timings"], out["counts"]
+    core_ok = all(k in timings for k in CORE)
+    host["loadavg_end"] = round(os.getloadavg()[0], 2)
+    print(json.dumps({
         "metric": "spatial_join_tiling_suite",
-        "value": round(sum(timings.values()), 3),
+        "value": round(sum(timings[k] for k in CORE), 3) if core_ok else None,
         "unit": "sec",
         "queries": {k: round(v, 3) for k, v in timings.items()},
+        "loadavg": out["loadavg"],
+        "errors": out["errors"],
         "sf": _SF,
         "n_points": N_POINTS,
         "counts": counts,
-        "images_per_sec": images_per_sec,
-        "cells_per_sec": cells_per_sec,
+        "images_per_sec": (round(N_POINTS / timings["pip_join"], 1)
+                           if "pip_join" in timings else None),
+        "cells_per_sec": (round(counts["tiling"] / timings["tiling"], 1)
+                          if "tiling" in timings else None),
         "scaling": scaling,
-        "host_probe": probe,
+        "host": host,
         "doc_ranges_sec": {k: DOC_RANGES[k] for k in timings if k in DOC_RANGES},
-        "within_calibrated_range": calibrated,
-        "budget": {
-            "sec": BENCH_BUDGET,
-            "elapsed": round(time.time() - _T0, 1),
-            "skipped": skipped,
-        },
-    }
-    print(json.dumps(out))
+        "within_calibrated_range": {
+            k: t <= DOC_RANGES[k][1] for k, t in timings.items() if k in DOC_RANGES},
+        "budget": {"sec": BUDGET_S, "elapsed": round(time.time() - t0, 1),
+                   "skipped": shed},
+    }))
 
 
 if __name__ == "__main__":

@@ -90,8 +90,10 @@ def cms_estimate(
 ) -> DataFrame:
     """Point-estimate each query item's frequency: min over its ``d``
     counters. The sketch broadcasts (<= d x w rows by construction);
-    each query item explodes to its d cells, joins, and takes the
-    integer MIN — upper-bounds the true count always, exact when none
+    each query item explodes to its d cells, left-joins, and takes the
+    integer MIN with an absent cell counting 0 — so every query item
+    gets a row, an unseen item whose cells are all empty estimates 0,
+    and the estimate upper-bounds the true count always, exact when none
     of its cells collided."""
     h = TA.hash60_sql(item_col, "spark")
     cells = ", ".join(
@@ -105,9 +107,9 @@ def cms_estimate(
         F.col("_c.bucket").alias("bucket"),
     )
     return (
-        ex.join(F.broadcast(sketch), ["row", "bucket"])
+        ex.join(F.broadcast(sketch), ["row", "bucket"], "left")
         .groupBy(item_col)
-        .agg(F.min("cnt").alias("est_cnt"))
+        .agg(F.min(F.coalesce("cnt", F.lit(0).cast("long"))).alias("est_cnt"))
     )
 
 

@@ -31,6 +31,30 @@ def _package_zip() -> str:
     return out
 
 
+def host_cpus() -> int:
+    """``nproc``: the CPUs this process may run on."""
+    return len(os.sched_getaffinity(0))
+
+
+def mem_total_mb() -> int | None:
+    """MemTotal from /proc/meminfo in MB (None where it does not exist)."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) // 1024
+    except OSError:
+        pass
+    return None
+
+
+def default_driver_memory(total_mb: int | None) -> str:
+    """Half of the host's memory, capped at 48g (the cap also applies
+    when the total is unknown)."""
+    cap = 48 * 1024
+    return f"{min(total_mb // 2, cap) if total_mb else cap}m"
+
+
 def get_spark(
     app_name: str = "gis_shapefile_spark",
     master: str | None = None,
@@ -39,9 +63,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (default nproc)
+    and the driver heap to ``$SPARK_GRAFT_DRIVER_MEM`` (default half of
+    MemTotal, capped at 48g); ``extra_conf`` overrides either.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cpus())
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -57,7 +83,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or default_driver_memory(mem_total_mb()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -1,150 +1,146 @@
-"""Unit tests for bench.py's admission planner and reserve math.
+"""Unit tests for bench.py's entry table, admission rule and scaling sizes.
 
-Pure-Python (no SparkSession): the round-3 verdict's bench defects were
-all planner-level (unenforced reserve, non-atomic ratio pairs, missing
-cost coverage), so the planner invariants get their own fast guard.
+Pure-Python (no SparkSession): the runner is driven with fake entries and
+a fake clock, so the rule is checked exactly at its boundary.
 """
-
-import time
-
-import pytest
 
 import bench
 
-ALL_NAMES = [n for n, _, _, _ in bench.ENTRY_PLAN]
-PRIO = {n: p for n, p, _, _ in bench.ENTRY_PLAN}
+KEYS = [k for e in bench.ENTRIES for k in e.keys]
 
 
-@pytest.fixture(autouse=True)
-def _fresh_clock(monkeypatch):
-    """plan_entries budgets against wall time since bench-module IMPORT
-    (_T0); under pytest other suites may burn minutes between import and
-    this module, which would make the planner believe the budget is
-    already spent (observed: a clean-window admission test failing only
-    when run after the Spark suites). Pin _T0 to now for each test."""
-    monkeypatch.setattr(bench, "_T0", time.time())
+class FakeClock:
+    """A clock that each fake entry advances by its realized wall."""
+
+    def __init__(self, t=0.0):
+        self.t = t
+
+    def __call__(self):
+        return self.t
+
+
+def _run(entries, walls, budget=100.0):
+    """run_plan over ``entries`` where entry ``name`` takes ``walls[name]``
+    seconds; returns (names run, keys shed, ledger)."""
+    clock, ran, shed, done = FakeClock(), [], [], []
+
+    def run(e):
+        ran.append(e.name)
+        clock.t += walls[e.name]
+
+    bench.run_plan(entries, run, done, shed, t0=0.0, budget=budget, clock=clock)
+    return ran, shed, done
+
+
+def _entry(name, est_s, reps=1, legs=()):
+    return bench.Entry(name, est_s, reps, build=None, legs=legs)
 
 
 def test_entry_plan_is_well_formed():
-    assert len(set(ALL_NAMES)) == len(ALL_NAMES), "duplicate entry names"
-    for name, prio, est, reps in bench.ENTRY_PLAN:
-        assert prio in (0, 1, 2), name
-        assert est > 0, name
-        assert reps >= 1, name
-    # every planned entry has a documented best-worst range so the
-    # artifact can annotate within_calibrated_range for it
-    missing = [n for n in ALL_NAMES if n not in bench.DOC_RANGES]
-    assert not missing, f"DOC_RANGES missing: {missing}"
+    assert len(set(KEYS)) == len(KEYS), "duplicate entry keys"
+    names = [e.name for e in bench.ENTRIES]
+    assert len(set(names)) == len(names)
+    for e in bench.ENTRIES:
+        assert e.est_s > 0 and e.reps >= 1, e.name
+        assert callable(e.build), e.name
+        assert len(e.legs) in (0, 2), e.name
+    # the core set runs first, in its declared order
+    assert tuple(names[: len(bench.CORE)]) == bench.CORE
+    # the least predictable pair runs last
+    assert bench.ENTRIES[-1].legs == ("ann1m_brute", "ann1m_ivf")
+    # every recorded key has a documented range for within_calibrated_range
+    assert set(KEYS) == set(bench.DOC_RANGES)
     for n, (lo, hi) in bench.DOC_RANGES.items():
         assert 0 < lo < hi, n
 
 
 def test_bundles_reference_planned_entries():
-    for a, b in bench.BUNDLES:
-        assert a in ALL_NAMES and b in ALL_NAMES, (a, b)
-        # the first leg must come earlier so its admission decides both
-        assert ALL_NAMES.index(a) < ALL_NAMES.index(b), (a, b)
+    # a pair's legs are recorded keys of its own entry, with documented
+    # ranges, adjacent in the plan so one admission decides both
+    names = {e.name for e in bench.ENTRIES}
+    for e in bench.ENTRIES:
+        if not e.legs:
+            continue
+        a, b = e.legs
+        assert a != b and a in KEYS and b in KEYS, e.name
+        assert a in bench.DOC_RANGES and b in bench.DOC_RANGES, e.name
+        assert not {a, b} & names, e.name
+        assert KEYS.index(b) == KEYS.index(a) + 1, e.name
 
 
-def test_priority0_always_admitted_even_when_degraded():
-    admitted, reps_of = bench.plan_entries(degradation=50.0, scaling_pairs=2)
-    for n in ALL_NAMES:
-        if PRIO[n] == 0:
-            assert n in admitted, n
-            assert reps_of[n] >= 1
-    # a 50x window must shed the sheddable tail
-    assert any(PRIO[n] == 2 and n not in admitted for n in ALL_NAMES)
+def test_admit_exactly_when_cost_fits():
+    # elapsed 50 + ratio 2 x cost 25 == 100: fits at the boundary
+    assert bench.admit(25.0, 2.0, now=150.0, t0=100.0, budget=100.0)
+    assert not bench.admit(25.01, 2.0, now=150.0, t0=100.0, budget=100.0)
+    assert not bench.admit(25.0, 2.0, now=150.01, t0=100.0, budget=100.0)
+    assert bench.admit(50.0, 1.0, now=100.0, t0=100.0, budget=50.0)
+    # core ignores the budget altogether
+    assert bench.admit(1e9, 9.0, now=1e9, t0=0.0, budget=1.0, core=True)
 
 
-def test_bundles_admit_all_or_nothing():
-    # sweep degradation so the budget boundary crosses every bundle's
-    # cost at some point; the pair must never split
-    for d in (1.0, 1.3, 1.7, 2.1, 2.6, 3.2, 4.5, 8.0, 20.0, 50.0):
-        admitted, reps_of = bench.plan_entries(degradation=d, scaling_pairs=2)
-        for a, b in bench.BUNDLES:
-            assert (a in admitted) == (b in admitted), (d, a, b)
-            if a in admitted:
-                assert a in reps_of and b in reps_of
-        # reps bookkeeping matches admission exactly
-        assert set(reps_of) == admitted
+def test_ratio_tracks_realized_over_estimated_wall():
+    assert bench.realized_ratio([]) == 1.0
+    assert bench.realized_ratio([(10.0, 20.0)]) == 2.0
+    assert bench.realized_ratio([(10.0, 20.0), (30.0, 20.0)]) == 1.0
+    # through the runner: a 10 s-estimated entry (cost 20) took 60 s
+    _, _, done = _run([_entry("a", 10.0)], {"a": 60.0})
+    assert done == [(20.0, 60.0)]
+    assert bench.realized_ratio(done) == 3.0
+
+
+def test_slow_window_sheds_what_a_ratio_of_one_would_admit():
+    entries = [_entry("slow", 10.0), _entry("next", 10.0)]
+    # at ratio 1 "next" (cost 20) fits: 20 elapsed + 20 <= 100
+    ran, shed, _ = _run(entries, {"slow": 20.0, "next": 20.0})
+    assert ran == ["slow", "next"] and shed == []
+    # "slow" realized 3x: 60 elapsed + 3 x 20 > 100, so "next" is shed
+    ran, shed, _ = _run(entries, {"slow": 60.0, "next": 20.0})
+    assert ran == ["slow"] and shed == ["next"]
+    # a shed entry does not stop the loop: a cheaper one behind it runs
+    ran, shed, _ = _run(entries + [_entry("tiny", 1.0)],
+                        {"slow": 60.0, "next": 20.0, "tiny": 1.0})
+    assert ran == ["slow", "tiny"] and shed == ["next"]
+
+
+def test_core_entries_never_shed():
+    core = [_entry(n, 50.0, reps=3) for n in bench.CORE]
+    tail = [_entry("tail", 0.1)]
+    # every core entry alone blows the 10 s budget, and realizes 5x
+    walls = dict.fromkeys(bench.CORE, 1000.0) | {"tail": 0.1}
+    ran, shed, _ = _run(core + tail, walls, budget=10.0)
+    assert ran == list(bench.CORE)
+    assert shed == ["tail"]
+
+
+def test_pair_admitted_or_shed_as_one():
+    pair = _entry("p", 20.0, reps=2, legs=("p_a", "p_b"))
+    ran, shed, _ = _run([pair], {"p": 60.0}, budget=60.0)
+    assert ran == ["p"] and shed == []
+    ran, shed, _ = _run([pair], {"p": 60.0}, budget=59.0)
+    assert ran == [] and shed == ["p_a", "p_b"]
 
 
 def test_clean_window_admits_everything():
-    admitted, _ = bench.plan_entries(degradation=1.0, scaling_pairs=2)
-    assert admitted == set(ALL_NAMES)
+    """When every entry (and both scaling pairs) takes exactly its
+    estimate, the whole table fits the budget."""
+    done = [(bench.PAIR_EST_S, bench.PAIR_EST_S)] * bench.SCALING_PAIRS
+    walls = {e.name: e.est_s * (e.reps + 1) for e in bench.ENTRIES}
+    clock0 = sum(w for _, w in done)
+    clock, shed = FakeClock(clock0), []
+
+    def run(e):
+        clock.t += walls[e.name]
+
+    bench.run_plan(bench.ENTRIES, run, done, shed, t0=0.0, clock=clock)
+    assert shed == []
+    assert clock.t <= bench.BUDGET_S
 
 
-def test_scaling_reserve_capped_at_half_budget():
-    assert bench.scaling_reserve(1.0, 0) == 0.0
-    r = bench.scaling_reserve(1.0, 3)
-    assert 0 < r <= 0.5 * bench.BENCH_BUDGET
-    # a degraded window cannot reserve the whole budget away
-    assert bench.scaling_reserve(10.0, 3) <= 0.5 * bench.BENCH_BUDGET
-
-
-def test_prio01_suite_est_monotone_in_degradation():
-    assert bench.prio01_suite_est(2.0) >= bench.prio01_suite_est(1.0) > 0
-
-
-def test_retry_mode_only_filter_and_no_prio0_auto_admit():
-    """Second-chance pass semantics: only the shed names are considered,
-    priority-0 auto-admission is off (a retry never re-runs a recorded
-    headline), and bundles stay atomic inside the retry."""
-    only = {"ann1m_brute", "ann1m_ivf", "pricing_summary"}
-    admitted, reps_of = bench.plan_entries(
-        degradation=1.0, scaling_pairs=0, only=only
-    )
-    assert admitted <= only
-    # clean-window budget: everything in `only` fits
-    assert admitted == only
-    assert set(reps_of) == admitted
-
-    # priority-0 names outside `only` are NOT admitted in retry mode
-    admitted2, _ = bench.plan_entries(
-        degradation=1.0, scaling_pairs=0, only={"pricing_summary"}
-    )
-    assert admitted2 == {"pricing_summary"}
-    assert not any(bench.ENTRY_PLAN[i][0] in admitted2 for i in range(2)
-                   if bench.ENTRY_PLAN[i][1] == 0)
-
-    # bundle atomicity survives in retry mode under a hostile window:
-    # at extreme degradation the pair either fully admits or fully sheds
-    admitted3, _ = bench.plan_entries(
-        degradation=200.0, scaling_pairs=0,
-        only={"ann1m_brute", "ann1m_ivf"},
-    )
-    assert admitted3 in (set(), {"ann1m_brute", "ann1m_ivf"})
-    assert admitted3 == set()  # nothing fits a 200x window
-
-
-def test_realized_degradation_median_and_worst():
-    """Split-window evidence (the D=18.6 validation run): the median
-    prices the typical entry, the max guards the worst; both floored at
-    1.0, and an empty suite falls back to (1.0, None) -> probe D."""
-    # the actual D=18.6 run's realized multipliers
-    med, worst = bench.realized_degradation(
-        {"pip_join": 16.8, "tiling": 1.04, "sessionize": 3.3,
-         "pricing_summary": 2.2}
-    )
-    assert med == pytest.approx(2.75)
-    assert worst == pytest.approx(16.8)
-    # sub-1.0 medians floor (a faster-than-best window cannot shrink
-    # estimates below the best-window plan)
-    med, worst = bench.realized_degradation({"a": 0.4, "b": 0.6, "c": 0.5})
-    assert med == 1.0 and worst == 1.0
-    assert bench.realized_degradation({}) == (1.0, None)
-
-
-def test_second_chance_median_admits_more_than_global_d():
-    """The defect the re-pricing fixes: with the probe's global D=18.6
-    the second-chance admits almost nothing from a 195s window, while
-    the realized median (2.75 in that window) admits the cheap tail."""
-    shed = {"dedup_components", "dedup_minhash", "knn3", "ann_topk",
-            "ann_ivf", "image_neardup", "pyramid_full", "pyramid_delta"}
-    # simulate 225s already spent of the 420s budget
-    bench._T0 = time.time() - (bench.BENCH_BUDGET - 195.0)
-    with_global, _ = bench.plan_entries(18.6, 0, only=shed)
-    with_median, _ = bench.plan_entries(2.75, 0, only=shed)
-    assert len(with_median) > len(with_global)
-    # every globally-admitted entry stays admitted under the median
-    assert with_global <= with_median
+def test_scale_sizes_from_host():
+    want = {0: None, 1: None, 3: None, 4: (1, 4), 7: (1, 4),
+            8: (2, 8), 32: (2, 8), 96: (2, 8)}
+    for cpus, sizes in want.items():
+        assert bench.scale_sizes(cpus) == sizes, cpus
+    for cpus in range(4, 129):
+        n, n4 = bench.scale_sizes(cpus)
+        assert 1 <= n <= 2 and n4 == 4 * n <= cpus, cpus

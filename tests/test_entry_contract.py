@@ -210,3 +210,35 @@ def test_gate_cli_first_argument_is_sf_dir_only_when_a_directory(tmp_path):
         [], {"pip_anti", "zonal_stats"}, False)
     assert split_args(["--no-arrow"]) == ([], set(), True)
     assert split_args([]) == ([], set(), False)
+
+
+def test_gate_records_one_machine_readable_row_per_query(spark, monkeypatch):
+    """check_queries fills one record per query beside its failures
+    list: a green query, a value mismatch and a query with no oracle."""
+    from types import SimpleNamespace
+
+    import duckdb
+
+    from tools import check_correctness as CC
+
+    monkeypatch.setattr(CC, "E", SimpleNamespace(
+        queries=lambda: {
+            name: (lambda spark, sf_dir: spark.range(3).toDF("x"))
+            for name in ("green", "red", "unchecked")
+        },
+        oracle_sql=lambda: {
+            "green": "SELECT range AS x FROM range(3)",
+            "red": "SELECT range AS x FROM range(2)",
+        },
+    ))
+    con = duckdb.connect()
+    records: list[dict] = []
+    failures = CC.check_queries(spark, con, "", verbose=False, records=records)
+    assert [f.split(":")[0] for f in failures] == ["red"]
+    for rec in records:
+        assert isinstance(rec.pop("spark_s"), float)
+    assert records == [
+        {"name": "green", "ok": True, "spark_rows": 3, "oracle_rows": 3},
+        {"name": "red", "ok": False, "spark_rows": 3, "oracle_rows": 2},
+        {"name": "unchecked", "ok": None, "spark_rows": 3, "oracle_rows": None},
+    ]

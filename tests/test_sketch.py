@@ -64,6 +64,30 @@ def test_cms_counters_and_estimates_match_python_twin(spark):
     assert got_est == dict(true)  # w=64, 12 tokens: collision-free here
 
 
+def test_cms_estimate_counts_empty_cells_as_zero(spark):
+    """Items the sketch never saw still get a row: one whose d cells are
+    all empty estimates 0, and so does one whose empty cell sits beside
+    cells that collide with seen items (an inner join would drop the
+    first and take the min over the second's non-empty cells only)."""
+    seen = [f"tok{i}" for i in range(12)] * 3
+    grid, _ = _twin(seen, SK.CMS_D, SK.CMS_W)
+
+    def filled(tok):
+        return sum(
+            (i, _bucket(tok, i, SK.CMS_W)) in grid for i in range(SK.CMS_D)
+        )
+
+    cands = [f"new{i}" for i in range(500)]
+    unseen = next(t for t in cands if filled(t) == 0)
+    partial = next(t for t in cands if 0 < filled(t) < SK.CMS_D)
+    sk = SK.cms_build(_tok_df(spark, seen), "token")
+    q = _tok_df(spark, ["tok0", unseen, partial])
+    got = {
+        r.token: r.est_cnt for r in SK.cms_estimate(q, sk, "token").collect()
+    }
+    assert got == {"tok0": 3, unseen: 0, partial: 0}
+
+
 def test_cms_narrow_width_overestimates_never_under(spark):
     """Squeezed to w = 4 the 30-token vocab MUST collide: estimates
     still never underestimate, and at least one strictly overestimates

@@ -487,6 +487,39 @@ def test_self_join_forces_sort_merge(spark):
     assert "BroadcastHashJoin" not in gplan
 
 
+def test_topk_windows_plan_map_side_group_limit(spark, features, points_pdf):
+    """The per-key top-k windows of knn_join, cosine_topk and
+    nearest_segment_join run a map-side partial top-k (WindowGroupLimit)
+    before their one exchange. A conf or version drift that drops it
+    brings back full-shuffle windows, so pin it in the executed plans."""
+    from pyspark.sql import functions as F
+
+    from gis_shapefile_spark.operators import lines as LN
+    from gis_shapefile_spark.operators import similarity as SIM
+
+    pts = spark.createDataFrame(points_pdf.head(400))
+    rng = np.random.default_rng(5)
+    vecs = spark.createDataFrame(pd.DataFrame({
+        "vec_id": np.arange(40),
+        "embedding": [r.tolist() for r in rng.standard_normal((40, 8))],
+    }))
+    queries = vecs.where(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    outs = {
+        "knn_join": SJ.knn_join(spark, pts, features, k=3, res=6),
+        "cosine_topk": SIM.cosine_topk(vecs, queries, k=4),
+        "nearest_segment_join": LN.nearest_segment_join(
+            spark, pts, FX.make_road_features(n_roads=6, n_pts=5),
+            radius=2.0, k=2, point_id_col="image_id",
+        ),
+    }
+    for name, out in outs.items():
+        out.collect()  # materialize so AQE's FINAL plan is the one inspected
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "WindowGroupLimit" in plan, name
+
+
 def test_self_join_validation(spark):
     with pytest.raises(ValueError):
         SJ.within_distance_self_join(None, distance=0.0)

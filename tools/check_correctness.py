@@ -20,6 +20,7 @@ driver environment.
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import sys
 import time
@@ -114,16 +115,25 @@ def register_views(con, sf_dir: str) -> None:
         )
 
 
-def check_queries(spark, con, sf_dir: str, only=None, verbose=True) -> list[str]:
+def check_queries(spark, con, sf_dir: str, only=None, verbose=True,
+                  records: list | None = None) -> list[str]:
     """Run the gate for the named queries (all when ``only`` is falsy);
     returns the list of failure descriptions (empty == all green).
     Reused by tests/test_cross_engine_fuzz.py so the pytest suite pins
-    the same dtype-class + value-hash contract the driver checks."""
+    the same dtype-class + value-hash contract the driver checks.
+
+    ``records``, when given, gets one dict per query run: ``name``,
+    ``ok`` (None when the query has no oracle), ``spark_s``,
+    ``spark_rows`` and ``oracle_rows`` (None where that side failed)."""
     qs, oracles = E.queries(), E.oracle_sql()
     failures: list[str] = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        rec = {"name": name, "ok": False, "spark_s": None,
+               "spark_rows": None, "oracle_rows": None}
+        if records is not None:
+            records.append(rec)
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir).toPandas()
@@ -133,7 +143,9 @@ def check_queries(spark, con, sf_dir: str, only=None, verbose=True) -> list[str]
                 print(f"FAIL  {failures[-1]}")
             continue
         t_spark = time.time() - t0
+        rec.update(spark_s=round(t_spark, 3), spark_rows=len(sdf))
         if name not in oracles:
+            rec["ok"] = None
             if verbose:
                 print(f"ROWS  {name}: {len(sdf)} rows (no oracle) [{t_spark:.1f}s]")
             continue
@@ -144,10 +156,12 @@ def check_queries(spark, con, sf_dir: str, only=None, verbose=True) -> list[str]
             if verbose:
                 print(f"FAIL  {failures[-1]}")
             continue
+        rec["oracle_rows"] = len(odf)
         ns, cs, hs, kls = canon(sdf)
         no, co, ho, klo = canon(odf)
         dt_bad = dtype_mismatches(kls, klo)
         ok = (ns == no) and (cs == co) and (hs == ho) and not dt_bad
+        rec["ok"] = ok
         if not ok:
             failures.append(
                 f"{name}: rows {ns}/{no}, cols "
@@ -196,7 +210,9 @@ def main() -> int:
                       extra_conf=conf)
     con = duckdb.connect()
     register_views(con, sf_dir)
-    failures = check_queries(spark, con, sf_dir, only=only)
+    records: list[dict] = []
+    failures = check_queries(spark, con, sf_dir, only=only, records=records)
+    print(json.dumps(records))
     print("FAILURES:", len(failures))
     return 1 if failures else 0
 
