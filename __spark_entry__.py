@@ -2,16 +2,19 @@
 
 ``entry(spark)`` runs the flagship point-in-polygon spatial join at
 sf0.001. ``queries()`` / ``oracle_sql()`` expose every oracle-checked
-operator (see gis_shapefile_spark/entry_queries.py for the determinism
-design: integer cell math, integerized float aggregates, identical SQL
-text across Spark and DuckDB where possible).
+operator: each ``q_<name>`` in gis_shapefile_spark/entry_queries*.py is
+the query ``<name>`` and ``q_<name>_oracle()`` builds its DuckDB SQL (see
+entry_queries.py for the cross-engine determinism design).
 """
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -20,184 +23,68 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from gis_shapefile_spark import entry_queries as EQ  # noqa: E402
 from gis_shapefile_spark import entry_queries_pipeline as EQP  # noqa: E402
 
+ARTIFACT_DIR = Path(__file__).resolve().parent
+
+# The driver's correctness gate enumerates only the first DRIVER_CAP
+# queries() entries. The flagship anchors always lead; the rest follow
+# oldest driver-green first, so each new artifact rotates the cap.
+DRIVER_CAP = 50
+ANCHORS = frozenset({
+    "pip_grid_join", "tile_pyramid", "geocode_forward", "merge_upsert",
+    "ann_ivfpq", "image_tiling", "corpus_curation", "seq_pack",
+})
+
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     return EQ.q_pip_grid_join(spark, "/root/testdata/sf0.001")
 
 
-# The driver's correctness gate enumerates only the FIRST 50 queries()
-# entries. Order is therefore load-bearing: the first 50 slots hold every
-# SURVEY-mapped / LLM-pipeline flagship query plus everything that has
-# never had a driver-green artifact row. Round 4 rotates the 7 round-3
-# late additions (never driver-verified) INTO the cap, displacing 7
-# queries that turned green in CORRECTNESS_r03.json and whose operator
-# families stay driver-exercised by in-cap siblings (ledger in
-# COVERAGE.md). Entries past the cap are driver-green in a named prior
-# round; their oracles remain runnable via tools/check_correctness.py.
-DRIVER_CAP = 50
-
-_PRIORITY = [
-    # ---- slots 1-50: the driver-gate window ----
-    # End-of-round-5 rotation: the 24 queries without a driver-green
-    # artifact row all sit in-cap — the 2 fixed round-4 red rows, the 7
-    # round-5-queue statistics/caption queries, and the 15 mid-round-5
-    # additions (ann_pq ann_ivfpq ann_rerank shortest_path bm25_rank
-    # co_movement pagerank line_interpolate pip_anti doc_logprob
-    # isochrone cms_topk triangles hll_distinct bloom_prefilter). Each
-    # displaced
-    # r4-green anchor has an in-cap family sibling — per-rotation
-    # rationale inline below, ledger in COVERAGE.md. Every in-cap entry
-    # is green through the local --no-arrow oracle gate (three
-    # consecutive full-registry runs, FAILURES: 0).
-    #
-    # spatial anchors (SURVEY J/P/A flagships, kept in-cap) + pip_anti
-    # (mid-round-5: the exclusion/anti member of the PIP family — needs
-    # its first driver row; image_takedown rotated out: r4-green, the
-    # takedown purge stays pytest-pinned by the streaming suite and the
-    # decode/phash path in-cap via image_canon + cross_scale_neardup)
-    "pip_grid_join", "pip_anti", "tile_pyramid",
-    # road/line overlays + grid-DBSCAN (r4-green, kept as family anchors;
-    # nearest_road rotated out mid-round-5 for ann_pq — the road top-1
-    # family stays in-cap via road_buffer/map_match/road_crossings)
-    # (road_buffer rotated out mid-round-5 for line_interpolate: both
-    # are point/position-on-segment kernels; the road family stays
-    # in-cap via map_match + road_crossings + line_interpolate)
-    # (hll_distinct: the cardinality sketch beside cms_topk's frequency
-    # sketch, mid-round-5 — needs its first driver row; getis_ord
-    # rotated out: r4-green, the spatial-statistics family keeps
-    # hotspot_clusters + ripley_k + g_function + cross_k +
-    # emerging_hotspots in-cap)
-    "hotspot_clusters",
-    # (border_crossings rotated out mid-round-5 for bm25_rank: r4-green,
-    # the polyline x boundary overlay family stays in-cap via
-    # road_crossings + map_match + road_buffer)
-    "map_match", "trajectory", "zonal_stats",
-    "road_crossings", "line_interpolate",
-    # big-big planar self-joins + the graph layer over their edges
-    # (shortest_path added mid-round-5 — needs its first driver row;
-    # od_matrix rotated out: r4-green, mobility rollup family stays
-    # in-cap via trajectory/heading_profile/co_movement)
-    # (pagerank: the second Pregel-style consumer, mid-round-5 — needs
-    # its first driver row; adaptive_grid rotated out: r4-green, the
-    # tiling/quadtree family stays in-cap via tile_pyramid +
-    # image_tiling, the quadtree kernels pytest-pinned)
-    # (isochrone: service-area bands over the Bellman-Ford field,
-    # mid-round-5 — needs its first driver row; ann_recall rotated out:
-    # r4-green, the ANN family keeps 5 in-cap members incl. the recall
-    # subject ann_ivfpq and the brute baseline inside ann_rerank)
-    # (triangles: degree-oriented triangle counting, mid-round-5 —
-    # needs its first driver row; geo_within_km rotated out: r4-green,
-    # the great-circle kernel stays in-cap via geo_nearest and the
-    # planar within-distance family via point_pairs + co_movement)
-    "point_pairs", "knn_self", "shortest_path", "pagerank", "isochrone",
-    "triangles",
-    # geodesic (great-circle) family (geo_polygon_area rotated out
-    # mid-round-5 for ann_ivfpq; ring-measure kernels stay pinned by
-    # pytest and the geodesic family by geo_nearest/geo_within_km).
-    # co_movement added mid-round-5 (the space-time pair join — needs
-    # its first driver row); stay_points rotated out: r4-green, the
-    # trajectory/dwell family stays in-cap via trajectory +
-    # heading_profile + co_movement
-    "geo_nearest", "co_movement",
-    # raster / density family (+ idw_loocv: never driver-verified)
-    "idw", "idw_loocv",
-    # point-pattern / space-time statistics (never driver-verified)
-    "ripley_k", "g_function", "cross_k", "emerging_hotspots",
-    "heading_profile",
-    # geocoder + storage anchors
-    "geocode_forward", "merge_upsert",
-    # curation / dedup additions (+ bm25_rank, mid-round-5: the
-    # retrieval-scoring member of the text family — needs its first
-    # driver row)
-    "mm_interleave_pack", "seq_pack", "pii_scrub",
-    # (doc_logprob: CCNet-style unigram-LM perplexity buckets,
-    # mid-round-5 — needs its first driver row; image_quality rotated
-    # out: r4-green, LAION-stat filters stay in-cap composed inside
-    # corpus_curation, the decode path via image_canon)
-    # (cms_topk: the mergeable count-min sketch with oracle-checked
-    # VALUES, mid-round-5 — needs its first driver row;
-    # density_contours rotated out: r4-green, the KDE classify /
-    # polygonize kernels stay pytest-pinned and the grid-density family
-    # in-cap via hotspot_clusters + idw + zonal_stats)
-    # (bloom_prefilter: the membership sketch completing the family,
-    # mid-round-5 — needs its first driver row; ar_bucket rotated out:
-    # r4-green, the image batch-formation family stays in-cap via
-    # image_tiling + mm_interleave_pack)
-    "substring_dedup", "dedup_jaccard", "bm25_rank", "doc_logprob",
-    "cms_topk", "hll_distinct", "bloom_prefilter",
-    # image family additions (+ caption_consistency: never
-    # driver-verified)
-    "image_canon", "joint_dedup", "cross_scale_neardup",
-    "box_nms", "caption_consistency",
-    # ANN family (ann_ivf_delta + ann_filtered: r4 red rows, fixed;
-    # ann_pq/ann_ivfpq/ann_rerank added mid-round-5 — new queries, each
-    # needs its first driver row. ann_ivf rotated out for ann_rerank:
-    # r4-green, and the IVF probe machinery stays in-cap via
-    # ann_ivfpq/ann_ivf_delta/ann_filtered/ann_recall)
-    "ann_pq", "ann_ivfpq", "ann_rerank", "ann_ivf_delta", "ann_filtered",
-    # multimodal flagships + shard sink
-    "image_tiling", "corpus_curation",
-    "wds_roundtrip",
-    # ANALYZE-style column profile
-    "table_stats",
-    # ---- position 51+ from here ----
-    # every entry below has a driver-green row in a NAMED prior artifact
-    # (CORRECTNESS_r01..r04 — ledger in COVERAGE.md); all remain
-    # runnable via tools/check_correctness.py ----
-    # displaced by the round-5 rotation (all r4-green):
-    "nearest_road", "geo_polygon_area", "ann_ivf", "od_matrix",
-    "border_crossings", "stay_points", "adaptive_grid", "road_buffer",
-    "image_takedown", "image_quality", "ann_recall", "density_contours",
-    "geo_within_km", "getis_ord", "ar_bucket",
-    "nearest_road_big", "vector_outline", "geo_pairs",
-    "geo_knn_self", "trajectory_geo", "raster_smooth", "paragraph_dedup",
-    # displaced by the late-round-4 full rotation (all r3-green):
-    "pip_first_hit", "within_distance", "reverse_geocode", "tile_bounds",
-    "render_tiles", "vectorize_raster", "state_confidence",
-    "http_requests", "snapshot_diff", "boilerplate", "decontaminate",
-    "dedup_minhash", "dedup_simhash_pairs", "image_neardup",
-    "embedding_neardup", "crossmodal_align", "running_windows",
-    # rotated out earlier in round 4 (green in named prior rounds):
-    "vocab_topk", "asof_join", "interval_join", "stratified_sample",
-    "embedding_quantize", "lang_id", "dedup_components", "dedup_exact",
-    "doc_fingerprint", "events_window", "repetition", "ann_topk",
-    "train_val_split",
-    "pyramid_delta", "pyramid_update", "wm_tiles", "cell_skew",
-    "hourly_gapfill", "epoch_mix", "source_cap",
-    "mixture_sample", "quality_deciles", "caption_curation", "sessionize",
-    "bbox_join", "knn3",
-    # relational demos / redundant variants (driver-green r1+r2):
-    "vector_stats", "token_count", "quality_score", "top1_per_group",
-    "normalize",
-    "cell_assign", "cell_hist", "knn3_ring", "set_ops", "dedup_simhash",
-    "polygon_stats", "pricing_summary", "top_revenue_orders",
-    "regional_volume", "priority_rollup", "priority_cube",
-    "quiet_customers", "promo_revenue", "above_avg_orders",
-    "median_balances", "distinct_users", "json_props",
-]
+def _registry() -> dict[str, tuple[Callable, Callable[[], str]]]:
+    """name -> (query, oracle builder), module by module in definition
+    order. Raises on a query without an oracle, an oracle without a query
+    and a name defined in both modules."""
+    reg: dict[str, tuple[Callable, Callable[[], str]]] = {}
+    for mod in (EQ, EQP):
+        fns = {k: v for k, v in vars(mod).items()
+               if k.startswith("q_") and callable(v)}
+        for fn_name, fn in fns.items():
+            if fn_name.endswith("_oracle"):
+                if fn_name[: -len("_oracle")] not in fns:
+                    raise RuntimeError(f"{fn_name} has no query")
+                continue
+            name = fn_name[2:]
+            if f"{fn_name}_oracle" not in fns:
+                raise RuntimeError(f"query {name} has no {fn_name}_oracle")
+            if name in reg:
+                raise RuntimeError(f"query {name} is defined in both modules")
+            reg[name] = (fn, fns[f"{fn_name}_oracle"])
+    return reg
 
 
-def _ordered(mapping: dict) -> dict:
-    missing = [k for k in _PRIORITY if k not in mapping]
-    extra = [k for k in mapping if k not in _PRIORITY]
-    if missing or extra:
-        raise RuntimeError(
-            f"query registry drift: missing={missing} unordered={extra}"
-        )
-    return {k: mapping[k] for k in _PRIORITY}
+def cap_order(names: list[str], artifact_dir: Path = ARTIFACT_DIR) -> list[str]:
+    """Sort by (not an anchor, last green round, registry position).
+
+    A query's last green round is the newest ``CORRECTNESS_r<N>.json`` in
+    ``artifact_dir`` with rows, schema and hash all matching for it; 0 if
+    none, so never-green queries come right after the anchors."""
+    last_green: dict[str, int] = {}
+    for path in artifact_dir.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if not m:
+            continue
+        for name, row in json.loads(path.read_text()).items():
+            if row.get("rows_match") and row.get("schema_match") and row.get("hash_match"):
+                last_green[name] = max(last_green.get(name, 0), int(m.group(1)))
+    # sorted() is stable, so ties keep registry order
+    return sorted(names, key=lambda n: (n not in ANCHORS, last_green.get(n, 0)))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _ordered({**EQ.QUERIES, **EQP.QUERIES})
+    reg = _registry()
+    return {name: reg[name][0] for name in cap_order(list(reg))}
 
 
 def oracle_sql() -> dict[str, str]:
-    merged = {**EQ.ORACLES, **EQP.ORACLES}
-    orphans = [k for k in merged if k not in _PRIORITY]
-    if orphans:
-        # a typo'd oracle key would otherwise silently drop its query
-        # from the value-hash gate (it would run as a weaker rows-only
-        # check) — fail loudly instead
-        raise RuntimeError(f"oracle registry drift: {orphans}")
-    return {k: merged[k] for k in _PRIORITY if k in merged}
+    reg = _registry()
+    return {name: reg[name][1]() for name in cap_order(list(reg))}

@@ -165,21 +165,6 @@ def q_pip_anti_oracle() -> str:
     """
 
 
-def q_cell_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-point quadkey cell at res 12 (the tiling key of every image row)."""
-    return _points_df(spark, sf_dir).select(
-        "point_id", F.expr(C.cell_sql("lng", "lat", 12, "spark")).alias("cell")
-    )
-
-
-def q_cell_assign_oracle() -> str:
-    cell = C.cell_sql("lng", "lat", 12, "duckdb")
-    return f"""
-        WITH pts AS ({_points_oracle_cte()})
-        SELECT point_id, {cell} AS cell FROM pts
-    """
-
-
 ZONAL_RES = 8
 
 
@@ -243,23 +228,6 @@ def q_zonal_stats_oracle() -> str:
     """
 
 
-def q_cell_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tile histogram: points per res-6 cell (raster side of tiling)."""
-    return (
-        _points_df(spark, sf_dir)
-        .groupBy(F.expr(C.cell_sql("lng", "lat", 6, "spark")).alias("cell"))
-        .agg(F.count(F.lit(1)).alias("n_points"))
-    )
-
-
-def q_cell_hist_oracle() -> str:
-    cell = C.cell_sql("lng", "lat", 6, "duckdb")
-    return f"""
-        WITH pts AS ({_points_oracle_cte()})
-        SELECT {cell} AS cell, count(*) AS n_points FROM pts GROUP BY 1
-    """
-
-
 def q_within_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3: all (point, rect-center) pairs with Euclidean distance <= 3.0.
 
@@ -297,23 +265,6 @@ def q_knn3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = _points_df(spark, sf_dir)
     out = SJ.knn_join(
-        spark, pts, FX.make_grid_features(), k=3, res=6, point_id_col="point_id"
-    )
-    return out.select(
-        "point_id",
-        F.col("knn_rank").cast("long").alias("knn_rank"),
-        F.col("record_number").cast("long").alias("record_number"),
-    )
-
-
-def q_knn3_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2 via literal cell-ring expansion (the north-star kNN formulation);
-    identical output to q_knn3 — both are checked against the brute-force
-    oracle."""
-    from .operators import spatial_join as SJ
-
-    pts = _points_df(spark, sf_dir)
-    out = SJ.knn_join_ring_expansion(
         spark, pts, FX.make_grid_features(), k=3, res=6, point_id_col="point_id"
     )
     return out.select(
@@ -445,6 +396,9 @@ def q_nearest_road_oracle() -> str:
         WHERE dsq_u <= {r2u}
         QUALIFY nn_rank <= 1
     """
+
+
+q_nearest_road_big_oracle = q_nearest_road_oracle
 
 
 def q_bbox_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -806,277 +760,6 @@ def q_pricing_summary_oracle() -> str:
     """
 
 
-def q_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: 3-way join + group + top-10, revenue integerized."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    rev = F.floor(
-        F.floor(F.col("l_extendedprice") * 100)
-        * F.floor((1 - F.col("l_discount")) * 10000)
-    ).cast("long")
-    return (
-        cust.where(F.col("c_mktsegment") == "BUILDING")
-        .join(orders, cust.c_custkey == orders.o_custkey)
-        .join(li, orders.o_orderkey == li.l_orderkey)
-        .groupBy("o_orderkey")
-        .agg(F.sum(rev).alias("revenue_u"))
-        .orderBy(F.desc("revenue_u"), F.asc("o_orderkey"))
-        .limit(10)
-    )
-
-
-def q_top_revenue_orders_oracle() -> str:
-    return """
-        SELECT o_orderkey,
-               CAST(sum(CAST(floor(floor(l_extendedprice * 100) * floor((1 - l_discount) * 10000)) AS BIGINT)) AS BIGINT) AS revenue_u
-        FROM customer JOIN orders ON c_custkey = o_custkey
-                      JOIN lineitem ON o_orderkey = l_orderkey
-        WHERE c_mktsegment = 'BUILDING'
-        GROUP BY o_orderkey
-        ORDER BY revenue_u DESC, o_orderkey ASC
-        LIMIT 10
-    """
-
-
-def q_regional_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: 6-way join (region->nation->customer->orders->
-    lineitem->supplier, local-supplier condition) + per-nation revenue.
-
-    Scale plan: region/nation broadcast (fixed-size dims), supplier
-    broadcasts until it outgrows the threshold, the customer⨝orders⨝
-    lineitem chain shuffles on its keys with AQE handling runtime sizing —
-    exactly the shape Catalyst reorders well because every join is a
-    declared equi-join.
-    """
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    supp = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    rev = F.floor(
-        F.floor(F.col("l_extendedprice") * 100)
-        * F.floor((1 - F.col("l_discount")) * 10000)
-    ).cast("long")
-    return (
-        F.broadcast(region.where(F.col("r_name") == "ASIA"))
-        .join(F.broadcast(nation), F.col("n_regionkey") == F.col("r_regionkey"))
-        .join(cust, F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(orders, F.col("o_custkey") == F.col("c_custkey"))
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(
-            supp,
-            (F.col("s_suppkey") == F.col("l_suppkey"))
-            & (F.col("s_nationkey") == F.col("c_nationkey")),
-        )
-        .groupBy("n_name")
-        .agg(F.sum(rev).alias("revenue_u"))
-    )
-
-
-def q_regional_volume_oracle() -> str:
-    return """
-        SELECT n_name,
-               CAST(sum(CAST(floor(floor(l_extendedprice * 100) * floor((1 - l_discount) * 10000)) AS BIGINT)) AS BIGINT) AS revenue_u
-        FROM region JOIN nation ON n_regionkey = r_regionkey
-                    JOIN customer ON c_nationkey = n_nationkey
-                    JOIN orders ON o_custkey = c_custkey
-                    JOIN lineitem ON l_orderkey = o_orderkey
-                    JOIN supplier ON s_suppkey = l_suppkey AND s_nationkey = c_nationkey
-        WHERE r_name = 'ASIA'
-        GROUP BY n_name
-    """
-
-
-def q_priority_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP (o_orderpriority, o_orderstatus): counts + totalprice cents at
-    every grouping level (partial aggregation handles all levels in one
-    pass; the reference has no grouping-sets machinery at all)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return (
-        orders.rollup("o_orderpriority", "o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.floor(F.col("o_totalprice") * 100).cast("long")).alias("sum_price_c"),
-        )
-    )
-
-
-def q_priority_rollup_oracle() -> str:
-    return """
-        SELECT o_orderpriority, o_orderstatus,
-               count(*) AS n_orders,
-               CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_price_c
-        FROM orders
-        GROUP BY ROLLUP (o_orderpriority, o_orderstatus)
-    """
-
-
-def q_quiet_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-anti join: customers with no URGENT orders (count + max balance
-    cents per nation). Anti/semi joins don't exist in the reference; at scale the
-    anti join broadcasts the distinct key set or shuffles on the key."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    urgent = orders.where(F.col("o_orderpriority") == "1-URGENT")
-    quiet = cust.join(
-        urgent, cust.c_custkey == urgent.o_custkey, "left_anti"
-    )
-    return quiet.groupBy("c_nationkey").agg(
-        F.count(F.lit(1)).alias("n_quiet"),
-        F.max(F.floor(F.col("c_acctbal") * 100).cast("long")).alias("max_bal_c"),
-    )
-
-
-def q_quiet_customers_oracle() -> str:
-    return """
-        SELECT c_nationkey,
-               count(*) AS n_quiet,
-               CAST(max(CAST(floor(c_acctbal * 100) AS BIGINT)) AS BIGINT) AS max_bal_c
-        FROM customer
-        WHERE NOT EXISTS (SELECT 1 FROM orders
-                          WHERE o_custkey = c_custkey
-                            AND o_orderpriority = '1-URGENT')
-        GROUP BY c_nationkey
-    """
-
-
-def q_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape: lineitem ⨝ part, revenue split by part type class.
-    The part side shuffles (fact-to-fact at scale) unless it fits the
-    broadcast threshold; revenue cents are exact integers."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    rev = F.floor(
-        F.floor(F.col("l_extendedprice") * 100)
-        * F.floor((1 - F.col("l_discount")) * 10000)
-    ).cast("long")
-    return (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .groupBy("p_type")
-        .agg(
-            F.sum(rev).alias("revenue_u"),
-            F.count(F.lit(1)).alias("n_items"),
-            F.sum(F.floor(F.col("p_retailprice") * 100).cast("long")).alias("sum_retail_c"),
-        )
-    )
-
-
-def q_promo_revenue_oracle() -> str:
-    return """
-        SELECT p_type,
-               CAST(sum(CAST(floor(floor(l_extendedprice * 100) * floor((1 - l_discount) * 10000)) AS BIGINT)) AS BIGINT) AS revenue_u,
-               count(*) AS n_items,
-               CAST(sum(CAST(floor(p_retailprice * 100) AS BIGINT)) AS BIGINT) AS sum_retail_c
-        FROM lineitem JOIN part ON l_partkey = p_partkey
-        GROUP BY p_type
-    """
-
-
-_ABOVE_AVG_SQL = """
-    SELECT o_orderpriority, count(*) AS n_above,
-           CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_price_c
-    FROM orders o
-    WHERE CAST(floor(o_totalprice * 100) AS BIGINT) > (
-        SELECT CAST(sum(CAST(floor(o2.o_totalprice * 100) AS BIGINT)) AS DOUBLE)
-               / count(*)
-        FROM orders o2
-        WHERE o2.o_orderpriority = o.o_orderpriority
-    )
-    GROUP BY o_orderpriority
-"""
-
-
-def q_above_avg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated scalar subquery (orders above their priority's average
-    price): Catalyst decorrelates it into an aggregate + join — the SQL
-    text is byte-identical to the DuckDB oracle, and the inner average is
-    exact-integer sum / exact count so the comparison is engine-stable."""
-    spark.read.parquet(f"{sf_dir}/orders.parquet").createOrReplaceTempView(
-        "orders"
-    )
-    return spark.sql(_ABOVE_AVG_SQL)
-
-
-def q_above_avg_orders_oracle() -> str:
-    return _ABOVE_AVG_SQL
-
-
-def q_priority_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE (priority, status): all 2^2 grouping-set combinations in one
-    partial-aggregated pass (completes the grouping-sets family next to
-    ROLLUP)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return orders.cube("o_orderpriority", "o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.floor(F.col("o_totalprice") * 100).cast("long")).alias("sum_price_c"),
-    )
-
-
-def q_priority_cube_oracle() -> str:
-    return """
-        SELECT o_orderpriority, o_orderstatus,
-               count(*) AS n_orders,
-               CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_price_c
-        FROM orders
-        GROUP BY CUBE (o_orderpriority, o_orderstatus)
-    """
-
-
-_SETOPS_SQL = """
-    SELECT 'building_not_urgent' AS cohort, count(*) AS n FROM (
-        SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-        EXCEPT
-        SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
-    )
-    UNION ALL
-    SELECT 'building_and_urgent' AS cohort, count(*) AS n FROM (
-        SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-        INTERSECT
-        SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
-    )
-"""
-
-
-def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT / EXCEPT cohorts (set operators the reference lacks
-    entirely — SURVEY §2.6); SQL text byte-identical to the oracle."""
-    spark.read.parquet(f"{sf_dir}/customer.parquet").createOrReplaceTempView(
-        "customer"
-    )
-    spark.read.parquet(f"{sf_dir}/orders.parquet").createOrReplaceTempView(
-        "orders"
-    )
-    return spark.sql(_SETOPS_SQL)
-
-
-def q_set_ops_oracle() -> str:
-    return _SETOPS_SQL
-
-
-def q_median_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered-statistic aggregates: per market segment, median + p90 of
-    account balance cents. Exact cross-engine: on BIGINT cents < 2^52 the
-    linear interpolation (1-h)*a + h*b is IEEE-exact in both engines."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    return cust.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n_cust"),
-        F.expr("percentile(CAST(floor(c_acctbal * 100) AS BIGINT), 0.5)").alias("median_bal_c"),
-        F.expr("percentile(CAST(floor(c_acctbal * 100) AS BIGINT), 0.9)").alias("p90_bal_c"),
-    )
-
-
-def q_median_balances_oracle() -> str:
-    return """
-        SELECT c_mktsegment,
-               count(*) AS n_cust,
-               quantile_cont(CAST(floor(c_acctbal * 100) AS BIGINT), 0.5) AS median_bal_c,
-               quantile_cont(CAST(floor(c_acctbal * 100) AS BIGINT), 0.9) AS p90_bal_c
-        FROM customer GROUP BY c_mktsegment
-    """
-
-
 # ---------------------------------------------------------------------------
 # J1 reference-parity first-hit mode (spatial_index.cpp:356-380)
 # ---------------------------------------------------------------------------
@@ -1229,8 +912,7 @@ def _ring_rows() -> list[tuple]:
     """(record_number, ring_idx, xs, ys) per ring of every LIVE fixture
     polygon — the deleted-DBF record is excluded, matching every reader-
     based query's semantics (51 rows = the 51 state polygons). Cached:
-    the fixture jitter + repr serialization runs once per process, not on
-    every import-time ORACLES build plus every queries() call."""
+    the fixture jitter + repr serialization runs once per process."""
     feats = FX.make_features()
     rows = []
     for _, r in feats.iterrows():
@@ -2512,122 +2194,3 @@ def q_idw_loocv_oracle() -> str:
         f"          FROM ({_points_oracle_cte()})"
     )
     return RA.idw_loocv_oracle_sql(src, radius=IDW_CV_RADIUS)
-
-
-QUERIES = {
-    "pip_grid_join": q_pip_grid_join,
-    "pip_anti": q_pip_anti,
-    "pip_first_hit": q_pip_first_hit,
-    "cell_assign": q_cell_assign,
-    "cell_hist": q_cell_hist,
-    "within_distance": q_within_distance,
-    "knn3": q_knn3,
-    "knn3_ring": q_knn3_ring,
-    "bbox_join": q_bbox_join,
-    "normalize": q_normalize,
-    "state_confidence": q_state_confidence,
-    "geocode_forward": q_geocode_forward,
-    "http_requests": q_http_requests,
-    "top1_per_group": q_top1_per_group,
-    "pricing_summary": q_pricing_summary,
-    "top_revenue_orders": q_top_revenue_orders,
-    "regional_volume": q_regional_volume,
-    "priority_rollup": q_priority_rollup,
-    "priority_cube": q_priority_cube,
-    "set_ops": q_set_ops,
-    "quiet_customers": q_quiet_customers,
-    "promo_revenue": q_promo_revenue,
-    "above_avg_orders": q_above_avg_orders,
-    "median_balances": q_median_balances,
-    "vectorize_raster": q_vectorize_raster,
-    "nearest_road": q_nearest_road,
-    "nearest_road_big": q_nearest_road_big,
-    "road_buffer": q_road_buffer,
-    "road_crossings": q_road_crossings,
-    "line_interpolate": q_line_interpolate,
-    "border_crossings": q_border_crossings,
-    "zonal_stats": q_zonal_stats,
-    "vector_outline": q_vector_outline,
-    "polygon_stats": q_polygon_stats,
-    "cell_skew": q_cell_skew,
-    "merge_upsert": q_merge_upsert,
-    "snapshot_diff": q_snapshot_diff,
-    "geo_nearest": q_geo_nearest,
-    "geo_within_km": q_geo_within_km,
-    "raster_smooth": q_raster_smooth,
-    "idw": q_idw,
-    "idw_loocv": q_idw_loocv,
-    "density_contours": q_density_contours,
-    "adaptive_grid": q_adaptive_grid,
-    "point_pairs": q_point_pairs,
-    "shortest_path": q_shortest_path,
-    "pagerank": q_pagerank,
-    "isochrone": q_isochrone,
-    "triangles": q_triangles,
-    "ripley_k": q_ripley_k,
-    "g_function": q_g_function,
-    "knn_self": q_knn_self,
-    "geo_pairs": q_geo_pairs,
-    "geo_knn_self": q_geo_knn_self,
-    "geo_polygon_area": q_geo_polygon_area,
-    "table_stats": q_table_stats,
-}
-
-ORACLES = {
-    "pip_grid_join": q_pip_grid_join_oracle(),
-    "pip_anti": q_pip_anti_oracle(),
-    "pip_first_hit": q_pip_first_hit_oracle(),
-    "cell_assign": q_cell_assign_oracle(),
-    "cell_hist": q_cell_hist_oracle(),
-    "within_distance": q_within_distance_oracle(),
-    "knn3": q_knn3_oracle(),
-    "knn3_ring": q_knn3_oracle(),
-    "bbox_join": q_bbox_join_oracle(),
-    "normalize": q_normalize_oracle(),
-    "state_confidence": q_state_confidence_oracle(),
-    "geocode_forward": q_geocode_forward_oracle(),
-    "http_requests": q_http_requests_oracle(),
-    "top1_per_group": q_top1_per_group_oracle(),
-    "pricing_summary": q_pricing_summary_oracle(),
-    "top_revenue_orders": q_top_revenue_orders_oracle(),
-    "regional_volume": q_regional_volume_oracle(),
-    "priority_rollup": q_priority_rollup_oracle(),
-    "priority_cube": q_priority_cube_oracle(),
-    "set_ops": q_set_ops_oracle(),
-    "quiet_customers": q_quiet_customers_oracle(),
-    "promo_revenue": q_promo_revenue_oracle(),
-    "above_avg_orders": q_above_avg_orders_oracle(),
-    "median_balances": q_median_balances_oracle(),
-    "vectorize_raster": q_vectorize_raster_oracle(),
-    "nearest_road": q_nearest_road_oracle(),
-    "nearest_road_big": q_nearest_road_oracle(),
-    "road_buffer": q_road_buffer_oracle(),
-    "road_crossings": q_road_crossings_oracle(),
-    "line_interpolate": q_line_interpolate_oracle(),
-    "border_crossings": q_border_crossings_oracle(),
-    "zonal_stats": q_zonal_stats_oracle(),
-    "vector_outline": q_vector_outline_oracle(),
-    "polygon_stats": q_polygon_stats_oracle(),
-    "cell_skew": q_cell_skew_oracle(),
-    "merge_upsert": q_merge_upsert_oracle(),
-    "snapshot_diff": q_snapshot_diff_oracle(),
-    "geo_nearest": q_geo_nearest_oracle(),
-    "geo_within_km": q_geo_within_km_oracle(),
-    "raster_smooth": q_raster_smooth_oracle(),
-    "idw": q_idw_oracle(),
-    "idw_loocv": q_idw_loocv_oracle(),
-    "density_contours": q_density_contours_oracle(),
-    "adaptive_grid": q_adaptive_grid_oracle(),
-    "point_pairs": q_point_pairs_oracle(),
-    "shortest_path": q_shortest_path_oracle(),
-    "pagerank": q_pagerank_oracle(),
-    "isochrone": q_isochrone_oracle(),
-    "triangles": q_triangles_oracle(),
-    "ripley_k": q_ripley_k_oracle(),
-    "g_function": q_g_function_oracle(),
-    "knn_self": q_knn_self_oracle(),
-    "geo_pairs": q_geo_pairs_oracle(),
-    "geo_knn_self": q_geo_knn_self_oracle(),
-    "geo_polygon_area": q_geo_polygon_area_oracle(),
-    "table_stats": q_table_stats_oracle(),
-}

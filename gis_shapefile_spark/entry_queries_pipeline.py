@@ -2827,59 +2827,6 @@ def q_bloom_prefilter_oracle() -> str:
     """
 
 
-def q_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct aggregate: per event_type, exact distinct users + events
-    (Catalyst plans the two-phase Expand + partial aggregate)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("n_users"),
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct(
-            F.unix_timestamp(F.date_trunc("hour", F.col("ts")))
-        ).alias("n_active_hours"),
-    )
-
-
-def q_distinct_users_oracle() -> str:
-    return """
-        SELECT event_type,
-               count(DISTINCT user_id) AS n_users,
-               count(*) AS n_events,
-               count(DISTINCT CAST(floor(epoch(date_trunc('hour', ts))) AS BIGINT))
-                 AS n_active_hours
-        FROM events GROUP BY event_type
-    """
-
-
-def q_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON extraction over the props payload column: per event_type,
-    stats on the embedded k field (get_json_object / json_extract)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    k = F.get_json_object(F.col("props"), "$.k").cast("long")
-    return ev.groupBy("event_type").agg(
-        F.count(k).alias("n_with_k"),
-        F.sum(k).alias("sum_k"),
-        F.min(k).alias("min_k"),
-        F.max(k).alias("max_k"),
-    )
-
-
-def q_json_props_oracle() -> str:
-    return """
-        SELECT event_type,
-               count(k) AS n_with_k,
-               CAST(sum(k) AS BIGINT) AS sum_k,
-               CAST(min(k) AS BIGINT) AS min_k,
-               CAST(max(k) AS BIGINT) AS max_k
-        FROM (
-          SELECT event_type,
-                 CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-          FROM events
-        )
-        GROUP BY event_type
-    """
-
-
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: every click event gets the user's most recent purchase
     value at-or-before the click (null if the user never purchased)."""
@@ -4038,7 +3985,6 @@ def q_ar_bucket_oracle() -> str:
     """
 
 
-
 # ---------------------------------------------------------------------------
 # detection-box cluster NMS (IoU dedup of object-detection annotations)
 # ---------------------------------------------------------------------------
@@ -4141,172 +4087,3 @@ def q_box_nms_oracle() -> str:
                CAST(cluster_sz AS BIGINT) AS cluster_sz
         FROM ranked WHERE rk = 1
     """
-
-
-QUERIES = {
-    "box_nms": q_box_nms,
-    "token_count": q_token_count,
-    "lang_id": q_lang_id,
-    "quality_score": q_quality_score,
-    "doc_fingerprint": q_doc_fingerprint,
-    "repetition": q_repetition,
-    "dedup_exact": q_dedup_exact,
-    "dedup_minhash": q_dedup_minhash,
-    "dedup_jaccard": q_dedup_jaccard,
-    "substring_dedup": q_substring_dedup,
-    "dedup_simhash": q_dedup_simhash,
-    "dedup_simhash_pairs": q_dedup_simhash_pairs,
-    "running_windows": q_running_windows,
-    "dedup_components": q_dedup_components,
-    "mm_interleave_pack": q_mm_interleave_pack,
-    "ann_topk": q_ann_topk,
-    "ann_ivf": q_ann_ivf,
-    "ann_pq": q_ann_pq,
-    "ann_ivfpq": q_ann_ivfpq,
-    "ann_rerank": q_ann_rerank,
-    "bm25_rank": q_bm25_rank,
-    "doc_logprob": q_doc_logprob,
-    "cms_topk": q_cms_topk,
-    "hll_distinct": q_hll_distinct,
-    "bloom_prefilter": q_bloom_prefilter,
-    "ann_ivf_delta": q_ann_ivf_delta,
-    "pii_scrub": q_pii_scrub,
-    "seq_pack": q_seq_pack,
-    "paragraph_dedup": q_paragraph_dedup,
-    "embedding_neardup": q_embedding_neardup,
-    "events_window": q_events_window,
-    "sessionize": q_sessionize,
-    "trajectory": q_trajectory,
-    "co_movement": q_co_movement,
-    "trajectory_geo": q_trajectory_geo,
-    "stay_points": q_stay_points,
-    "map_match": q_map_match,
-    "asof_join": q_asof_join,
-    "interval_join": q_interval_join,
-    "distinct_users": q_distinct_users,
-    "json_props": q_json_props,
-    "vector_stats": q_vector_stats,
-    "embedding_quantize": q_embedding_quantize,
-    "vocab_topk": q_vocab_topk,
-    "stratified_sample": q_stratified_sample,
-    "hourly_gapfill": q_hourly_gapfill,
-    "quality_deciles": q_quality_deciles,
-    "reverse_geocode": q_reverse_geocode,
-    "tile_bounds": q_tile_bounds,
-    "tile_pyramid": q_tile_pyramid,
-    "pyramid_delta": q_pyramid_delta,
-    "pyramid_update": q_pyramid_update,
-    "wm_tiles": q_wm_tiles,
-    "render_tiles": q_render_tiles,
-    "corpus_curation": q_corpus_curation,
-    "train_val_split": q_train_val_split,
-    "image_tiling": q_image_tiling,
-    "image_quality": q_image_quality,
-    "cross_scale_neardup": q_cross_scale_neardup,
-    "image_neardup": q_image_neardup,
-    "image_canon": q_image_canon,
-    "image_takedown": q_image_takedown,
-    "joint_dedup": q_joint_dedup,
-    "ann_filtered": q_ann_filtered,
-    "ann_recall": q_ann_recall,
-    "hotspot_clusters": q_hotspot_clusters,
-    "od_matrix": q_od_matrix,
-    "heading_profile": q_heading_profile,
-    "cross_k": q_cross_k,
-    "caption_consistency": q_caption_consistency,
-    "getis_ord": q_getis_ord,
-    "emerging_hotspots": q_emerging_hotspots,
-    "wds_roundtrip": q_wds_roundtrip,
-    "ar_bucket": q_ar_bucket,
-    "caption_curation": q_caption_curation,
-    "decontaminate": q_decontaminate,
-    "boilerplate": q_boilerplate,
-    "mixture_sample": q_mixture_sample,
-    "epoch_mix": q_epoch_mix,
-    "crossmodal_align": q_crossmodal_align,
-    "source_cap": q_source_cap,
-}
-
-ORACLES = {
-    "box_nms": q_box_nms_oracle(),
-    "token_count": q_token_count_oracle(),
-    "lang_id": q_lang_id_oracle(),
-    "quality_score": q_quality_score_oracle(),
-    "doc_fingerprint": q_doc_fingerprint_oracle(),
-    "repetition": q_repetition_oracle(),
-    "dedup_exact": q_dedup_exact_oracle(),
-    "dedup_minhash": q_dedup_minhash_oracle(),
-    "dedup_jaccard": q_dedup_jaccard_oracle(),
-    "substring_dedup": q_substring_dedup_oracle(),
-    "dedup_simhash": q_dedup_simhash_oracle(),
-    "dedup_simhash_pairs": q_dedup_simhash_pairs_oracle(),
-    "running_windows": q_running_windows_oracle(),
-    "dedup_components": q_dedup_components_oracle(),
-    "mm_interleave_pack": q_mm_interleave_pack_oracle(),
-    "ann_topk": q_ann_topk_oracle(),
-    "ann_ivf": q_ann_ivf_oracle(),
-    "ann_pq": q_ann_pq_oracle(),
-    "ann_ivfpq": q_ann_ivfpq_oracle(),
-    "ann_rerank": q_ann_rerank_oracle(),
-    "bm25_rank": q_bm25_rank_oracle(),
-    "doc_logprob": q_doc_logprob_oracle(),
-    "cms_topk": q_cms_topk_oracle(),
-    "hll_distinct": q_hll_distinct_oracle(),
-    "bloom_prefilter": q_bloom_prefilter_oracle(),
-    "ann_ivf_delta": q_ann_ivf_delta_oracle(),
-    "pii_scrub": q_pii_scrub_oracle(),
-    "seq_pack": q_seq_pack_oracle(),
-    "paragraph_dedup": q_paragraph_dedup_oracle(),
-    "embedding_neardup": q_embedding_neardup_oracle(),
-    "events_window": q_events_window_oracle(),
-    "sessionize": q_sessionize_oracle(),
-    "trajectory": q_trajectory_oracle(),
-    "co_movement": q_co_movement_oracle(),
-    "trajectory_geo": q_trajectory_geo_oracle(),
-    "stay_points": q_stay_points_oracle(),
-    "map_match": q_map_match_oracle(),
-    "asof_join": q_asof_join_oracle(),
-    "interval_join": q_interval_join_oracle(),
-    "distinct_users": q_distinct_users_oracle(),
-    "json_props": q_json_props_oracle(),
-    "vector_stats": q_vector_stats_oracle(),
-    "embedding_quantize": q_embedding_quantize_oracle(),
-    "vocab_topk": q_vocab_topk_oracle(),
-    "stratified_sample": q_stratified_sample_oracle(),
-    "hourly_gapfill": q_hourly_gapfill_oracle(),
-    "quality_deciles": q_quality_deciles_oracle(),
-    "reverse_geocode": q_reverse_geocode_oracle(),
-    "tile_bounds": q_tile_bounds_oracle(),
-    "tile_pyramid": q_tile_pyramid_oracle(),
-    "pyramid_delta": q_pyramid_delta_oracle(),
-    "pyramid_update": q_pyramid_update_oracle(),
-    "wm_tiles": q_wm_tiles_oracle(),
-    "render_tiles": q_render_tiles_oracle(),
-    "corpus_curation": q_corpus_curation_oracle(),
-    "train_val_split": q_train_val_split_oracle(),
-    "image_tiling": q_image_tiling_oracle(),
-    "image_quality": q_image_quality_oracle(),
-    "cross_scale_neardup": q_cross_scale_neardup_oracle(),
-    "image_neardup": q_image_neardup_oracle(),
-    "image_canon": q_image_canon_oracle(),
-    "image_takedown": q_image_takedown_oracle(),
-    "joint_dedup": q_joint_dedup_oracle(),
-    "ann_filtered": q_ann_filtered_oracle(),
-    "ann_recall": q_ann_recall_oracle(),
-    "hotspot_clusters": q_hotspot_clusters_oracle(),
-    "od_matrix": q_od_matrix_oracle(),
-    "heading_profile": q_heading_profile_oracle(),
-    "cross_k": q_cross_k_oracle(),
-    "caption_consistency": q_caption_consistency_oracle(),
-    "getis_ord": q_getis_ord_oracle(),
-    "emerging_hotspots": q_emerging_hotspots_oracle(),
-    "wds_roundtrip": q_wds_roundtrip_oracle(),
-    "ar_bucket": q_ar_bucket_oracle(),
-    "caption_curation": q_caption_curation_oracle(),
-    "decontaminate": q_decontaminate_oracle(),
-    "boilerplate": q_boilerplate_oracle(),
-    "mixture_sample": q_mixture_sample_oracle(),
-    "epoch_mix": q_epoch_mix_oracle(),
-    "crossmodal_align": q_crossmodal_align_oracle(),
-    "source_cap": q_source_cap_oracle(),
-}

@@ -67,6 +67,22 @@ DIM_DDL = (
 )
 _DIM_COLS = ["cell", "record_number", "is_full", "full_mask", "part_mask", "shell", "holes"]
 
+# Every dimension gets an explicit schema: an empty feature set must give
+# an empty join, and Spark cannot infer a schema from an empty frame.
+_CENTER_DDL = "cell bigint, record_number bigint, cx double, cy double"
+_BOX_DDL = ("cell bigint, record_number bigint, "
+            "minx double, miny double, maxx double, maxy double")
+_DDL_BY_KIND = {"i": "bigint", "u": "bigint", "f": "double", "b": "boolean",
+                "M": "timestamp"}
+
+
+def _attr_ddl(pdf: pd.DataFrame, attrs: list[str] | None) -> str:
+    """DDL suffix for carried feature attributes, typed by pandas dtype;
+    anything not numeric, boolean or datetime carries as string."""
+    return "".join(
+        f", `{a}` {_DDL_BY_KIND.get(pdf[a].dtype.kind, 'string')}" for a in attrs or []
+    )
+
 
 def _edge_table(rx, ry) -> dict[str, np.ndarray]:
     """Every ring edge of one polygon: vertex i ``(x1, y1)``, the previous
@@ -372,7 +388,8 @@ def point_in_polygon_join(
         attr_dim = spark.createDataFrame(
             fpdf[["record_number"] + list(attrs)].assign(
                 record_number=fpdf["record_number"].astype(np.int64)
-            )
+            ),
+            "record_number bigint" + _attr_ddl(fpdf, attrs),
         )
         matched = matched.join(F.broadcast(attr_dim), "record_number", "left")
     return matched
@@ -454,7 +471,8 @@ def within_distance_join(
         for c in cover:
             rows.append((int(c), int(r.record_number), float(r.cx), float(r.cy)))
     dim = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["cell", "record_number", "cx", "cy"])
+        pd.DataFrame(rows, columns=["cell", "record_number", "cx", "cy"]),
+        _CENTER_DDL,
     )
     pts = points.withColumn("__cell", C.cell_col(lng_col, lat_col, res))
     out = (
@@ -513,7 +531,9 @@ def knn_join_bruteforce(
     )
     for a in attrs or []:
         dim_pdf[a] = feats[a].to_numpy()
-    dim = spark.createDataFrame(dim_pdf)
+    dim = spark.createDataFrame(
+        dim_pdf, "record_number bigint, cx double, cy double" + _attr_ddl(feats, attrs)
+    )
     scored = points.crossJoin(F.broadcast(dim)).withColumn(
         "dist",
         F.sqrt(
@@ -621,7 +641,8 @@ def knn_join(
         points, lng_col, lat_col, res, max_occupied_cells
     )
     pts = points.withColumn("__cell", C.cell_col(lng_col, lat_col, res))
-    if len(occupied) == 0:
+    kk = min(k, len(fx))
+    if len(occupied) == 0 or kk == 0:  # nothing to key, or no candidate at all
         return knn_join_bruteforce(spark, points, features_pdf, k,
                                    lng_col, lat_col, point_id_col).drop("__cell")
 
@@ -631,7 +652,6 @@ def knn_join(
     r_cell = np.sqrt((maxx - minx) ** 2 + (maxy - miny) ** 2) / 2.0
     # chunked (cells x features) distance matrix — peak memory is
     # chunk x |features| doubles, independent of the occupied-cell count
-    kk = min(k, len(fx))
     chunk = max(1, _DMAT_BUDGET // max(1, len(fx)))
     ci_parts, fi_parts = [], []
     for lo in range(0, len(occupied), chunk):
@@ -655,7 +675,8 @@ def knn_join(
                 "cx": fx[fi],
                 "cy": fy[fi],
             }
-        )
+        ),
+        _CENTER_DDL,
     )
     scored = (
         pts.join(F.broadcast(dim), pts["__cell"] == dim["cell"], "inner")
@@ -694,7 +715,8 @@ def bbox_join(
         for c in C.cover_bbox(r.minx, r.miny, r.maxx, r.maxy, res):
             rows.append((int(c), int(r.record_number), r.minx, r.miny, r.maxx, r.maxy))
     dim = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["cell", "record_number", "minx", "miny", "maxx", "maxy"])
+        pd.DataFrame(rows, columns=["cell", "record_number", "minx", "miny", "maxx", "maxy"]),
+        _BOX_DDL,
     )
     n = 1 << res
     q = (
@@ -774,7 +796,7 @@ def knn_join_ring_expansion(
 
     pts = points.withColumn("__cell", C.cell_col(lng_col, lat_col, res))
     rows = []
-    for cell in occupied:
+    for cell in occupied if len(fx) else ():  # no features: no ring to widen
         r = 0
         found: set[int] = set()
         while True:
@@ -795,7 +817,8 @@ def knn_join_ring_expansion(
             rows.append((int(cell), int(frec[i]), float(fx[i]), float(fy[i])))
 
     dim = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["cell", "record_number", "cx", "cy"])
+        pd.DataFrame(rows, columns=["cell", "record_number", "cx", "cy"]),
+        _CENTER_DDL,
     )
     scored = (
         pts.join(F.broadcast(dim), pts["__cell"] == dim["cell"], "inner")

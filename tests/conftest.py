@@ -14,8 +14,6 @@ from gis_shapefile_spark.session import get_spark  # noqa: E402
 def spark():
     s = get_spark(
         app_name="gis_shapefile_spark_tests",
-        master="local[8]",
         shuffle_partitions=8,
-        extra_conf={"spark.driver.memory": "8g"},
     )
     yield s

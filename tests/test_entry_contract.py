@@ -2,11 +2,11 @@
 
 The driver's correctness gate enumerates only the first
 ``__spark_entry__.DRIVER_CAP`` (50) entries of ``queries()``.  Round 2
-lost 18 flagship rows (including ``image_tiling``) to that cap, so the
-ordering is now explicit and these tests pin it: every query that has
-never had a driver-green artifact row, and every query that is the ONLY
-oracle for a SURVEY §2 / LLM-pipeline row, must sit inside the cap;
-everything past the cap must be named in the prior-green ledger below.
+lost 18 flagship rows (including ``image_tiling``) to that cap. The
+order is derived from the artifacts (``__spark_entry__.cap_order``) and
+these tests pin its invariants: the flagship anchors and every query
+that has never had a driver-green artifact row sit inside the cap, and
+everything past the cap has a prior driver-green row.
 """
 
 from __future__ import annotations
@@ -24,12 +24,10 @@ from tools.check_correctness import canon, dtype_mismatches, split_args  # noqa:
 
 # Driver-green ledger, read from the checked-in artifacts themselves: a
 # query is "driver-green" if any CORRECTNESS_r*.json records rows +
-# schema + value-hash matches for it. The per-query family-coverage
-# rationale for every rotation lives in COVERAGE.md ("Driver
-# correctness-gate ordering"); this file only enforces the invariants:
-# (a) everything past the cap has a REAL driver-green row, (b)
-# everything never driver-verified sits inside the cap, (c) the 13
-# flagship anchors stay in-cap.
+# schema + value-hash matches for it. This file enforces the
+# invariants on the derived order: (a) everything past the cap has a
+# REAL driver-green row, (b) everything never driver-verified sits
+# inside the cap, (c) the 8 flagship anchors stay in-cap.
 
 
 def driver_green() -> set[str]:
@@ -127,23 +125,73 @@ def test_never_green_queries_inside_cap():
     )
 
 
-def test_coverage_doc_in_cap_list_matches_priority():
-    """Doc-drift guard (round-4 verdict item 6): COVERAGE.md's
-    "Driver correctness-gate ordering" section carries the exact in-cap
-    list in a ```in-cap fenced block; it must equal ``_PRIORITY[:50]``
-    as an ORDERED list. The round-4 doc named six anchors that were not
-    in the artifact's cap — this pins the doc to the code."""
-    root = Path(__file__).resolve().parents[1]
-    text = (root / "COVERAGE.md").read_text()
-    assert "```in-cap\n" in text, "COVERAGE.md lost its in-cap block"
-    block = text.split("```in-cap\n", 1)[1].split("```", 1)[0]
-    doc_list = block.split()
-    names = list(E.queries())[: E.DRIVER_CAP]
-    assert doc_list == names, (
-        f"COVERAGE.md in-cap block drifted from _PRIORITY[:50]: "
-        f"doc-only={set(doc_list) - set(names)}, "
-        f"code-only={set(names) - set(doc_list)}"
-    )
+def _write_artifact(root: Path, rnd: int, rows: dict[str, bool]) -> None:
+    import json
+
+    (root / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps({
+        name: {"rows_match": True, "schema_match": True, "hash_match": ok}
+        for name, ok in rows.items()
+    }))
+
+
+def test_cap_order_from_artifacts(tmp_path):
+    """Anchors first, then never-green queries (no row, or red rows
+    only), then oldest last-green round first; ties keep registry
+    order. Anchors sort among themselves by the same key."""
+    import json
+
+    names = ["late", "pip_grid_join", "old_b", "red_only", "absent",
+             "old_a", "mid", "seq_pack"]
+    _write_artifact(tmp_path, 1, {"late": True, "old_b": True, "old_a": True,
+                                  "mid": True, "red_only": False})
+    _write_artifact(tmp_path, 2, {"mid": True, "old_b": False, "red_only": False})
+    _write_artifact(tmp_path, 10, {"late": True, "pip_grid_join": True})
+    # a schema mismatch is red even when rows and hash match
+    (tmp_path / "CORRECTNESS_r11.json").write_text(json.dumps({
+        "old_a": {"rows_match": True, "schema_match": False, "hash_match": True},
+    }))
+    assert E.cap_order(names, tmp_path) == [
+        "seq_pack", "pip_grid_join",  # anchors: never green, r10
+        "red_only", "absent",         # never green
+        "old_b", "old_a",             # last green r01, registry order
+        "mid",                        # r02
+        "late",                       # r10
+    ]
+
+
+def test_cap_order_without_artifacts(tmp_path):
+    names = ["b", "image_tiling", "a", "pip_grid_join", "c"]
+    assert E.cap_order(names, tmp_path) == [
+        "image_tiling", "pip_grid_join", "b", "a", "c"]
+
+
+def test_registry_raises_on_orphans_and_duplicates(monkeypatch):
+    """The registry is derived from ``q_<name>`` / ``q_<name>_oracle``
+    pairs; a half pair or a name in both modules fails loudly instead of
+    dropping a query from the value-hash gate."""
+    from types import SimpleNamespace
+
+    import pytest
+
+    def q(spark, sf_dir):
+        return None
+
+    def sql():
+        return "SELECT 1"
+
+    pair = SimpleNamespace(q_x=q, q_x_oracle=sql)
+    monkeypatch.setattr(E, "EQ", pair)
+    monkeypatch.setattr(E, "EQP", SimpleNamespace(q_y=q, q_y_oracle=sql))
+    assert list(E.queries()) == ["x", "y"]
+    assert E.oracle_sql() == {"x": "SELECT 1", "y": "SELECT 1"}
+    for other, msg in (
+        (SimpleNamespace(q_y=q), "has no q_y_oracle"),
+        (SimpleNamespace(q_y_oracle=sql), "q_y_oracle has no query"),
+        (pair, "defined in both modules"),
+    ):
+        monkeypatch.setattr(E, "EQP", other)
+        with pytest.raises(RuntimeError, match=msg):
+            E.queries()
 
 
 def test_docs_match_registry():

@@ -294,6 +294,31 @@ def test_knn_ring_expansion_matches_bruteforce(spark):
     assert key(ring) == key(brute)
 
 
+@pytest.mark.parametrize("join", [
+    lambda spark, pts, feats: SJ.knn_join(spark, pts, feats, k=3, res=6),
+    lambda spark, pts, feats: SJ.knn_join_bruteforce(spark, pts, feats, k=3),
+    lambda spark, pts, feats: SJ.knn_join_ring_expansion(spark, pts, feats, k=3, res=6),
+    lambda spark, pts, feats: SJ.within_distance_join(spark, pts, feats, distance=2.0),
+    lambda spark, pts, feats: SJ.bbox_join(
+        spark,
+        pts.selectExpr("image_id AS query_id", "lng AS qminx", "lat AS qminy",
+                       "lng + 1 AS qmaxx", "lat + 1 AS qmaxy"),
+        feats,
+    ),
+    lambda spark, pts, feats: SJ.point_in_polygon_join(
+        spark, pts, feats, res=6, attrs=["NAME_1"]),
+], ids=["knn_join", "knn_join_bruteforce", "knn_join_ring_expansion",
+        "within_distance_join", "bbox_join", "point_in_polygon_join"])
+def test_empty_feature_set_joins_to_zero_rows(spark, join):
+    """No features, no matches: every dimension join returns an empty
+    frame instead of failing to infer the dimension's schema."""
+    feats = FX.make_features().iloc[:0]
+    pts = spark.createDataFrame(pd.DataFrame({
+        "image_id": [0, 1], "lng": [-100.0, -90.0], "lat": [40.0, 35.0],
+    }))
+    assert join(spark, pts, feats).count() == 0
+
+
 def test_simplify_ring_properties():
     """DP simplification: survivors are a subsequence, dropped vertices lie
     within epsilon of the simplified outline, straight runs collapse."""

@@ -202,12 +202,10 @@ def split_args(args: list[str]) -> tuple[list[str], set[str], bool]:
 def main() -> int:
     argv, only, no_arrow = split_args(sys.argv[1:])
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
-    conf = {"spark.driver.memory": "8g",
-            "spark.ui.showConsoleProgress": "false"}
+    conf = {"spark.ui.showConsoleProgress": "false"}
     if no_arrow:
         conf["spark.sql.execution.arrow.pyspark.enabled"] = "false"
-    spark = get_spark(master="local[8]", shuffle_partitions=8,
-                      extra_conf=conf)
+    spark = get_spark(shuffle_partitions=8, extra_conf=conf)
     con = duckdb.connect()
     register_views(con, sf_dir)
     records: list[dict] = []

@@ -48,9 +48,8 @@ def main() -> None:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_spark(
-        master="local[8]", shuffle_partitions=8,
-        extra_conf={"spark.driver.memory": "8g",
-                    "spark.ui.showConsoleProgress": "false"},
+        shuffle_partitions=8,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     qs = E.queries()
     print("| query | rows | scans | pushed-filter scans | exchanges "
