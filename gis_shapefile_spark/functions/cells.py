@@ -19,7 +19,9 @@ Three synchronized implementations, all derived from one bit-algorithm:
 
 Scale note: the point side (10^12 rows) only ever evaluates ``cell_col`` —
 pure integer expressions inside whole-stage codegen, no Python, no shuffle.
-All covering/neighbor enumeration happens on the polygon/dimension side.
+All covering enumeration happens on the polygon/dimension side; the one
+point-side fan-out, the big-big pair joins' 3x3 ``neighborhood_col``
+explode, is integer codegen too.
 
 Why quadkeys rather than literal H3/S2: (a) the reference's geometry is
 strictly planar — Euclidean distance on raw degrees, axis-aligned bboxes
@@ -166,6 +168,36 @@ def parent_col(cell, res: int, parent_res: int) -> Column:
     return F.expr(parent_sql(cell_s, res, parent_res, "spark"))
 
 
+_X_BITS = _M1 & MORTON_MASK  # the lng-index bits of a morton
+_Y_BITS = (_M1 << 1) & MORTON_MASK  # the lat-index bits
+
+
+def neighborhood_col(cell: str, res: int) -> Column:
+    """PySpark Column: ``array<bigint>`` of the 9 cells of the 3x3 block
+    around ``cell`` (a column known to be at ``res``) — the cell itself
+    and its 8 neighbors, in no particular order. Explode it to join a
+    cell against its neighborhood; ``cells.neighbors`` is the numpy twin.
+
+    Each axis steps by dilated-integer arithmetic on the morton itself
+    (``((m & X) - 1) & X`` and ``((m | Y) + 1) & X``, likewise for y), so
+    there is no demorton and no re-spread: a few integer ops per key
+    inside codegen. ``cell`` must be a column name, not a generated
+    expression — it appears in every key. Off the grid edge the step
+    borrows or carries into bits at or above ``2 * res``, which no real
+    cell at ``res`` carries, so those keys never match (no wraparound);
+    that needs one spare bit per axis, hence ``res <= 25``.
+    """
+    if not 0 <= res <= 25:
+        raise ValueError(f"res must be in [0, 25], got {res}")
+    c = f"({cell})"
+    xs = (f"((({c} & {_X_BITS}) - 1) & {_X_BITS})", f"({c} & {_X_BITS})",
+          f"((({c} | {_Y_BITS}) + 1) & {_X_BITS})")
+    ys = (f"((({c} & {_Y_BITS}) - 2) & {_Y_BITS})", f"({c} & {_Y_BITS})",
+          f"((({c} | {_X_BITS}) + 2) & {_Y_BITS})")
+    keys = ", ".join(f"({res << RES_SHIFT} | {x} | {y})" for x in xs for y in ys)
+    return F.expr(f"array({keys})")
+
+
 # ---------------------------------------------------------------------------
 # numpy twin (driver-side dimension prep + oracle)
 # ---------------------------------------------------------------------------
@@ -240,7 +272,8 @@ def cover_bbox(minx: float, miny: float, maxx: float, maxy: float, res: int) -> 
 
 
 def neighbors(cell: int, ring: int = 1) -> np.ndarray:
-    """Cells in the square ring at Chebyshev distance ``ring`` (kNN expansion)."""
+    """Cells in the square ring at Chebyshev distance ``ring``; ring 1
+    plus the cell itself is the numpy twin of ``neighborhood_col``."""
     res, xi, yi = cell_xy(np.asarray([cell]))
     res, xi, yi = int(res[0]), int(xi[0]), int(yi[0])
     n = 1 << res

@@ -2,13 +2,13 @@
 
 Reimplements, batch-vectorized, the reference's geometry semantics:
 
-* bbox fold over all parts/rings   — ``src/shapefile/geometry.cpp:29-76``
 * ray-cast even-odd point-in-ring  — ``src/shapefile/geometry.cpp:87-103``
 * polygon contains = inside ring 0 (shell) AND inside no later ring (hole);
   ring role is positional, winding ignored — ``geometry.cpp:106-118``
-* closed-interval bbox contains    — ``geometry.cpp:9-12``
-* bbox intersects (touching edges count) — ``geometry.cpp:14-17``
-* Euclidean-on-degrees distance    — ``src/geocoding/geocoder.cpp:463-468``
+
+The bbox predicates (``geometry.cpp:9-17``) and the Euclidean-on-degrees
+distance (``geocoder.cpp:463-468``) are column expressions inside the
+joins that use them (``spatial_join.bbox_join``, ``within_distance_join``).
 
 Geometry wire format used everywhere in the engine (never a Python object
 per row): flattened vertex arrays + ring-size offsets —
@@ -26,36 +26,6 @@ higher-order-function expression.
 from __future__ import annotations
 
 import numpy as np
-
-
-# ---------------------------------------------------------------------------
-# bbox predicates / folds (column-expression analogues live in operators/)
-# ---------------------------------------------------------------------------
-
-def bbox_of_rings(xs: list[np.ndarray], ys: list[np.ndarray]) -> tuple[float, float, float, float]:
-    """Min/max fold over every vertex of every ring (geometry.cpp:56-76)."""
-    ax = np.concatenate([np.asarray(a, np.float64) for a in xs]) if xs else np.empty(0)
-    ay = np.concatenate([np.asarray(a, np.float64) for a in ys]) if ys else np.empty(0)
-    if ax.size == 0:
-        return (0.0, 0.0, 0.0, 0.0)
-    return (float(ax.min()), float(ay.min()), float(ax.max()), float(ay.max()))
-
-
-def bbox_contains(minx, miny, maxx, maxy, px, py) -> np.ndarray:
-    """Closed-interval containment (geometry.cpp:9-12), vectorized."""
-    return (px >= minx) & (px <= maxx) & (py >= miny) & (py <= maxy)
-
-
-def bbox_intersects(aminx, aminy, amaxx, amaxy, bminx, bminy, bmaxx, bmaxy) -> np.ndarray:
-    """Negated-disjoint test (geometry.cpp:14-17): touching edges intersect."""
-    return ~((bminx > amaxx) | (bmaxx < aminx) | (bminy > amaxy) | (bmaxy < aminy))
-
-
-def euclid_degrees(x1, y1, x2, y2) -> np.ndarray:
-    """Reference distance: Euclidean on raw degrees (geocoder.cpp:463-468)."""
-    dx = np.asarray(x1, np.float64) - np.asarray(x2, np.float64)
-    dy = np.asarray(y1, np.float64) - np.asarray(y2, np.float64)
-    return np.sqrt(dx * dx + dy * dy)
 
 
 # ---------------------------------------------------------------------------

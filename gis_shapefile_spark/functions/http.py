@@ -34,9 +34,6 @@ reference server's own contract (its client is its static map page).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 # decode order matters: '+'→' ' FIRST, so a '+' produced by %2B is not
 # re-decoded (the reference's single pass has the same property), and
 # %25→'%' LAST, so a decoded '%' is never re-interpreted (matches the
@@ -131,11 +128,3 @@ def query_string_sql(request: str, dialect: str = "spark") -> str:
         f"(CASE WHEN strpos({request}, '?') > 0 THEN "
         f"substr({request}, strpos({request}, '?') + 1) ELSE '' END)"
     )
-
-
-def url_decode_col(expr: str) -> Column:
-    return F.expr(url_decode_sql(expr, "spark"))
-
-
-def extract_param_col(query: str, param: str) -> Column:
-    return F.expr(extract_param_sql(query, param, "spark"))

@@ -231,14 +231,6 @@ def _to_blocks(plane: np.ndarray) -> np.ndarray:
     )
 
 
-def _from_blocks(blocks: np.ndarray, h: int, w: int) -> np.ndarray:
-    return (
-        blocks.reshape(h // 8, w // 8, 8, 8)
-        .transpose(0, 2, 1, 3)
-        .reshape(h, w)
-    )
-
-
 # ---------------------------------------------------------------- encoder
 
 def _quality_tables(quality: int) -> tuple[np.ndarray, np.ndarray]:

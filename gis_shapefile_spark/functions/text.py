@@ -164,20 +164,6 @@ def address_is_valid(parsed: Column) -> Column:
     return (parsed["state"] != "") | (parsed["full_address"] != "")
 
 
-def address_to_string(parsed: Column) -> Column:
-    """F7 (geocoder.cpp:185-200): space-join of non-empty components."""
-    return F.array_join(
-        F.filter(
-            F.array(
-                parsed["house_number"], parsed["street_name"], parsed["street_type"],
-                parsed["city"], parsed["state"], parsed["zip_code"],
-            ),
-            lambda s: s != F.lit(""),
-        ),
-        " ",
-    )
-
-
 # ---------------------------------------------------------------------------
 # F9: positional similarity (geocoder.cpp:480-494) — dialect-shared SQL
 # ---------------------------------------------------------------------------
@@ -265,14 +251,3 @@ def levenshtein(a, b) -> Column:
     """Defined-but-never-called in the reference (geocoder.cpp:496-524);
     exposed via the Spark builtin for completeness."""
     return F.levenshtein(_c(a), _c(b))
-
-
-def expand_abbreviations(col) -> Column:
-    """F4 expandAbbreviations (geocoder.cpp:151-161) — word-boundary
-    replace of street-type abbreviations with their full forms. Dead code
-    in the reference (not called on the main geocode path); exposed for
-    API parity with the same semantics."""
-    out = _c(col)
-    for abbr, full in STREET_TYPE_ABBREV.items():
-        out = F.regexp_replace(out, r"\b" + abbr + r"\b", full)
-    return out

@@ -359,10 +359,6 @@ def pii_scrub_sql(text: str, dialect: str = "spark") -> str:
 # PySpark Column wrappers (JVM-side, codegen)
 # ---------------------------------------------------------------------------
 
-def tokens_col(text: str) -> Column:
-    return F.expr(tokens_sql(text, "spark"))
-
-
 def token_count_col(text: str) -> Column:
     return F.expr(token_count_sql(text, "spark"))
 
@@ -399,13 +395,6 @@ def simhash_col(text: str, nbits: int = 32) -> Column:
 def minhash_col(text: str, perm: int, shingle_n: int = 3) -> Column:
     sh = shingles_sql(tokens_sql(text, "spark"), shingle_n, "spark")
     return F.expr(minhash_sql(token_hashes_sql(sh, "spark"), perm, "spark"))
-
-
-def band_hash_col(text: str, band: int, rows_per_band: int, shingle_n: int = 3) -> Column:
-    sh = shingles_sql(tokens_sql(text, "spark"), shingle_n, "spark")
-    return F.expr(
-        band_hash_sql(token_hashes_sql(sh, "spark"), band, rows_per_band, "spark")
-    )
 
 
 def bow_vec_sql(text: str, dim: int = 64, dialect: str = "spark") -> str:

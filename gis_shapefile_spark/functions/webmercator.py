@@ -32,15 +32,12 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from .cells import (
     MORTON_MASK,
     RES_SHIFT,
     _shl,
     _shr,
-    _spread_np,
     _spread_sql,
     cell_xy,
     pack_xy,
@@ -108,20 +105,6 @@ def quadkey_sql(cell: str, z: int, dialect: str = "spark") -> str:
         for i in range(z)
     ]
     return f"concat({', '.join(digits)})"
-
-
-def tile_x_col(lng, z: int) -> Column:
-    return F.expr(tile_x_sql(lng if isinstance(lng, str) else lng._jc.toString(), z, "spark"))
-
-
-def tile_y_col(lat, z: int) -> Column:
-    return F.expr(tile_y_sql(lat if isinstance(lat, str) else lat._jc.toString(), z, "spark"))
-
-
-def wm_cell_col(lng, lat, z: int) -> Column:
-    lng_s = lng if isinstance(lng, str) else lng._jc.toString()
-    lat_s = lat if isinstance(lat, str) else lat._jc.toString()
-    return F.expr(wm_cell_sql(lng_s, lat_s, z, "spark"))
 
 
 # ---------------------------------------------------------------------------

@@ -20,16 +20,16 @@ salting/AQE-skew decisions the join layer makes.
 Plan shape:
   points --(groupBy cell: 1 shuffle, partial agg)--> hist
   hist --(filter n >= min_count)--> core            [bounded, checkpointed]
-  core --(in-plan 8-neighbor explode + pack)--> candidate edges
+  core --(in-plan 8-neighbor explode)--> candidate edges
   candidate edges --(self equi-join on cell id)--> edges
   (core, edges) --> dedup.connected_components      [bounded iterations]
 
-Adjacency is 8-neighborhood on the integer lattice (dx, dy ∈ {-1,0,1}),
-computed by demorton → offset → re-pack (``cells.cell_axis_sql`` /
-``pack_xy_sql``), all integer SQL inside codegen. Out-of-range neighbor
-indices at the grid edge (xi = -1 or 2^res) spread to bit patterns no
-real cell at res <= 25 can carry, so they simply never match — there is
-deliberately no wraparound (the planar-parity contract, cells.py).
+Adjacency is 8-neighborhood on the integer lattice (dx, dy ∈ {-1,0,1}):
+the 3x3 block of ``cells.neighborhood_col`` minus the cell itself, all
+integer SQL inside codegen. Out-of-range neighbors at the grid edge
+(xi = -1 or 2^res) land on bit patterns no real cell at res <= 25 can
+carry, so they simply never match — there is deliberately no wraparound
+(the planar-parity contract, cells.py).
 """
 
 from __future__ import annotations
@@ -38,16 +38,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import cells as C
-
-
-def _neighbor_offsets_expr() -> str:
-    offs = ", ".join(
-        f"struct({dx} as dx, {dy} as dy)"
-        for dx in (-1, 0, 1)
-        for dy in (-1, 0, 1)
-        if not (dx == 0 and dy == 0)
-    )
-    return f"explode(array({offs}))"
 
 
 def hotspot_clusters(
@@ -86,19 +76,9 @@ def hotspot_clusters(
     core = hist.where(F.col("n_points") >= int(min_count)).localCheckpoint(
         eager=True
     )
-    ax = core.select(
-        "cell",
-        F.expr(C.cell_axis_sql("cell", "x", "spark")).alias("_x"),
-        F.expr(C.cell_axis_sql("cell", "y", "spark")).alias("_y"),
-    )
-    nb = ax.select(
-        "cell", "_x", "_y", F.expr(_neighbor_offsets_expr()).alias("_o")
-    ).select(
-        "cell",
-        F.expr(
-            C.pack_xy_sql("(_x + _o.dx)", "(_y + _o.dy)", res, "spark")
-        ).alias("_nb"),
-    )
+    nb = core.select(
+        "cell", F.explode(C.neighborhood_col("cell", res)).alias("_nb")
+    ).where(F.col("_nb") != F.col("cell"))
     pairs = (
         nb.join(
             core.select(F.col("cell").alias("_nb")), "_nb"
@@ -219,7 +199,7 @@ def getis_ord_gi(
     recomputes the same frame.
 
     Scale shape: the point table pays its ONE partial-agg histogram
-    shuffle; the 3x3 neighbor join (demorton -> offset -> re-pack, same
+    shuffle; the 3x3 neighbor join (``cells.neighborhood_col``, same
     integer codegen as hotspot_clusters), the single-row frame stats,
     and the z projection all run on the BOUNDED occupied-cell table.
     The frame-stats row broadcasts; nothing driver-side.
@@ -235,25 +215,8 @@ def getis_ord_gi(
         .agg(F.count(F.lit(1)).alias("n_points"))
         .localCheckpoint(eager=True)  # referenced 3x below (CLAUDE.md)
     )
-    ax = hist.select(
-        "cell", "n_points",
-        F.expr(C.cell_axis_sql("cell", "x", "spark")).alias("_x"),
-        F.expr(C.cell_axis_sql("cell", "y", "spark")).alias("_y"),
-    )
-    offs = ", ".join(
-        f"struct({dx} as dx, {dy} as dy)"
-        for dx in (-1, 0, 1)
-        for dy in (-1, 0, 1)
-    )
-    nb = ax.select(
-        "cell",
-        F.expr(f"explode(array({offs}))").alias("_o"),
-        "_x", "_y",
-    ).select(
-        "cell",
-        F.expr(
-            C.pack_xy_sql("(_x + _o.dx)", "(_y + _o.dy)", res, "spark")
-        ).alias("_nb"),
+    nb = hist.select(
+        "cell", F.explode(C.neighborhood_col("cell", res)).alias("_nb")
     )
     nbagg = (
         nb.join(

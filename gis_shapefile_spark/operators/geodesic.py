@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions import cells as C
 from ..functions import geodesy as GD
-from .spatial_join import _indexed
+from .spatial_join import _cell_pairs, _check_k, _indexed
 
 
 _DIM_SCHEMA = "record_number long, cx double, cy double"
@@ -177,9 +177,12 @@ def geodesic_pairs_within_km(
     geodesic member of the big-big self-join pair
     (``spatial_join.within_distance_self_join`` is the planar twin).
 
-    The 3x3-neighbor candidate argument needs one cell to dominate the
-    km radius on BOTH axes, and the longitude axis shrinks by cos(lat) —
-    so the resolution comes from the corpus' latitude band edge:
+    Plan: ``spatial_join._cell_pairs`` (the 3x3 cell-neighborhood
+    equi-join) on (points, points), then (id_1 < id_2) and the exact
+    haversine refine. The 3x3 candidate argument needs one cell to
+    dominate the km radius on BOTH axes, and the longitude axis shrinks
+    by cos(lat) — so the resolution comes from the corpus' latitude
+    band edge:
     ``max_abs_lat=None`` (default) MEASURES it with one narrow
     max(abs(lat)) aggregate (the auto_salt_buckets pattern: derive the
     knob from data); pass the band explicitly to skip that pass at
@@ -193,10 +196,6 @@ def geodesic_pairs_within_km(
 
     Output: (id_1, id_2, gdist_m) with id_1 < id_2, meter-integerized.
     """
-    import math
-
-    from .spatial_join import within_distance_self_join  # noqa: F401  (doc xref)
-
     if km <= 0:
         raise ValueError(f"km must be > 0, got {km}")
     thresh_m = int(round(km * 1000))
@@ -205,68 +204,20 @@ def geodesic_pairs_within_km(
         max_abs_lat = float(
             points.agg(F.max(F.abs(F.col(lat_col)))).first()[0] or 0.0
         )
-    band = max_abs_lat + km_pad / GD.KM_PER_DEG_LAT
+    lat_r = km_pad / GD.KM_PER_DEG_LAT
+    band = max_abs_lat + lat_r
     if band >= 90.0:
         raise ValueError(
             "geodesic_pairs_within_km: the km disc of a band-edge point "
             "reaches a pole; the planar cell canvas cannot cover "
             "trans-polar discs"
         )
-    lat_r = km_pad / GD.KM_PER_DEG_LAT
-    lng_r = GD.cover_radius_deg(km_pad, band)
-    if res is None:
-        res = min(
-            25,
-            int(math.floor(math.log2(180.0 / lat_r))),
-            int(math.floor(math.log2(360.0 / lng_r))),
-        )
-    if not 0 <= res <= 25:
-        raise ValueError(f"res must be in [0, 25], got {res}")
-    if 180.0 / (1 << res) < lat_r or 360.0 / (1 << res) < lng_r:
-        raise ValueError(
-            f"cell at res {res} is smaller than the band-edge cover "
-            f"radius; the 3x3 neighborhood would miss pairs"
-        )
-    pts = points.select(
-        F.col(id_col), F.col(lng_col), F.col(lat_col)
-    ).withColumn("cell", C.cell_col(lng_col, lat_col, res))
-    ax = pts.select(
-        F.col(id_col).alias("id_1"),
-        F.col(lng_col).alias("_lng1"),
-        F.col(lat_col).alias("_lat1"),
-        F.expr(C.cell_axis_sql("cell", "x", "spark")).alias("_x"),
-        F.expr(C.cell_axis_sql("cell", "y", "spark")).alias("_y"),
-    )
-    offs = ", ".join(
-        f"struct({dx} as dx, {dy} as dy)"
-        for dx in (-1, 0, 1)
-        for dy in (-1, 0, 1)
-    )
-    left = ax.select(
-        "id_1", "_lng1", "_lat1",
-        F.expr(f"explode(array({offs}))").alias("_o"),
-        "_x", "_y",
-    ).select(
-        "id_1", "_lng1", "_lat1",
-        F.expr(
-            C.pack_xy_sql("(_x + _o.dx)", "(_y + _o.dy)", res, "spark")
-        ).alias("_nb"),
-    )
-    right = pts.select(
-        F.col(id_col).alias("id_2"),
-        F.col(lng_col).alias("_lng2"),
-        F.col(lat_col).alias("_lat2"),
-        F.col("cell").alias("_nb"),
-    )
+    side = (points, id_col, lng_col, lat_col)
     gdist = F.expr(
         GD.haversine_m_u_sql("_lng1", "_lat1", "_lng2", "_lat2", "spark")
     )
     return (
-        # merge hint: same mid-scale AQE broadcast cliff as the planar
-        # twin (spatial_join.within_distance_self_join, measured 3x) —
-        # the 9x-fanned left side compresses small enough for AQE's
-        # runtime broadcast conversion but probes slower than SMJ.
-        left.hint("merge").join(right, "_nb")
+        _cell_pairs(side, side, lat_r, GD.cover_radius_deg(km_pad, band), res)
         .where(F.col("id_1") < F.col("id_2"))
         .withColumn("gdist_m", gdist)
         .where(F.col("gdist_m") <= F.lit(thresh_m))
@@ -292,8 +243,7 @@ def geodesic_knn_self(
 
     Output: (id_col, neighbor_id, nn_rank, gdist_m).
     """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
+    _check_k(k)
     pairs = geodesic_pairs_within_km(
         points, km, max_abs_lat, res, id_col, lng_col, lat_col
     )

@@ -305,7 +305,6 @@ def idw_surface(
     """
     xstep, ystep = _idw_steps(res)
     r2_u = ystep * ystep  # radius = one lat cell (the smaller step)
-    n = 1 << res
     # target grid enumerated IN-PLAN over the canvas of the sample bbox
     # (bounded dimension side); centers as exact integer µdeg
     bb = samples.agg(
@@ -325,22 +324,11 @@ def idw_surface(
             " AS cx_u",
             f"CAST(-90000000 + _yi * {ystep} + {ystep // 2} AS BIGINT)"
             " AS cy_u",
-            "_xi", "_yi",
         )
-    )
-    offs = ", ".join(
-        f"struct({dx} as dx, {dy} as dy)"
-        for dx in (-1, 0, 1)
-        for dy in (-1, 0, 1)
     )
     tcells = targets.select(
         "cell", "cx_u", "cy_u",
-        F.expr(f"explode(array({offs}))").alias("_o"),
-        "_xi", "_yi",
-    ).selectExpr(
-        "cell", "cx_u", "cy_u",
-        f"{C.pack_xy_sql('(_xi + _o.dx)', '(_yi + _o.dy)', res, 'spark')}"
-        " AS scell",
+        F.explode(C.neighborhood_col("cell", res)).alias("scell"),
     )
     smp = samples.selectExpr(
         f"{C.cell_sql(lng_col, lat_col, res, 'spark')} AS scell",

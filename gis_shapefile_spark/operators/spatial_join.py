@@ -29,6 +29,8 @@ Scale design (10^12-point table, dimension-scale polygon side):
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -521,6 +523,7 @@ def knn_join_bruteforce(
     window top-k. Matches spatial_index.cpp:91-121 bit-for-bit (centroid
     Euclidean distance, ties by feature order). Only viable when
     |features| is dimension-scale — which it is (<= thousands)."""
+    _check_k(k)
     feats = _indexed(features_pdf)
     dim_pdf = pd.DataFrame(
         {
@@ -534,16 +537,31 @@ def knn_join_bruteforce(
     dim = spark.createDataFrame(
         dim_pdf, "record_number bigint, cx double, cy double" + _attr_ddl(feats, attrs)
     )
-    scored = points.crossJoin(F.broadcast(dim)).withColumn(
-        "dist",
-        F.sqrt(
-            F.pow(F.col(lng_col) - F.col("cx"), 2)
-            + F.pow(F.col(lat_col) - F.col("cy"), 2)
-        ),
+    return _nearest_k(points.crossJoin(F.broadcast(dim)), k, lng_col, lat_col, point_id_col)
+
+
+def _check_k(k) -> None:
+    """The kNN operators take an integer ``k >= 1``: a float or bool k
+    is refused rather than truncated, a non-positive one rather than
+    returning nothing."""
+    if isinstance(k, bool) or not isinstance(k, (int, np.integer)) or k < 1:
+        raise ValueError(f"k must be an integer >= 1, got {k!r}")
+
+
+def _nearest_k(pairs: DataFrame, k: int, lng_col: str, lat_col: str,
+               point_id_col: str) -> DataFrame:
+    """Rank each point's (point, feature center ``cx``/``cy``) candidate
+    rows by Euclidean-degrees distance, ties by ``record_number``
+    (spatial_index.cpp:110-120), and keep the ``k`` nearest: adds
+    ``dist`` and ``knn_rank``."""
+    dist = F.sqrt(
+        (F.col(lng_col) - F.col("cx")) * (F.col(lng_col) - F.col("cx"))
+        + (F.col(lat_col) - F.col("cy")) * (F.col(lat_col) - F.col("cy"))
     )
     w = Window.partitionBy(point_id_col).orderBy("dist", "record_number")
     return (
-        scored.withColumn("knn_rank", F.row_number().over(w))
+        pairs.withColumn("dist", dist)
+        .withColumn("knn_rank", F.row_number().over(w))
         .where(F.col("knn_rank") <= k)
     )
 
@@ -632,6 +650,7 @@ def knn_join(
     matrix is computed in fixed-size chunks so peak driver memory is
     bounded regardless of cell count.
     """
+    _check_k(k)
     feats = _indexed(features_pdf)
     fx = ((feats["minx"] + feats["maxx"]) / 2.0).to_numpy()
     fy = ((feats["miny"] + feats["maxy"]) / 2.0).to_numpy()
@@ -678,21 +697,9 @@ def knn_join(
         ),
         _CENTER_DDL,
     )
-    scored = (
-        pts.join(F.broadcast(dim), pts["__cell"] == dim["cell"], "inner")
-        .drop("cell", "__cell")
-        .withColumn(
-            "dist",
-            F.sqrt(
-                (F.col(lng_col) - F.col("cx")) * (F.col(lng_col) - F.col("cx"))
-                + (F.col(lat_col) - F.col("cy")) * (F.col(lat_col) - F.col("cy"))
-            ),
-        )
-    )
-    w = Window.partitionBy(point_id_col).orderBy("dist", "record_number")
-    return (
-        scored.withColumn("knn_rank", F.row_number().over(w))
-        .where(F.col("knn_rank") <= k)
+    return _nearest_k(
+        pts.join(F.broadcast(dim), pts["__cell"] == dim["cell"], "inner").drop("cell", "__cell"),
+        k, lng_col, lat_col, point_id_col,
     )
 
 
@@ -751,93 +758,6 @@ def bbox_join(
     return out
 
 
-def knn_join_ring_expansion(
-    spark: SparkSession,
-    points: DataFrame,
-    features_pdf: pd.DataFrame,
-    k: int,
-    res: int = 6,
-    lng_col: str = "lng",
-    lat_col: str = "lat",
-    point_id_col: str = "image_id",
-    max_occupied_cells: int = MAX_OCCUPIED_CELLS,
-) -> DataFrame:
-    """kNN via literal cell-ring expansion (the north-star formulation).
-
-    Features hash to their center's cell. For every point-occupied cell,
-    rings widen (``cells.neighbors``) until >= k feature centers are
-    inside, then widen further by the safety factor ceil((r+1)*sqrt(5))+1:
-    quadkey cells are 2:1 rectangles (lng spans 360 deg, lat 180 deg over
-    the same 2^res), so the cell diagonal is sqrt(5) * the SHORT side
-    while ring r'' only lower-bounds distance at (r''-1) * short side —
-    sqrt(2) (the square-cell factor) would let a true neighbor in a
-    farther ring beat an unexpanded candidate. The per-cell
-    candidate lists broadcast; points pay one equi-join + exact-distance
-    window — identical output to ``knn_join`` / brute force (tested).
-
-    Same scale shape as knn_join: all expansion happens on the
-    (dimension x occupied-cells) side, never per point.
-    """
-    import math
-
-    feats = _indexed(features_pdf)
-    fx = ((feats["minx"] + feats["maxx"]) / 2.0).to_numpy()
-    fy = ((feats["miny"] + feats["maxy"]) / 2.0).to_numpy()
-    frec = feats["record_number"].to_numpy(np.int64)
-
-    # same driver guard as knn_join: bound the per-cell expansion loop
-    res, occupied = _occupied_cells_bounded(
-        points, lng_col, lat_col, res, max_occupied_cells
-    )
-    fcell = C.cell_of_numpy(fx, fy, res)
-    by_cell: dict[int, list[int]] = {}
-    for i, c in enumerate(fcell):
-        by_cell.setdefault(int(c), []).append(i)
-
-    pts = points.withColumn("__cell", C.cell_col(lng_col, lat_col, res))
-    rows = []
-    for cell in occupied if len(fx) else ():  # no features: no ring to widen
-        r = 0
-        found: set[int] = set()
-        while True:
-            ring_cells = C.neighbors(int(cell), r) if r > 0 else np.array([cell])
-            for rc in ring_cells:
-                found.update(by_cell.get(int(rc), ()))
-            if len(found) >= k or r > (1 << res):
-                break
-            r += 1
-        # safety rings: the k-th candidate may be beaten by a feature in a
-        # farther ring that the greedy expansion has not opened yet
-        # (sqrt(5) = diagonal/short-side ratio of the 2:1 cells)
-        r_max = math.ceil((r + 1) * math.sqrt(5.0)) + 1
-        for rr in range(r + 1, r_max + 1):
-            for rc in C.neighbors(int(cell), rr):
-                found.update(by_cell.get(int(rc), ()))
-        for i in found:
-            rows.append((int(cell), int(frec[i]), float(fx[i]), float(fy[i])))
-
-    dim = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["cell", "record_number", "cx", "cy"]),
-        _CENTER_DDL,
-    )
-    scored = (
-        pts.join(F.broadcast(dim), pts["__cell"] == dim["cell"], "inner")
-        .drop("cell", "__cell")
-        .withColumn(
-            "dist",
-            F.sqrt(
-                (F.col(lng_col) - F.col("cx")) * (F.col(lng_col) - F.col("cx"))
-                + (F.col(lat_col) - F.col("cy")) * (F.col(lat_col) - F.col("cy"))
-            ),
-        )
-    )
-    w = Window.partitionBy(point_id_col).orderBy("dist", "record_number")
-    return (
-        scored.withColumn("knn_rank", F.row_number().over(w))
-        .where(F.col("knn_rank") <= k)
-    )
-
-
 def point_in_polygon_anti_join(
     spark: SparkSession,
     points: DataFrame,
@@ -869,6 +789,70 @@ def point_in_polygon_anti_join(
     return points.join(matched, point_id_col, "left_anti")
 
 
+# ---------------------------------------------------------------------------
+# LARGE x LARGE pair joins (self, cross and, in geodesic.py, great-circle)
+# ---------------------------------------------------------------------------
+
+_PAIR_DIST = "sqrt((_lng1 - _lng2) * (_lng1 - _lng2) + (_lat1 - _lat2) * (_lat1 - _lat2))"
+
+
+def _cell_pairs(
+    left: tuple[DataFrame, str, str, str],
+    right: tuple[DataFrame, str, str, str],
+    lat_r: float,
+    lng_r: float,
+    res: int | None,
+    key_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """Candidate pairs of a big-big distance join: every (left, right)
+    row pair, sharing ``key_cols``, whose cells at ``res`` are the same or
+    8-adjacent. ``left``/``right`` are (frame, id, lng, lat); the result
+    has (_nb, *key_cols, id_1, _lng1, _lat1, id_2, _lng2, _lat2), and the
+    caller adds its own pair filter and exact refine.
+
+    ``res`` must make one cell at least ``lat_r`` tall and ``lng_r``
+    wide (``None``: the finest that does), so a pair within the search
+    radius is always in the same or adjacent cells. The left side
+    explodes to its 3x3 neighborhood IN-PLAN (``cells.neighborhood_col``:
+    a 9x fan-out of narrow key rows, never payloads), the right side keys
+    by its own cell, and one shuffled cell equi-join does the rest. A
+    left row's nine cells are distinct, so each (left, right) pair
+    matches exactly once; off-grid neighbors match nothing (no
+    wraparound).
+
+    Join strategy (measured, BENCH/BASELINE.md): at 2M points AQE's
+    compressed-size heuristic still picks a broadcast join and loses 3x
+    to the forced SortMergeJoin (8.9 vs 2.8 s warm, identical output) —
+    per-task hash probing of an ~80 MB side is worse than partitioned
+    merge. The join therefore carries its own ``merge`` hint, which AQE's
+    re-planner honors, so the runtime broadcast conversion is off for
+    exactly this join and nothing else. At corpus scale SMJ is what the
+    planner would pick anyway; at test scale the difference is noise.
+    """
+    if res is None:
+        res = min(25, math.floor(math.log2(180.0 / lat_r)),
+                  math.floor(math.log2(360.0 / lng_r)))
+    if not 0 <= res <= 25:
+        raise ValueError(f"res must be in [0, 25], got {res}")
+    if 180.0 / (1 << res) < lat_r or 360.0 / (1 << res) < lng_r:
+        raise ValueError(
+            f"cell at res {res} is smaller than the search radius "
+            f"({lat_r} deg lat, {lng_r} deg lng); the 3x3 neighborhood "
+            "would miss pairs"
+        )
+    lside, rside = (
+        df.select(F.col(i).alias(f"id_{n}"), F.col(x).alias(f"_lng{n}"),
+                  F.col(y).alias(f"_lat{n}"), *key_cols)
+        .withColumn("_cell", C.cell_col(f"_lng{n}", f"_lat{n}", res))
+        for n, (df, i, x, y) in ((1, left), (2, right))
+    )
+    lefts = lside.select(
+        "*", F.explode(C.neighborhood_col("_cell", res)).alias("_nb")
+    ).drop("_cell")
+    rights = rside.withColumnRenamed("_cell", "_nb")
+    return lefts.hint("merge").join(rights, ["_nb", *key_cols])
+
+
 def within_distance_self_join(
     points: DataFrame,
     distance: float,
@@ -884,36 +868,18 @@ def within_distance_self_join(
     candidate pairing: "image pairs shot within d of each other" feeding
     location-based dedup/attribution, where both sides are the corpus.
 
-    Plan (the textbook big-big spatial join): pick ``res`` so one cell is
-    at least ``distance`` on both axes (then a pair within ``distance``
-    is always in the SAME or 8-ADJACENT cells); the left side explodes to
-    its 3x3 cell neighborhood IN-PLAN (demorton -> offset -> re-pack
-    integer codegen, the ``clustering.py`` shape — 9x fan-out of narrow
-    key rows, never payloads), the right side keys by its own cell, and
-    one shuffled cell equi-join + exact distance refine does the rest.
-    Each unordered pair materializes EXACTLY once — (a.id < b.id) keeps
-    one of the two symmetric (expanded, plain) matches, and a's nine
-    expanded cells are distinct so (a, b) cannot match through two of
-    them — no post-join dedup pass. Out-of-range edge neighbors spread
-    to bit patterns no real cell at res <= 25 carries (no wraparound).
+    Plan: ``_cell_pairs`` on (points, points) — the 3x3 cell-neighborhood
+    equi-join with its ``merge`` hint — then (id_1 < id_2) and the exact
+    distance refine. Each unordered pair materializes EXACTLY once:
+    (id_1 < id_2) keeps one of the two symmetric matches, and
+    ``_cell_pairs`` emits each ordered pair once — no post-join dedup
+    pass. ``res`` defaults to the finest whose cell is >= ``distance``
+    on both axes.
 
     Skew: a hot cell (urban cluster) concentrates both sides of the
     equi-join; AQE skew-join splitting applies as-is, and the salting
     guidance from ``point_in_polygon_join`` transfers — measured on this
     host, AQE handles the fixture's Zipfian cell without manual salt.
-
-    Join-strategy note (measured, BENCH/BASELINE.md): at 2M points AQE's
-    compressed-size heuristic still picks a broadcast join and loses 3x
-    to the forced SortMergeJoin (8.9 vs 2.8 s warm, identical output) —
-    per-task hash probing of an ~80 MB side is worse than partitioned
-    merge. The operator therefore applies a ``merge`` join hint ITSELF
-    (round-4 verdict item 4 — previously only a docstring advised
-    ``spark.sql.adaptive.autoBroadcastJoinThreshold=-1``, leaving the
-    3x cliff for every consumer: ``knn_self``, ``idw_loocv``,
-    ``ripley_k``, ``cross_k``); join hints are honored by AQE's
-    re-planner, so the runtime broadcast conversion is off for exactly
-    this join and nothing else. At corpus scale SMJ is what the planner
-    would pick anyway; at test scale the difference is noise.
 
     ``key_cols``: optional equi-keys BOTH pair members must share (the
     space-TIME extension: pass a time-bucket column and the join blocks
@@ -926,70 +892,20 @@ def within_distance_self_join(
     floor(dist * 1e6) (IEEE-exact on identical inputs, the
     within_distance canon).
     """
-    import math
-
     if distance <= 0:
         raise ValueError(f"distance must be > 0, got {distance}")
-    reserved = {"cell", "_nb", "_x", "_y", "_o", "_lng1", "_lat1",
-                "_lng2", "_lat2", "id_1", "id_2", "dist_u",
-                id_col, lng_col, lat_col}
+    reserved = {"_nb", "_cell", "_lng1", "_lat1", "_lng2", "_lat2", "_d",
+                "id_1", "id_2", "dist_u", id_col, lng_col, lat_col}
     bad = [k for k in key_cols if k in reserved]
     if bad:
         raise ValueError(
             f"key_cols collide with internal/positional columns: {bad}"
         )
-    if res is None:
-        # largest res whose cell is >= distance on the tighter (lat) axis
-        res = min(25, int(math.floor(math.log2(180.0 / distance))))
-    if not 0 <= res <= 25:
-        raise ValueError(f"res must be in [0, 25], got {res}")
-    if 180.0 / (1 << res) < distance or 360.0 / (1 << res) < distance:
-        raise ValueError(
-            f"cell at res {res} is smaller than distance {distance}; "
-            "the 3x3 neighborhood would miss pairs"
-        )
-    ks = [F.col(k) for k in key_cols]
-    pts = points.select(
-        F.col(id_col), F.col(lng_col), F.col(lat_col), *ks
-    ).withColumn("cell", C.cell_col(lng_col, lat_col, res))
-    ax = pts.select(
-        F.col(id_col).alias("id_1"),
-        F.col(lng_col).alias("_lng1"),
-        F.col(lat_col).alias("_lat1"),
-        F.expr(C.cell_axis_sql("cell", "x", "spark")).alias("_x"),
-        F.expr(C.cell_axis_sql("cell", "y", "spark")).alias("_y"),
-        *ks,
-    )
-    offs = ", ".join(
-        f"struct({dx} as dx, {dy} as dy)"
-        for dx in (-1, 0, 1)
-        for dy in (-1, 0, 1)
-    )
-    left = ax.select(
-        "id_1", "_lng1", "_lat1", *key_cols,
-        F.expr(f"explode(array({offs}))").alias("_o"),
-        "_x", "_y",
-    ).select(
-        "id_1", "_lng1", "_lat1", *key_cols,
-        F.expr(
-            C.pack_xy_sql("(_x + _o.dx)", "(_y + _o.dy)", res, "spark")
-        ).alias("_nb"),
-    )
-    right = pts.select(
-        F.col(id_col).alias("id_2"),
-        F.col(lng_col).alias("_lng2"),
-        F.col(lat_col).alias("_lat2"),
-        F.col("cell").alias("_nb"),
-        *ks,
-    )
-    dist = F.sqrt(
-        (F.col("_lng1") - F.col("_lng2")) * (F.col("_lng1") - F.col("_lng2"))
-        + (F.col("_lat1") - F.col("_lat2")) * (F.col("_lat1") - F.col("_lat2"))
-    )
+    side = (points, id_col, lng_col, lat_col)
     return (
-        left.hint("merge").join(right, ["_nb", *key_cols])
+        _cell_pairs(side, side, distance, distance, res, key_cols)
         .where(F.col("id_1") < F.col("id_2"))
-        .withColumn("_d", dist)
+        .withColumn("_d", F.expr(_PAIR_DIST))
         .where(F.col("_d") <= F.lit(distance))
         .select(
             *key_cols, "id_1", "id_2",
@@ -1026,8 +942,7 @@ def knn_self_join(
 
     Output: (id_col, neighbor_id, nn_rank, dist_u).
     """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
+    _check_k(k)
     pairs = within_distance_self_join(
         points, radius, res, id_col, lng_col, lat_col
     )
@@ -1069,69 +984,25 @@ def within_distance_cross_join(
     colocation between two corpus-scale point sets (images x events,
     crawl A x crawl B) feeding attribution and cross-K statistics.
 
-    Same 3x3 plan: left explodes to its cell neighborhood IN-PLAN
-    (narrow key rows), right keys by its own cell, one shuffled
-    equi-join + exact refine. Exactly-once needs no pair filter at all
-    here: a right row's single cell appears once among a left row's
-    nine distinct neighbor cells, so each cross pair matches exactly
-    once by construction.
+    Plan: ``_cell_pairs`` on (left, right) plus the exact distance
+    refine. Exactly-once needs no pair filter at all here: a right
+    row's single cell appears once among a left row's nine distinct
+    neighbor cells, so each cross pair matches exactly once by
+    construction.
 
     Output: (left_id, right_id, dist_u), dist_u = floor(dist * 1e6).
     """
-    import math
-
     if distance <= 0:
         raise ValueError(f"distance must be > 0, got {distance}")
-    if res is None:
-        res = min(25, int(math.floor(math.log2(180.0 / distance))))
-    if not 0 <= res <= 25:
-        raise ValueError(f"res must be in [0, 25], got {res}")
-    if 180.0 / (1 << res) < distance or 360.0 / (1 << res) < distance:
-        raise ValueError(
-            f"cell at res {res} is smaller than distance {distance}; "
-            "the 3x3 neighborhood would miss pairs"
-        )
-    lx = left.select(
-        F.col(left_id).alias("__lid"),
-        F.col(left_lng).alias("_lng1"),
-        F.col(left_lat).alias("_lat1"),
-    ).withColumn("__cell", C.cell_col("_lng1", "_lat1", res))
-    ax = lx.select(
-        "__lid", "_lng1", "_lat1",
-        F.expr(C.cell_axis_sql("__cell", "x", "spark")).alias("_x"),
-        F.expr(C.cell_axis_sql("__cell", "y", "spark")).alias("_y"),
-    )
-    offs = ", ".join(
-        f"struct({dx} as dx, {dy} as dy)"
-        for dx in (-1, 0, 1)
-        for dy in (-1, 0, 1)
-    )
-    lefts = ax.select(
-        "__lid", "_lng1", "_lat1",
-        F.expr(f"explode(array({offs}))").alias("_o"),
-        "_x", "_y",
-    ).select(
-        "__lid", "_lng1", "_lat1",
-        F.expr(
-            C.pack_xy_sql("(_x + _o.dx)", "(_y + _o.dy)", res, "spark")
-        ).alias("_nb"),
-    )
-    rights = right.select(
-        F.col(right_id).alias("__rid"),
-        F.col(right_lng).alias("_lng2"),
-        F.col(right_lat).alias("_lat2"),
-    ).withColumn("_nb", C.cell_col("_lng2", "_lat2", res))
-    dist = F.sqrt(
-        (F.col("_lng1") - F.col("_lng2")) * (F.col("_lng1") - F.col("_lng2"))
-        + (F.col("_lat1") - F.col("_lat2")) * (F.col("_lat1") - F.col("_lat2"))
-    )
     return (
-        lefts.join(rights, "_nb")
-        .withColumn("_d", dist)
+        _cell_pairs((left, left_id, left_lng, left_lat),
+                    (right, right_id, right_lng, right_lat),
+                    distance, distance, res)
+        .withColumn("_d", F.expr(_PAIR_DIST))
         .where(F.col("_d") <= F.lit(distance))
         .select(
-            F.col("__lid").alias(left_id),
-            F.col("__rid").alias(right_id),
+            F.col("id_1").alias(left_id),
+            F.col("id_2").alias(right_id),
             F.floor(F.col("_d") * 1e6).cast("long").alias("dist_u"),
         )
     )

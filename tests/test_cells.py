@@ -82,6 +82,37 @@ def test_neighbors_ring():
         assert max(abs(int(nx[0]) - int(xi[0])), abs(int(ny[0]) - int(yi[0]))) == 1
 
 
+def _is_real_cell(key: int) -> bool:
+    res = key >> C.RES_SHIFT
+    return 0 <= res <= C.MAX_RES and key & ((1 << C.RES_SHIFT) - 1) < 4 ** res
+
+
+@pytest.mark.parametrize("res", [0, 1, 25])
+def test_neighborhood_col_matches_numpy_neighbors(spark, res):
+    """neighborhood_col == cells.neighbors(cell) | {cell} on the grid's
+    corners, edge midpoints and random interior cells: nine distinct
+    keys, the in-range ones exactly the numpy set, and every off-grid
+    one equal to no real cell at any resolution (no wraparound)."""
+    n = 1 << res
+    rng = np.random.default_rng(res)
+    edge = sorted({0, n // 2, n - 1})
+    xy = [(x, y) for x in edge for y in edge]
+    if n > 2:
+        xy += [tuple(v) for v in rng.integers(1, n - 1, (20, 2)).tolist()]
+    cells = C.pack_xy(np.array([x for x, _ in xy]), np.array([y for _, y in xy]), res)
+    df = spark.createDataFrame(pd.DataFrame({"cell": cells}), "cell bigint")
+    rows = df.select("cell", C.neighborhood_col("cell", res).alias("nb")).collect()
+    assert len(rows) == len(xy)
+    for r in rows:
+        keys = set(r.nb)
+        assert len(r.nb) == 9 and len(keys) == 9, r
+        want = set(C.neighbors(r.cell, 1).tolist()) | {r.cell}
+        real = {k for k in keys if _is_real_cell(k)}
+        assert real == want, r.cell
+    with pytest.raises(ValueError):
+        C.neighborhood_col("cell", 26)
+
+
 @given(
     lng=st.floats(-180, 180, allow_nan=False),
     lat=st.floats(-90, 90, allow_nan=False),

@@ -11,6 +11,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from gis_shapefile_spark.operators import geodesic as GE
 from gis_shapefile_spark.operators import spatial_join as SJ
 from gis_shapefile_spark.sources import fixtures as FX
 from gis_shapefile_spark.functions import geometry as G
@@ -276,8 +277,9 @@ def test_knn_indexes_all_geometry_types(spark):
 
 
 def test_knn_ring_expansion_matches_bruteforce(spark):
-    """Literal cell-ring-expansion kNN == brute force on the 51-state
-    fixture (both rank by exact center distance; expansion only prunes)."""
+    """Cell-candidate kNN (the cell-ring expansion done once per occupied
+    cell) == brute force on the 51-state fixture (both rank by exact
+    center distance; the candidate lists only prune)."""
     feats = FX.make_features()
     rng = np.random.RandomState(11)
     pts_pdf = pd.DataFrame({
@@ -286,7 +288,7 @@ def test_knn_ring_expansion_matches_bruteforce(spark):
         "lat": rng.uniform(25, 49, 300),
     })
     pts = spark.createDataFrame(pts_pdf)
-    ring = SJ.knn_join_ring_expansion(spark, pts, feats, k=3, res=6)
+    ring = SJ.knn_join(spark, pts, feats, k=3, res=6)
     brute = SJ.knn_join_bruteforce(spark, pts, feats, k=3)
     key = lambda df: sorted(
         (r.image_id, r.knn_rank, r.record_number) for r in df.collect()
@@ -297,7 +299,6 @@ def test_knn_ring_expansion_matches_bruteforce(spark):
 @pytest.mark.parametrize("join", [
     lambda spark, pts, feats: SJ.knn_join(spark, pts, feats, k=3, res=6),
     lambda spark, pts, feats: SJ.knn_join_bruteforce(spark, pts, feats, k=3),
-    lambda spark, pts, feats: SJ.knn_join_ring_expansion(spark, pts, feats, k=3, res=6),
     lambda spark, pts, feats: SJ.within_distance_join(spark, pts, feats, distance=2.0),
     lambda spark, pts, feats: SJ.bbox_join(
         spark,
@@ -307,8 +308,8 @@ def test_knn_ring_expansion_matches_bruteforce(spark):
     ),
     lambda spark, pts, feats: SJ.point_in_polygon_join(
         spark, pts, feats, res=6, attrs=["NAME_1"]),
-], ids=["knn_join", "knn_join_bruteforce", "knn_join_ring_expansion",
-        "within_distance_join", "bbox_join", "point_in_polygon_join"])
+], ids=["knn_join", "knn_join_bruteforce", "within_distance_join", "bbox_join",
+        "point_in_polygon_join"])
 def test_empty_feature_set_joins_to_zero_rows(spark, join):
     """No features, no matches: every dimension join returns an empty
     frame instead of failing to infer the dimension's schema."""
@@ -371,8 +372,9 @@ def test_simplify_features_cuts_edges_preserves_interior(spark):
 
 
 def test_knn_ring_expansion_sparse_features(spark):
-    """Sparse dimension (deep ring expansion, rectangular-cell geometry
-    stressed): ring-expansion kNN must still equal brute force."""
+    """Sparse dimension (candidate lists reach far beyond a cell's own
+    ring, rectangular-cell geometry stressed): cell-candidate kNN must
+    still equal brute force."""
     rng = np.random.RandomState(23)
     feats = pd.DataFrame({
         "record_number": range(10),
@@ -388,7 +390,7 @@ def test_knn_ring_expansion_sparse_features(spark):
         "lng": rng.uniform(-124, -67, 200),
         "lat": rng.uniform(25, 49, 200),
     }))
-    ring = SJ.knn_join_ring_expansion(spark, pts, feats, k=3, res=7)
+    ring = SJ.knn_join(spark, pts, feats, k=3, res=7)
     brute = SJ.knn_join_bruteforce(spark, pts, feats, k=3)
     key = lambda df: sorted(
         (r.image_id, r.knn_rank, r.record_number) for r in df.collect()
@@ -414,12 +416,6 @@ def test_knn_res_guard_bounds_driver_and_stays_exact(spark, features, points_pdf
     eff_res, occ = SJ._occupied_cells_bounded(pts, "lng", "lat", 10, 64)
     assert eff_res < 10
     assert len(occ) <= 64 * 2  # approx sketch slack
-
-    ring = SJ.knn_join_ring_expansion(
-        spark, pts, features, k=k, res=10, max_occupied_cells=64
-    )
-    c = {(r.image_id, r.knn_rank, r.record_number) for r in ring.collect()}
-    assert a == c
 
 
 # ---------------------------------------------------------------------------
@@ -503,13 +499,20 @@ def test_self_join_forces_sort_merge(spark):
     assert "SortMergeJoin" in plan
     assert "BroadcastHashJoin" not in plan
     # geodesic twin carries the same hint
-    from gis_shapefile_spark.operators import geodesic as GE
-
     gout = GE.geodesic_pairs_within_km(spark.createDataFrame(pdf), km=50.0)
     gout.collect()
     gplan = gout._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" in gplan
     assert "BroadcastHashJoin" not in gplan
+    # and so does the cross join (same candidate builder)
+    half = spark.createDataFrame(pdf.rename(columns={"point_id": "id_1"}))
+    cout = SJ.within_distance_cross_join(
+        half, half.withColumnRenamed("id_1", "id_2"), distance=1.0
+    )
+    cout.collect()
+    cplan = cout._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" in cplan
+    assert "BroadcastHashJoin" not in cplan
 
 
 def test_topk_windows_plan_map_side_group_limit(spark, features, points_pdf):
@@ -587,9 +590,19 @@ def test_knn_self_join_matches_bruteforce(spark):
     assert (per["max"] == per["count"]).all()
 
 
-def test_knn_self_join_validates_k(spark):
-    with pytest.raises(ValueError):
-        SJ.knn_self_join(None, k=0, radius=1.0)
+@pytest.mark.parametrize("k", [-1, 0, 2.5, True], ids=["neg", "zero", "float", "bool"])
+@pytest.mark.parametrize("knn", [
+    lambda k: SJ.knn_join(None, None, None, k=k),
+    lambda k: SJ.knn_join_bruteforce(None, None, None, k=k),
+    lambda k: SJ.knn_self_join(None, k=k, radius=1.0),
+    lambda k: GE.geodesic_knn_self(None, k=k, km=1.0),
+], ids=["knn_join", "knn_join_bruteforce", "knn_self_join", "geodesic_knn_self"])
+def test_knn_operators_validate_k(knn, k):
+    """k must be an integer >= 1, checked before any input is touched:
+    k=-1 used to return no rows from knn_join (a negative numpy column
+    index) and k=2.5 a numpy IndexError there and the top 2 elsewhere."""
+    with pytest.raises(ValueError, match="k must be an integer"):
+        knn(k)
 
 
 def test_within_distance_cross_join_matches_bruteforce(spark):
