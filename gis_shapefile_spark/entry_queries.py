@@ -133,16 +133,14 @@ def q_pip_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spatial ANTI-join: points covered by NO state rectangle — the
     exclusion-zone curation predicate (drop images inside embargoed
     areas; find the uncovered remainder). The complement of
-    ``pip_grid_join`` computed as a LEFT ANTI id join over the exact
-    PIP candidate set — no NOT-IN null traps, one extra narrow id
-    shuffle. Coordinates integerize at 1e6 (the points are exact
-    1e-6-degree rationals, so the floor is clean)."""
+    ``pip_grid_join``: the rows of the left PIP join with no containing
+    polygon — one scan, one broadcast join, no id shuffle. Coordinates
+    integerize at 1e6 (the points are exact 1e-6-degree rationals, so
+    the floor is clean)."""
     from .operators import spatial_join as SJ
 
     pts = _points_df(spark, sf_dir)
-    out = SJ.point_in_polygon_anti_join(
-        spark, pts, FX.make_grid_features(), res=8, point_id_col="point_id"
-    )
+    out = SJ.point_in_polygon_anti_join(spark, pts, FX.make_grid_features(), res=8)
     return out.selectExpr(
         "CAST(point_id AS BIGINT) AS point_id",
         "CAST(floor(lng * 1000000.0) AS BIGINT) AS x_u",
@@ -181,8 +179,6 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = pts.groupBy(
         F.expr(C.cell_sql("lng", "lat", ZONAL_RES, "spark")).alias("cell")
     ).agg(F.count(F.lit(1)).alias("n"))
-    # "cell" is reserved inside the PIP join's dimension — carry the id
-    # as cell_id
     centers = cells.select(
         F.col("cell").alias("cell_id"),
         "n",

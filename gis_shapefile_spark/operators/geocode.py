@@ -161,22 +161,6 @@ def reverse_geocode(
     ]
     index = SJ.PolygonIndex(spark, feats, res)
 
-    hits = SJ.point_in_polygon_join(
-        spark, points, index, res=res,
-        lng_col=lng_col, lat_col=lat_col, point_id_col=point_id_col,
-        attrs=["NAME_1", "minx", "miny", "maxx", "maxy"],
-    ).select(
-        point_id_col,
-        ((F.col("miny") + F.col("maxy")) / 2).alias("lat"),
-        ((F.col("minx") + F.col("maxx")) / 2).alias("lng"),
-        F.col("NAME_1").alias("matched_address"),
-        F.lit(1.0).alias("confidence"),
-        F.lit("reverse").alias("match_type"),
-        F.col("record_number"),
-    )
-
-    misses = points.join(hits.select(point_id_col), point_id_col, "left_anti")
-
     centroids = spark.createDataFrame(
         pd.DataFrame(
             {
@@ -187,6 +171,22 @@ def reverse_geocode(
             }
         )
     )
+    # one PIP call: its hits take their polygon's centroid, its misses
+    # (record_number NULL) fall back to the nearest centroid
+    tagged = SJ.point_in_polygon_left_join(
+        spark, points, index, res=res, lng_col=lng_col, lat_col=lat_col,
+    )
+    hits = tagged.join(F.broadcast(centroids), "record_number").select(
+        point_id_col,
+        F.col("cy").alias("lat"),
+        F.col("cx").alias("lng"),
+        F.col("name_1").alias("matched_address"),
+        F.lit(1.0).alias("confidence"),
+        F.lit("reverse").alias("match_type"),
+        F.col("record_number"),
+    )
+    misses = tagged.where(F.col("record_number").isNull()).drop("record_number")
+
     dist = F.sqrt(
         (F.col(lng_col) - F.col("cx")) * (F.col(lng_col) - F.col("cx"))
         + (F.col(lat_col) - F.col("cy")) * (F.col(lat_col) - F.col("cy"))

@@ -33,6 +33,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..sources import fixtures as FX
 
@@ -154,6 +155,26 @@ def decode_stats(
             yield pd.DataFrame(out)
 
     return images.mapInPandas(fn, schema)
+
+
+def verify_enrich(images: DataFrame) -> DataFrame:
+    """One-pass decode + phash-verify that PASSES THROUGH the tiling
+    columns: (image_id, lng, lat, n_bytes, phash_ok).
+
+    ``decode_stats`` with ``means=False`` (the same ``phash_ok`` as
+    ``verify_invariants(reencode=False)``) and carry columns: nothing joins
+    back by image_id (on a stream that join would be stream-stream). The
+    batch flagship (``tiling.image_tiling_pipeline``) and the streaming
+    leg (``streaming/image_stream.py``) both run it, so a codec/phash
+    change cannot diverge between them — linear, no shuffle.
+    """
+    enriched = decode_stats(
+        images.select("image_id", "bytes", "w", "h", "fmt", "phash", "lng", "lat",
+                      F.octet_length("bytes").cast("long").alias("n_bytes")),
+        carry=("lng", "lat", "n_bytes"),
+        means=False,
+    )
+    return enriched.select("image_id", "lng", "lat", "n_bytes", "phash_ok")
 
 
 def image_near_pairs(images: DataFrame, max_hamming: int = 6) -> DataFrame:

@@ -13,8 +13,8 @@ the engine's raster<->vector leg mandated by the north rule:
 * ``vectorize_raster``  — raster->vector (polygonize): contiguous
   same-value cell regions merged into axis-aligned rectangles via a
   two-pass gaps-and-islands plan (row runs, then vertical run merge);
-* ``image_tiling_pipeline`` — the flagship composition: cell assign ->
-  PIP join -> per-(state, tile) stats + invariant verify.
+* ``image_tiling_pipeline`` — the flagship composition: decode + phash
+  verify -> left first-hit PIP -> per-(state, tile) stats, one scan.
 
 Scale notes: every stage keys by the packed cell id, so the shuffle is a
 single hash partitioning on cell; the planted urban hot cell (FIXTURES.md)
@@ -411,54 +411,57 @@ def image_tiling_pipeline(
     res: int = 8,
     verify: bool = True,
 ) -> DataFrame:
-    """Flagship composition over the input_hint table: assign cells ->
-    exact PIP join to features -> per-(state, cell) tile rollup, with the
-    per-row payload invariants verified in the same plan.
+    """Flagship composition over the input_hint table: decode + phash
+    verify -> exact first-hit PIP to features -> per-(state, cell) tile
+    rollup, in ONE scan of the image table.
 
-    Output: (record_number, cell, n_images, n_bytes, n_phash_ok).
+    Output: (record_number, cell, n_images, n_bytes, n_phash_ok);
+    ``record_number`` is NULL for images inside no feature.
+
+    The decode (``multimodal.verify_enrich``: the same ``phash_ok`` as
+    ``verify_invariants(reencode=False)``) carries ``lng, lat, n_bytes``
+    through, and the left PIP join carries every
+    row on, so nothing joins back by ``image_id``: the only exchange is
+    the rollup's, over (record_number, cell) partial aggregates. No
+    re-encode/PSNR leg: this rollup consumes only ``phash_ok``, and for
+    jpeg rows that leg costs ~3x the decode itself (PSNR idempotence is
+    covered where ``psnr_u`` is consumed: tests/test_jpeg.py,
+    test_multimodal_tiling.py).
 
     Do NOT repartition the image side for "more decode parallelism":
     shuffling binary payloads costs ~10x the decode itself (measured:
     20k images 1.1 s source-split parallelism vs 9.9 s after
     repartition(32)). Decode parallelism comes from source splits
-    (files / row groups), which at production scale are plentiful; the
-    only shuffled columns here are the id/cell/stat projections.
+    (files / row groups), which at production scale are plentiful.
     """
     from . import multimodal as MM
     from . import spatial_join as SJ
 
-    pts = images.select(
-        "image_id", "bytes", "phash", "lng", "lat"
-    )
-    joined = SJ.point_in_polygon_join(
-        spark,
-        pts.select(F.col("image_id").alias("point_id"), "lng", "lat"),
-        features_pdf,
-        res=res,
-        point_id_col="point_id",
-    ).select(F.col("point_id").alias("image_id"), "record_number")
-
-    enriched = assign_cells(pts, res).join(joined, "image_id", "left")
     if verify:
-        # reencode=False: this rollup consumes ONLY phash_ok (decode +
-        # rehash); the re-encode/PSNR leg would be computed and dropped,
-        # and for fmt='jpeg' rows that leg costs ~3x the decode itself
-        # (measured 17 core-s vs 6 for 3k 16x16 jpegs — a 10x wall
-        # regression on this 20k-image pipeline when the v2 fixture added
-        # real-codec rows). PSNR idempotence stays covered where psnr_u is
-        # actually consumed (tests/test_jpeg.py, test_multimodal_tiling.py).
-        inv = MM.verify_invariants(images.select(
-            "image_id", "bytes", "w", "h", "fmt", "caption", "phash"
-        ), reencode=False)
-        enriched = enriched.join(inv.select("image_id", "phash_ok"), "image_id")
-        phash_agg = F.sum(F.col("phash_ok").cast("long")).alias("n_phash_ok")
+        pts = MM.verify_enrich(images)
     else:
-        phash_agg = F.lit(None).cast("long").alias("n_phash_ok")
+        pts = images.select(
+            "lng", "lat", F.octet_length("bytes").cast("long").alias("n_bytes"),
+            F.lit(None).cast("boolean").alias("phash_ok"),
+        )
+    tagged = SJ.point_in_polygon_left_join(spark, pts, features_pdf, res=res)
+    return tile_rollup(assign_cells(tagged, res))
 
-    return enriched.groupBy("record_number", "cell").agg(
+
+def tile_rollup(tile_events: DataFrame) -> DataFrame:
+    """Per-(state, tile) rollup of (record_number, cell, n_bytes, phash_ok)
+    rows: (record_number, cell, n_images, n_bytes, n_phash_ok). The batch
+    flagship and the streaming leg (``streaming/image_stream.py``, where
+    it is the one stateful operator) share it.
+
+    State is keyed by (record_number, cell) — bounded by the tile
+    universe (dimension x 4^res), independent of the image count, so a
+    streaming state store stays small at any ingest volume.
+    """
+    return tile_events.groupBy("record_number", "cell").agg(
         F.count(F.lit(1)).alias("n_images"),
-        F.sum(F.length("bytes")).alias("n_bytes"),
-        phash_agg,
+        F.sum("n_bytes").alias("n_bytes"),
+        F.sum(F.col("phash_ok").cast("long")).alias("n_phash_ok"),
     )
 
 

@@ -45,17 +45,11 @@ def checkpointed_image_tiling(
         ),
     )
 
-    def _join() -> DataFrame:
-        j = SJ.point_in_polygon_join(
-            spark,
-            cells.select(F.col("image_id").alias("point_id"), "lng", "lat"),
-            features_pdf,
-            res=res,
-            point_id_col="point_id",
-        ).select(F.col("point_id").alias("image_id"), "record_number")
-        return cells.join(j, "image_id", "left")
-
-    enriched = ck.stage("pip_join", fp, _join)
+    enriched = ck.stage(
+        "pip_join",
+        fp,
+        lambda: SJ.point_in_polygon_left_join(spark, cells, features_pdf, res=res),
+    )
 
     tiles = ck.stage(
         "tiles",

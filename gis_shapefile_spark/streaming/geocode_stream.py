@@ -63,7 +63,7 @@ def streaming_pip_matches(
 ) -> DataFrame:
     """Stateless stream-static PIP join: all exact (point, polygon) matches.
 
-    Same plan as the batch operator minus the tie-break window — literally
+    Same plan as the batch operator's all-hits form — literally
     the same code: this delegates to the shared stateless core
     (``spatial_join.pip_matches_stateless``), so batch-side fixes reach the
     streaming path by construction.

@@ -22,11 +22,11 @@ batch rollup's rows.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..functions import cells as C
 from ..operators import multimodal as MM
 from ..operators import spatial_join as SJ
+from ..operators import tiling as TI
 
 IMAGES_SCHEMA = (
     "image_id string, bytes binary, w int, h int, fmt string, "
@@ -49,25 +49,6 @@ def read_images_stream(
     )
 
 
-def verify_enrich(images: DataFrame) -> DataFrame:
-    """One-pass decode + phash-verify that PASSES THROUGH the tiling
-    columns: (image_id, lng, lat, n_bytes, phash_ok).
-
-    The batch pipeline computes invariants in a separate stage and joins
-    them back by image_id; on a stream that join would be stream-stream.
-    This stage runs the SHARED decode kernel
-    (``multimodal.decode_stats`` with ``means=False`` + carry columns),
-    so a codec/phash change cannot diverge between batch and stream —
-    linear pipeline, no shuffle, batch/stream identical.
-    """
-    enriched = MM.decode_stats(
-        images.withColumn("n_bytes", F.octet_length("bytes").cast("long")),
-        carry=("lng", "lat", "n_bytes"),
-        means=False,
-    )
-    return enriched.select("image_id", "lng", "lat", "n_bytes", "phash_ok")
-
-
 def streaming_tile_events(
     images_stream: DataFrame, index: SJ.PolygonIndex, res: int | None = None
 ) -> DataFrame:
@@ -78,27 +59,14 @@ def streaming_tile_events(
     Images outside every feature produce no row (inner stream-static
     join) — the batch twin below applies the same semantics.
     """
-    enriched = verify_enrich(images_stream)
-    matched = SJ.pip_matches_stateless(enriched, index)
-    # cell assigned AFTER the join: pip_matches_stateless drops every
-    # column named `cell` when it discards its dimension key
-    return matched.withColumn(
+    enriched = MM.verify_enrich(images_stream)
+    return SJ.pip_matches_stateless(enriched, index).withColumn(
         "cell", C.cell_col("lng", "lat", res if res is not None else index.res)
     )
 
 
-def streaming_tile_rollup(tile_events: DataFrame) -> DataFrame:
-    """The stateful leg: per-(state, tile) streaming aggregation.
-
-    State is keyed by (record_number, cell) — bounded by the tile
-    universe (dimension x 4^res), independent of the image count, so the
-    state store stays small at any ingest volume.
-    """
-    return tile_events.groupBy("record_number", "cell").agg(
-        F.count(F.lit(1)).alias("n_images"),
-        F.sum("n_bytes").alias("n_bytes"),
-        F.sum(F.col("phash_ok").cast("long")).alias("n_phash_ok"),
-    )
+# the stateful leg: the batch flagship's per-(state, tile) rollup
+streaming_tile_rollup = TI.tile_rollup
 
 
 def batch_tile_rollup(

@@ -214,6 +214,8 @@ def test_reverse_geocode_hits_and_fallback(spark, features):
         if want_name is not None:
             assert r.matched_address == want_name, qid
             assert r.confidence == want_conf
+            f = feats[feats["NAME_1"] == want_name].iloc[0]
+            assert (r.lng, r.lat) == ((f.minx + f.maxx) / 2, (f.miny + f.maxy) / 2), qid
         else:
             # fallback: nearest centroid among named polygon features
             cx = (feats.minx + feats.maxx) / 2

@@ -313,6 +313,24 @@ def test_rasterize_and_clip_empty_inputs(spark):
     assert len(clipped) == 0
 
 
+def test_image_tiling_pipeline_scans_images_once(spark, images_df, tmp_path):
+    """Verify on, over parquet: one scan, one decode (MapInPandas) and one
+    hash exchange — the rollup's; no payload or id shuffle."""
+    path = str(tmp_path / "images")
+    images_df.write.parquet(path)
+    out = TI.image_tiling_pipeline(
+        spark, spark.read.parquet(path), FX.make_grid_features(), res=6)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.finalPhysicalPlan()
+    plan = plan.toString()
+    assert plan.count("FileScan parquet") == 1, plan
+    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "Exchange hashpartitioning(record_number" in plan, plan
+
+
 def test_image_tiling_pipeline_counts(spark, images_df, images_pdf):
     res = 6
     out = TI.image_tiling_pipeline(

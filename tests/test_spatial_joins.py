@@ -736,10 +736,12 @@ def exact_case():
 def test_pip_refine_exact_on_borders_holes_and_overlaps(spark, exact_case):
     """Broadcast and salted paths return exactly the numpy kernel's
     (point, polygon) matches, on sub-cell borders, vertices and edges, in
-    holes, in overlaps, and with 70 holes crossing one cell's band."""
+    holes, in overlaps, and with 70 holes crossing one cell's band. The
+    first hit is the smallest containing polygon on both paths, and the
+    left form returns every point once, with that polygon or NULL."""
     feats, pts_pdf, want = exact_case
     index = SJ.PolygonIndex(spark, feats, EX_RES)
-    dim = index.dim.toPandas()
+    dim = SJ.prepare_polygon_cells(feats, EX_RES)
     assert dim["holes"].map(len).max() >= 64
     assert (dim["part_mask"] != 0).any() and (dim["full_mask"] == -1).any()
     ids = {rec for _, rec in want}
@@ -747,15 +749,59 @@ def test_pip_refine_exact_on_borders_holes_and_overlaps(spark, exact_case):
     assert len({pid for pid, rec in want if rec == 2} & {pid for pid, rec in want if rec == 1})
 
     pts = spark.createDataFrame(pts_pdf)
+    best: dict[int, int] = {}
+    for pid, rec in want:
+        best[pid] = min(rec, best.get(pid, rec))
     for salt in (0, 3):
         got = SJ.point_in_polygon_join(spark, pts, index, res=EX_RES,
                                        salt_buckets=salt, dedup_first=False)
         assert {(r.image_id, r.record_number) for r in got.collect()} == want, salt
-    first = SJ.point_in_polygon_join(spark, pts, index, res=EX_RES, salt_buckets=3)
-    best: dict[int, int] = {}
-    for pid, rec in want:
-        best[pid] = min(rec, best.get(pid, rec))
-    assert {(r.image_id, r.record_number) for r in first.collect()} == set(best.items())
+        first = SJ.point_in_polygon_join(spark, pts, index, res=EX_RES,
+                                         salt_buckets=salt).collect()
+        assert len(first) == len(best), salt
+        assert {(r.image_id, r.record_number) for r in first} == set(best.items()), salt
+    left = SJ.point_in_polygon_left_join(spark, pts, index, res=EX_RES).collect()
+    assert sorted(r.image_id for r in left) == sorted(pts_pdf["image_id"])
+    assert {(r.image_id, r.record_number) for r in left} == {
+        (int(pid), best.get(int(pid))) for pid in pts_pdf["image_id"]}
+
+
+def test_pip_first_hit_is_per_row_for_duplicate_ids(spark, features):
+    """Rows that share a point id keep one first-hit row each, whatever
+    the partitioning and on both join paths: two id-1 rows at different
+    locations inside polygon 1, plus an id-2 row inside polygon 2."""
+    f = features[features["shape_type"] == 5]
+    inside = []
+    for _, r in f.head(2).iterrows():
+        rx, ry = _rings(r)
+        gx, gy = np.meshgrid(np.linspace(r["minx"], r["maxx"], 40),
+                             np.linspace(r["miny"], r["maxy"], 40))
+        hit = G.polygon_contains_points(rx, ry, gx.ravel(), gy.ravel())
+        k = np.flatnonzero(hit)
+        inside.append((int(r["record_number"]), gx.ravel()[k], gy.ravel()[k]))
+    (rec1, x1, y1), (rec2, x2, y2) = inside
+    pdf = pd.DataFrame({"image_id": [1, 1, 2],
+                        "lng": [x1[0], x1[-1], x2[0]], "lat": [y1[0], y1[-1], y2[0]]})
+    assert (pdf.loc[0, "lng"], pdf.loc[0, "lat"]) != (pdf.loc[1, "lng"], pdf.loc[1, "lat"])
+    first = []
+    for x, y in zip(pdf["lng"], pdf["lat"]):
+        first.append(min(int(r["record_number"]) for _, r in f.iterrows()
+                         if G.polygon_contains_points(*_rings(r), [x], [y])[0]))
+    assert first[:2] == [rec1, rec1] and first[2] == rec2
+    want = sorted(zip(pdf["image_id"], pdf["lng"], pdf["lat"], first))
+    index = SJ.PolygonIndex(spark, features, 8)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for parts in (1, 7, 64):
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            pts = spark.createDataFrame(pdf)
+            for salt in (0, 3):
+                got = SJ.point_in_polygon_join(spark, pts, index, res=8, salt_buckets=salt)
+                rows = sorted((r.image_id, r.lng, r.lat, r.record_number)
+                              for r in got.collect())
+                assert rows == want, (parts, salt)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 PYTHON_NODES = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "PythonUDF")
@@ -778,8 +824,25 @@ def test_pip_plan_has_no_python_and_scans_points_once(spark, exact_case, tmp_pat
     plan = _executed_plan(SJ.point_in_polygon_join(spark, pts, index, res=EX_RES))
     assert not [n for n in PYTHON_NODES if n in plan], plan
     assert plan.count("FileScan parquet") == 1, plan
+    # dedup_first (the default) takes the first hit per row: no window
+    # and no shuffle on the broadcast path
+    assert "Exchange hashpartitioning" not in plan and "Window" not in plan, plan
     salted = _executed_plan(SJ.point_in_polygon_join(
         spark, pts, index, res=EX_RES, salt_buckets=3))
     assert not [n for n in PYTHON_NODES if n in salted], salted
+    assert "Window" not in salted, salted
+    anti = _executed_plan(SJ.point_in_polygon_anti_join(spark, pts, index, res=EX_RES))
+    assert anti.count("FileScan parquet") == 1, anti
+    assert "Exchange hashpartitioning" not in anti, anti
+    # the ray-cast (one aggregate for the shell, one for the holes) is
+    # planned once per form, also under a filter on record_number
+    for df in (
+        SJ.point_in_polygon_join(spark, pts, index, res=EX_RES),
+        SJ.point_in_polygon_join(spark, pts, index, res=EX_RES, dedup_first=False),
+        SJ.point_in_polygon_left_join(spark, pts, index, res=EX_RES)
+        .where("record_number IS NOT NULL"),
+    ):
+        once = _executed_plan(df)
+        assert once.count("aggregate(") == 2, once
     streamed = _executed_plan(SJ.pip_matches_stateless(pts, index))
     assert not [n for n in PYTHON_NODES if n in streamed], streamed
