@@ -782,16 +782,15 @@ def q_pip_first_hit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ε-box bbox hits — operators/ref_parity.py). Every point has exactly
     two candidates, so this oracle-checks the order-dependent semantics
     end-to-end, not just on unambiguous interiors."""
-    from .operators import spatial_join as SJ
+    from .operators import ref_parity as RP
 
     pts = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
         F.col("c_custkey").alias("point_id"),
         F.expr(EDGE_PT_LNG_SQL).alias("lng"),
         F.expr(EDGE_PT_LAT_SQL).alias("lat"),
     )
-    out = SJ.point_in_polygon_join(
-        spark, pts, FX.make_grid_features(), res=6,
-        point_id_col="point_id", mode="ref_first_hit",
+    out = RP.point_in_polygon_join_first_hit(
+        spark, pts, FX.make_grid_features(), res=6, point_id_col="point_id",
     )
     return out.select(
         "point_id", F.col("record_number").cast("long").alias("record_number")

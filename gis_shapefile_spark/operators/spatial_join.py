@@ -337,7 +337,6 @@ def point_in_polygon_join(
     salt_buckets: int | str = 0,
     dedup_first: bool = True,
     attrs: list[str] | None = None,
-    mode: str = "exact",
 ) -> DataFrame:
     """Inner-join points to the polygons that exactly contain them.
 
@@ -348,18 +347,18 @@ def point_in_polygon_join(
     ``dedup_first`` only the first hit is kept: the smallest containing
     ``record_number`` (the engine's defensible replacement for the
     reference's traversal-order-dependent first hit,
-    spatial_index.cpp:367-375); otherwise every hit, exactly the rows of
-    ``pip_matches_stateless`` on the broadcast path.
+    spatial_index.cpp:367-375); otherwise every hit. On the broadcast
+    path both forms are one scan, one broadcast join and no window, so
+    they run unchanged on a streaming DataFrame in append mode.
 
     The first hit is picked per input ROW, not per ``point_id``: rows that
     share an id keep one output row each (their locations may differ).
     ``point_id_col`` only keys the salt bucket.
 
-    ``mode="ref_first_hit"`` switches to the reference-compat semantics
-    (first ε-box bbox hit in R-tree traversal order, exact test skipped —
-    the commented-out refinement at spatial_index.cpp:367-375) via
-    ``operators.ref_parity.point_in_polygon_join_first_hit``; output is
-    (point_id, record_number) only.
+    The reference-compat semantics (first ε-box bbox hit in R-tree
+    traversal order, exact test skipped — the commented-out refinement at
+    spatial_index.cpp:367-375) are
+    ``operators.ref_parity.point_in_polygon_join_first_hit``.
 
     ``salt_buckets="auto"`` measures the hot-cell share first
     (``auto_salt_buckets``) and salts only when a cell actually exceeds
@@ -367,20 +366,6 @@ def point_in_polygon_join(
     uniform tables keep the cheaper unsalted plan, no operator knob to
     mis-guess. Output rows are identical either way (tested).
     """
-    if mode == "ref_first_hit":
-        from . import ref_parity as RP
-
-        fpdf = (
-            features_pdf.features_pdf
-            if isinstance(features_pdf, PolygonIndex)
-            else features_pdf
-        )
-        return RP.point_in_polygon_join_first_hit(
-            spark, points, fpdf, res=res, lng_col=lng_col, lat_col=lat_col,
-            point_id_col=point_id_col,
-        )
-    if mode != "exact":
-        raise ValueError(f"unknown mode {mode!r} (exact | ref_first_hit)")
     if salt_buckets == "auto":
         salt_buckets = auto_salt_buckets(
             spark, points, res=res, lng_col=lng_col, lat_col=lat_col
@@ -498,21 +483,6 @@ def _pip_rows(points: DataFrame, index: PolygonIndex, lng_col: str, lat_col: str
     return rows.select(
         "*", F.col("__poly.record_number").alias("record_number")
     ).drop(*_PRIVATE)
-
-
-def pip_matches_stateless(
-    points: DataFrame,
-    index: "PolygonIndex",
-    lng_col: str = "lng",
-    lat_col: str = "lat",
-) -> DataFrame:
-    """All exact (point, polygon) matches via the broadcast cell dimension —
-    the stateless core: ``point_in_polygon_join(dedup_first=False)`` on its
-    broadcast path and the streaming leg (streaming/geocode_stream.py) run
-    exactly these rows. No window, so it runs unchanged on a streaming
-    DataFrame in append mode. One scan, one broadcast join, one filter;
-    no Python."""
-    return _pip_rows(points, index, lng_col, lat_col, "all")
 
 
 # ---------------------------------------------------------------------------

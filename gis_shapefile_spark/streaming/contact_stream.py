@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .sink import committed_stage, drain_batches, lineage_id
+
 
 def _bucket_expr(bucket_s: int) -> str:
     return (
@@ -72,9 +74,8 @@ def streaming_contact_sink(
                 F.col(ts_col).alias("_ts"), F.col(id_col).alias("_ev"),
             )
         )
-        try:
-            committed = table.read_stage(reps_stage)
-        except KeyError:
+        committed = committed_stage(table, reps_stage)
+        if committed is None:
             committed = batch_reps.limit(0)
         merged = (
             committed.unionByName(batch_reps)
@@ -90,24 +91,17 @@ def streaming_contact_sink(
         new_pairs = SJ.within_distance_self_join(
             cand, distance=distance, key_cols=("bucket",)
         )
-        try:
-            old_pairs = table.read_stage(pairs_stage)
-            kept = old_pairs.join(F.broadcast(touched), "bucket", "left_anti")
-        except KeyError:
-            kept = new_pairs.limit(0)
+        old_pairs = committed_stage(table, pairs_stage)
+        kept = (
+            new_pairs.limit(0) if old_pairs is None
+            else old_pairs.join(F.broadcast(touched), "bucket", "left_anti")
+        )
         updated_pairs = kept.unionByName(new_pairs)
-        fp = f"ck={checkpoint_dir}|batch:{batch_id}"
+        fp = f"ck={lineage_id(checkpoint_dir)}|batch:{batch_id}"
         table.stage(reps_stage, fp, lambda: merged)
         table.stage(pairs_stage, fp, lambda: updated_pairs)
 
-    q = (
-        events_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return drain_batches(events_stream, checkpoint_dir, process)
 
 
 def contact_rollup(table, stage_name: str, min_buckets: int) -> DataFrame:

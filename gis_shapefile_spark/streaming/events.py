@@ -27,26 +27,16 @@ from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .sink import drain
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string"
 )
-
-
-def read_events_stream(
-    spark: SparkSession, src_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """File-source stream over an events parquet directory (the local twin
-    of a message-bus source; schema declared, never inferred)."""
-    return (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
 
 
 def windowed_event_counts(
@@ -115,18 +105,11 @@ def run_to_memory(
     checkpoint_dir: str,
     output_mode: str = "update",
 ) -> None:
-    """Drain the stream with an availableNow trigger into a memory sink
-    (test/bench harness; production would writeStream to the checkpointed
-    Parquet table layer)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    """Drain the stream into a memory sink table ``query_name`` (test/bench
+    harness; production would write to the checkpointed Parquet table
+    layer)."""
+    writer = stream_df.writeStream.format("memory").queryName(query_name)
+    drain(writer.outputMode(output_mode), checkpoint_dir)
 
 
 def dedup_events_stream(

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.similarity import _with_norm, ivf_assign_batch
+from .sink import drain_batches
 
 
 def streaming_ivf_sink(
@@ -64,6 +65,12 @@ def streaming_ivf_sink(
     os.makedirs(index_root, exist_ok=True)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
+        # The marker is the batch id alone, NOT (lineage_id, batch id)
+        # as in the CheckpointTable sinks: the index root is the state,
+        # so a fresh checkpoint over the same feed re-delivers old files
+        # under already-committed ids and must insert nothing (the
+        # single-writer contract above; pytest-pinned). Keying by
+        # lineage would re-insert every vector a second time.
         final = os.path.join(index_root, f"batch={batch_id}")
         if os.path.exists(final):
             return  # replayed batch: already committed, exactly-once
@@ -82,11 +89,4 @@ def streaming_ivf_sink(
         ).parquet(tmp)
         os.rename(tmp, final)  # atomic commit
 
-    q = (
-        embeddings_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return drain_batches(embeddings_stream, checkpoint_dir, process)

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans import merge as MG
+from .sink import fold_sink
 
 
 def streaming_merge_sink(
@@ -51,15 +52,15 @@ def streaming_merge_sink(
     ``vacuum``); restarting with a fresh stream checkpoint continues the
     existing snapshot.
 
-    Exactly-once: the stage fingerprint embeds (stream checkpoint, batch
-    id). Within one checkpoint lineage batch N replays with identical
-    rows, so a retry after a failure between snapshot write and stream
-    commit finds the fingerprint already committed and skips the
-    re-apply — no double-merge. Returns the (terminated) StreamingQuery.
+    Exactly-once (``sink.fold_sink``): the stage fingerprint embeds
+    (stream checkpoint lineage, batch id). Within one lineage batch N
+    replays with identical rows, so a retry after a failure between
+    snapshot write and stream commit finds the fingerprint already
+    committed and skips the re-apply — no double-merge. Returns the
+    (terminated) StreamingQuery.
     """
-    name = stage_name
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def fold(current, batch_df: DataFrame) -> DataFrame:
         if order_col is not None:
             tie = [
                 F.col(c).desc()
@@ -74,23 +75,9 @@ def streaming_merge_sink(
                 .where(F.col("__mrn") == 1)
                 .drop("__mrn")
             )
-        try:
-            current = table.read_stage(name)
-        except KeyError:
+        if current is None:
             cols = [c for c in batch_df.columns if c != delete_col]
             current = spark.createDataFrame([], batch_df.select(*cols).schema)
-        merged = MG.merge_upsert(current, batch_df, key_cols, delete_col=delete_col)
-        table.stage(
-            name,
-            f"ck={checkpoint_dir}|batch:{batch_id}",
-            lambda: merged,
-        )
+        return MG.merge_upsert(current, batch_df, key_cols, delete_col=delete_col)
 
-    q = (
-        updates_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return fold_sink(updates_stream, table, stage_name, checkpoint_dir, fold)

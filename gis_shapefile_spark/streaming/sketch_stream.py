@@ -8,8 +8,8 @@ running state is a CONSTANT 256 rows no matter how many tokens have
 streamed past — the exact property that makes frequency tracking
 feasible over an unbounded 10^12-token feed where a true counter table
 would grow with the vocabulary. Exactly-once at the manifest level via
-the fingerprint-keyed checkpoint-table commit, same as every sink here;
-a replayed batch short-circuits instead of double-adding its counts.
+``sink.fold_sink``'s fingerprint-keyed checkpoint-table commit: a
+replayed batch short-circuits instead of double-adding its counts.
 
 Estimates read back at ANY time with ``cms_estimate`` against the
 committed stage — and because merge is associative + commutative
@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators import sketch as SK
+from .sink import fold_sink
 
 
 def streaming_cms_sink(
@@ -36,29 +37,14 @@ def streaming_cms_sink(
 ):
     """Fold each micro-batch's sketch into the committed ``stage_name``
     counter grid of ``table`` (a ``CheckpointTable``). Single-writer per
-    stage. Returns the (terminated) StreamingQuery."""
+    stage; a fresh checkpoint over the same feed re-delivers every file
+    and adds its counts again. Returns the (terminated) StreamingQuery."""
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def fold(committed, batch_df: DataFrame) -> DataFrame:
         batch_sk = SK.cms_build(batch_df, item_col, d=d, w=w)
-        try:
-            committed = table.read_stage(stage_name)
-            updated = SK.cms_merge(committed, batch_sk)
-        except KeyError:
-            updated = batch_sk
-        table.stage(
-            stage_name,
-            f"ck={checkpoint_dir}|batch:{batch_id}",
-            lambda: updated,
-        )
+        return batch_sk if committed is None else SK.cms_merge(committed, batch_sk)
 
-    q = (
-        items_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return fold_sink(items_stream, table, stage_name, checkpoint_dir, fold)
 
 
 def streaming_hll_sink(
@@ -79,26 +65,9 @@ def streaming_hll_sink(
     makes this the most replay-tolerant state in the engine; the
     fingerprint commit still skips the work. The streamed grid equals
     the batch grid of the full feed bit-for-bit (pytest-pinned)."""
-    from ..operators import sketch as SK
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def fold(committed, batch_df: DataFrame) -> DataFrame:
         batch_grid = SK.hll_build(batch_df, item_col, group_cols=group_cols)
-        try:
-            committed = table.read_stage(stage_name)
-            updated = SK.hll_merge(committed, batch_grid)
-        except KeyError:
-            updated = batch_grid
-        table.stage(
-            stage_name,
-            f"ck={checkpoint_dir}|batch:{batch_id}",
-            lambda: updated,
-        )
+        return batch_grid if committed is None else SK.hll_merge(committed, batch_grid)
 
-    q = (
-        items_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return fold_sink(items_stream, table, stage_name, checkpoint_dir, fold)

@@ -11,19 +11,18 @@ batch, readers see the takedowns immediately through ``mor_read``'s
 broadcast anti-join, and the eventual rewrite is amortized into the
 separately-scheduled ``mor_compact`` maintenance pass.
 
-Exactly-once: the delete-file name embeds (checkpoint IDENTITY, batch
+Exactly-once: the delete-file name embeds (``sink.lineage_id``, batch
 id), so a batch replayed after a failure between the file publish and
 the stream commit finds its marker dir and short-circuits — no
-duplicate delete files within a compaction window. Checkpoint identity
-is the stream checkpoint's persisted query id (``<ckpt>/metadata``),
-NOT the directory path: a wiped-and-recreated checkpoint at the same
-path restarts batch ids at 0, and a path-derived tag would make the
-fresh feed's batch-0 keys silently short-circuit on the old run's
-marker — with the metadata id, a new checkpoint lineage gets new tags
-and its keys apply. A replay arriving AFTER a compaction consumed its
-marker re-commits the file, which is redundant-but-harmless (equality
-deletes of already-deleted keys are anti-join no-ops; see
-``mor_delete``'s docstring).
+duplicate delete files within a compaction window. The lineage id is
+the stream checkpoint's persisted query id, NOT the directory path: a
+wiped-and-recreated checkpoint at the same path restarts batch ids at
+0, and a path-derived tag would make the fresh feed's batch-0 keys
+silently short-circuit on the old run's marker — a new checkpoint
+lineage gets new tags and its keys apply. A replay arriving AFTER a
+compaction consumed its marker re-commits the file, which is
+redundant-but-harmless (equality deletes of already-deleted keys are
+anti-join no-ops; see ``mor_delete``'s docstring).
 
 Single-writer: the MoR maintenance ops (this sink's deletes, compaction)
 share the table's single-writer contract — schedule ``mor_compact``
@@ -32,26 +31,10 @@ between sink runs, not concurrently with one.
 
 from __future__ import annotations
 
-import hashlib
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans import merge as MG
-
-
-def _checkpoint_identity(checkpoint_dir: str) -> str:
-    """Stable id of the checkpoint LINEAGE: the query id Structured
-    Streaming persists in ``<ckpt>/metadata`` on first start (a wiped
-    checkpoint gets a fresh id). Falls back to a path hash only if the
-    metadata file is unreadable (pre-start call — never the case inside
-    foreachBatch, which runs after the checkpoint is initialized)."""
-    try:
-        with open(os.path.join(checkpoint_dir, "metadata")) as fh:
-            return json.load(fh)["id"][:8]
-    except (OSError, KeyError, ValueError):  # pragma: no cover - fallback
-        return hashlib.sha1(checkpoint_dir.encode()).hexdigest()[:8]
+from .sink import drain_batches, lineage_id
 
 
 def streaming_takedown_sink(
@@ -63,22 +46,13 @@ def streaming_takedown_sink(
 ):
     """Commit each micro-batch of takedown keys as one equality-delete
     file against the MoR table at ``path``. Returns the (terminated)
-    StreamingQuery; uses the availableNow trigger, so one call drains
-    the feed's current files (the batch-job-shaped streaming run every
-    other sink in this package uses)."""
+    StreamingQuery; ``sink.drain`` runs it to the end of the feed's
+    current files, like every other sink in this package."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        ck = _checkpoint_identity(checkpoint_dir)
         MG.mor_delete(
             spark, path, batch_df, key_cols,
-            tag=f"b{batch_id:08d}-{ck}",
+            tag=f"b{batch_id:08d}-{lineage_id(checkpoint_dir)}",
         )
 
-    q = (
-        keys_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return drain_batches(keys_stream, checkpoint_dir, process)

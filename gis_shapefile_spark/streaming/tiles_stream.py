@@ -12,8 +12,9 @@ composes three existing layers, the same shape as
   O(batch) work, never a corpus rescan (count/min/max associativity);
 * the checkpoint table's fingerprint-keyed manifest commits —
   exactly-once at the manifest level: a replayed batch short-circuits
-  on its (stream checkpoint, batch id) fingerprint instead of
-  double-counting its points into the tiles.
+  on its (checkpoint lineage, batch id) fingerprint
+  (``sink.fold_sink``) instead of double-counting its points into the
+  tiles.
 
 Scale shape per batch: batch pyramid (batch-scale), semi-join against
 the committed pyramid (tile-universe-bounded, partition-pruned when the
@@ -29,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators import tiling as TI
 from ..plans import merge as MG
+from .sink import fold_sink
 
 
 def streaming_pyramid_sink(
@@ -46,14 +48,13 @@ def streaming_pyramid_sink(
 
     Single-writer: the sink commits under ``stage_name`` itself, so one
     stage belongs to ONE stream; restarting with a fresh stream
-    checkpoint continues the existing snapshot. Returns the (terminated)
-    StreamingQuery.
+    checkpoint continues the existing snapshot, and a fresh checkpoint
+    over the same feed re-delivers every file and counts it again.
+    Returns the (terminated) StreamingQuery.
     """
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            current = table.read_stage(stage_name)
-        except KeyError:
+    def fold(current, batch_df: DataFrame) -> DataFrame:
+        if current is None:
             # first batch: an empty frame with the pyramid schema
             current = TI.tile_pyramid(
                 batch_df.limit(0), resolutions, lng_col, lat_col
@@ -61,18 +62,6 @@ def streaming_pyramid_sink(
         delta = TI.tile_pyramid_delta(
             current, batch_df, resolutions, lng_col, lat_col
         )
-        updated = MG.merge_upsert(current, delta, ["res", "cell"])
-        table.stage(
-            stage_name,
-            f"ck={checkpoint_dir}|batch:{batch_id}",
-            lambda: updated,
-        )
+        return MG.merge_upsert(current, delta, ["res", "cell"])
 
-    q = (
-        points_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return fold_sink(points_stream, table, stage_name, checkpoint_dir, fold)

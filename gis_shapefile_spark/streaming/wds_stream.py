@@ -9,7 +9,7 @@ duplicated shard silently doubles those samples' epoch frequency).
 Composition: ``sources/webdataset.write_shards`` already writes one tar
 per partition with atomic tmp+rename publish and byte-identical
 re-writes; this sink namespaces each micro-batch's shards with a
-``shard-b<batch id>-<checkpoint identity>`` prefix and short-circuits
+``shard-b<batch id>-<sink.lineage_id>`` prefix and short-circuits
 when that batch's shards already exist — the same marker-dir
 exactly-once pattern as the takedown and IVF-index sinks (rename IS the
 commit; a crash between publish and stream-commit replays into a no-op
@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources import webdataset as W
-from .takedown_stream import _checkpoint_identity
+from .sink import drain_batches, lineage_id
 
 
 def streaming_wds_sink(
@@ -42,22 +42,14 @@ def streaming_wds_sink(
     checkpoint_dir: str,
 ):
     """Export each micro-batch of image rows as WebDataset tar shards
-    under ``out_dir``; returns the (terminated) StreamingQuery
-    (availableNow trigger — one call drains the feed's current files).
+    under ``out_dir``; returns the (terminated) StreamingQuery (one call
+    drains the feed's current files).
     """
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        ck = _checkpoint_identity(checkpoint_dir)
-        prefix = f"shard-b{batch_id:06d}-{ck}"
+        prefix = f"shard-b{batch_id:06d}-{lineage_id(checkpoint_dir)}"
         if W.list_shards(out_dir, prefix):
             return  # replayed batch: its shards are already published
         W.write_shards(batch_df, out_dir, prefix=prefix).collect()
 
-    q = (
-        images_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return drain_batches(images_stream, checkpoint_dir, process)

@@ -6,8 +6,9 @@ The reference's ``SpatialIndex::pointInPolygon`` (spatial_index.cpp:
 out. These tests assert, per the SURVEY §5 parity caveat:
 
 (a) the engine's candidate set equals the oracle's bbox-candidate set,
-(b) the engine-compat mode (``mode="ref_first_hit"``) returns the same
-    record as the oracle's insertion-order traversal emulation,
+(b) the engine-compat join (``point_in_polygon_join_first_hit``)
+    returns the same record as the oracle's insertion-order traversal
+    emulation,
 
 plus the structural theorem the distributed plan relies on (first
 traversal hit == minimum DFS-leaf rank among intersecting records) and
@@ -111,13 +112,12 @@ def test_ref_first_hit_mode_matches_oracle(spark):
         if idx is not None:
             expected[int(t.point_id)] = recs[idx]
 
-    out = SJ.point_in_polygon_join(
+    out = RP.point_in_polygon_join_first_hit(
         spark,
         spark.createDataFrame(pts_pdf),
         feats,
         res=6,
         point_id_col="point_id",
-        mode="ref_first_hit",
     )
     got = {int(r["point_id"]): int(r["record_number"]) for r in out.collect()}
     assert got == expected
@@ -156,8 +156,8 @@ def test_ref_mode_agrees_with_exact_on_unambiguous_fixture(spark):
         }
     )
     pts = spark.createDataFrame(pts_pdf)
-    compat = SJ.point_in_polygon_join(
-        spark, pts, feats, res=6, point_id_col="point_id", mode="ref_first_hit"
+    compat = RP.point_in_polygon_join_first_hit(
+        spark, pts, feats, res=6, point_id_col="point_id"
     )
     exact = SJ.point_in_polygon_join(
         spark, pts, feats, res=6, point_id_col="point_id"

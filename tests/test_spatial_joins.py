@@ -844,5 +844,6 @@ def test_pip_plan_has_no_python_and_scans_points_once(spark, exact_case, tmp_pat
     ):
         once = _executed_plan(df)
         assert once.count("aggregate(") == 2, once
-    streamed = _executed_plan(SJ.pip_matches_stateless(pts, index))
+    streamed = _executed_plan(SJ.point_in_polygon_join(
+        spark, pts, index, res=EX_RES, dedup_first=False))
     assert not [n for n in PYTHON_NODES if n in streamed], streamed

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gis_shapefile_spark.streaming import events as EV
+from gis_shapefile_spark.streaming.sink import read_parquet_stream
 
 SRC = "/root/testdata/sf0.001/events.parquet"
 
@@ -21,7 +22,7 @@ def events_dir(spark, tmp_path_factory):
 
 
 def test_windowed_counts_match_batch(spark, events_dir, tmp_path):
-    stream = EV.read_events_stream(spark, events_dir, max_files_per_trigger=1)
+    stream = read_parquet_stream(spark, events_dir, EV.EVENTS_SCHEMA, max_files_per_trigger=1)
     win = EV.windowed_event_counts(stream)
     EV.run_to_memory(
         win, "win_test", str(tmp_path / "ckpt"), output_mode="complete"
@@ -46,7 +47,7 @@ def test_windowed_counts_match_batch(spark, events_dir, tmp_path):
 
 
 def test_stateful_running_totals(spark, events_dir, tmp_path):
-    stream = EV.read_events_stream(spark, events_dir, max_files_per_trigger=1)
+    stream = read_parquet_stream(spark, events_dir, EV.EVENTS_SCHEMA, max_files_per_trigger=1)
     tot = EV.running_user_totals(stream)
     EV.run_to_memory(tot, "tot_test", str(tmp_path / "ckpt2"), output_mode="update")
     # memory sink accumulates one row per (user, micro-batch); the running
@@ -125,7 +126,7 @@ def test_streaming_dedup_across_microbatches(spark, tmp_path):
     src.repartition(2).write.parquet(d)
     src.repartition(3).write.mode("append").parquet(d)
 
-    stream = EV.read_events_stream(spark, d, max_files_per_trigger=2)
+    stream = read_parquet_stream(spark, d, EV.EVENTS_SCHEMA, max_files_per_trigger=2)
     deduped = EV.dedup_events_stream(stream)
     EV.run_to_memory(
         deduped, "dedup_stream", str(tmp_path / "ck"), output_mode="append"
@@ -143,7 +144,7 @@ def test_stream_stream_attribution_matches_batch(spark, events_dir, tmp_path):
         return (df.where(F.col("event_type") == "click"),
                 df.where(F.col("event_type") == "purchase"))
 
-    sc, sp = split(EV.read_events_stream(spark, events_dir, max_files_per_trigger=2))
+    sc, sp = split(read_parquet_stream(spark, events_dir, EV.EVENTS_SCHEMA, max_files_per_trigger=2))
     out = EV.attribution_join_stream(sc, sp)
     EV.run_to_memory(out, "attr_stream", str(tmp_path / "ck_attr"),
                      output_mode="append")

@@ -12,6 +12,7 @@ from gis_shapefile_spark.operators import spatial_join as SJ
 from gis_shapefile_spark.sources import fixtures as FX
 from gis_shapefile_spark.streaming import events as EV
 from gis_shapefile_spark.streaming import geocode_stream as GS
+from gis_shapefile_spark.streaming.sink import read_parquet_stream
 
 N_POINTS = 4000
 
@@ -37,30 +38,42 @@ def points_dir(spark, tmp_path_factory):
 
 
 def test_stream_static_matches_batch(spark, index, points_dir, tmp_path):
-    stream = GS.read_points_stream(spark, points_dir, max_files_per_trigger=1)
-    matches = GS.streaming_pip_matches(stream, index)
-    EV.run_to_memory(
-        matches, "pip_stream", str(tmp_path / "ckpt"), output_mode="append"
-    )
-    got = {
-        (r.point_id, r.record_number)
-        for r in spark.sql("SELECT point_id, record_number FROM pip_stream").collect()
-    }
-    batch = SJ.point_in_polygon_join(
-        spark, spark.read.parquet(points_dir), index,
-        point_id_col="point_id", dedup_first=False,
-    )
-    exp = {
-        (r.point_id, r.record_number)
-        for r in batch.select("point_id", "record_number").collect()
-    }
-    assert got == exp and len(got) > 0
+    """The PIP join applied to the stream itself drains in append mode and
+    equals the batch join: every hit, and the default first hit (the
+    smallest containing record_number, window-free)."""
+    for dedup_first in (False, True):
+        stream = read_parquet_stream(
+            spark, points_dir, GS.POINTS_SCHEMA, max_files_per_trigger=1
+        )
+        matches = SJ.point_in_polygon_join(
+            spark, stream, index, point_id_col="point_id", dedup_first=dedup_first
+        )
+        table = f"pip_stream_{int(dedup_first)}"
+        EV.run_to_memory(
+            matches, table, str(tmp_path / f"ckpt{int(dedup_first)}"),
+            output_mode="append",
+        )
+        got = sorted(
+            (r.point_id, r.record_number)
+            for r in spark.sql(f"SELECT point_id, record_number FROM {table}").collect()
+        )
+        batch = SJ.point_in_polygon_join(
+            spark, spark.read.parquet(points_dir), index,
+            point_id_col="point_id", dedup_first=dedup_first,
+        )
+        exp = sorted(
+            (r.point_id, r.record_number)
+            for r in batch.select("point_id", "record_number").collect()
+        )
+        assert got == exp and len(got) > 0, dedup_first
+        if dedup_first:
+            assert len({p for p, _ in got}) == len(got)  # one row per point
 
 
 def test_foreachbatch_sink_and_resume(spark, index, points_dir, tmp_path):
     out = str(tmp_path / "geocoded")
     ckpt = str(tmp_path / "ckpt_sink")
-    stream = GS.read_points_stream(spark, points_dir, max_files_per_trigger=2)
+    stream = read_parquet_stream(spark, points_dir, GS.POINTS_SCHEMA, max_files_per_trigger=2)
     GS.streaming_geocode_to_parquet(
         spark, stream, index, out, ckpt, attrs=["NAME_1"]
     )
@@ -84,7 +97,7 @@ def test_foreachbatch_sink_and_resume(spark, index, points_dir, tmp_path):
     _synth_points(spark, 500, start=N_POINTS).repartition(1).write.mode(
         "append"
     ).parquet(points_dir)
-    stream2 = GS.read_points_stream(spark, points_dir, max_files_per_trigger=2)
+    stream2 = read_parquet_stream(spark, points_dir, GS.POINTS_SCHEMA, max_files_per_trigger=2)
     GS.streaming_geocode_to_parquet(
         spark, stream2, index, out, ckpt, attrs=["NAME_1"]
     )
@@ -107,7 +120,7 @@ def test_foreachbatch_checkpoint_table_lineage(spark, index, tmp_path):
     d = str(tmp_path / "pts2")
     _synth_points(spark, 1500).repartition(3).write.parquet(d)
     table = CheckpointTable(spark, str(tmp_path / "ck_table"))
-    stream = GS.read_points_stream(spark, d, max_files_per_trigger=1)
+    stream = read_parquet_stream(spark, d, GS.POINTS_SCHEMA, max_files_per_trigger=1)
     GS.streaming_geocode_to_parquet(
         spark, stream, index, out_dir="unused", checkpoint_dir=str(tmp_path / "ck"),
         table=table,
@@ -183,8 +196,8 @@ def test_streaming_geofence_matches_batch(spark, points_dir, tmp_path):
 
     feats = FX.make_grid_features()
     km = 150.0
-    stream = GS.read_points_stream(spark, points_dir, max_files_per_trigger=1)
-    alerts = GS.streaming_geofence_matches(spark, stream, feats, km=km)
+    stream = read_parquet_stream(spark, points_dir, GS.POINTS_SCHEMA, max_files_per_trigger=1)
+    alerts = GEO.geodesic_within_km(spark, stream, feats, km=km)
     EV.run_to_memory(
         alerts.select("point_id", "record_number", "gdist_m"),
         "geofence_stream", str(tmp_path / "ckpt_geo"), output_mode="append",

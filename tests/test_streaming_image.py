@@ -20,6 +20,7 @@ from gis_shapefile_spark.operators import tiling as TI
 from gis_shapefile_spark.sources import fixtures as FX
 from gis_shapefile_spark.streaming import events as EV
 from gis_shapefile_spark.streaming import image_stream as IS
+from gis_shapefile_spark.streaming.sink import read_parquet_stream
 
 N_IMAGES = 900
 RES = 6
@@ -45,7 +46,7 @@ def images_dir(spark, tmp_path_factory):
 
 
 def test_stream_events_match_batch(spark, index, images_dir, tmp_path):
-    stream = IS.read_images_stream(spark, images_dir, max_files_per_trigger=1)
+    stream = read_parquet_stream(spark, images_dir, IS.IMAGES_SCHEMA, max_files_per_trigger=1)
     events = IS.streaming_tile_events(stream, index)
     EV.run_to_memory(
         events, "img_events", str(tmp_path / "ckpt"), output_mode="append"
@@ -67,8 +68,8 @@ def test_stream_events_match_batch(spark, index, images_dir, tmp_path):
 
 
 def test_stream_rollup_matches_batch(spark, index, images_dir, tmp_path):
-    stream = IS.read_images_stream(spark, images_dir, max_files_per_trigger=1)
-    rollup = IS.streaming_tile_rollup(IS.streaming_tile_events(stream, index))
+    stream = read_parquet_stream(spark, images_dir, IS.IMAGES_SCHEMA, max_files_per_trigger=1)
+    rollup = TI.tile_rollup(IS.streaming_tile_events(stream, index))
     EV.run_to_memory(
         rollup, "img_rollup", str(tmp_path / "ckpt"), output_mode="complete"
     )
@@ -81,8 +82,8 @@ def test_stream_rollup_matches_batch(spark, index, images_dir, tmp_path):
     }
     exp = {
         (r.record_number, r.cell, r.n_images, r.n_bytes, r.n_phash_ok)
-        for r in IS.batch_tile_rollup(
-            spark.read.parquet(images_dir), index
+        for r in TI.tile_rollup(
+            IS.streaming_tile_events(spark.read.parquet(images_dir), index)
         ).collect()
     }
     assert got == exp and len(got) > 0
@@ -97,7 +98,7 @@ def test_batch_twin_agrees_with_flagship_pipeline(spark, index, images_dir):
     images = spark.read.parquet(images_dir)
     twin = {
         (r.record_number, r.cell, r.n_images, r.n_bytes, r.n_phash_ok)
-        for r in IS.batch_tile_rollup(images, index).collect()
+        for r in TI.tile_rollup(IS.streaming_tile_events(images, index)).collect()
     }
     flagship = TI.image_tiling_pipeline(
         spark, images, FX.make_grid_features(), res=RES
@@ -134,9 +135,8 @@ def test_stream_ar_bucket_matches_batch(spark, varied_images_dir, tmp_path):
     ingest job."""
     from gis_shapefile_spark.operators import arbucket as AR
 
-    stream = IS.read_images_stream(
-        spark, varied_images_dir, schema=VARIED_SCHEMA,
-        max_files_per_trigger=1,
+    stream = read_parquet_stream(
+        spark, varied_images_dir, VARIED_SCHEMA, max_files_per_trigger=1
     )
     assigned = AR.assign_ar_buckets(stream)
     EV.run_to_memory(
