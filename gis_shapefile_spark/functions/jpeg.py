@@ -13,14 +13,23 @@ Scope — the baseline sequential DCT process:
   intervals (DRI/RSTn), byte stuffing, APPn/COM skip.  Progressive
   (SOF2) and arithmetic coding raise ``NotImplementedError`` loudly —
   same honest-seam policy as the other codecs.
+- ``decode_jpeg_batch``: the same decoder over a batch (the images of
+  one Arrow batch), equal to ``decode_jpeg`` pixel for pixel and
+  accepting and rejecting exactly the same streams.
 - ``encode_jpeg``: baseline 4:4:4 JFIF with Annex K quantization
   tables under the IJG quality scaling and Annex K Huffman tables.
 
-The hot math (color transform, 8x8 DCT/IDCT, quantization, zigzag) is
-vectorized over ALL blocks of an image at once; only the entropy
-coding walks symbols sequentially, inside the same Arrow-batched
-``mapInPandas`` seam as the PNG/zlib codecs (decode parallelism comes
-from source splits — see ``operators/multimodal.py``).
+Both decoders share the header parser and the pixel back end
+(dequantize, 8x8 IDCT, chroma upsampling, colour transform), which is
+vectorized over all blocks of all images of a call. The entropy decode
+is the one sequential part: ``decode_jpeg`` walks one image's Huffman
+symbols in a Python loop, while ``decode_jpeg_batch`` advances one
+symbol of every same-shaped image per numpy step (one image per lane),
+so the interpreter runs once per symbol position, not once per symbol
+per image. Calls with fewer lanes than the measured break-even use the
+per-image loop. All of it runs inside the Arrow-batched ``mapInPandas``
+seam (decode parallelism comes from source splits — see
+``operators/multimodal.py``).
 
 External validation (tests/test_jpeg.py): both directions are checked
 against the JVM's independent ``javax.imageio`` decoder through
@@ -35,7 +44,7 @@ from __future__ import annotations
 
 import numpy as np
 
-__all__ = ["encode_jpeg", "decode_jpeg"]
+__all__ = ["encode_jpeg", "decode_jpeg", "decode_jpeg_batch"]
 
 # ---------------------------------------------------------------- constants
 
@@ -164,7 +173,9 @@ def _lookahead_table(bits: list[int], vals: list[int]) -> tuple[list[int], list[
     symbol (the classic libjpeg fast path; JPEG codes are <= 16 bits so
     the table is total). Slots no code owns keep length 0 = invalid.
     Returned as plain Python lists: per-symbol list indexing is ~3x a
-    numpy scalar index in the sequential entropy loop.
+    numpy scalar index in the sequential entropy loop. The lockstep
+    decoder packs its per-peek entries from these same tables
+    (``_packed_table``), so both decoders read one code assignment.
 
     Memoized on the raw (BITS ‖ HUFFVAL) bytes: building the 65k-slot
     tables costs ~1 ms, which would dominate SMALL images (measured: it
@@ -214,11 +225,18 @@ def _rgb_to_ycbcr(rgb: np.ndarray) -> np.ndarray:
 
 
 def _ycbcr_to_rgb(y: np.ndarray, cb: np.ndarray, cr: np.ndarray) -> np.ndarray:
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136286 * (cb - 128.0) - 0.714136286 * (cr - 128.0)
-    b = y + 1.772 * (cb - 128.0)
-    rgb = np.stack([r, g, b], axis=-1)
-    return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
+    """float YCbCr planes (any leading shape) -> (..., 3) uint8 RGB, each
+    channel rounded and clipped in place straight into the output."""
+    cb = cb - 128.0
+    cr = cr - 128.0
+    out = np.empty(y.shape + (3,), dtype=np.uint8)
+    rgb = (y + 1.402 * cr, y - 0.344136286 * cb - 0.714136286 * cr, y + 1.772 * cb)
+    for c, v in enumerate(rgb):
+        np.rint(v, out=v)
+        np.maximum(v, 0.0, out=v)
+        np.minimum(v, 255.0, out=v)
+        out[..., c] = v
+    return out
 
 
 def _to_blocks(plane: np.ndarray) -> np.ndarray:
@@ -424,57 +442,82 @@ def _split_entropy_segments(data: bytes, pos: int) -> list[tuple[bytes, bool]]:
         return segs  # EOI or next header segment: scan is over
 
 
-def _upsample2(plane: np.ndarray, axis: int) -> np.ndarray:
-    """2x chroma upsampling with the triangular filter (libjpeg's "fancy
-    upsampling": out_even = (3*cur + prev)/4, out_odd = (3*cur + next)/4,
-    edges replicated). Matches javax.imageio within ~51+ dB on real 4:2:0
-    camera JPEGs where nearest-neighbor diverges to ~38 dB on sharp-chroma
-    content (measured, tests/test_jpeg.py)."""
-    cur = plane
-    if axis == 1:
-        prev = np.concatenate([cur[:, :1], cur[:, :-1]], axis=1)
-        nxt = np.concatenate([cur[:, 1:], cur[:, -1:]], axis=1)
-        out = np.empty((cur.shape[0], cur.shape[1] * 2), dtype=np.float64)
-        out[:, 0::2] = (3.0 * cur + prev) * 0.25
-        out[:, 1::2] = (3.0 * cur + nxt) * 0.25
-    else:
-        prev = np.concatenate([cur[:1], cur[:-1]], axis=0)
-        nxt = np.concatenate([cur[1:], cur[-1:]], axis=0)
-        out = np.empty((cur.shape[0] * 2, cur.shape[1]), dtype=np.float64)
-        out[0::2] = (3.0 * cur + prev) * 0.25
-        out[1::2] = (3.0 * cur + nxt) * 0.25
-    return out
+def _upsample2(planes: np.ndarray, axis: int) -> np.ndarray:
+    """2x chroma upsampling of a (L, H, W) plane stack along ``axis``
+    (-1 horizontal, -2 vertical) with the triangular filter (libjpeg's
+    "fancy upsampling": out_even = (3*cur + prev)/4, out_odd = (3*cur +
+    next)/4, edges replicated). Matches javax.imageio within ~51+ dB on
+    real 4:2:0 camera JPEGs where nearest-neighbor diverges to ~38 dB on
+    sharp-chroma content (measured, tests/test_jpeg.py)."""
+    cur = np.moveaxis(planes, axis, -1)
+    prev = np.concatenate([cur[..., :1], cur[..., :-1]], axis=-1)
+    nxt = np.concatenate([cur[..., 1:], cur[..., -1:]], axis=-1)
+    out = np.empty(cur.shape[:-1] + (cur.shape[-1] * 2,), dtype=np.float64)
+    out[..., 0::2] = (3.0 * cur + prev) * 0.25
+    out[..., 1::2] = (3.0 * cur + nxt) * 0.25
+    return np.moveaxis(out, -1, axis)
 
 
-def decode_jpeg(data: bytes) -> np.ndarray:
-    """Baseline JPEG bytes -> (h, w, 3) uint8 RGB.
+# Corruption that surfaces as a container error while parsing foreign
+# bytes; both decoders re-raise it as ValueError (see decode_jpeg).
+_CORRUPT = (KeyError, IndexError, OverflowError)
 
-    Reads quantization + Huffman tables from the stream (a real decoder,
-    not a mirror of our encoder's constants): handles 1-4 components,
-    sampling factors 1-2, 16-bit DQT precision, DRI/RSTn, byte stuffing.
-    Grayscale output is replicated to 3 channels to keep the engine's
-    (h, w, 3) contract.
 
-    Corruption contract (foreign bytes at corpus scale): malformed input
-    raises ValueError (or NotImplementedError for honest codec gaps) —
-    never an untyped container error, never a corruption-sized
-    allocation. The hot structural hazards are validated explicitly
-    (dimension cap, undefined DQT/DHT ids, DC size); entropy-level
-    corruption that surfaces as a residual KeyError/IndexError/
-    OverflowError in segment parsing is re-raised as ValueError here
-    (4k-trial byte-flip fuzz in tests/test_jpeg.py).
+def _corrupt(e: Exception) -> ValueError:
+    return ValueError(f"corrupt JPEG stream: {e!r}")
+
+
+class _Header:
+    """Everything before the entropy-coded data, plus the MCU geometry.
+
+    ``tables[ci]`` is the component's ((DC key, DC lookahead), (AC key, AC
+    lookahead)) pair, keys being the raw BITS‖HUFFVAL bytes. ``shape_key``
+    holds everything the entropy decode and the pixel back end's array
+    shapes depend on; images with equal keys decode in one lockstep
+    batch (their quantization tables may differ: ``_quant`` is per image).
     """
-    try:
-        return _decode_jpeg_checked(data)
-    except (KeyError, IndexError, OverflowError) as e:
-        raise ValueError(f"corrupt JPEG stream: {e!r}") from e
+
+    __slots__ = ("h", "w", "comps", "qt", "tables", "restart_interval",
+                 "scan_start", "hmax", "vmax", "mcus_x", "mcus_y", "bpm",
+                 "shape_key", "_q")
+
+    def __init__(self, frame, scan_tables, qt, huff, restart_interval, scan_start):
+        h, w, comps = frame
+        self.h, self.w, self.comps = h, w, comps
+        self.hmax = max(c[1] for c in comps)
+        self.vmax = max(c[2] for c in comps)
+        self.mcus_x = -(-w // (8 * self.hmax))
+        self.mcus_y = -(-h // (8 * self.vmax))
+        self.bpm = sum(hs * vs for _cid, hs, vs, _tq in comps)  # blocks per MCU
+        tables = []
+        for cid, _hs, _vs, _tq in comps:
+            if cid not in scan_tables:
+                raise ValueError(f"JPEG scan missing component id {cid}")
+            td, ta = scan_tables[cid]
+            if (0, td) not in huff or (1, ta) not in huff:
+                raise ValueError("JPEG scan references undefined Huffman table")
+            tables.append((huff[(0, td)], huff[(1, ta)]))
+        self.tables = tables
+        self.qt = qt
+        self.restart_interval = restart_interval
+        self.scan_start = scan_start
+        self.shape_key = (
+            h, w, tuple((hs, vs) for _cid, hs, vs, _tq in comps),
+            tuple((dc[0], ac[0]) for dc, ac in tables), restart_interval,
+        )
+        self._q = None
+
+    @property
+    def n_blocks(self) -> int:
+        return self.mcus_x * self.mcus_y * self.bpm
 
 
-def _decode_jpeg_checked(data: bytes) -> np.ndarray:
+def _parse_header(data: bytes) -> _Header:
+    """SOI .. SOS: frame, DQT/DHT tables, DRI; validates the scan setup."""
     if len(data) < 4 or data[0:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     qt: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
+    huff: dict[tuple[int, int], tuple[bytes, tuple[list[int], list[int]]]] = {}
     restart_interval = 0
     frame = None  # (h, w, comps) where comps = [(cid, hs, vs, tq)]
     pos = 2
@@ -512,7 +555,9 @@ def _decode_jpeg_checked(data: bytes) -> np.ndarray:
                 bits = list(seg[i + 1 : i + 17])
                 nvals = sum(bits)
                 vals = list(seg[i + 17 : i + 17 + nvals])
-                huff[(tc, th)] = _lookahead_table(bits, vals)
+                huff[(tc, th)] = (
+                    bytes(bits) + bytes(vals), _lookahead_table(bits, vals)
+                )
                 i += 17 + nvals
         elif marker in (0xC0, 0xC1):  # SOF0/SOF1 baseline
             h = int.from_bytes(seg[1:3], "big")
@@ -551,52 +596,142 @@ def _decode_jpeg_checked(data: bytes) -> np.ndarray:
                 cid = seg[1 + 2 * c]
                 td, ta = seg[2 + 2 * c] >> 4, seg[2 + 2 * c] & 15
                 scan_tables[cid] = (td, ta)
-            return _decode_scan(
-                data, pos + 2 + seg_len, frame, scan_tables, qt, huff,
-                restart_interval,
+            return _Header(
+                frame, scan_tables, qt, huff, restart_interval, pos + 2 + seg_len
             )
         pos += 2 + seg_len
     raise ValueError("JPEG has no scan (SOS) segment")
 
 
-def _decode_scan(
-    data: bytes,
-    scan_start: int,
-    frame: tuple[int, int, list[tuple[int, int, int, int]]],
-    scan_tables: dict[int, tuple[int, int]],
-    qt: dict[int, np.ndarray],
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]],
-    restart_interval: int,
-) -> np.ndarray:
-    h, w, comps = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcus_x = -(-w // (8 * hmax))
-    mcus_y = -(-h // (8 * vmax))
-    n_mcus = mcus_x * mcus_y
+def _quant(hdr: _Header) -> np.ndarray:
+    """(n_components, 64) float64 raster quantization tables of one header."""
+    if hdr._q is None:
+        for _cid, _hs, _vs, tq in hdr.comps:
+            if tq not in hdr.qt:
+                raise ValueError(f"JPEG frame references undefined DQT id {tq}")
+        hdr._q = np.stack([hdr.qt[tq].astype(np.float64) for *_c, tq in hdr.comps])
+    return hdr._q
 
-    # Entropy-decode everything first (sequential; one 16-bit-lookahead
-    # list index per Huffman symbol — see _lookahead_table), then
-    # dequantize + IDCT + assemble vectorized over all blocks per
-    # component. The scan is pre-split at RSTn boundaries and un-stuffed
-    # at C speed so the Python loop never inspects marker bytes.
-    segs = _split_entropy_segments(data, scan_start)
+
+def _predict_dc(coef: np.ndarray, hdr: _Header) -> None:
+    """Turn the DC differences in ``coef[:, :, 0]`` into DC values in place.
+
+    coef is (L, n_blocks, 64) in MCU order. The predictor of each
+    component runs over its blocks in scan order and resets to 0 at every
+    restart interval (F.2.1.3.1). Summed in int64 and stored as int32
+    (wrapping, as the int32 coefficient rows always did).
+    """
+    n_lanes = coef.shape[0]
+    n_mcus = hdr.mcus_x * hdr.mcus_y
+    ri = hdr.restart_interval or n_mcus
+    n_int = -(-n_mcus // ri)
+    dc = np.zeros((n_lanes, n_int * ri, hdr.bpm), dtype=np.int64)
+    dc[:, :n_mcus] = coef[:, :, 0].reshape(n_lanes, n_mcus, hdr.bpm)
+    dc = dc.reshape(n_lanes, n_int, ri, hdr.bpm)
+    off = 0
+    for _cid, hs, vs, _tq in hdr.comps:
+        nb = hs * vs
+        part = dc[..., off : off + nb].reshape(n_lanes, n_int, ri * nb)
+        dc[..., off : off + nb] = part.cumsum(axis=-1).reshape(n_lanes, n_int, ri, nb)
+        off += nb
+    coef[:, :, 0] = dc.reshape(n_lanes, n_int * ri, hdr.bpm)[:, :n_mcus].reshape(
+        n_lanes, -1
+    )
+
+
+def _pixels(hdr: _Header, coef: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """Pixel back end shared by both decoders, vectorized over the batch.
+
+    coef: (L, n_blocks, 64) int32 zigzag coefficients in MCU order with DC
+    values (``_predict_dc``); q: (L, n_components, 64) raster quantization
+    tables. Dequantize + IDCT + plane assembly + chroma upsampling +
+    colour conversion -> (L, h, w, 3) uint8 RGB (grayscale replicated).
+    """
+    if len(hdr.comps) not in (1, 3):
+        raise NotImplementedError(f"{len(hdr.comps)}-component JPEG not supported")
+    n_lanes = coef.shape[0]
+    mcus_y, mcus_x = hdr.mcus_y, hdr.mcus_x
+    by_mcu = coef.reshape(n_lanes, mcus_y * mcus_x, hdr.bpm, 64)
+    planes = []
+    off = 0
+    for ci, (_cid, hs, vs, _tq) in enumerate(hdr.comps):
+        raster = np.take(by_mcu[:, :, off : off + hs * vs], _UNZIG, axis=-1).astype(
+            np.float64
+        )
+        off += hs * vs
+        raster *= q[:, ci, None, None, :]
+        blocks = raster.reshape(-1, 8, 8)
+        # C.T @ B @ C as two broadcast matmuls (see encoder note on einsum)
+        pix = _C.T @ blocks @ _C
+        pix += 128.0
+        # Assemble MCU-interleaved blocks into the component plane.
+        # block index = m * bpm + off + v*hs + hh, m raster over (mcus_y, mcus_x)
+        b7 = pix.reshape(n_lanes, mcus_y, mcus_x, vs, hs, 8, 8)
+        plane = b7.transpose(0, 1, 3, 5, 2, 4, 6).reshape(
+            n_lanes, mcus_y * vs * 8, mcus_x * hs * 8
+        )
+        # Upsample to full resolution (triangular filter, see _upsample2;
+        # sampling factors are 1-2 so each axis needs at most one doubling).
+        if hs != hdr.hmax:
+            plane = _upsample2(plane, axis=-1)
+        if vs != hdr.vmax:
+            plane = _upsample2(plane, axis=-2)
+        planes.append(plane[:, : hdr.h, : hdr.w])
+    if len(planes) == 1:
+        y = np.clip(np.round(planes[0]), 0, 255).astype(np.uint8)
+        return np.repeat(y[..., None], 3, axis=-1)
+    return _ycbcr_to_rgb(planes[0], planes[1], planes[2])
+
+
+def decode_jpeg(data: bytes) -> np.ndarray:
+    """Baseline JPEG bytes -> (h, w, 3) uint8 RGB.
+
+    Reads quantization + Huffman tables from the stream (a real decoder,
+    not a mirror of our encoder's constants): handles 1-4 components,
+    sampling factors 1-2, 16-bit DQT precision, DRI/RSTn, byte stuffing.
+    Grayscale output is replicated to 3 channels to keep the engine's
+    (h, w, 3) contract.
+
+    The single-image path, and the reference ``decode_jpeg_batch`` is
+    tested against: its entropy decode (``_decode_scan``) walks the
+    symbols in a Python loop.
+
+    Corruption contract (foreign bytes at corpus scale): malformed input
+    raises ValueError (or NotImplementedError for honest codec gaps) —
+    never an untyped container error, never a corruption-sized
+    allocation. The hot structural hazards are validated explicitly
+    (dimension cap, undefined DQT/DHT ids, DC size); entropy-level
+    corruption that surfaces as a residual KeyError/IndexError/
+    OverflowError in segment parsing is re-raised as ValueError here
+    (4k-trial byte-flip fuzz in tests/test_jpeg.py).
+    """
+    try:
+        hdr = _parse_header(data)
+        coef = _decode_scan(data, hdr)[None]
+        _predict_dc(coef, hdr)
+        return _pixels(hdr, coef, _quant(hdr)[None])[0]
+    except _CORRUPT as e:
+        raise _corrupt(e) from e
+
+
+def _decode_scan(data: bytes, hdr: _Header) -> np.ndarray:
+    """Sequential entropy decode of one image -> (n_blocks, 64) int32
+    zigzag coefficients in MCU order, DC as differences (``_predict_dc``).
+
+    One 16-bit-lookahead list index per Huffman symbol (see
+    ``_lookahead_table``). The scan is pre-split at RSTn boundaries and
+    un-stuffed at C speed so the Python loop never inspects marker bytes.
+    """
+    n_mcus = hdr.mcus_x * hdr.mcus_y
+    restart_interval = hdr.restart_interval
+    segs = _split_entropy_segments(data, hdr.scan_start)
     seg_i = 0
-    coef = []  # per component: (n_mcus * hs * vs, 64) int32 zigzag blocks
-    for _cid, hs, vs, _tq in comps:
-        coef.append(np.zeros((n_mcus * hs * vs, 64), dtype=np.int32))
-    # (component, block-in-MCU) schedule with tables resolved once
-    sched = []
-    for ci, (cid, hs, vs, _tq) in enumerate(comps):
-        if cid not in scan_tables:
-            raise ValueError(f"JPEG scan missing component id {cid}")
-        td, ta = scan_tables[cid]
-        if (0, td) not in huff or (1, ta) not in huff:
-            raise ValueError("JPEG scan references undefined Huffman table")
-        dc_sym, dc_len = huff[(0, td)]
-        ac_sym, ac_len = huff[(1, ta)]
-        sched.append((ci, hs * vs, dc_sym, dc_len, ac_sym, ac_len))
-    pred = [0] * len(comps)
+    coef = np.zeros((hdr.n_blocks, 64), dtype=np.int32)
+    # per component: blocks per MCU with its lookahead tables
+    sched = [
+        (hs * vs, dc[1][0], dc[1][1], ac[1][0], ac[1][1])
+        for (_cid, hs, vs, _tq), (dc, ac) in zip(hdr.comps, hdr.tables)
+    ]
     # The bit buffer lives in LOCALS (acc/nbits/spos), not a reader object:
     # this loop runs once per Huffman symbol and the method-call version
     # spent a third of its time on call overhead (profiled). Invariant at
@@ -608,6 +743,7 @@ def _decode_scan(
     spos = 0
     acc = 0
     nbits = 0
+    row = 0
     for m in range(n_mcus):
         if restart_interval and m and m % restart_interval == 0:
             seg_i += 1
@@ -618,11 +754,8 @@ def _decode_scan(
             spos = 0
             acc = 0
             nbits = 0
-            pred = [0] * len(comps)
-        for ci, nblk, dc_sym, dc_len, ac_sym, ac_len in sched:
-            out = coef[ci]
-            pci = pred[ci]
-            for b in range(nblk):
+        for nblk, dc_sym, dc_len, ac_sym, ac_len in sched:
+            for _b in range(nblk):
                 blk = [0] * 64
                 while nbits < 32:
                     take = sn - spos
@@ -652,8 +785,7 @@ def _decode_scan(
                     v = (acc >> nbits) & ((1 << size) - 1)
                     if v < (1 << (size - 1)):
                         v -= (1 << size) - 1
-                    pci += v
-                blk[0] = pci
+                    blk[0] = v
                 k = 1
                 while k < 64:
                     while nbits < 32:
@@ -695,35 +827,330 @@ def _decode_scan(
                     blk[k] = v
                     k += 1
                 acc &= (1 << nbits) - 1  # trim consumed high bits
-                out[m * nblk + b] = blk
-            pred[ci] = pci
+                coef[row] = blk
+                row += 1
+    return coef
 
-    planes = []
-    for ci, (_cid, hs, vs, tq) in enumerate(comps):
-        if tq not in qt:
-            raise ValueError(f"JPEG frame references undefined DQT id {tq}")
-        q = qt[tq].astype(np.float64)
-        zz = coef[ci].astype(np.float64)
-        raster = zz[:, _UNZIG] * q[None, :]
-        blocks = raster.reshape(-1, 8, 8)
-        # C.T @ B @ C as two broadcast matmuls (see encoder note on einsum)
-        pix = _C.T @ blocks @ _C + 128.0
-        # Assemble MCU-interleaved blocks into the component plane.
-        # block index = m * hs*vs + v*hs + hh, m raster over (mcus_y, mcus_x)
-        pw, ph = mcus_x * hs * 8, mcus_y * vs * 8
-        b5 = pix.reshape(mcus_y, mcus_x, vs, hs, 8, 8)
-        plane = b5.transpose(0, 2, 4, 1, 3, 5).reshape(ph, pw)
-        # Upsample to full resolution (triangular filter, see _upsample2;
-        # sampling factors are 1-2 so each axis needs at most one doubling).
-        if hs != hmax:
-            plane = _upsample2(plane, axis=1)
-        if vs != vmax:
-            plane = _upsample2(plane, axis=0)
-        planes.append(plane[:h, :w])
 
-    if len(planes) == 1:
-        y = np.clip(np.round(planes[0]), 0, 255).astype(np.uint8)
-        return np.repeat(y[..., None], 3, axis=2)
-    if len(planes) != 3:
-        raise NotImplementedError(f"{len(planes)}-component JPEG not supported")
-    return _ycbcr_to_rgb(planes[0], planes[1], planes[2])
+# ---------------------------------------------------------------- lockstep
+#
+# ``decode_jpeg_batch`` decodes the images of one header shape together,
+# one image per lane. Each numpy step decodes ONE Huffman symbol of every
+# live lane, so the interpreter runs once per symbol position of the
+# longest image instead of once per symbol of every image. A step:
+#   - gathers each lane's 56-bit big-endian window at its bit position;
+#   - indexes one packed table entry (``_packed_table``) in the DC or AC
+#     table of the lane's current block, chosen by the per-state offset
+#     table (state s = block * 64 + zigzag index k);
+#   - sign-extends the value field through ``_EXTEND``;
+#   - scatters it into the lane's coefficient rows;
+#   - advances bit position and state (EOB / ZRL / block end snap to the
+#     next block's DC state).
+# Errors accumulate in per-lane masks; an errored lane keeps stepping on
+# garbage inside its own rows and bit range until the next sweep drops it.
+
+# Lanes per lockstep call below which the per-image loop is faster. A
+# lockstep step has a fixed cost of ~30 numpy calls; tools/
+# image_kernel_bench.py (16x16 q98 noise, 4:4:4, 4-vCPU x86) measured the
+# entropy decode at 0.92x the loop's speed with 48 lanes, 1.12x with 64.
+LOCKSTEP_MIN_LANES = 64
+# Coefficient blocks per lockstep call (16 MB of int32 coefficients); a
+# batch of large images is decoded in chunks of at most this many blocks.
+_BLOCK_BUDGET = 1 << 16
+# Steps between sweeps, and the 1-bit padding after each segment: a lane
+# advances <= 32 bits per step and the window reads 8 bytes, so a lane
+# clamped to its segment end at a sweep stays inside its own padding.
+_SWEEP = 8
+_PAD = b"\xff" * (4 * _SWEEP + 16)
+
+# Packed table entry fields (int64): bits 0-5 bits consumed (code +
+# value field), 6-12 write offset from the state (the zero run; 64 marks a
+# bad symbol, which then writes past k = 63 like an overflowing run),
+# 13-20 state step, 30-63 (signed) what turns the code+value bits into
+# their ``_EXTEND`` index. An all-zero entry is "parked": a lane whose
+# state reached the end of its blocks reads it forever, consuming nothing.
+_F_RUN, _F_STEP, _F_OFF = 6, 13, 30
+_LOW56 = (1 << 56) - 1
+
+
+def _extend_table() -> np.ndarray:
+    """F.2.2.1 EXTEND for every (size, raw) pair at index mask + raw,
+    mask = 2**size - 1: the ranges of different sizes do not overlap."""
+    out = np.zeros(1 << 17, dtype=np.int32)
+    for size in range(1, 17):
+        mask = (1 << size) - 1
+        raw = np.arange(1 << size, dtype=np.int64)
+        out[mask : mask + (1 << size)] = np.where(raw < (1 << (size - 1)), raw - mask, raw)
+    return out
+
+
+_EXTEND = _extend_table()
+
+
+def _packed_table(key: bytes, tc: int) -> np.ndarray:
+    """(65536,) int64 packed lockstep entries for one DC (tc=0) or AC
+    (tc=1) table, from the same lookahead tables the per-image loop uses.
+    Entries decide exactly what ``_decode_scan`` decides for that 16-bit
+    peek: invalid codes, DC sizes > 16 and AC symbols with size 0 other
+    than EOB/ZRL are bad. Memoized beside ``_LOOKAHEAD_CACHE``.
+    """
+    hit = _PACKED_CACHE.get((key, tc))
+    if hit is not None:
+        return hit
+    sym_l, ln_l = _lookahead_table(list(key[:16]), list(key[16:]))
+    sym = np.asarray(sym_l, dtype=np.int64)
+    ln = np.asarray(ln_l, dtype=np.int64)
+    if tc == 0:
+        size = sym
+        run = np.zeros_like(sym)
+        step = np.ones_like(sym)
+        bad = (ln == 0) | (size > 16)
+    else:
+        size = sym & 15
+        eob = sym == 0x00
+        zrl = sym == 0xF0
+        run = np.where(size > 0, sym >> 4, 0)
+        step = np.where(eob, 64, np.where(zrl, 16, run + 1))  # EOB/ZRL snap at k = 64
+        bad = (ln == 0) | ((size == 0) & ~eob & ~zrl)
+    size = np.where(bad, 0, size)
+    code = np.arange(1 << 16, dtype=np.int64) >> (16 - np.maximum(ln, 1))
+    # the value field follows the code: (code << size) + raw -> mask + raw
+    off = ((1 << size) - 1) - (code << size)
+    packed = (ln + size) | (run << _F_RUN) | (step << _F_STEP) | (off << _F_OFF)
+    packed = np.where(bad, (64 << _F_RUN) | (64 << _F_STEP), packed)
+    if len(_PACKED_CACHE) >= 32:  # foreign-table flood guard
+        _PACKED_CACHE.clear()
+    _PACKED_CACHE[(key, tc)] = packed
+    return packed
+
+
+_PACKED_CACHE: dict[tuple[bytes, int], np.ndarray] = {}
+
+
+def _lockstep_scan(
+    datas: list[bytes], scan_starts: list[int], hdr: _Header
+) -> tuple[np.ndarray, np.ndarray]:
+    """Entropy-decode images of one ``shape_key`` in lockstep; image i's
+    entropy-coded data starts at ``scan_starts[i]`` (headers of one shape
+    may still differ in length, e.g. by APPn/COM segments).
+
+    Returns (coef (L, n_blocks, 64) int32 as ``_decode_scan`` builds it,
+    err (L,) object array: None or the ValueError of that lane).
+    """
+    n_lanes = len(datas)
+    total = hdr.n_blocks * 64
+    stride = total + 64  # a bad or overflowing write (k + run <= 127) stays in its own row
+    n_mcus = hdr.mcus_x * hdr.mcus_y
+    ri = hdr.restart_interval
+    n_int = -(-n_mcus // ri) if ri else 1
+    err = np.full(n_lanes, None, dtype=object)
+
+    # One flat buffer: each lane's used segments, each followed by 1-bit
+    # padding, so a lane reading past its segment end reads 1-bits (F.2.2.5)
+    # and never the next segment's bytes.
+    parts: list[bytes] = []
+    seg_len = np.zeros((n_lanes, n_int), dtype=np.int64)
+    seg_pad = np.ones((n_lanes, n_int), dtype=bool)
+    for i, (data, start) in enumerate(zip(datas, scan_starts)):
+        segs = _split_entropy_segments(data, start)
+        if len(segs) < n_int:
+            err[i] = ValueError("expected RST marker in JPEG scan")
+        for j in range(n_int):
+            sdata, pad = segs[j] if j < len(segs) else (b"", True)
+            parts.append(sdata)
+            parts.append(_PAD)
+            seg_len[i, j] = len(sdata)
+            seg_pad[i, j] = pad
+    flat = b"".join(parts) + b"\xff" * 8
+    seg_start = np.cumsum(seg_len + len(_PAD), axis=None).reshape(n_lanes, n_int)
+    seg_start -= seg_len + len(_PAD)
+    seg_start *= 8
+    seg_end = seg_start + 8 * seg_len
+    # truncation: a segment that ended without a marker may not be 1-padded;
+    # the per-image loop raises when < 32 bits remain at a symbol start
+    seg_tlim = np.where(seg_pad, np.iinfo(np.int64).max, seg_end - 32)
+    check_trunc = not seg_pad.all()
+    # 56-bit big-endian window at every byte (positive int64)
+    win = np.ndarray((len(flat) - 7,), dtype=">u8", buffer=flat, strides=(1,))
+    windows = win.astype(np.uint64)
+    windows >>= np.uint64(8)
+    windows = windows.view(np.int64)
+
+    # per-state table offsets: DC table at k = 0, AC table at k > 0; the
+    # parked state ``total`` points at the all-zero table at offset 0
+    keys: dict[tuple[bytes, int], int] = {}
+    tables = [np.zeros(1 << 16, dtype=np.int64)]
+    comp_off = []
+    for (dc_key, _), (ac_key, _) in hdr.tables:
+        offs = []
+        for key, tc in ((dc_key, 0), (ac_key, 1)):
+            if (key, tc) not in keys:
+                keys[(key, tc)] = len(tables) << 16
+                tables.append(_packed_table(key, tc))
+            offs.append(keys[(key, tc)])
+        comp_off.append(offs)
+    lut = np.concatenate(tables)
+    mcu_off = np.array(
+        [offs for (_cid, hs, vs, _tq), offs in zip(hdr.comps, comp_off) for _ in range(hs * vs)],
+        dtype=np.int64,
+    )  # (bpm, 2)
+    block_off = np.tile(mcu_off, (n_mcus, 1))  # (n_blocks, 2)
+    toff = np.zeros(total + 1, dtype=np.int64)
+    toff[:total].reshape(-1, 64)[:, 0] = block_off[:, 0]
+    toff[:total].reshape(-1, 64)[:, 1:] = block_off[:, 1:]
+    # restart: state of the first DC of interval j (j >= 1) -> j
+    rst_of = None
+    if n_int > 1:
+        rst_of = np.zeros(total + 1, dtype=np.int64)
+        rst_of[np.arange(1, n_int) * ri * hdr.bpm * 64] = np.arange(1, n_int)
+
+    coef = np.zeros(n_lanes * stride, dtype=np.int32)
+    lane = np.flatnonzero(err == None)  # noqa: E711 (object array compare)
+    pos = seg_start[lane, 0].copy()
+    end = seg_end[lane, 0].copy()
+    tlim = seg_tlim[lane, 0].copy()
+    base = lane * stride
+    s = np.zeros(len(lane), dtype=np.int64)
+    bad = np.zeros(len(lane), dtype=bool)  # bad symbol or AC run past k = 63
+    trunc = np.zeros(len(lane), dtype=bool)
+    while len(lane):
+        for _ in range(_SWEEP):
+            if check_trunc:
+                trunc |= (pos > tlim) & (s < total)
+            x = np.take(windows, pos >> 3)
+            x <<= pos & 7
+            x &= _LOW56  # bit 55 is the lane's next bit
+            p = x >> 40
+            p += np.take(toff, s)
+            e = np.take(lut, p)
+            n_bits = e & 63
+            pos += n_bits
+            x >>= 56 - n_bits
+            x += e >> _F_OFF
+            w = (e >> _F_RUN) & 127
+            w += s
+            s_end = s | 63
+            bad |= w > s_end
+            w += base
+            coef[w] = np.take(_EXTEND, x)
+            s_end += 1
+            s += (e >> _F_STEP) & 255
+            np.minimum(s, s_end, out=s)
+            if rst_of is not None:
+                j = np.take(rst_of, s)
+                hit = np.flatnonzero(j)
+                if len(hit):
+                    li, jj = lane[hit], j[hit]
+                    pos[hit] = seg_start[li, jj]
+                    end[hit] = seg_end[li, jj]
+                    tlim[hit] = seg_tlim[li, jj]
+        # sweep: clamp lanes past their segment end back into its padding
+        # (all-1 bits from anywhere there); record and drop finished lanes
+        np.minimum(pos, end, out=pos)
+        for i in lane[trunc]:
+            err[i] = ValueError("truncated JPEG scan")
+        for i in lane[bad & ~trunc]:
+            err[i] = ValueError("invalid Huffman data in JPEG scan")
+        keep = np.flatnonzero((s < total) & ~bad & ~trunc)
+        if len(keep) < len(lane):
+            lane, pos, end, tlim, base, s, bad, trunc = (
+                a[keep] for a in (lane, pos, end, tlim, base, s, bad, trunc)
+            )
+    coef = coef.reshape(n_lanes, stride)[:, :total].reshape(n_lanes, hdr.n_blocks, 64)
+    return coef, err
+
+
+def decode_jpeg_batch(datas: list[bytes]) -> list[np.ndarray]:
+    """Decode a batch of baseline JPEGs -> list of (h, w, 3) uint8 RGB,
+    equal to ``[decode_jpeg(d) for d in datas]`` pixel for pixel.
+
+    Images are grouped by header shape (frame, sampling, Huffman tables,
+    restart interval) and each group's entropy-coded data is decoded in
+    lockstep (``_lockstep_scan``), at most ``_BLOCK_BUDGET`` coefficient
+    blocks per call; calls of fewer than ``LOCKSTEP_MIN_LANES`` images use
+    the per-image loop. Headers are parsed once per distinct header: an
+    image whose bytes up to its scan equal the previous image's reuses
+    that parse (a memo that lives for one call). Dequantize, IDCT,
+    upsampling and colour conversion run once per call over all its images.
+
+    Errors: every image is decoded, then the error ``decode_jpeg`` would
+    raise on the first failing image is raised (same type; an entropy
+    error found in lockstep carries a generic message).
+    """
+    n = len(datas)
+    out: list = [None] * n
+    errors: dict[int, Exception] = {}
+    hdrs: list = [None] * n
+    groups: dict[tuple, list[int]] = {}
+    prefix, prev = None, None
+    for i, data in enumerate(datas):
+        if prefix is None or not data.startswith(prefix):
+            try:
+                prev = _parse_header(data)
+            except (ValueError, NotImplementedError) as e:
+                errors[i], prefix = e, None
+                continue
+            except _CORRUPT as e:
+                errors[i], prefix = _corrupt(e), None
+                continue
+            # a scan start past the data means a truncated SOS was parsed:
+            # longer data with this prefix could parse differently
+            prefix = data[: prev.scan_start] if prev.scan_start <= len(data) else None
+        hdrs[i] = prev
+        groups.setdefault(prev.shape_key, []).append(i)
+
+    for idxs in groups.values():
+        hdr = hdrs[idxs[0]]
+        per_call = max(1, _BLOCK_BUDGET // hdr.n_blocks)
+        n_calls = -(-len(idxs) // per_call)
+        size = -(-len(idxs) // n_calls)
+        for c in range(0, len(idxs), size):
+            _decode_call(datas, hdrs, idxs[c : c + size], out, errors)
+    if errors:
+        raise errors[min(errors)]
+    return out
+
+
+def _decode_call(datas, hdrs, idxs: list[int], out: list, errors: dict) -> None:
+    """Entropy-decode one chunk of a shape group, then run the shared back
+    end once over its error-free images."""
+    hdr = hdrs[idxs[0]]
+    if len(idxs) >= LOCKSTEP_MIN_LANES:
+        coef, err = _lockstep_scan(
+            [datas[i] for i in idxs], [hdrs[i].scan_start for i in idxs], hdr
+        )
+    else:
+        coef = np.zeros((len(idxs), hdr.n_blocks, 64), dtype=np.int32)
+        err = np.full(len(idxs), None, dtype=object)
+        for j, i in enumerate(idxs):
+            try:
+                coef[j] = _decode_scan(datas[i], hdrs[i])
+            except ValueError as e:
+                err[j] = e
+            except _CORRUPT as e:
+                err[j] = _corrupt(e)
+    ok = []
+    for j, i in enumerate(idxs):
+        if err[j] is None:
+            try:
+                _quant(hdrs[i])
+            except ValueError as e:
+                err[j] = e
+        if err[j] is None:
+            ok.append(j)
+        else:
+            errors[i] = err[j]
+    if not ok:
+        return
+    if len(ok) < len(idxs):
+        coef = coef[ok]
+    _predict_dc(coef, hdr)
+    q = np.stack([_quant(hdrs[idxs[j]]) for j in ok])
+    try:
+        pix = _pixels(hdr, coef, q)
+    except NotImplementedError as e:
+        for j in ok:
+            errors[idxs[j]] = e
+        return
+    for j, p in zip(ok, pix):
+        out[idxs[j]] = p

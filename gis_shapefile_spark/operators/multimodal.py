@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.jpeg import decode_jpeg_batch
 from ..sources import fixtures as FX
 
 IMAGE_SCHEMA = (
@@ -44,14 +45,12 @@ IMAGE_SCHEMA = (
 
 
 def _decode_batch(pdf: pd.DataFrame) -> list[np.ndarray]:
-    """Decode every row of an Arrow batch to (h, w, 3) uint8 pixels.
-
-    Unknown ``fmt`` values raise NotImplementedError (clearly-marked stub
-    seam for real codecs; see module docstring).
-    """
-    out = []
-    for data, w, h, fmt in zip(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]):
-        out.append(FX.decode_image(data, int(w), int(h), str(fmt)))
+    """Decode every row of an Arrow batch to (h, w, 3) uint8 pixels, in
+    row order, through the same batch decode as ``_decode_stacks``."""
+    out: list = [None] * len(pdf)
+    for poss, _fmt, stack in _decode_stacks(pdf):
+        for p, pix in zip(poss, stack):
+            out[p] = pix
     return out
 
 
@@ -60,10 +59,12 @@ def _decode_stacks(
 ) -> Iterator[tuple[np.ndarray, str, np.ndarray]]:
     """Decode an Arrow batch into uniform (w, h, fmt) pixel stacks.
 
-    Yields (row_positions, fmt, (n, h, w, 3) uint8 stack) — the per-image
-    zlib inflate is the only per-row work; everything downstream (phash,
-    stats, PSNR) vectorizes over the stack. Unknown ``fmt`` raises
-    NotImplementedError (real-codec seam).
+    Yields (row_positions, fmt, (n, h, w, 3) uint8 stack). Per-row work
+    is the zlib inflate (raw/qz/png), PNG unfiltering and JPEG header
+    checks; a group's JPEGs are entropy-decoded in lockstep, one image
+    per lane (``jpeg.decode_jpeg_batch``), and everything downstream
+    (phash, stats, PSNR) vectorizes over the stack. Unknown ``fmt``
+    raises NotImplementedError (real-codec seam).
     """
     import zlib
 
@@ -86,11 +87,9 @@ def _decode_stacks(
             yield np.asarray(poss), fmt, stack
             continue
         if fmt == "jpeg":
-            # real baseline JPEG (functions/jpeg.py): per-payload entropy
-            # decode is the sequential part; DCT math is vectorized
-            from ..functions.jpeg import decode_jpeg
-
-            stack = np.stack([decode_jpeg(byts[p]) for p in poss])
+            # real baseline JPEG (functions/jpeg.py): the group's images
+            # decode together, one lane each
+            stack = np.stack(decode_jpeg_batch([byts[p] for p in poss]))
             if stack.shape[1:] != (h, w, 3):
                 raise ValueError(
                     f"JPEG shape {stack.shape[1:]} != metadata ({h}, {w}, 3)"
@@ -427,16 +426,13 @@ def verify_invariants(
                             0, 255
                         ).astype(np.uint8)
                     elif fmt == "jpeg":
-                        # real lossy roundtrip: re-encode + re-decode; JPEG
-                        # requantization of already-decoded pixels at the
-                        # same quality bottoms out well above min_psnr
-                        rt = np.stack([
-                            FX.decode_image(
-                                FX.encode_image(s, "jpeg"),
-                                s.shape[1], s.shape[0], "jpeg",
-                            )
-                            for s in stack
-                        ])
+                        # real lossy roundtrip: re-encode (per image) +
+                        # re-decode (one batch); JPEG requantization of
+                        # already-decoded pixels at the same quality
+                        # bottoms out well above min_psnr
+                        rt = np.stack(decode_jpeg_batch(
+                            [FX.encode_image(s, "jpeg") for s in stack]
+                        ))
                     else:
                         rt = stack
                     err = (

@@ -19,6 +19,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from gis_shapefile_spark.functions import jpeg as J
 from gis_shapefile_spark.functions.jpeg import (
     AC_LUMA_BITS,
     AC_LUMA_VALS,
@@ -329,3 +330,229 @@ def test_jpeg_rows_through_spark_decode_stages(spark, jpeg_mixed_pdf):
         assert out.fmt == "jpeg" and out.bytes[:2] == b"\xff\xd8"
         pix = FX.decode_image(out.bytes, 8, 8, "jpeg")
         assert FX.phash64(pix) == out.phash
+
+
+# ---------------------------------------------------------------- batch decode
+# decode_jpeg_batch (lockstep entropy decode, one image per lane) against
+# the per-image reference: coefficient for coefficient through
+# _lockstep_scan at ANY lane count (bypassing the break-even dispatch),
+# pixel for pixel through the public batch call.
+
+
+def _coef_parity(datas: list[bytes]) -> None:
+    hdrs = [J._parse_header(d) for d in datas]
+    coef, err = J._lockstep_scan(datas, [h.scan_start for h in hdrs], hdrs[0])
+    assert all(e is None for e in err)
+    for d, h, c in zip(datas, hdrs, coef):
+        assert np.array_equal(c, J._decode_scan(d, h))
+
+
+def _pixel_parity(datas: list[bytes]) -> None:
+    batch = J.decode_jpeg_batch(datas)
+    assert len(batch) == len(datas)
+    for d, b in zip(datas, batch):
+        assert b.dtype == np.uint8 and np.array_equal(b, decode_jpeg(d))
+
+
+@pytest.mark.parametrize(
+    "lanes",
+    [1, J.LOCKSTEP_MIN_LANES - 1, J.LOCKSTEP_MIN_LANES, 4 * J.LOCKSTEP_MIN_LANES],
+)
+def test_batch_matches_per_image_q98_noise(lanes):
+    datas = [encode_jpeg(_noise(16, 16, seed), quality=98) for seed in range(lanes)]
+    _coef_parity(datas)
+    _pixel_parity(datas)
+
+
+@pytest.mark.parametrize("h, w", [(9, 13), (7, 32), (17, 15), (1, 1)])
+def test_batch_matches_per_image_odd_dims(h, w):
+    datas = [
+        encode_jpeg(_noise(h, w, seed), quality=95)
+        for seed in range(J.LOCKSTEP_MIN_LANES)
+    ]
+    _coef_parity(datas)
+    _pixel_parity(datas)
+
+
+def test_batch_chunks_by_block_budget(monkeypatch):
+    """A batch larger than the block budget runs as several lockstep calls,
+    each within the budget and none below the break-even lane count."""
+    lanes = J.LOCKSTEP_MIN_LANES
+    monkeypatch.setattr(J, "_BLOCK_BUDGET", 12 * (lanes + 7))  # 16x16 4:4:4: 12 blocks
+    calls = []
+    real = J._lockstep_scan
+
+    def spy(datas, starts, hdr):
+        calls.append(len(datas))
+        return real(datas, starts, hdr)
+
+    monkeypatch.setattr(J, "_lockstep_scan", spy)
+    _pixel_parity([encode_jpeg(_noise(16, 16, s), quality=98) for s in range(3 * lanes)])
+    assert sum(calls) == 3 * lanes
+    assert all(lanes <= c and 12 * c <= J._BLOCK_BUDGET for c in calls)
+
+
+def _gray_stream(
+    blocks: np.ndarray,
+    ri: int,
+    dht=(DC_LUMA_BITS, DC_LUMA_VALS, AC_LUMA_BITS, AC_LUMA_VALS),
+    rst_fill: bytes = b"",
+) -> bytes:
+    """Hand-built 8-row grayscale stream, one block per MCU (zigzag
+    ``blocks``, quantizer 1), restart interval ``ri`` MCUs (0: no DRI);
+    ``rst_fill`` FF fill bytes go before every RST marker."""
+    dc_bits, dc_vals, ac_bits, ac_vals = dht
+    codes = (_canonical_codes(dc_bits, dc_vals), _canonical_codes(ac_bits, ac_vals))
+    n = len(blocks)
+    out = bytearray(b"\xff\xd8")
+    qt_zz = bytes([0]) + bytes([1] * 64)
+    out += b"\xff\xdb" + (2 + len(qt_zz)).to_bytes(2, "big") + qt_zz
+    sof = bytes([8]) + (8).to_bytes(2, "big") + (8 * n).to_bytes(2, "big")
+    sof += bytes([1, 1, 0x11, 0])
+    out += b"\xff\xc0" + (2 + len(sof)).to_bytes(2, "big") + sof
+    for tc, bits, vals in ((0, dc_bits, dc_vals), (1, ac_bits, ac_vals)):
+        dht_seg = bytes([tc << 4]) + bytes(bits) + bytes(vals)
+        out += b"\xff\xc4" + (2 + len(dht_seg)).to_bytes(2, "big") + dht_seg
+    if ri:
+        out += b"\xff\xdd\x00\x04" + ri.to_bytes(2, "big")
+    sos = bytes([1, 1, 0x00, 0, 63, 0])
+    out += b"\xff\xda" + (2 + len(sos)).to_bytes(2, "big") + sos
+    step = ri or n
+    for start in range(0, n, step):
+        if start:
+            out += rst_fill + bytes([0xFF, 0xD0 + (start // step - 1) % 8])
+        w = _BitWriter()
+        prev = [0]  # DC predictor resets at every restart
+        for blk in blocks[start : start + step]:
+            J._encode_single_block(w, blk, prev, 0, codes)
+        out += w.finish()
+    return bytes(out + b"\xff\xd9")
+
+
+def _random_blocks(rng: np.random.Generator, n: int, max_ac: int = 8) -> np.ndarray:
+    """n zigzag blocks: DC in [-300, 300], then 0..max_ac consecutive nonzero
+    AC values (run 0 only, sizes <= 9), the rest zero."""
+    blocks = np.zeros((n, 64), dtype=np.int64)
+    blocks[:, 0] = rng.integers(-300, 301, n)
+    for b in range(n):
+        k = int(rng.integers(0, max_ac + 1))
+        vals = rng.integers(1, 300, k) * rng.choice([-1, 1], k)
+        blocks[b, 1 : 1 + k] = vals
+    return blocks
+
+
+def test_batch_restart_interval_streams():
+    """Several hand-built DRI/RSTn streams (restart every 1, 2 and 3 MCUs,
+    partial last intervals, fill bytes before RST) in lockstep: each lane
+    re-aligns to its next segment and resets its DC predictor on its own."""
+    rng = np.random.default_rng(5)
+    mixed = []
+    for ri, n in ((1, 4), (2, 5), (3, 7)):
+        datas = [
+            _gray_stream(_random_blocks(rng, n), ri, rst_fill=b"\xff" * (i % 3))
+            for i in range(12)
+        ]
+        _coef_parity(datas)
+        mixed += datas
+    mixed.append(_gray_stream(_random_blocks(rng, 4), 0))
+    _pixel_parity(mixed)
+    # a stream missing its last RST segment raises in both decoders
+    short = _gray_stream(_random_blocks(rng, 4), 1)
+    short = short[: short.rfind(b"\xff\xd2")] + b"\xff\xd9"  # drop interval 4
+    with pytest.raises(ValueError, match="RST"):
+        decode_jpeg(short)
+    hdr = J._parse_header(short)
+    _coef, err = J._lockstep_scan(
+        [short, mixed[0]], [hdr.scan_start, J._parse_header(mixed[0]).scan_start], hdr
+    )
+    assert isinstance(err[0], ValueError) and err[1] is None
+
+
+@pytest.mark.skipif(not KITTENS, reason="Spark mllib images not bundled")
+def test_batch_matches_per_image_real_420_mixed_with_444():
+    """Real 4:2:0 camera JPEGs (the mllib images) batched together with
+    4:4:4 images of the same sizes from our encoder."""
+    reals = [open(p, "rb").read() for p in [*KITTENS, CHR30] if os.path.exists(p)]
+    mixed = []
+    for d in reals:
+        h, w = decode_jpeg(d).shape[:2]
+        mixed += [d, encode_jpeg(_smooth(h, w), quality=90), d]
+        _coef_parity([d])
+    _pixel_parity(mixed)
+
+
+def test_batch_fuzz_parity_and_reads_ones_past_segment_end():
+    """Byte-flipped streams in one lockstep-sized batch: a lane fails
+    exactly when the per-image loop raises on it, and otherwise equals it.
+    The batch raises the first failing image's error type. One lane's scan
+    is empty: past its segment end it must read 1-bits (F.2.2.5), never
+    the next lane's bytes."""
+    rng = np.random.default_rng(31)
+    lanes = 2 * J.LOCKSTEP_MIN_LANES
+    bases = [encode_jpeg(_noise(16, 16, 40 + s), quality=98) for s in range(4)]
+    datas = []
+    for t in range(lanes):
+        b = bytearray(bases[t % 4])
+        sos = bytes(b).find(b"\xff\xda") + 14  # first entropy-coded byte
+        lo = 2 if t % 8 == 0 else sos  # most flips in the scan, some anywhere
+        for _ in range(int(rng.integers(1, 4))):
+            b[int(rng.integers(lo, len(b)))] = int(rng.integers(0, 256))
+        datas.append(bytes(b))
+
+    def outcome(d):
+        try:
+            return decode_jpeg(d)
+        except (ValueError, NotImplementedError) as e:
+            return e
+
+    ref = [outcome(d) for d in datas]
+    n_fail = sum(isinstance(r, Exception) for r in ref)
+    assert 0 < n_fail < lanes
+    # per lane, on the images whose header still parses to the base shape
+    key = J._parse_header(bases[0]).shape_key
+    same = []
+    for d in datas:
+        try:
+            if J._parse_header(d).shape_key == key:
+                same.append(d)
+        except (ValueError, NotImplementedError, IndexError):
+            pass
+    assert len(same) >= J.LOCKSTEP_MIN_LANES
+    hdrs = [J._parse_header(d) for d in same]
+    coef, err = J._lockstep_scan(same, [h.scan_start for h in hdrs], hdrs[0])
+    for d, h, c, e in zip(same, hdrs, coef, err):
+        try:
+            want = J._decode_scan(d, h)
+        except ValueError:
+            assert isinstance(e, ValueError)
+        else:
+            assert e is None and np.array_equal(c, want)
+    # whole batch: raises the first failure's type; the survivors match
+    first = next(r for r in ref if isinstance(r, Exception))
+    with pytest.raises(type(first)):
+        J.decode_jpeg_batch(datas)
+    _pixel_parity([d for d, r in zip(datas, ref) if not isinstance(r, Exception)])
+
+    # Reading past the end: with a code space filled up to the all-ones
+    # 16-bit code (DC -> size 16, AC -> run 0 size 15), 1-bits decode
+    # successfully, so an empty scan yields DC diff 65535 and AC 32767 in
+    # every block. The other lanes' scans are all-zero-ish real data.
+    dc_vals = list(range(17))
+    ac_vals = [0x00, 0x01, 0x02, 0x03, 0x04, 0x05, 0x06, 0x07, 0x08, 0x09,
+               0x0A, 0x11, 0x12, 0x21, 0xF0, 0x31, 0x0F]
+    full = [1] * 15 + [2]
+    dht = (full, dc_vals, full, ac_vals)
+    others = [_gray_stream(_random_blocks(rng, 4), 0, dht) for _ in range(6)]
+    empty = others[0]
+    empty = empty[: empty.find(b"\xff\xda") + 10] + b"\xff\xd9"
+    ones = J._decode_scan(empty, J._parse_header(empty))
+    assert (ones[:, 0] == 65535).all() and (ones[:, 1:] == 32767).all()
+    batch = [empty, *others, empty]
+    _coef_parity(batch)
+    # and a lane whose scan ends WITHOUT a marker may not read 1-bits
+    cut = others[1][:-6]
+    with pytest.raises(ValueError, match="truncated"):
+        decode_jpeg(cut)
+    h = J._parse_header(cut)
+    _c, err = J._lockstep_scan([cut, *others], [h.scan_start] * (1 + len(others)), h)
+    assert isinstance(err[0], ValueError) and all(e is None for e in err[1:])
