@@ -1,11 +1,16 @@
-"""Driver-contract queries #2: training-data pipeline + reverse geocode.
+"""Registry queries #2: image payload pipeline, embeddings and ANN,
+events and trajectories, reverse geocode, and the training-data stages.
 
 Same determinism contract as ``entry_queries.py`` (integer hashes, fixed
 IEEE expression trees, integerized floats, identical column aliases in the
-Spark plan and the DuckDB oracle). The corpus-level dedup queries run over
-``documents`` unioned with a deterministic mangled copy (doc_id + 1000000,
-first token dropped) so near-duplicate structure exists at every SF;
-``embedding_neardup`` likewise unions an exact copy of ``embeddings``.
+Spark plan and the DuckDB oracle). Four queries here read the
+``documents`` text table: ``corpus_curation`` and ``seq_pack``
+(``ANCHORS``) and ``dedup_minhash`` and ``dedup_components`` (bench
+entries).
+The two dedup queries run over ``documents`` unioned with a deterministic
+mangled copy (doc_id + 1000000, first token dropped) so near-duplicate
+structure exists at every SF; ``embedding_neardup`` likewise unions an
+exact copy of ``embeddings``.
 """
 
 from __future__ import annotations
@@ -58,109 +63,8 @@ def _dup_corpus_cte(mangle: bool) -> str:
 
 
 # ---------------------------------------------------------------------------
-# text analysis
-# ---------------------------------------------------------------------------
-
-def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whitespace + BPE-ish token counts per document."""
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        TA.token_count_col("text").alias("n_tokens"),
-        TA.bpe_count_col("text").alias("n_bpe"),
-    )
-
-
-def q_token_count_oracle() -> str:
-    return f"""
-        SELECT doc_id,
-               {TA.token_count_sql('text', 'duckdb')} AS n_tokens,
-               {TA.bpe_count_sql('text', 'duckdb')} AS n_bpe
-        FROM documents
-    """
-
-
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword-vote language ID per document."""
-    return _docs(spark, sf_dir).select(
-        "doc_id", TA.lang_id_col("text").alias("lang_pred")
-    )
-
-
-def q_lang_id_oracle() -> str:
-    lang = TA.lang_id_sql(TA.tokens_sql("text", "duckdb"), "duckdb")
-    return f"SELECT doc_id, {lang} AS lang_pred FROM documents"
-
-
-def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heuristic quality score (length/alpha/punct/stopword), integerized."""
-    return _docs(spark, sf_dir).select(
-        "doc_id", TA.quality_score_col("text").alias("quality_u")
-    )
-
-
-def q_quality_score_oracle() -> str:
-    return (
-        f"SELECT doc_id, {TA.quality_score_sql('text', 'duckdb')} AS quality_u "
-        "FROM documents"
-    )
-
-
-def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition metrics per document: duplicate-token,
-    duplicate-2-gram, and duplicate-3-gram fractions (integerized)."""
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        TA.dup_ngram_frac_col("text", 1).alias("dup_tok_u"),
-        TA.dup_ngram_frac_col("text", 2).alias("dup_2gram_u"),
-        TA.dup_ngram_frac_col("text", 3).alias("dup_3gram_u"),
-    )
-
-
-def q_repetition_oracle() -> str:
-    return f"""
-        SELECT doc_id,
-               {TA.dup_ngram_frac_sql('text', 1, 'duckdb')} AS dup_tok_u,
-               {TA.dup_ngram_frac_sql('text', 2, 'duckdb')} AS dup_2gram_u,
-               {TA.dup_ngram_frac_sql('text', 3, 'duckdb')} AS dup_3gram_u
-        FROM documents
-    """
-
-
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-based 60-bit content fingerprint per document (explode +
-    partial-min aggregation — the 10^12-row shape)."""
-    return DD.minhash_fingerprints(_docs(spark, sf_dir), shingle_n=8)
-
-
-def q_doc_fingerprint_oracle() -> str:
-    return (
-        f"SELECT doc_id, {TA.fingerprint_sql('text', 8, 'duckdb')} AS fp "
-        "FROM documents"
-    )
-
-
-# ---------------------------------------------------------------------------
 # deduplication
 # ---------------------------------------------------------------------------
-
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup over documents ∪ exact copy: doc -> canonical (min id)."""
-    corpus = _dup_corpus(spark, sf_dir, mangle=False)
-    return DD.exact_duplicate_map(corpus).select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("canonical_id").cast("long").alias("canonical_id"),
-    )
-
-
-def q_dedup_exact_oracle() -> str:
-    return f"""
-        WITH corpus AS ({_dup_corpus_cte(mangle=False)})
-        SELECT c.doc_id::BIGINT AS doc_id, m.canonical_id::BIGINT AS canonical_id
-        FROM corpus c
-        JOIN (SELECT md5(text) AS h, min(doc_id) AS canonical_id
-              FROM corpus GROUP BY 1) m
-          ON md5(c.text) = m.h
-    """
 
 
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -219,55 +123,6 @@ def q_dedup_minhash_oracle() -> str:
     """
 
 
-def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT n-gram Jaccard near-dup join (no sketches): prefix-filtering
-    candidates (each doc's |S|-ceil(t|S|)+1 globally-rarest shingles,
-    provably complete for J >= t — operators/dedup.py
-    ``jaccard_join_prefix``) verified with the same exact 3-gram Jaccard
-    kernel as the MinHash path. The ORACLE is the fully independent
-    brute force — every doc pair sharing at least one shingle, scored —
-    so a prefix filter that misses ANY qualifying pair hash-mismatches.
-    Same corpus/threshold as dedup_minhash: the two queries together
-    expose exactly the pairs LSH's probabilistic recall drops (none at
-    this fixture's band config)."""
-    corpus = _dup_corpus(spark, sf_dir, mangle=True)
-    out = DD.jaccard_join_prefix(corpus, threshold=0.5, shingle_n=3)
-    return out.select(
-        F.col("id_1").cast("long").alias("id_1"),
-        F.col("id_2").cast("long").alias("id_2"),
-        "jaccard_u",
-    )
-
-
-def q_dedup_jaccard_oracle() -> str:
-    toks = TA.tokens_sql("text", "duckdb")
-    sh = TA.shingles_sql(toks, 3, "duckdb")
-    return f"""
-        WITH corpus AS ({_dup_corpus_cte(mangle=True)}),
-        sets AS (
-          SELECT doc_id, list_distinct({sh}) AS ss FROM corpus
-        ),
-        ex AS (SELECT doc_id, unnest(ss) AS sh FROM sets),
-        cand AS (
-          SELECT DISTINCT a.doc_id AS id_1, b.doc_id AS id_2
-          FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        ),
-        scored AS (
-          SELECT c.id_1, c.id_2,
-                 CAST(floor(1000000 * (CASE WHEN len(list_distinct(list_concat(s1.ss, s2.ss))) = 0
-                      THEN 0.0
-                      ELSE CAST(len(list_intersect(s1.ss, s2.ss)) AS DOUBLE)
-                         / CAST(len(list_distinct(list_concat(s1.ss, s2.ss))) AS DOUBLE) END))
-                      AS BIGINT) AS jaccard_u
-          FROM cand c
-          JOIN sets s1 ON s1.doc_id = c.id_1
-          JOIN sets s2 ON s2.doc_id = c.id_2
-        )
-        SELECT id_1::BIGINT AS id_1, id_2::BIGINT AS id_2, jaccard_u
-        FROM scored WHERE jaccard_u >= 500000
-    """
-
-
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical-document assignment: connected components over the verified
     MinHash near-dup pairs (min-id label propagation; singletons map to
@@ -304,52 +159,6 @@ def q_dedup_components_oracle() -> str:
         )
         SELECT node::BIGINT AS doc_id, CAST(min(lbl) AS BIGINT) AS component
         FROM reach GROUP BY node
-    """
-
-
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """32-bit token-level SimHash signature per document."""
-    return DD.simhash_table(_docs(spark, sf_dir)).select(
-        F.col("doc_id"), F.col("simhash").cast("long").alias("simhash")
-    )
-
-
-def q_dedup_simhash_oracle() -> str:
-    hs = TA.token_hashes_sql(TA.tokens_sql("text", "duckdb"), "duckdb")
-    sig = TA.simhash_sql("hs", 32, "duckdb")
-    return f"""
-        WITH h AS (SELECT doc_id, {hs} AS hs FROM documents)
-        SELECT doc_id, CAST({sig} AS BIGINT) AS simhash FROM h
-    """
-
-
-def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All near-duplicate pairs with SimHash hamming distance <= 3 over
-    documents ∪ mangled copy. ENGINE side runs the pigeonhole block
-    equi-join (never a cross join — the 10^12-doc shape); the ORACLE
-    brute-forces every pair in DuckDB, so the block scheme's completeness
-    is value-checked, not just unit-tested."""
-    corpus = _dup_corpus(spark, sf_dir, mangle=True)
-    out = DD.simhash_near_pairs(corpus, max_hamming=3)
-    return out.select(
-        F.col("id_1").cast("long").alias("id_1"),
-        F.col("id_2").cast("long").alias("id_2"),
-        F.col("hamming").cast("long").alias("hamming"),
-    )
-
-
-def q_dedup_simhash_pairs_oracle() -> str:
-    hs = TA.token_hashes_sql(TA.tokens_sql("text", "duckdb"), "duckdb")
-    sig = TA.simhash_sql("hs", 32, "duckdb")
-    ham = TA.hamming_sql("a.simhash", "b.simhash", "duckdb")
-    return f"""
-        WITH corpus AS ({_dup_corpus_cte(mangle=True)}),
-        h AS (SELECT doc_id, {hs} AS hs FROM corpus),
-        sig AS (SELECT doc_id, CAST({sig} AS BIGINT) AS simhash FROM h)
-        SELECT a.doc_id::BIGINT AS id_1, b.doc_id::BIGINT AS id_2,
-               CAST({ham} AS BIGINT) AS hamming
-        FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-        WHERE {ham} <= 3
     """
 
 
@@ -1778,96 +1587,6 @@ def q_caption_curation_oracle() -> str:
 
 
 # ---------------------------------------------------------------------------
-# exact substring (duplicate-span) dedup — the ExactSubstr stage
-# ---------------------------------------------------------------------------
-
-SSD_K = 8
-# two planted tails injected IN-PLAN by identical SQL in both engines:
-# every 7th doc shares tail A, every 11th shares tail B (doc 0 gets both
-# and, as the global first occurrence, keeps them; every later carrier
-# loses exactly the tail's interior windows' tokens)
-SSD_TAIL_A = "the quick brown fox jumps over the lazy dog again and again"
-SSD_TAIL_B = "lorem ipsum dolor sit amet consectetur adipiscing elit sed do"
-
-
-def _ssd_aug_sql() -> str:
-    return (
-        f"text || CASE WHEN doc_id % 7 = 0 THEN ' {SSD_TAIL_A}' ELSE '' END"
-        f" || CASE WHEN doc_id % 11 = 0 THEN ' {SSD_TAIL_B}' ELSE '' END"
-    )
-
-
-def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact duplicate-span removal at SSD_K-token granularity (the Lee
-    et al. ExactSubstr curation stage): every k-gram occurring earlier
-    anywhere in the corpus marks its tokens dropped, docs re-assemble
-    from survivors. The corpus plants shared tails in every 7th/11th doc
-    so the value hash pins which docs lose which spans — plus whatever
-    natural k-gram repeats the fixture corpus itself carries."""
-    from .operators import dedup as DDo
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", F.expr(_ssd_aug_sql()).alias("text")
-    )
-    return DDo.substring_dedup(docs, k=SSD_K)
-
-
-def q_substring_dedup_oracle() -> str:
-    k = SSD_K
-    gram = " || ' ' || ".join(
-        ["tok"] + [f"lead(tok, {j}) OVER w" for j in range(1, k)]
-    )
-    return f"""
-        WITH aug AS (
-          SELECT doc_id, {_ssd_aug_sql()} AS text FROM documents
-        ),
-        tok0 AS (
-          SELECT doc_id,
-                 unnest(string_split(text, ' ')) AS tok,
-                 generate_subscripts(string_split(text, ' '), 1) AS pos
-          FROM aug
-        ),
-        toks AS (
-          SELECT doc_id, tok,
-                 row_number() OVER (PARTITION BY doc_id ORDER BY pos) - 1
-                   AS tidx
-          FROM tok0 WHERE length(tok) > 0
-        ),
-        grams AS (
-          SELECT doc_id, tidx, {gram} AS gram,
-                 lead(tok, {k - 1}) OVER w AS last_tok
-          FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY tidx)
-        ),
-        g2 AS (SELECT doc_id, tidx, gram FROM grams
-               WHERE last_tok IS NOT NULL),
-        dup AS (
-          SELECT doc_id, tidx FROM (
-            SELECT doc_id, tidx,
-                   row_number() OVER (
-                     PARTITION BY gram ORDER BY doc_id, tidx
-                   ) AS rn
-            FROM g2
-          ) WHERE rn > 1
-        ),
-        cov AS (
-          SELECT DISTINCT d.doc_id, d.tidx + o.range AS cidx
-          FROM dup d CROSS JOIN range({k}) o
-        )
-        SELECT t.doc_id,
-               coalesce(string_agg(
-                 CASE WHEN c.cidx IS NULL THEN t.tok END, ' '
-                 ORDER BY t.tidx), '') AS clean_text,
-               CAST(count(*) FILTER (WHERE c.cidx IS NULL) AS BIGINT)
-                 AS n_kept,
-               CAST(count(*) FILTER (WHERE c.cidx IS NOT NULL) AS BIGINT)
-                 AS n_dropped
-        FROM toks t
-        LEFT JOIN cov c ON t.doc_id = c.doc_id AND t.tidx = c.cidx
-        GROUP BY t.doc_id
-    """
-
-
-# ---------------------------------------------------------------------------
 # image quality stats — encode -> decode -> stats value-checked end-to-end
 # against pure integer SQL (no stored-column crutch)
 # ---------------------------------------------------------------------------
@@ -2309,48 +2028,6 @@ def q_stratified_sample_oracle() -> str:
     """
 
 
-def q_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Curriculum binning: ntile(10) over the integerized quality score
-    with a TOTAL order (quality_u, doc_id — ties broken so both engines
-    bin identically), then per-decile stats. The data-ordering pass a
-    curriculum-training pipeline runs before sharding.
-
-    Scale note: a global-ORDER window is a single-partition sort — this
-    exact-ntile form is the correctness twin at oracle scale. At 10^12
-    rows, bin with broadcast `percentile_approx` boundaries instead (a
-    scan-side CASE, no global sort); this query is the oracle those
-    approximate boundaries are validated against."""
-    q = TA.quality_score_sql("text", "spark")
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.expr(q).alias("quality_u")
-    )
-    binned = d.withColumn(
-        "decile",
-        F.expr("ntile(10) OVER (ORDER BY quality_u, doc_id)").cast("long"),
-    )
-    return binned.groupBy("decile").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.min("quality_u").alias("min_q"),
-        F.max("quality_u").alias("max_q"),
-        F.sum("doc_id").alias("id_sum"),
-    )
-
-
-def q_quality_deciles_oracle() -> str:
-    q = TA.quality_score_sql("text", "duckdb")
-    return f"""
-        WITH scored AS (SELECT doc_id, {q} AS quality_u FROM documents),
-        binned AS (
-          SELECT doc_id, quality_u,
-                 CAST(ntile(10) OVER (ORDER BY quality_u, doc_id) AS BIGINT)
-                   AS decile
-          FROM scored)
-        SELECT decile, count(*) AS n_docs, min(quality_u) AS min_q,
-               max(quality_u) AS max_q, CAST(sum(doc_id) AS BIGINT) AS id_sum
-        FROM binned GROUP BY decile
-    """
-
-
 def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Int8 scalar quantization of embeddings: per-vector code stats +
     integerized L1 reconstruction error (``similarity.quantize_stats_sqls``,
@@ -2387,315 +2064,18 @@ def q_embedding_quantize_oracle() -> str:
     """
 
 
-def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary build: top-30 tokens by document frequency (explode
-    distinct tokens -> partial-agg count -> global top-k with
-    deterministic (df desc, token) tie-break) — the vocab/stopword
-    discovery pass over a 10^12-doc corpus; one shuffle on token."""
-    toks = TA.tokens_sql("text", "spark")
-    return (
-        _docs(spark, sf_dir)
-        .select(F.explode(F.expr(f"array_distinct({toks})")).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy(F.desc("n_docs"), F.asc("token"))
-        .limit(30)
-    )
-
-
-def q_vocab_topk_oracle() -> str:
-    toks = TA.tokens_sql("text", "duckdb")
-    return f"""
-        SELECT token, count(*) AS n_docs FROM (
-          SELECT unnest(list_distinct({toks})) AS token FROM documents)
-        GROUP BY token ORDER BY n_docs DESC, token LIMIT 30
-    """
-
-
-BM25_TERMS = ("spark", "join", "window")
-BM25_TOPK = 20
-
-
-def q_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 ranked retrieval over the document corpus for a fixed query
-    (the retrieval-scoring member of the text family — dedup finds
-    copies, quality filters junk, BM25 finds RELEVANCE; the curation
-    use is query-anchored corpus slicing and decontamination-by-topic).
-
-    Scale shape: the query is tiny by contract, so there is NO posting
-    join — per-doc term frequencies and length are ONE scan-side
-    projection (a filtered-length per literal term); corpus stats
-    (N, sum_dl, per-term df) are ONE global aggregate row broadcast
-    back; scoring is a second scan + the top-k window. Two corpus
-    scans total (stats amortize per corpus refresh in a pipeline),
-    zero Python, no shuffle until the final top-k.
-
-    Determinism: per-term scores integerize at 1e6 BEFORE the
-    cross-term sum (order-free BIGINT adds); the one libm call (ln in
-    the idf) is pinned engine-vs-oracle over the full df domain by
-    `test_bm25_idf_ln_parity_exhaustive`."""
-    from pyspark.sql import Window
-
-    toks = TA.tokens_sql("text", "spark")
-    per = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.expr(TA._arr_len(toks, "spark")).alias("dl"),
-        *[
-            F.expr(TA.term_tf_sql(toks, t, "spark")).alias(f"tf{i}")
-            for i, t in enumerate(BM25_TERMS)
-        ],
-    )
-    stats = per.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("dl").cast("long").alias("sum_dl"),
-        *[
-            F.sum((F.col(f"tf{i}") > 0).cast("long")).alias(f"df{i}")
-            for i in range(len(BM25_TERMS))
-        ],
-    )
-    score = " + ".join(
-        TA.bm25_term_score_sql(f"tf{i}", f"df{i}", "dl", "n_docs", "sum_dl")
-        for i in range(len(BM25_TERMS))
-    )
-    # global top-k via orderBy + limit (TakeOrderedAndProject — a
-    # distributed partial top-k per partition folded on the driver),
-    # NOT an unpartitioned row_number window, which would funnel the
-    # whole corpus through one sort partition at 10^12 docs. The rank
-    # window then runs over the k surviving rows only.
-    top = (
-        per.crossJoin(F.broadcast(stats))
-        .withColumn("score_u", F.expr(score))
-        .orderBy(F.desc("score_u"), F.asc("doc_id"))
-        .limit(BM25_TOPK)
-    )
-    w = Window.orderBy(F.desc("score_u"), F.asc("doc_id"))
-    return (
-        top.withColumn("rank", F.row_number().over(w))
-        .select(
-            F.col("rank").cast("long").alias("rank"),
-            F.col("doc_id").cast("long").alias("doc_id"),
-            "score_u",
-            F.col("dl").cast("long").alias("dl"),
-        )
-    )
-
-
-def q_bm25_rank_oracle() -> str:
-    """DuckDB twin: same projection/stats/score text (the score builder
-    emits ONE dialect-identical tree; only the tokenizer spells
-    differently)."""
-    toks = TA.tokens_sql("text", "duckdb")
-    tfs = ", ".join(
-        f"{TA.term_tf_sql(toks, t, 'duckdb')} AS tf{i}"
-        for i, t in enumerate(BM25_TERMS)
-    )
-    dfs = ", ".join(
-        f"CAST(sum(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df{i}"
-        for i in range(len(BM25_TERMS))
-    )
-    score = " + ".join(
-        TA.bm25_term_score_sql(f"tf{i}", f"df{i}", "dl", "n_docs", "sum_dl")
-        for i in range(len(BM25_TERMS))
-    )
-    return f"""
-        WITH per AS (
-          SELECT doc_id, {TA._arr_len(toks, 'duckdb')} AS dl, {tfs}
-          FROM documents
-        ),
-        stats AS (
-          SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                 CAST(sum(dl) AS BIGINT) AS sum_dl, {dfs}
-          FROM per
-        ),
-        scored AS (
-          SELECT doc_id, dl, {score} AS score_u
-          FROM per CROSS JOIN stats
-        )
-        SELECT row_number() OVER (ORDER BY score_u DESC, doc_id)::BIGINT
-                 AS rank,
-               doc_id::BIGINT AS doc_id, score_u, dl::BIGINT AS dl
-        FROM scored
-        QUALIFY rank <= {BM25_TOPK}
-    """
-
-
-def q_doc_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unigram-LM log-probability scoring (the CCNet/perplexity-bucket
-    curation signal): every document scored under the corpus's own
-    unigram model — low mean log-prob = surprising/junk text, high =
-    boilerplate-ish; curation buckets on exactly this number.
-
-    Scale shape: token explode -> ONE token-keyed shuffle builds the
-    vocabulary model (count per token; total tokens is a 1-row agg) ->
-    the model broadcasts back onto the exploded stream (production caps
-    the broadcast with a top-V vocabulary + one OOV bucket — same plan,
-    one extra coalesce) -> per-doc integer rollup. Per-token log-probs
-    floor-integerize at 1e6 BEFORE the per-doc sum (order-free BIGINT
-    adds, the bm25 canon); the mean is a final floored quotient of two
-    exact integers. ln parity rests on the same JVM-vs-libm pin the
-    exhaustive bm25 test measures (3,306/3,306 identical floors across
-    the ratio domain).
-
-    Output: (doc_id, n_tokens, sum_logp_u, neg_mean_mu) — neg_mean_mu
-    the mean negative log-prob in micro-nats (the perplexity proxy)."""
-    toks = TA.tokens_sql("text", "spark")
-    ex = (
-        _docs(spark, sf_dir)
-        .select("doc_id", F.explode(F.expr(toks)).alias("token"))
-        .where(F.col("token") != "")
-    )
-    vocab = ex.groupBy("token").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
-    total = vocab.agg(F.sum("cnt").cast("long").alias("total"))
-    logp = (
-        "CAST(floor(CAST(1000000 AS DOUBLE) * "
-        "ln(CAST(cnt AS DOUBLE) / CAST(total AS DOUBLE))) AS BIGINT)"
-    )
-    model = F.broadcast(
-        vocab.crossJoin(F.broadcast(total)).selectExpr(
-            "token", f"{logp} AS logp_u"
-        )
-    )
-    return (
-        ex.join(model, "token")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_tokens"),
-            F.sum("logp_u").alias("sum_logp_u"),
-        )
-        .selectExpr(
-            "CAST(doc_id AS BIGINT) AS doc_id", "n_tokens", "sum_logp_u",
-            "CAST(floor(CAST(-sum_logp_u AS DOUBLE) / "
-            "CAST(n_tokens AS DOUBLE)) AS BIGINT) AS neg_mean_mu",
-        )
-    )
-
-
-def q_doc_logprob_oracle() -> str:
-    toks = TA.tokens_sql("text", "duckdb")
-    logp = (
-        "CAST(floor(CAST(1000000 AS DOUBLE) * "
-        "ln(CAST(cnt AS DOUBLE) / CAST(total AS DOUBLE))) AS BIGINT)"
-    )
-    return f"""
-        WITH ex AS (
-          SELECT doc_id, unnest({toks}) AS token FROM documents
-        ),
-        ex2 AS (SELECT * FROM ex WHERE token <> ''),
-        vocab AS (
-          SELECT token, CAST(count(*) AS BIGINT) AS cnt
-          FROM ex2 GROUP BY token
-        ),
-        total AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM vocab),
-        model AS (
-          SELECT token, {logp} AS logp_u FROM vocab CROSS JOIN total
-        )
-        SELECT CAST(doc_id AS BIGINT) AS doc_id,
-               CAST(count(*) AS BIGINT) AS n_tokens,
-               CAST(sum(logp_u) AS BIGINT) AS sum_logp_u,
-               CAST(floor(CAST(-CAST(sum(logp_u) AS BIGINT) AS DOUBLE) /
-                 CAST(CAST(count(*) AS BIGINT) AS DOUBLE)) AS BIGINT)
-                 AS neg_mean_mu
-        FROM ex2 JOIN model USING (token)
-        GROUP BY doc_id
-    """
-
-
-CMS_TOPK = 10
-
-
-def q_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min-sketch heavy hitters, estimate vs truth side by side:
-    the corpus token stream sketches into a fixed 4 x 64 integer grid
-    (map-side, mergeable — at 10^12 tokens each partition ships 256
-    BIGINTs instead of a universe shuffle), and the true top-10 tokens'
-    frequencies read back as the min of their 4 counters. The sketch
-    VALUES are oracle-checked, not just the contract: every counter and
-    every estimate is integer math over fixed literal salts, identical
-    in both engines. est_cnt >= true_cnt always (CMS never
-    underestimates; equality = no collisions in any of the token's 4
-    cells)."""
-    from .operators import sketch as SK
-
-    toks = TA.tokens_sql("text", "spark")
-    ex = (
-        _docs(spark, sf_dir)
-        .select(F.explode(F.expr(toks)).alias("token"))
-        .where(F.col("token") != "")
-    )
-    sk = SK.cms_build(ex, "token")
-    from pyspark.sql import Window
-
-    # same TakeOrderedAndProject discipline as bm25_rank: the token
-    # universe never funnels through one sort partition
-    topk = (
-        ex.groupBy("token")
-        .agg(F.count(F.lit(1)).cast("long").alias("true_cnt"))
-        .orderBy(F.desc("true_cnt"), F.asc("token"))
-        .limit(CMS_TOPK)
-    )
-    w = Window.orderBy(F.desc("true_cnt"), F.asc("token"))
-    top = topk.withColumn("rank", F.row_number().over(w))
-    est = SK.cms_estimate(top.select("token"), sk, "token")
-    return (
-        top.join(est, "token")
-        .select(
-            F.col("rank").cast("long").alias("rank"),
-            "token", "true_cnt", F.col("est_cnt").alias("est_cnt"),
-        )
-    )
-
-
-def q_cms_topk_oracle() -> str:
-    from .operators import sketch as SK
-
-    toks = TA.tokens_sql("text", "duckdb")
-    src = (
-        f"SELECT token FROM (SELECT unnest({toks}) AS token "
-        f"FROM documents) WHERE token <> ''"
-    )
-    c = SK.cms_oracle_ctes(src, "token")
-    h = TA.hash60_sql("token", "duckdb")
-    qarms = " UNION ALL ".join(
-        f"SELECT token, {i} AS row, {SK.cms_bucket_sql(h, i)} AS bucket "
-        f"FROM top"
-        for i in range(SK.CMS_D)
-    )
-    return f"""
-        WITH src AS ({c["src"]}),
-        cells AS ({c["cells"]}),
-        sketch AS ({c["sketch"]}),
-        top AS (
-          SELECT token, CAST(count(*) AS BIGINT) AS true_cnt,
-                 row_number() OVER (ORDER BY count(*) DESC, token) AS rank
-          FROM src GROUP BY token
-          QUALIFY rank <= {CMS_TOPK}
-        ),
-        qc AS ({qarms}),
-        est AS (
-          SELECT token, min(cnt) AS est_cnt
-          FROM qc JOIN sketch USING (row, bucket)
-          GROUP BY token
-        )
-        SELECT CAST(rank AS BIGINT) AS rank, token, true_cnt, est_cnt
-        FROM top JOIN est USING (token)
-    """
-
-
 def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog distinct-user estimation per event type, estimate
-    beside exact truth — the cardinality twin of ``cms_topk`` (CMS
-    answers "how often", HLL "how many distinct"): per group the state
-    is 64 integer registers (max rank per bucket — order-free,
-    mergeable by elementwise max), so a 10^12-event feed counts
-    distinct users in |groups| x 64 BIGINTs of state where exact
-    countDistinct shuffles the universe. Deterministic cross-engine by
-    construction: bucket and rank come from DISJOINT md5 substrings (no
-    division), the rank and harmonic terms are generated integer CASE
-    ladders, and the single estimate division is one identical IEEE
-    tree over exact integers. Raw estimator, no corrections — expected
-    error ~1.04/sqrt(64) ~= 13%, asserted in pytest."""
+    beside exact truth: per group the state is 64 integer registers
+    (max rank per bucket — order-free, mergeable by elementwise max), so
+    a 10^12-event feed counts distinct users in |groups| x 64 BIGINTs of
+    state where exact countDistinct shuffles the universe. Deterministic
+    cross-engine by construction: bucket and rank come from DISJOINT md5
+    substrings (no division), the rank and harmonic terms are generated
+    integer CASE ladders, and the single estimate division is one
+    identical IEEE tree over exact integers. Raw estimator, no
+    corrections — expected error ~1.04/sqrt(64) ~= 13%, asserted in
+    pytest."""
     from .operators import sketch as SK
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
@@ -2763,67 +2143,6 @@ def q_hll_distinct_oracle() -> str:
         )
         SELECT event_type, n_exact, {SK.hll_estimate_sql('s')} AS n_hll
         FROM exact JOIN sums USING (event_type)
-    """
-
-
-def q_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter membership pre-screen — the third sketch, completing
-    the family (CMS: how often; HLL: how many distinct; Bloom: is it in
-    the set). The decontamination/takedown composition at 10^12 rows:
-    the banned-id set compresses to a <= 512-row broadcast bit table,
-    every corpus row pays k=4 integer hashes against it, and ONLY the
-    passers (true members + the documented (1-e^(-kn/m))^k false
-    positives) reach the expensive exact verify join. Never a false
-    negative — every truly banned doc passes, pytest- and oracle-
-    visible in the is_banned column. Bit positions reuse the CMS salt
-    family (pure integer math, identical both engines)."""
-    from .operators import sketch as SK
-
-    docs = _docs(spark, sf_dir).selectExpr(
-        "doc_id", "CAST(doc_id AS STRING) AS key"
-    )
-    banned = docs.where("doc_id % 7 = 0")
-    bloom = SK.bloom_build(banned.select("key"), "key")
-    tagged = SK.bloom_contains(docs, bloom, "key")
-    return (
-        tagged.where(F.col("in_bloom") == 1)
-        .selectExpr(
-            "CAST(doc_id AS BIGINT) AS doc_id",
-            "CAST(CASE WHEN doc_id % 7 = 0 THEN 1 ELSE 0 END AS BIGINT)"
-            " AS is_banned",
-        )
-    )
-
-
-def q_bloom_prefilter_oracle() -> str:
-    from .operators import sketch as SK
-
-    h = TA.hash60_sql("key", "duckdb")
-    bit_arms = " UNION ALL ".join(
-        f"SELECT {SK.bloom_bit_sql(h, j)} AS bit FROM banned"
-        for j in range(SK.BLOOM_K)
-    )
-    probe_arms = " UNION ALL ".join(
-        f"SELECT doc_id, {SK.bloom_bit_sql(h, j)} AS bit FROM docs"
-        for j in range(SK.BLOOM_K)
-    )
-    return f"""
-        WITH docs AS (
-          SELECT doc_id, CAST(doc_id AS VARCHAR) AS key FROM documents
-        ),
-        banned AS (SELECT key FROM docs WHERE doc_id % 7 = 0),
-        bloombits AS (SELECT DISTINCT bit FROM ({bit_arms})),
-        probe AS ({probe_arms}),
-        hits AS (
-          SELECT doc_id, count(*) AS c
-          FROM probe JOIN bloombits USING (bit)
-          GROUP BY doc_id
-        )
-        SELECT d.doc_id::BIGINT AS doc_id,
-               CAST(CASE WHEN d.doc_id % 7 = 0 THEN 1 ELSE 0 END AS BIGINT)
-                 AS is_banned
-        FROM docs d JOIN hits h ON h.doc_id = d.doc_id
-        WHERE h.c = {SK.BLOOM_K}
     """
 
 
@@ -2902,33 +2221,6 @@ def q_interval_join_oracle() -> str:
                CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT) AS sum_value_c
         FROM events JOIN bands ON value >= lo AND value <= hi
         GROUP BY band
-    """
-
-
-def q_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 90/5/5 split of documents by salted key hash, plus the
-    quality mean per split (the split must be reproducible cross-engine)."""
-    from .operators import splits as SP
-
-    docs = _docs(spark, sf_dir)
-    tagged = SP.hash_split(docs, "doc_id")
-    return tagged.groupBy("split").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(TA.quality_score_col("text")).alias("sum_quality_u"),
-    )
-
-
-def q_train_val_split_oracle() -> str:
-    from .operators import splits as SP
-
-    split = SP.split_sql(
-        "doc_id", {"train": 0.9, "val": 0.05, "test": 0.05}, dialect="duckdb"
-    )
-    q = TA.quality_score_sql("text", "duckdb")
-    return f"""
-        SELECT {split} AS split, count(*) AS n_docs,
-               CAST(sum({q}) AS BIGINT) AS sum_quality_u
-        FROM documents GROUP BY 1
     """
 
 
@@ -3411,57 +2703,6 @@ def q_ann_filtered_oracle() -> str:
     """
 
 
-def _pii_augmented_sql(dialect: str) -> str:
-    """Deterministic PII-bearing corpus: 3 of every 4 documents gain a
-    synthetic email / phone / SSN+IP suffix derived from doc_id — the
-    same SQL text in both engines, so the scrubber is exercised on known
-    ground truth without external data."""
-    cast = "STRING" if dialect == "spark" else "VARCHAR"
-    did = f"CAST(doc_id AS {cast})"
-    d4 = f"lpad(CAST(doc_id % 10000 AS {cast}), 4, '0')"
-    d3 = f"CAST(doc_id % 256 AS {cast})"
-    return (
-        "CASE WHEN doc_id % 4 = 0 THEN "
-        f"concat(text, ' contact u', {did}, '@mail.example.com now') "
-        "WHEN doc_id % 4 = 1 THEN "
-        f"concat(text, ' call +1 (555) 010-', {d4}, ' today') "
-        "WHEN doc_id % 4 = 2 THEN "
-        f"concat(text, ' ssn 123-45-', {d4}, ' from 10.1.', {d3}, '.7') "
-        "ELSE text END"
-    )
-
-
-def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII redaction over the documents corpus (emails, SSNs, IPv4s,
-    phones, long digit runs -> typed tags): the curation stage every
-    pre-training pipeline runs before anything trains on crawled text.
-    Plan: one projection of nested codegen'd regexp_replace kernels on
-    the scan — zero Python, zero shuffle, trivially 10^12-row safe. The
-    corpus is augmented in-plan with deterministic doc_id-derived PII
-    (no real PII exists in the synthetic table) and the full scrubbed
-    string is value-hash-checked against DuckDB, plus a `changed` flag
-    per row."""
-    aug = F.expr(_pii_augmented_sql("spark"))
-    return _docs(spark, sf_dir).select(
-        "doc_id", aug.alias("_raw")
-    ).select(
-        "doc_id",
-        F.expr(TA.pii_scrub_sql("_raw", "spark")).alias("scrubbed"),
-        (F.expr(TA.pii_scrub_sql("_raw", "spark")) != F.col("_raw")).alias(
-            "changed"
-        ),
-    )
-
-
-def q_pii_scrub_oracle() -> str:
-    scrub = TA.pii_scrub_sql("_raw", "duckdb")
-    return f"""
-        SELECT doc_id, {scrub} AS scrubbed, ({scrub} <> _raw) AS changed
-        FROM (SELECT doc_id, {_pii_augmented_sql('duckdb')} AS _raw
-              FROM documents)
-    """
-
-
 def q_seq_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concat-and-chunk sequence packing (GPT-style pretraining batches):
     within each source shard, documents in doc_id order are packed into
@@ -3500,458 +2741,9 @@ def q_seq_pack_oracle() -> str:
     """
 
 
-def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style cross-corpus paragraph dedup: boilerplate paragraphs
-    that recur across documents (footers, license blocks) survive only
-    in the FIRST document (lowest doc_id, then position) and every
-    later occurrence is dropped, documents re-assembled in order.
-    Paragraph-bearing corpus is synthesized in-plan: each doc's text is
-    its own text plus the texts of docs id+7 and id+13 as paragraphs,
-    so every text appears in up to three documents and the dedup has
-    real planted cross-doc repeats. Plan: two equi self-joins build the
-    corpus, then posexplode -> ONE shuffle on the paragraph hash (first-
-    occurrence window) -> ONE shuffle back on doc_id (ordered
-    re-assembly); no iteration, no joins in the dedup itself."""
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    a, b, c = d.alias("a"), d.alias("b"), d.alias("c")
-    corpus = (
-        a.join(b, F.expr("b.doc_id = a.doc_id + 7"))
-        .join(c, F.expr("c.doc_id = a.doc_id + 13"))
-        .select(
-            F.col("a.doc_id").alias("doc_id"),
-            F.concat(
-                F.col("a.text"), F.lit("\n\n"),
-                F.col("b.text"), F.lit("\n\n"),
-                F.col("c.text"),
-            ).alias("text"),
-        )
-    )
-    return DD.paragraph_dedup(corpus).select(
-        "doc_id", "clean_text", "n_kept", "n_dropped"
-    )
-
-
-def q_paragraph_dedup_oracle() -> str:
-    return """
-        WITH corpus AS (
-          SELECT a.doc_id AS doc_id,
-                 a.text || chr(10) || chr(10) || b.text || chr(10) ||
-                 chr(10) || c.text AS text
-          FROM documents a
-          JOIN documents b ON b.doc_id = a.doc_id + 7
-          JOIN documents c ON c.doc_id = a.doc_id + 13
-        ), paras AS (
-          SELECT doc_id, CAST(i AS BIGINT) AS pos, l[i+1] AS para
-          FROM (SELECT doc_id, regexp_split_to_array(text, '\n\n') AS l
-                FROM corpus),
-               UNNEST(range(len(l))) AS u(i)
-          WHERE length(trim(l[i+1])) > 0
-        ), flagged AS (
-          SELECT doc_id, pos, para,
-                 (row_number() OVER (PARTITION BY md5(para)
-                                     ORDER BY doc_id, pos) = 1) AS keep
-          FROM paras
-        )
-        SELECT doc_id,
-               coalesce(string_agg(para, chr(10)||chr(10) ORDER BY pos)
-                        FILTER (WHERE keep), '') AS clean_text,
-               CAST(coalesce(SUM(CASE WHEN keep THEN 1 ELSE 0 END), 0)
-                    AS BIGINT) AS n_kept,
-               CAST(coalesce(SUM(CASE WHEN keep THEN 0 ELSE 1 END), 0)
-                    AS BIGINT) AS n_dropped
-        FROM flagged GROUP BY doc_id
-    """
-
-
 # ---------------------------------------------------------------------------
-# registry
+# aspect-ratio bucketing (image batch formation)
 # ---------------------------------------------------------------------------
-
-# ---------------------------------------------------------------------------
-# benchmark decontamination (train/test n-gram leakage check)
-# ---------------------------------------------------------------------------
-
-
-def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Eval-set decontamination over the dup corpus (docs + mangled copies):
-    every doc's distinct 3-gram shingles checked against the global shingle
-    set of a deterministic eval slice (doc_id % 97 = 0). Planted signal:
-    eval docs hit 100%, their mangled copies hit all but first-token
-    shingles, everything else ~0."""
-    corpus = _dup_corpus(spark, sf_dir, mangle=True)
-    evalset = _docs(spark, sf_dir).where("doc_id % 97 = 0").select("doc_id", "text")
-    return DD.decontaminate(corpus, evalset, shingle_n=3).select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "n_shingles",
-        "n_hits",
-        "contaminated",
-    )
-
-
-def q_decontaminate_oracle() -> str:
-    ghs = TA._arr_transform(
-        TA.shingles_sql(TA.tokens_sql("text", "duckdb"), 3, "duckdb"),
-        "g",
-        TA.hash60_sql("g", "duckdb"),
-        "duckdb",
-    )
-    return f"""
-        WITH corpus AS ({_dup_corpus_cte(mangle=True)}),
-        evalset AS (SELECT doc_id, text FROM documents WHERE doc_id % 97 = 0),
-        eval_grams AS (
-            SELECT DISTINCT gh FROM (
-                SELECT unnest(list_distinct({ghs})) AS gh FROM evalset) t
-        ),
-        doc_grams AS (
-            SELECT doc_id, unnest(list_distinct({ghs})) AS gh FROM corpus
-        ),
-        stats AS (
-            SELECT d.doc_id, count(*) AS ns,
-                   sum(CASE WHEN e.gh IS NOT NULL THEN 1 ELSE 0 END) AS nh
-            FROM doc_grams d LEFT JOIN eval_grams e ON d.gh = e.gh
-            GROUP BY d.doc_id
-        )
-        SELECT c.doc_id::BIGINT AS doc_id,
-               CAST(coalesce(s.ns, 0) AS BIGINT) AS n_shingles,
-               CAST(coalesce(s.nh, 0) AS BIGINT) AS n_hits,
-               CAST(CASE WHEN coalesce(s.nh, 0) >= 1 THEN 1 ELSE 0 END AS BIGINT)
-                   AS contaminated
-        FROM corpus c LEFT JOIN stats s ON c.doc_id = s.doc_id
-    """
-
-
-def q_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style boilerplate scoring: shingles in >= 1% of documents are
-    boilerplate; every doc reports its contaminated fraction
-    (``operators/profiling.py::boilerplate_profile``)."""
-    from .operators import profiling as PR
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    return PR.boilerplate_profile(docs, shingle_n=3, min_df_pct=1).select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "n_shingles",
-        "n_boiler",
-        "boiler_ppm",
-    )
-
-
-def q_boilerplate_oracle() -> str:
-    ghs = TA._arr_transform(
-        TA.shingles_sql(TA.tokens_sql("text", "duckdb"), 3, "duckdb"),
-        "g",
-        TA.hash60_sql("g", "duckdb"),
-        "duckdb",
-    )
-    return f"""
-        WITH doc_grams AS (
-            SELECT doc_id, unnest(list_distinct({ghs})) AS gh FROM documents
-        ),
-        nd AS (SELECT count(*) AS _n_docs FROM documents),
-        boiler AS (
-            SELECT gh FROM (
-                SELECT gh, count(*) AS df FROM doc_grams GROUP BY gh) d
-            CROSS JOIN nd WHERE df * 100 >= _n_docs * 1
-        ),
-        stats AS (
-            SELECT d.doc_id, count(*) AS ns,
-                   sum(CASE WHEN b.gh IS NOT NULL THEN 1 ELSE 0 END) AS nb
-            FROM doc_grams d LEFT JOIN boiler b ON d.gh = b.gh
-            GROUP BY d.doc_id
-        )
-        SELECT c.doc_id::BIGINT AS doc_id,
-               CAST(coalesce(s.ns, 0) AS BIGINT) AS n_shingles,
-               CAST(coalesce(s.nb, 0) AS BIGINT) AS n_boiler,
-               CAST(CASE WHEN coalesce(s.ns, 0) = 0 THEN 0
-                    ELSE floor(coalesce(s.nb, 0) * 1000000 / s.ns) END
-                    AS BIGINT) AS boiler_ppm
-        FROM documents c LEFT JOIN stats s ON c.doc_id = s.doc_id
-    """
-
-
-# ---------------------------------------------------------------------------
-# data-mixing: token-budget mixture sampling
-# ---------------------------------------------------------------------------
-
-_MIX_WEIGHTS = {"src0": 400000, "src1": 300000, "src2": 200000, "src3": 100000}
-_MIX_BUDGET = 2000  # tokens
-
-
-def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pretraining data-mix: downsample sources to a 2000-token budget at
-    40/30/20/10% proportions by TOKENS (``operators/splits.py::
-    mixture_sample``); unlisted sources drop. Output fingerprints kept
-    membership per source (count, token mass, id sum)."""
-    from .operators import splits as SP
-
-    docs = _docs(spark, sf_dir).select("doc_id", "source", "text")
-    kept = SP.mixture_sample(
-        docs, "doc_id", "source", _MIX_WEIGHTS, _MIX_BUDGET
-    )
-    tok = F.expr(TA.token_count_sql("text", "spark"))
-    return kept.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_kept"),
-        F.sum(tok).cast("long").alias("kept_tokens"),
-        F.sum("doc_id").cast("long").alias("id_sum"),
-    )
-
-
-def q_mixture_sample_oracle() -> str:
-    from .operators import splits as SP
-
-    tok = TA.token_count_sql("text", "duckdb")
-    thr = SP.mixture_sample_threshold_sql(
-        "source", "_toks", _MIX_WEIGHTS, _MIX_BUDGET
-    )
-    bucket = (
-        f"({TA.hash60_sql(SP._key_string('doc_id', 'mix-v1', 'duckdb'), 'duckdb')}"
-        f" % {SP.BUCKETS})"
-    )
-    return f"""
-        WITH tot AS (
-            SELECT source, CAST(sum({tok}) AS BIGINT) AS _toks
-            FROM documents GROUP BY source
-        ),
-        thr AS (SELECT source, {thr} AS _thr FROM tot),
-        kept AS (
-            SELECT d.doc_id, d.source, d.text
-            FROM documents d JOIN thr t ON d.source = t.source
-            WHERE {bucket} < t._thr
-        )
-        SELECT source,
-               count(*)::BIGINT AS n_kept,
-               CAST(sum({tok}) AS BIGINT) AS kept_tokens,
-               CAST(sum(doc_id) AS BIGINT) AS id_sum
-        FROM kept GROUP BY source
-    """
-
-
-_EPOCH_WEIGHTS = {"src0": 500000, "src1": 300000, "src2": 200000}
-_EPOCH_BUDGET = 20000  # tokens: src0's target far exceeds its mass -> upsamples
-
-
-def q_epoch_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Repeat-epoch data mixing (``splits.py::epoch_mixture_sample``):
-    sources under their token target emit full repeat epochs plus a
-    hash-sampled partial epoch. Output fingerprints per-source repeated
-    membership (row count incl. repeats, epoch ceiling, token mass,
-    id*(epoch+1) sum — sensitive to WHICH doc landed in WHICH epoch)."""
-    from .operators import splits as SP
-
-    docs = _docs(spark, sf_dir).select("doc_id", "source", "text")
-    kept = SP.epoch_mixture_sample(
-        docs, "doc_id", "source", _EPOCH_WEIGHTS, _EPOCH_BUDGET
-    )
-    tok = F.expr(TA.token_count_sql("text", "spark"))
-    return kept.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.max("epoch").cast("long").alias("max_epoch"),
-        F.sum(tok).cast("long").alias("kept_tokens"),
-        F.sum(F.col("doc_id") * (F.col("epoch") + 1)).cast("long").alias(
-            "id_epoch_sum"
-        ),
-    )
-
-
-def q_epoch_mix_oracle() -> str:
-    from .operators import splits as SP
-
-    tok = TA.token_count_sql("text", "duckdb")
-    tgt = SP._mixture_tgt_case("source", _EPOCH_WEIGHTS, _EPOCH_BUDGET)
-    bucket = (
-        f"({TA.hash60_sql(SP._key_string('doc_id', 'mix-v1', 'duckdb'), 'duckdb')}"
-        f" % {SP.BUCKETS})"
-    )
-    return f"""
-        WITH tot AS (
-            SELECT source, CAST(sum({tok}) AS BIGINT) AS _toks
-            FROM documents GROUP BY source
-        ),
-        plan AS (
-            SELECT source,
-                   CAST(floor({tgt} / _toks) AS BIGINT) AS _full,
-                   CAST(floor(({tgt} % _toks) * 10000 / _toks) AS BIGINT)
-                       AS _rem_thr
-            FROM tot
-        ),
-        joined AS (
-            -- unnest over a JOIN output triggers a DuckDB internal
-            -- binder error when the unnest alias is referenced by a
-            -- later CTE; materializing the join first avoids it
-            SELECT d.doc_id, d.source, d.text, p._full, p._rem_thr
-            FROM documents d JOIN plan p ON d.source = p.source
-        ),
-        fanned AS (
-            SELECT doc_id, source, text, _full, _rem_thr,
-                   unnest(range(0, _full + 1)) AS epoch
-            FROM joined
-        ),
-        kept AS (
-            SELECT doc_id, source, text, epoch FROM fanned
-            WHERE epoch < _full OR {bucket} < _rem_thr
-        )
-        SELECT source,
-               count(*)::BIGINT AS n_rows,
-               CAST(max(epoch) AS BIGINT) AS max_epoch,
-               CAST(sum({tok}) AS BIGINT) AS kept_tokens,
-               CAST(sum(doc_id * (epoch + 1)) AS BIGINT) AS id_epoch_sum
-        FROM kept GROUP BY source
-    """
-
-
-# ---------------------------------------------------------------------------
-# cross-modal alignment (LAION-style image-text pair filtering)
-# ---------------------------------------------------------------------------
-
-_ALIGN_THR = 0  # cos >= 0: BoW counts are non-negative, so sign carries signal
-
-
-def q_crossmodal_align(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image-text alignment filtering over (embedding, caption) pairs —
-    the curation step that drops mismatched pairs before training: stored
-    image embedding ⨯ deterministic hashed-BoW caption vector, integerized
-    cosine (``similarity.py`` kernels), keep = align above threshold."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    bow = TA.bow_vec_sql("text", EMB_DIM, "spark")
-    align = SIM.cosine_u_sql(
-        SIM.dot_u_sql("embedding", "txtvec", "spark"),
-        SIM.norm_u_sql("embedding", "spark"),
-        SIM.norm_u_sql("txtvec", "spark"),
-    )
-    return (
-        docs.join(emb, docs["doc_id"] == emb["vec_id"])
-        .select("doc_id", "embedding", F.expr(bow).alias("txtvec"))
-        .select("doc_id", F.expr(align).alias("align_u"))
-        .select(
-            "doc_id",
-            "align_u",
-            F.when(F.col("align_u") >= _ALIGN_THR, 1)
-            .otherwise(0)
-            .cast("long")
-            .alias("kept"),
-        )
-    )
-
-
-def q_crossmodal_align_oracle() -> str:
-    bow = TA.bow_vec_sql("text", EMB_DIM, "duckdb")
-    align = SIM.cosine_u_sql(
-        SIM.dot_u_sql("embedding", "txtvec", "duckdb"),
-        SIM.norm_u_sql("embedding", "duckdb"),
-        SIM.norm_u_sql("txtvec", "duckdb"),
-    )
-    return f"""
-        WITH pairs AS (
-            SELECT d.doc_id, e.embedding, {bow} AS txtvec
-            FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
-        ),
-        scored AS (SELECT doc_id, {align} AS align_u FROM pairs)
-        SELECT doc_id, align_u,
-               CAST(CASE WHEN align_u >= {_ALIGN_THR} THEN 1 ELSE 0 END
-                    AS BIGINT) AS kept
-        FROM scored
-    """
-
-
-def q_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source quota: keep the top-5 docs of each source by quality
-    (ties broken by doc_id) — the row-quota sibling of token-budget
-    mixing, used to cap any one domain's influence."""
-    from pyspark.sql import Window
-
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", "source", TA.quality_score_col("text").alias("quality_u")
-    )
-    w = Window.partitionBy("source").orderBy(
-        F.col("quality_u").desc(), F.col("doc_id")
-    )
-    return (
-        docs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-        .select("doc_id", "source", "quality_u", "rank")
-    )
-
-
-def q_source_cap_oracle() -> str:
-    q = TA.quality_score_sql("text", "duckdb")
-    return f"""
-        WITH scored AS (
-            SELECT doc_id, source, {q} AS quality_u FROM documents
-        ),
-        ranked AS (
-            SELECT doc_id, source, quality_u,
-                   row_number() OVER (PARTITION BY source
-                                      ORDER BY quality_u DESC, doc_id)
-                       AS rank
-            FROM scored
-        )
-        SELECT doc_id, source, quality_u, rank::BIGINT AS rank
-        FROM ranked WHERE rank <= 5
-    """
-
-
-def q_mm_interleave_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interleaved multimodal sequence packing (MMC4-style): images are
-    matched to documents by a deterministic salted-hash key, each image
-    charges 64 vision tokens against the 2048-token context budget on
-    top of the document's text tokens, and documents pack under the
-    combined cost (operators/splits.py::interleave_pack — one count
-    shuffle + one equi-join + the seq_pack prefix-sum window; no
-    Python). Output is the per-pack rollup (docs, images, text tokens).
-
-    The max(doc_id) modulus is ONE driver-side scalar (bounded collect,
-    same class as splits.py's n_bins-1 quantiles)."""
-    from .operators import splits as SP
-
-    docs = _docs(spark, sf_dir).select("doc_id", "source", "text")
-    max_doc = docs.agg(F.max("doc_id")).collect()[0][0]
-    img_path = FX.images_parquet_path(n=2000)
-    key = TA.hash60_sql("concat('mm:', image_id)", "spark")
-    image_docs = (
-        spark.read.parquet(img_path)
-        .select(F.expr(f"({key}) % {int(max_doc) + 1}").alias("doc_id"))
-    )
-    packed = SP.interleave_pack(
-        docs, image_docs, tokens_per_image=64, budget_tokens=2048
-    )
-    tok = F.expr(TA.token_count_sql("text", "spark"))
-    return (
-        packed.groupBy("source", "pack_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_img").cast("long").alias("n_imgs"),
-            F.sum(tok).cast("long").alias("tok_sum"),
-        )
-        .select("source", "pack_id", "n_docs", "n_imgs", "tok_sum")
-    )
-
-
-def q_mm_interleave_pack_oracle() -> str:
-    from .operators.splits import pack_cost_sql
-
-    img_path = FX.images_parquet_path(n=2000)
-    key = TA.hash60_sql("('mm:' || image_id)", "duckdb")
-    tok = TA.token_count_sql("text", "duckdb")
-    pack = pack_cost_sql(f"({tok} + 64 * n_img)", "doc_id", "source", 2048)
-    return f"""
-        WITH img AS (
-          SELECT ({key}) % (SELECT MAX(doc_id) + 1 FROM documents) AS doc_id
-          FROM read_parquet('{img_path}')
-        ),
-        cnt AS (SELECT doc_id, COUNT(*) AS n_img FROM img GROUP BY doc_id),
-        d AS (
-          SELECT doc_id, source, text,
-                 CAST(COALESCE(cnt.n_img, 0) AS BIGINT) AS n_img
-          FROM documents LEFT JOIN cnt USING (doc_id)
-        ),
-        p AS (SELECT source, text, n_img, {pack} AS pack_id FROM d)
-        SELECT source, pack_id, COUNT(*) AS n_docs,
-               CAST(SUM(n_img) AS BIGINT) AS n_imgs,
-               CAST(SUM({tok}) AS BIGINT) AS tok_sum
-        FROM p GROUP BY source, pack_id
-    """
 
 
 def q_ar_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -3,8 +3,8 @@
 The reference repo's text machinery is a geocoder (normalize/tokenize/
 similarity — ``src/geocoding/geocoder.cpp:113-149,480-494``); a 100 TB
 training-data pipeline additionally needs language-ID, quality scoring,
-token counting, document fingerprinting, and the hash kernels behind
-MinHash/SimHash deduplication. This module provides them in the same
+token counting, PII scrubbing, and the hash kernels behind MinHash
+deduplication. This module provides them in the same
 dual-dialect style as ``functions/cells.py``: every kernel is a SQL
 expression generator parameterized by dialect (``spark`` / ``duckdb``) so
 the engine's JVM-side codegen path and the DuckDB correctness oracle
@@ -51,9 +51,6 @@ STOPWORDS = {
     "es": ["el", "los", "las", "y", "una", "es", "por", "para", "como", "pero"],
 }
 
-# BPE-ish lexer: letter runs, digit runs, single non-space punctuation.
-BPE_PATTERN = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
-
 
 def _rx(pattern: str, dialect: str) -> str:
     """Regex literal for the dialect: Spark SQL string literals process
@@ -89,25 +86,12 @@ def tokens_sql(text: str, dialect: str = "spark") -> str:
     return f"regexp_split_to_array(trim(lower({text})), '\\s+')"
 
 
-def bpe_tokens_sql(text: str, dialect: str = "spark") -> str:
-    """BPE-ish sub-word lexer: letter runs / digit runs / punct singletons."""
-    if dialect == "spark":
-        return f"regexp_extract_all({text}, '{_rx(BPE_PATTERN, dialect)}', 0)"
-    return f"regexp_extract_all({text}, '{BPE_PATTERN}')"
-
-
 def _arr_len(arr: str, dialect: str) -> str:
     return f"size({arr})" if dialect == "spark" else f"len({arr})"
 
 
 def _arr_min(arr: str, dialect: str) -> str:
     return f"array_min({arr})" if dialect == "spark" else f"list_min({arr})"
-
-
-def _arr_sum(arr: str, dialect: str) -> str:
-    if dialect == "spark":
-        return f"aggregate({arr}, CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    return f"CAST(coalesce(list_sum({arr}), 0) AS BIGINT)"
 
 
 def _arr_transform(arr: str, var: str, body: str, dialect: str) -> str:
@@ -152,7 +136,7 @@ def shingles_sql(tokens: str, n: int, dialect: str = "spark") -> str:
 
 
 # ---------------------------------------------------------------------------
-# MinHash / SimHash signatures
+# MinHash signatures + Hamming distance
 # ---------------------------------------------------------------------------
 
 def minhash_sql(hashes: str, perm: int, dialect: str = "spark") -> str:
@@ -177,20 +161,6 @@ def band_hash_sql(
     return out
 
 
-def simhash_sql(hashes: str, nbits: int = 32, dialect: str = "spark") -> str:
-    """SimHash signature over a token-hash array: bit b of the output is
-    set iff a strict majority of tokens have bit b set in their hash."""
-    n = _arr_len(hashes, dialect)
-    terms = []
-    for b in range(nbits):
-        ones = _arr_sum(
-            _arr_transform(hashes, "h", f"((h >> {b}) & 1)", dialect), dialect
-        )
-        shifted = f"CAST({1 << b} AS BIGINT)"
-        terms.append(f"(CASE WHEN 2 * {ones} > {n} THEN {shifted} ELSE 0 END)")
-    return "(" + " + ".join(terms) + ")"
-
-
 def hamming_sql(x: str, y: str, dialect: str = "spark") -> str:
     """Hamming distance between two BIGINT signatures."""
     if dialect == "spark":
@@ -199,7 +169,7 @@ def hamming_sql(x: str, y: str, dialect: str = "spark") -> str:
 
 
 # ---------------------------------------------------------------------------
-# language ID / quality / counting / fingerprint
+# language ID / quality / counting
 # ---------------------------------------------------------------------------
 
 def stopword_count_sql(tokens: str, lang: str, dialect: str = "spark") -> str:
@@ -246,83 +216,10 @@ def quality_score_sql(text: str, dialect: str = "spark") -> str:
     return f"CAST(floor(1000000 * {q}) AS BIGINT)"
 
 
-def dup_ngram_frac_sql(text: str, n: int, dialect: str = "spark") -> str:
-    """Duplicate word-``n``-gram fraction — the Gopher-style repetition
-    signal (Rae et al. 2021, "Scaling Language Models", §A1.1 quality
-    filters): ``1 - distinct_ngrams / total_ngrams``, integerized to
-    ``floor(frac * 1e6)`` so both engines emit the same exact BIGINT.
-    ``n=1`` is the duplicate-token fraction. Empty/short docs score 0.
-
-    O(m log m) per row in the m tokens (distinct, not pairwise), a pure
-    codegen expression — pipelines with the scan at 10^12 rows."""
-    if n < 1:
-        raise ValueError("n must be >= 1")
-    toks = tokens_sql(text, dialect)
-    arr = toks if n == 1 else shingles_sql(toks, n, dialect)
-    dfn = "array_distinct" if dialect == "spark" else "list_distinct"
-    tot = _arr_len(arr, dialect)
-    dist = _arr_len(f"{dfn}({arr})", dialect)
-    frac = f"(1.0 - CAST({dist} AS DOUBLE) / CAST({tot} AS DOUBLE))"
-    return (
-        f"(CASE WHEN {tot} = 0 THEN CAST(0 AS BIGINT) "
-        f"ELSE CAST(floor(1000000 * {frac}) AS BIGINT) END)"
-    )
-
-
 def token_count_sql(text: str, dialect: str = "spark") -> str:
     """Whitespace token count (empty/blank text counts 0)."""
     ln = _arr_len(tokens_sql(text, dialect), dialect)
     return f"(CASE WHEN length(trim({text})) = 0 THEN 0 ELSE {ln} END)"
-
-
-def bpe_count_sql(text: str, dialect: str = "spark") -> str:
-    return _arr_len(bpe_tokens_sql(text, dialect), dialect)
-
-
-def fingerprint_sql(text: str, n: int = 8, dialect: str = "spark") -> str:
-    """Document fingerprint: MinHash (perm 0) over word ``n``-gram shingle
-    hashes — a stable 60-bit content id robust to reordering whole shingles
-    (rolling-hash-windowing equivalent, vectorized)."""
-    sh = shingles_sql(tokens_sql(text, dialect), n, dialect)
-    return minhash_sql(token_hashes_sql(sh, dialect), 0, dialect)
-
-
-def term_tf_sql(tokens: str, term: str, dialect: str = "spark") -> str:
-    """Term frequency of a literal ``term`` in a token-array expression
-    (integer; a plain filtered length — per-term projection work, no
-    posting join, so corpus scoring is one scan)."""
-    if "'" in term or "\\" in term:
-        raise ValueError(f"term must be a plain literal: {term!r}")
-    return _arr_len(_arr_filter(tokens, "t", f"t = '{term}'", dialect), dialect)
-
-
-def bm25_term_score_sql(tf: str, df: str, dl: str, n_docs: str,
-                        sum_dl: str) -> str:
-    """One BM25 term's contribution, floor-integerized at 1e6 — IDENTICAL
-    text in both dialects (per-term integerization makes the cross-term
-    accumulation an order-free BIGINT sum).
-
-    idf is the Robertson/Sparck-Jones form with the +1 guard
-    (``ln((N - df + 0.5)/(df + 0.5) + 1)``, always positive); the
-    saturation term uses k1 = 1.2, b = 0.75. Every input is an exact
-    integer cast to DOUBLE, and +,-,*,/ are exactly-rounded IEEE ops, so
-    the only cross-engine risk is the one ``ln`` libm call (JVM
-    Math.log vs DuckDB's std::log) — its input domain is the FINITE set
-    of df/N ratios, which ``test_bm25_idf_ln_parity_exhaustive`` pins
-    engine-vs-oracle over every df the gate and bench corpora can
-    produce. Short decimal literals (0.5, 1.2, 2.2) cast exactly in
-    both parsers (the litsql 17-digit hazard does not apply)."""
-    d = "CAST({} AS DOUBLE)".format
-    idf = (
-        f"ln((({d(n_docs)} - {d(df)} + {d('0.5')}) / "
-        f"({d(df)} + {d('0.5')})) + {d('1.0')})"
-    )
-    sat = (
-        f"(({d(tf)} * {d('2.2')}) / ({d(tf)} + {d('1.2')} * "
-        f"({d('1.0')} - {d('0.75')} + {d('0.75')} * {d(dl)} / "
-        f"({d(sum_dl)} / {d(n_docs)}))))"
-    )
-    return f"CAST(floor({d('1000000')} * {idf} * {sat}) AS BIGINT)"
 
 
 # PII redaction patterns, applied in precedence order: the earlier a
@@ -367,10 +264,6 @@ def pii_scrub_col(text: str) -> Column:
     return F.expr(pii_scrub_sql(text, "spark"))
 
 
-def bpe_count_col(text: str) -> Column:
-    return F.expr(bpe_count_sql(text, "spark"))
-
-
 def lang_id_col(text: str) -> Column:
     return F.expr(lang_id_sql(tokens_sql(text, "spark"), "spark"))
 
@@ -379,52 +272,6 @@ def quality_score_col(text: str) -> Column:
     return F.expr(quality_score_sql(text, "spark"))
 
 
-def fingerprint_col(text: str, n: int = 8) -> Column:
-    return F.expr(fingerprint_sql(text, n, "spark"))
-
-
-def dup_ngram_frac_col(text: str, n: int) -> Column:
-    return F.expr(dup_ngram_frac_sql(text, n, "spark"))
-
-
-def simhash_col(text: str, nbits: int = 32) -> Column:
-    hashes = token_hashes_sql(tokens_sql(text, "spark"), "spark")
-    return F.expr(simhash_sql(hashes, nbits, "spark"))
-
-
 def minhash_col(text: str, perm: int, shingle_n: int = 3) -> Column:
     sh = shingles_sql(tokens_sql(text, "spark"), shingle_n, "spark")
     return F.expr(minhash_sql(token_hashes_sql(sh, "spark"), perm, "spark"))
-
-
-def bow_vec_sql(text: str, dim: int = 64, dialect: str = "spark") -> str:
-    """Hashed bag-of-words vector (``dim`` token-hash-bucket counts) of a
-    text column — the deterministic text-embedding twin used for
-    cross-modal alignment against stored image embeddings.
-
-    Pure dual-dialect SQL (nested higher-order lambdas), so the DuckDB
-    oracle computes bit-identical vectors. O(dim * n_tokens) interpreted
-    lambda evaluation: fine at oracle/test scale; the 10^12-row scale
-    path is the same hash-bucket count in a vectorized Pandas stage
-    (one pass per token), not this expression.
-    """
-    toks = tokens_sql(text, dialect)
-    h = f"({hash60_sql('t', dialect)} % {dim})"
-    # blank-text guard (same hazard token_count_sql gates): splitting ''
-    # yields [''] in both dialects, which would count one phantom token
-    # into bucket hash('')%dim — an empty caption must be the ZERO vector
-    # so cosine's zero-norm guard scores it 0, not ±1.
-    blank = f"(trim({text}) = '')"
-    if dialect == "spark":
-        vec = (
-            f"transform(sequence(0, {dim - 1}), "
-            f"d -> size(filter({toks}, t -> {h} = d)))"
-        )
-        zero = f"transform(sequence(0, {dim - 1}), d -> 0)"
-    else:
-        vec = (
-            f"list_transform(range(0, {dim}), "
-            f"d -> len(list_filter({toks}, t -> {h} = d)))"
-        )
-        zero = f"list_transform(range(0, {dim}), d -> 0)"
-    return f"(CASE WHEN {blank} THEN {zero} ELSE {vec} END)"

@@ -178,8 +178,6 @@ def _decode_polygon_body(mv: memoryview, off: int, bo: str):
 # Spark stages (Arrow-batched mapInPandas over the feature schema)
 # ---------------------------------------------------------------------------
 
-_GEOM_COLS = ["shape_type", "xs", "ys", "ring_sizes"]
-
 
 def with_wkb(features: DataFrame, col: str = "wkb") -> DataFrame:
     """Append a canonical ``wkb: binary`` column to a feature DataFrame."""

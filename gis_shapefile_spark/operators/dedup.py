@@ -6,7 +6,8 @@ document-level dedup. Four families, all DataFrame-native:
 
 * exact        — md5 groupBy (one shuffle, map-side partial min);
 * MinHash+LSH  — shingle → minhash → band → bucket equi-join;
-* SimHash      — pigeonhole block tables for hamming <= k;
+* Hamming      — pigeonhole block tables for hamming <= k over any
+  integer signature (image perceptual hashes);
 * n-gram Jaccard — exact verify kernel for candidate pairs, plus a
   sketch-free prefix-filtering self-join (``jaccard_join_prefix``) whose
   candidate set is provably complete for Jaccard >= t.
@@ -126,19 +127,6 @@ def minhash_band_table(
     return wide.select(
         F.col(id_col), F.explode(pairs).alias("bb")
     ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-
-
-def minhash_fingerprints(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 8,
-) -> DataFrame:
-    """(id, fp): MinHash(perm 0) over word ``shingle_n``-gram hashes — the
-    scale-path twin of ``functions.text_analysis.fingerprint_col``."""
-    return minhash_values(df, id_col, text_col, 1, shingle_n).select(
-        F.col(id_col), F.col("mh0").alias("fp")
-    )
 
 
 def lsh_candidate_pairs(
@@ -369,33 +357,6 @@ def jaccard_join_prefix(
     return scored.where(F.col("jaccard_u") >= int(threshold * 1000000))
 
 
-def simhash_table(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", nbits: int = 32
-) -> DataFrame:
-    """(id, simhash) — token-level SimHash signature per doc."""
-    return df.select(
-        F.col(id_col), TA.simhash_col(text_col, nbits).alias("simhash")
-    )
-
-
-def simhash_near_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    nbits: int = 32,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Pairs with SimHash hamming distance <= ``max_hamming``.
-
-    Pigeonhole block scheme: split the signature into ``max_hamming + 1``
-    contiguous blocks; any pair within distance k must agree exactly on at
-    least one block, so candidates come from (block_idx, block_value)
-    equi-joins — never a cross join. Verified with exact bit_count.
-    """
-    sig = simhash_table(df, id_col, text_col, nbits)
-    return hamming_near_pairs(sig, id_col, "simhash", nbits, max_hamming)
-
-
 def hamming_near_pairs(
     sig: DataFrame,
     id_col: str,
@@ -618,232 +579,4 @@ def connected_components_star(
             F.col("node").alias(id_col),
             F.coalesce("label", "node").alias("component"),
         )
-    )
-
-
-def decontaminate(
-    corpus: DataFrame,
-    eval_set: DataFrame,
-    shingle_n: int = 3,
-    min_hits: int = 1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Benchmark decontamination: per-corpus-doc overlap against the
-    n-gram shingle set of an evaluation corpus (the standard train/test
-    leakage check run before every pretraining job — a training doc that
-    shares eval n-grams inflates benchmark scores).
-
-    Returns (id_col, n_shingles, n_hits, contaminated):
-
-    * ``n_shingles``   — distinct word ``shingle_n``-gram hashes in the doc;
-    * ``n_hits``       — how many of those occur ANYWHERE in the eval set
-      (global eval shingle set, the GPT-3/PaLM-style criterion — not
-      per-eval-doc);
-    * ``contaminated`` — 1 when ``n_hits >= min_hits``. Docs with fewer
-      than ``shingle_n`` tokens have zero shingles and are never flagged
-      (kept in the output with zero counts via ``explode_outer``, so the
-      report covers every corpus doc).
-
-    Scale shape: the eval side (thousands of docs) collapses to a distinct
-    hash set and is BROADCAST; the corpus side streams scan -> shingle
-    expressions (JVM codegen, ``functions/text_analysis.py``) -> explode ->
-    broadcast hash join -> one groupBy(id) shuffle. The 10^12-doc corpus is
-    read once, never re-joined to itself, and nothing corpus-sized is ever
-    collected or broadcast. Count aggregates combine map-side.
-    """
-    gh = F.expr(
-        TA._arr_transform(
-            TA.shingles_sql(TA.tokens_sql(text_col), shingle_n),
-            "g",
-            TA.hash60_sql("g"),
-            "spark",
-        )
-    )
-    eval_grams = (
-        eval_set.select(F.explode(F.array_distinct(gh)).alias("gh"))
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
-    # per-doc gram dedup via array_distinct BEFORE the explode: the
-    # row-level distinct it replaces cost a full extra shuffle of the
-    # exploded gram stream (hash(doc_id, gh) partitioning is useless to
-    # the later groupBy(doc_id)); the array form keeps dedup inside the
-    # scan stage and leaves ONE exchange in the whole plan.
-    doc_grams = corpus.select(
-        F.col(id_col), F.explode_outer(F.array_distinct(gh)).alias("gh")
-    )
-    return (
-        doc_grams.join(F.broadcast(eval_grams), "gh", "left")
-        .groupBy(id_col)
-        .agg(
-            F.count("gh").cast("long").alias("n_shingles"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("long").alias("n_hits"),
-        )
-        .select(
-            id_col,
-            "n_shingles",
-            "n_hits",
-            F.when(F.col("n_hits") >= min_hits, 1)
-            .otherwise(0)
-            .cast("long")
-            .alias("contaminated"),
-        )
-    )
-
-
-def paragraph_dedup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n\n",
-) -> DataFrame:
-    """C4-style cross-corpus PARAGRAPH dedup: a paragraph survives only
-    in the FIRST document it occurs in (lowest ``id_col``, then
-    paragraph position); every later occurrence anywhere in the corpus
-    is dropped and the documents are re-assembled from their surviving
-    paragraphs in order.
-
-    This is the named C4/RefinedWeb curation stage that document-level
-    dedup cannot do: boilerplate paragraphs (footers, license blocks,
-    navigation text) recur across millions of otherwise-distinct pages.
-
-    Plan (10^12-paragraph shape): posexplode the paragraphs (pipelined
-    with the scan), ONE shuffle on the paragraph content hash for the
-    first-occurrence window, then ONE shuffle back on the doc id for the
-    ordered re-assembly — no joins, no iteration. The re-assembly
-    aggregates ALL of a doc's paragraphs with a keep flag, so a document
-    whose every paragraph is a repeat still emits a row (empty
-    ``clean_text``) rather than silently vanishing. Whitespace-only
-    paragraphs (split artifacts) are dropped up front — letting them
-    into the window would put every empty paragraph in the corpus into
-    ONE hash partition, a self-inflicted hot key.
-
-    Returns (id_col, clean_text, n_kept, n_dropped).
-    """
-    from pyspark.sql import Window
-
-    paras = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "para"),
-    ).where(F.length(F.trim(F.col("para"))) > 0)
-    w = Window.partitionBy(F.md5(F.col("para"))).orderBy(id_col, "pos")
-    flagged = paras.withColumn("keep", F.row_number().over(w) == 1)
-    kept_sorted = F.expr(
-        "transform(filter(array_sort(collect_list(struct(pos, para, keep))),"
-        " x -> x.keep), x -> x.para)"
-    )
-    return flagged.groupBy(id_col).agg(
-        F.concat_ws(sep, kept_sorted).alias("clean_text"),
-        F.sum(F.col("keep").cast("long")).alias("n_kept"),
-        F.sum((~F.col("keep")).cast("long")).alias("n_dropped"),
-    )
-
-
-def substring_dedup(
-    df: DataFrame,
-    k: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Exact duplicate-SPAN removal at ``k``-token granularity — the
-    ExactSubstr stage of Lee et al., "Deduplicating Training Data Makes
-    Language Models Better" (2022), re-expressed relationally: every
-    ``k``-token window that occurred EARLIER anywhere in the corpus
-    (first occurrence = lowest (doc, position), the global order both
-    engines share) marks its tokens as duplicated; documents are
-    re-assembled from the surviving tokens. This is the granularity
-    between document-level (exact/minhash/simhash/jaccard) and
-    paragraph-level dedup: verbatim quotes, license blocks, and
-    templated spans recur INSIDE otherwise-unique documents, where
-    neither coarser stage can see them.
-
-    Plan (the suffix-array alternative, shaped for Spark): ONE token
-    posexplode (O(corpus tokens) rows — pipelined with the scan, the
-    honest cost of exact-substring semantics; the published alternative
-    is a distributed suffix array, which is also O(corpus tokens) but
-    not relational), one per-doc window shuffle shared by the token
-    renumbering AND the k-gram lead() construction, one shuffle on the
-    gram content hash for the first-occurrence window, a k-bounded
-    explode of the DUPLICATE spans only, and one shuffle back per doc
-    for ordered re-assembly. At corpus scale the gram group key would be
-    the 64-bit rolling fingerprint (``fingerprint_sql``) instead of
-    md5-of-string; the oracle-checked form keeps md5 for the same
-    collision-exposure class as ``paragraph_dedup``.
-
-    Tokenization is single-space split with empties dropped (the
-    dual-dialect-safe form). A document shorter than ``k`` tokens has no
-    windows and survives byte-identically (modulo whitespace collapse);
-    a fully-duplicated document still emits a row with empty
-    ``clean_text``. Self-repetition inside one document is removed the
-    same way (the second occurrence is later in the global order).
-
-    Returns (id_col, clean_text, n_kept, n_dropped).
-    """
-    from pyspark.sql import Window
-
-    if k < 2:
-        raise ValueError(f"k must be >= 2, got {k}")
-    toks = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "tok"),
-    ).where(F.length("tok") > 0)
-    wdoc = Window.partitionBy(id_col).orderBy("pos")
-    toks = toks.withColumn("tidx", F.row_number().over(wdoc) - 1)
-    # same partitioning+sort as the renumber window — one shuffle total
-    wt = Window.partitionBy(id_col).orderBy("tidx")
-    parts = [F.col("tok")] + [F.lead("tok", j).over(wt) for j in range(1, k)]
-    grams = toks.withColumn(
-        "gram",
-        F.when(
-            F.lead("tok", k - 1).over(wt).isNotNull(),
-            F.concat_ws(" ", *parts),
-        ),
-    )  # tail tokens keep a NULL gram — they still need keep flags below
-    # coverage WITHOUT a join: a token is dropped iff some duplicate
-    # k-gram STARTS within its trailing k-1 positions, so keep = (max of
-    # the dup-start flag over a [tidx-k+1, tidx] rows frame) == 0 — one
-    # more window over the SAME per-doc sort instead of a span explode +
-    # self-join, which re-scanned the corpus token pipeline on both join
-    # sides (measured plan: 3 scans / 8 exchanges; this form: 1 scan).
-    # Null grams (the last k-1 tokens of each doc) get a per-row unique
-    # window key — letting them share one null-key partition would put
-    # (k-1) * n_docs rows on a single reducer, a self-inflicted hot key.
-    wg = Window.partitionBy(
-        F.coalesce(
-            F.md5("gram"),
-            F.concat_ws(
-                ":",
-                F.lit("_tail"),
-                F.col(id_col).cast("string"),
-                F.col("tidx").cast("string"),
-            ),
-        )
-    ).orderBy(id_col, "tidx")
-    flagged = (
-        grams.withColumn(
-            "dup_start",
-            (
-                F.col("gram").isNotNull() & (F.row_number().over(wg) > 1)
-            ).cast("int"),
-        )
-        .withColumn(
-            "keep",
-            F.max("dup_start").over(
-                Window.partitionBy(id_col)
-                .orderBy("tidx")
-                .rowsBetween(-(k - 1), 0)
-            )
-            == 0,
-        )
-        .select(id_col, "tidx", "tok", "keep")
-    )
-    kept_sorted = F.expr(
-        "transform(filter(array_sort(collect_list(struct(tidx, tok, keep))),"
-        " x -> x.keep), x -> x.tok)"
-    )
-    return flagged.groupBy(id_col).agg(
-        F.concat_ws(" ", kept_sorted).alias("clean_text"),
-        F.sum(F.col("keep").cast("long")).alias("n_kept"),
-        F.sum((~F.col("keep")).cast("long")).alias("n_dropped"),
     )

@@ -464,12 +464,6 @@ def verify_invariants(
 # video / audio modalities (opaque binary + typed metadata, same seam)
 # ---------------------------------------------------------------------------
 
-VIDEO_SCHEMA = (
-    "video_id string, bytes binary, w int, h int, fmt string, "
-    "n_frames int, caption string"
-)
-AUDIO_SCHEMA = "audio_id string, bytes binary, sample_rate int, fmt string"
-
 
 def sample_frames(videos: DataFrame, n_sample: int) -> DataFrame:
     """Evenly sample ``n_sample`` frames from each video payload, emitting

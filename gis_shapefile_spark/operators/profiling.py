@@ -68,72 +68,6 @@ def key_skew_profile(df: DataFrame, key_cols: list[str], top_k: int = 20) -> Dat
     )
 
 
-def boilerplate_profile(
-    corpus: DataFrame,
-    shingle_n: int = 3,
-    min_df_pct: int = 1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Boilerplate contamination per document (the C4-style curation
-    signal): a shingle is BOILERPLATE when it appears in at least
-    ``min_df_pct`` percent of documents (nav bars, license footers,
-    template text); each doc is scored by how much of it is boilerplate.
-
-    Returns (id_col, n_shingles, n_boiler, boiler_ppm) for every doc —
-    ``boiler_ppm = floor(n_boiler * 1e6 / n_shingles)`` (0 for docs too
-    short to shingle). The threshold compare is pure integer
-    (``df * 100 >= n_docs * pct``) — no float in the decision.
-
-    Scale shape: two passes over the gram stream (inherent — document
-    frequency must exist before docs can be scored against it), each
-    scan -> JVM shingle expressions -> explode; pass 1 aggregates DF with
-    map-side combine, pass 2 left-joins the (small, high-DF-only)
-    boilerplate gram table — AQE broadcasts it when it fits — and
-    re-aggregates per doc. The corpus is never self-joined row-to-row and
-    nothing doc-count-scale reaches the driver.
-    """
-    from ..functions import text_analysis as TA
-
-    gh = F.expr(
-        TA._arr_transform(
-            TA.shingles_sql(TA.tokens_sql(text_col), shingle_n),
-            "g",
-            TA.hash60_sql("g"),
-            "spark",
-        )
-    )
-    doc_grams = corpus.select(
-        F.col(id_col), F.explode_outer(F.array_distinct(gh)).alias("gh")
-    )
-    n_docs = corpus.agg(F.count(F.lit(1)).alias("_n_docs"))
-    boiler = (
-        doc_grams.where(F.col("gh").isNotNull())
-        .groupBy("gh")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .join(F.broadcast(n_docs))
-        .where(F.col("df") * 100 >= F.col("_n_docs") * min_df_pct)
-        .select("gh", F.lit(1).alias("b"))
-    )
-    return (
-        doc_grams.join(boiler, "gh", "left")
-        .groupBy(id_col)
-        .agg(
-            F.count("gh").cast("long").alias("n_shingles"),
-            F.sum(F.coalesce("b", F.lit(0))).cast("long").alias("n_boiler"),
-        )
-        .select(
-            id_col,
-            "n_shingles",
-            "n_boiler",
-            F.when(F.col("n_shingles") == 0, F.lit(0))
-            .otherwise(F.floor(F.col("n_boiler") * 1000000 / F.col("n_shingles")))
-            .cast("long")
-            .alias("boiler_ppm"),
-        )
-    )
-
-
 def table_profile(
     df,
     numeric_cols: dict[str, int],

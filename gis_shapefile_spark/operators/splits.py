@@ -114,7 +114,7 @@ def percentile_bins(
     """Curriculum binning at scale: assign each row a quantile bin from
     APPROXIMATE percentile boundaries — no global sort.
 
-    The exact-ntile formulation (driver query ``quality_deciles``) is a
+    The exact-ntile formulation (``ntile`` over one window) is a
     single-partition global-ORDER window; this is its 10^12-row shape:
     one aggregation computes ``percentile_approx`` boundaries (KLL-style
     sketch, mergeable partials, driver state = n_bins-1 scalars), then
@@ -166,155 +166,6 @@ def stratified_sample(
                 key_col, stratum_col, rates, default_rate, salt, "spark"
             )
         )
-    )
-
-
-def _mixture_tgt_case(
-    source_col: str, weights_ppm: dict[str, int], budget_tokens: int
-) -> str:
-    """CASE mapping each source to its integer token TARGET
-    (budget * weight, computed exactly in Python — parameters, not data).
-    Unlisted sources target 0 tokens and are dropped."""
-    for s in weights_ppm:
-        if "'" in s:
-            raise ValueError(f"source value {s!r} must not contain quotes")
-    whens = " ".join(
-        f"WHEN {source_col} = '{s}' THEN {(budget_tokens * ppm) // 1000000}"
-        for s, ppm in weights_ppm.items()
-    )
-    return f"(CASE {whens} ELSE 0 END)"
-
-
-def mixture_sample_threshold_sql(
-    source_col: str,
-    toks_col: str,
-    weights_ppm: dict[str, int],
-    budget_tokens: int,
-) -> str:
-    """Per-source keep threshold over ``hash % 10000`` buckets:
-    ``least(10000, floor(target * 10000 / source_tokens))`` — one IEEE
-    division on identical BIGINT operands, floor-pinned, identical text
-    in both dialects."""
-    tgt = _mixture_tgt_case(source_col, weights_ppm, budget_tokens)
-    return (
-        f"least(10000, CAST(floor({tgt} * 10000 / {toks_col}) AS BIGINT))"
-    )
-
-
-def mixture_sample(
-    df,
-    id_col: str,
-    source_col: str,
-    weights_ppm: dict[str, int],
-    budget_tokens: int,
-    text_col: str = "text",
-    salt: str = "mix-v1",
-):
-    """Data-mixing sampler: downsample each source to hit a global token
-    budget at prescribed mixture proportions (the pretraining data-mix
-    step — e.g. 40% web / 30% books / 20% code by TOKENS, not rows).
-
-    ``weights_ppm``: {source: parts-per-million of the budget}. Each
-    source's keep probability is its token target over its actual token
-    mass, capped at 1 (a source smaller than its target is kept whole —
-    no upsampling; repeat-epoch upsampling is a separate concern).
-    Membership is the salted key hash — stable across runs, partitions,
-    and engines, like every split in this module.
-
-    Scale shape: one aggregation pass for per-source token totals
-    (map-side combined, source-cardinality rows), broadcast-joined back;
-    the keep decision is a codegen hash predicate at the scan. Nothing
-    data-sized reaches the driver.
-    """
-    from pyspark.sql import functions as F
-
-    clash = set(df.columns) & {"_thr", "_toks"}
-    if clash:
-        raise ValueError(
-            f"mixture_sample reserves column names ['_thr', '_toks']; "
-            f"rename {sorted(clash)} first"
-        )
-    tok = F.expr(TA.token_count_sql(text_col, "spark"))
-    totals = df.groupBy(source_col).agg(
-        F.sum(tok).cast("long").alias("_toks")
-    )
-    thr_expr = mixture_sample_threshold_sql(
-        source_col, "_toks", weights_ppm, budget_tokens
-    )
-    thr = totals.select(
-        source_col, F.expr(thr_expr).alias("_thr")
-    )
-    bucket = (
-        f"({TA.hash60_sql(_key_string(id_col, salt, 'spark'), 'spark')}"
-        f" % {BUCKETS})"
-    )
-    return (
-        df.join(F.broadcast(thr), source_col)
-        .where(F.expr(bucket) < F.col("_thr"))
-        .drop("_thr")
-    )
-
-
-def epoch_mixture_sample(
-    df,
-    id_col: str,
-    source_col: str,
-    weights_ppm: dict[str, int],
-    budget_tokens: int,
-    text_col: str = "text",
-    salt: str = "mix-v1",
-):
-    """Full data-mixing sampler: each doc appears ``target/mass`` times in
-    expectation — the generalization of ``mixture_sample`` that also
-    UPSAMPLES scarce sources by repeat epochs (the standard pretraining
-    recipe for high-value small corpora: books seen 3x, web seen 0.4x).
-
-    Output = input columns + ``epoch`` (0-based repeat index): every doc
-    of a source with token mass M and target T emits ``T // M`` full
-    epochs, plus membership in one partial epoch decided by the same
-    salted key hash as every split in this module (threshold
-    ``floor((T % M) * 10000 / M)`` buckets). A source over its target
-    degenerates to 0 full epochs + a partial — exactly
-    ``mixture_sample``'s behavior with an added epoch column.
-
-    Scale shape: one token-total aggregation, broadcast join of the
-    (source-cardinality) epoch/threshold table, then a codegen
-    ``explode(sequence(0, full_epochs))`` — fan-out is the epoch count
-    (single digits), never data-squared. Partial-epoch filtering happens
-    BEFORE any shuffle-consuming downstream op.
-    """
-    from pyspark.sql import functions as F
-
-    clash = set(df.columns) & {"_full", "_rem_thr", "_toks", "epoch"}
-    if clash:
-        raise ValueError(
-            "epoch_mixture_sample reserves column names "
-            f"['_full', '_rem_thr', '_toks', 'epoch']; rename {sorted(clash)} first"
-        )
-    tok = F.expr(TA.token_count_sql(text_col, "spark"))
-    tgt = _mixture_tgt_case(source_col, weights_ppm, budget_tokens)
-    totals = df.groupBy(source_col).agg(F.sum(tok).cast("long").alias("_toks"))
-    plan = totals.select(
-        source_col,
-        F.expr(f"CAST(floor({tgt} / _toks) AS BIGINT)").alias("_full"),
-        F.expr(
-            f"CAST(floor(({tgt} % _toks) * 10000 / _toks) AS BIGINT)"
-        ).alias("_rem_thr"),
-    )
-    bucket = (
-        f"({TA.hash60_sql(_key_string(id_col, salt, 'spark'), 'spark')}"
-        f" % {BUCKETS})"
-    )
-    return (
-        df.join(F.broadcast(plan), source_col)
-        .select(
-            "*", F.explode(F.expr("sequence(0, _full)")).alias("epoch")
-        )
-        .where(
-            (F.col("epoch") < F.col("_full"))
-            | (F.expr(bucket) < F.col("_rem_thr"))
-        )
-        .drop("_full", "_rem_thr")
     )
 
 
@@ -373,44 +224,6 @@ def seq_pack(
     return df.withColumn(
         "pack_id",
         F.expr(seq_pack_sql(text_col, order_col, source_col, budget_tokens)),
-    )
-
-
-def interleave_pack(
-    docs: DataFrame,
-    image_docs: DataFrame,
-    tokens_per_image: int = 64,
-    budget_tokens: int = 2048,
-    text_col: str = "text",
-    order_col: str = "doc_id",
-    source_col: str = "source",
-) -> DataFrame:
-    """Interleaved multimodal sequence packing (MMC4/OBELICS-style
-    pretraining): a document's sequence cost is its text tokens PLUS a
-    fixed vision-token budget per attached image, and documents pack
-    under that combined cost — so image-heavy docs consume their true
-    share of the context window instead of overflowing it at train time.
-
-    ``image_docs`` carries one row per image with a ``doc_id`` column
-    (however the upstream matched images to documents). Plan: one
-    partial-agg shuffle counts images per doc (map-side combine, output
-    bounded by |touched docs|, Catalyst broadcasts it when small), one
-    equi-join back to the doc table, then the same single-exchange
-    prefix-sum window as ``seq_pack``. No Python anywhere.
-
-    Output: ``docs`` columns + ``n_img`` + ``pack_id``.
-    """
-    counts = image_docs.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_img")
-    )
-    d = docs.join(counts, "doc_id", "left").withColumn(
-        "n_img", F.coalesce(F.col("n_img"), F.lit(0)).cast("long")
-    )
-    tok = TA.token_count_sql(text_col, "spark")
-    cost = f"({tok} + {int(tokens_per_image)} * n_img)"
-    return d.withColumn(
-        "pack_id",
-        F.expr(pack_cost_sql(cost, order_col, source_col, budget_tokens)),
     )
 
 

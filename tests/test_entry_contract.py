@@ -68,8 +68,8 @@ MUST_BE_IN_CAP = {
     # windows stay in-cap via trajectory/trajectory_geo/stay_points/
     # od_matrix)
     "corpus_curation",
-    # splits/packing family anchor (quality_deciles + mixture_sample
-    # rotated out r3-green; the family stays in-cap via seq_pack)
+    # splits/packing family anchor (the family stays in-cap via
+    # seq_pack)
     "seq_pack",
 }
 
@@ -137,13 +137,15 @@ def _write_artifact(root: Path, rnd: int, rows: dict[str, bool]) -> None:
 def test_cap_order_from_artifacts(tmp_path):
     """Anchors first, then never-green queries (no row, or red rows
     only), then oldest last-green round first; ties keep registry
-    order. Anchors sort among themselves by the same key."""
+    order. Anchors sort among themselves by the same key. A green row
+    naming a query no longer in the registry stays out of the order."""
     import json
 
     names = ["late", "pip_grid_join", "old_b", "red_only", "absent",
              "old_a", "mid", "seq_pack"]
     _write_artifact(tmp_path, 1, {"late": True, "old_b": True, "old_a": True,
-                                  "mid": True, "red_only": False})
+                                  "mid": True, "red_only": False,
+                                  "token_count": True})  # deleted query
     _write_artifact(tmp_path, 2, {"mid": True, "old_b": False, "red_only": False})
     _write_artifact(tmp_path, 10, {"late": True, "pip_grid_join": True})
     # a schema mismatch is red even when rows and hash match

@@ -1,10 +1,11 @@
-"""Dead-code guard: every top-level function in the package is used.
+"""Dead-code guard: every top-level name in the package is used.
 
-Pure Python (ast plus a text search, no Spark). A top-level ``def`` in
-``gis_shapefile_spark/`` counts as used when its name appears as a whole
-word anywhere in the package, ``bench.py``, ``__spark_entry__.py``,
-``tools/``, ``perfbench/`` or ``tests/`` outside its own definition.
-Registry queries (``q_*``, collected by name in ``__spark_entry__``) and
+Pure Python (ast plus a text search, no Spark). A top-level ``def`` or
+module-level assigned name in ``gis_shapefile_spark/`` counts as used
+when it appears as a whole word anywhere in the package, ``bench.py``,
+``__spark_entry__.py``, ``tools/``, ``perfbench/`` or ``tests/`` outside
+its own statement. Registry queries (``q_*``, collected by name in
+``__spark_entry__``; ``q_nearest_road_big_oracle`` is an alias) and
 dunders are exempt.
 """
 
@@ -31,6 +32,21 @@ def _exempt(name: str) -> bool:
     return name.startswith("q_") or (name.startswith("__") and name.endswith("__"))
 
 
+def _defined_names(node: ast.stmt) -> list[str]:
+    """Names a top-level statement binds: a def, or the names (tuple
+    elements included) an assignment stores to."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        return [node.name]
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return []
+    return [n.id for t in targets for n in ast.walk(t)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)]
+
+
 def unreferenced_defs() -> list[str]:
     sources = _sources()
     words = Counter(w for lines in sources.values() for line in lines for w in _WORD.findall(line))
@@ -39,12 +55,13 @@ def unreferenced_defs() -> list[str]:
         if not path.is_relative_to(PACKAGE):
             continue
         for node in ast.parse("\n".join(lines)).body:
-            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) or _exempt(node.name):
-                continue
-            start = min([d.lineno for d in node.decorator_list] + [node.lineno]) - 1
-            own = sum(_WORD.findall(line).count(node.name) for line in lines[start:node.end_lineno])
-            if words[node.name] == own:
-                dead.append(f"{path.relative_to(ROOT)}::{node.name}")
+            start = min([d.lineno for d in getattr(node, "decorator_list", [])] + [node.lineno]) - 1
+            for name in _defined_names(node):
+                if _exempt(name):
+                    continue
+                own = sum(_WORD.findall(line).count(name) for line in lines[start:node.end_lineno])
+                if words[name] == own:
+                    dead.append(f"{path.relative_to(ROOT)}::{name}")
     return dead
 
 

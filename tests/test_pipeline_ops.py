@@ -179,25 +179,6 @@ def test_lsh_max_bucket_caps_degenerate_buckets(spark):
     assert DD.lsh_candidate_pairs(df, max_bucket=None).count() == 30 * 29 // 2
 
 
-def test_simhash_pigeonhole_completeness(spark, docs_df):
-    """Every pair within hamming <= 3 must be found (block scheme is
-    complete for <= max_hamming); verified against brute force."""
-    sigs = {r.doc_id: r.simhash for r in DD.simhash_table(docs_df).collect()}
-    found = {
-        (r.id_1, r.id_2): r.hamming
-        for r in DD.simhash_near_pairs(docs_df, max_hamming=3).collect()
-    }
-    ids = sorted(sigs)
-    for i in ids:
-        for j in ids:
-            if i < j:
-                ham = bin(sigs[i] ^ sigs[j]).count("1")
-                if ham <= 3:
-                    assert found.get((i, j)) == ham
-                else:
-                    assert (i, j) not in found
-
-
 def _vecs(n: int, dim: int = 16, seed: int = 3) -> pd.DataFrame:
     rng = np.random.RandomState(seed)
     v = rng.standard_normal((n, dim)).astype(np.float32)
@@ -275,34 +256,6 @@ def test_lang_id_and_quality(spark):
         "doc_id", TA.quality_score_col("text").alias("q")).collect()}
     assert q[0] > q[2]  # stopword-free junk scores lower
     assert all(0 <= v <= 1000000 for v in q.values())
-
-
-def test_dup_ngram_fractions(spark):
-    pdf = pd.DataFrame(
-        {
-            "doc_id": [0, 1, 2, 3],
-            "text": [
-                "a a a a",            # all dup tokens, all dup 2-grams
-                "a b c d",            # no repetition at any n
-                "a b a b a",          # 2-grams: (a b, b a, a b, b a) -> 1/2 dup
-                "   ",                # blank -> 0 everywhere
-            ],
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    rows = {
-        r.doc_id: (r.d1, r.d2, r.d3)
-        for r in df.select(
-            "doc_id",
-            TA.dup_ngram_frac_col("text", 1).alias("d1"),
-            TA.dup_ngram_frac_col("text", 2).alias("d2"),
-            TA.dup_ngram_frac_col("text", 3).alias("d3"),
-        ).collect()
-    }
-    assert rows[0] == (750000, 666666, 500000)  # 1-1/4, 1-1/3, 1-1/2
-    assert rows[1] == (0, 0, 0)
-    assert rows[2] == (600000, 500000, 333333)  # 1-2/5, 1-2/4, 1-2/3
-    assert rows[3] == (0, 0, 0)
 
 
 def test_ivf_full_probe_equals_bruteforce(spark):
@@ -992,40 +945,6 @@ def test_hourly_gapfill_semantics(spark):
     assert len(out) == 5  # dense span for user 1 (4 hours) + user 2 (1)
 
 
-def test_decontaminate_planted_overlap(spark):
-    """Planted contamination: a training doc that embeds an eval doc's
-    text is flagged with the exact shared-shingle count; disjoint docs
-    are clean; a doc shorter than the shingle width survives with zero
-    counts (explode_outer path)."""
-    evalset = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog")],
-        "doc_id long, text string",
-    )
-    corpus = spark.createDataFrame(
-        [
-            (10, "prefix words then the quick brown fox jumps over the lazy dog"),
-            (11, "completely unrelated content about spark partitions here"),
-            (12, "tiny doc"),  # < 3 tokens -> zero shingles
-            (13, "the quick brown fox jumps over the lazy dog"),  # exact eval copy
-        ],
-        "doc_id long, text string",
-    )
-    out = {
-        r.doc_id: r
-        for r in DD.decontaminate(corpus, evalset, shingle_n=3).collect()
-    }
-    assert len(out) == 4
-    # eval doc has 9 tokens -> 7 distinct 3-gram shingles
-    assert out[13].n_shingles == 7 and out[13].n_hits == 7
-    assert out[13].contaminated == 1
-    # embedded copy: all 7 eval shingles present among its own
-    assert out[10].n_hits == 7 and out[10].contaminated == 1
-    assert out[10].n_shingles > 7
-    assert out[11].n_hits == 0 and out[11].contaminated == 0
-    assert out[12].n_shingles == 0 and out[12].n_hits == 0
-    assert out[12].contaminated == 0
-
-
 def test_key_skew_profile_finds_planted_hot_key(spark):
     """1000 rows on key 7, one row each on keys 0..99: the profiler must
     rank the hot key first with exact integer share/skew measures."""
@@ -1043,123 +962,6 @@ def test_key_skew_profile_finds_planted_hot_key(spark):
     # ties among the singleton keys break by key ascending
     assert [r.key for r in out[1:]] == [0, 1, 2, 3]
     assert all(r.n_rows == 1 for r in out[1:])
-
-
-def test_boilerplate_profile_planted_footer(spark):
-    """A footer shared by >=1% of docs is flagged as boilerplate in every
-    doc carrying it; unique text scores 0; a doc that is ONLY footer
-    scores ~1e6 ppm."""
-    from gis_shapefile_spark.operators import profiling as PR
-
-    footer = "all rights reserved contact us at example"  # 7 tokens -> 5 shingles
-    # body tokens all embed the doc id, so no body (or body->footer
-    # stitch) shingle repeats across docs — only the footer is common
-    rows = [(i, f"a{i}q b{i}r c{i}s d{i}t e{i}u " + footer) for i in range(20)]
-    rows += [(100, "completely unrelated standalone text with no common parts")]
-    rows += [(101, footer)]  # pure boilerplate doc
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    # 22 docs, footer shingles in 21 -> df*100 >= 22*50 needs min_df_pct=50
-    out = {r.doc_id: r for r in
-           PR.boilerplate_profile(df, shingle_n=3, min_df_pct=50).collect()}
-    assert out[101].n_boiler == out[101].n_shingles == 5
-    assert out[101].boiler_ppm == 1000000
-    assert out[100].n_boiler == 0 and out[100].boiler_ppm == 0
-    # footered docs: exactly the 5 footer shingles + the 2 stitch shingles
-    # spanning body->footer are doc-specific (contain the unique id words)
-    for i in range(20):
-        assert out[i].n_boiler == 5
-        assert 0 < out[i].boiler_ppm < 1000000
-
-
-def test_mixture_sample_budget_and_cap(spark):
-    """Token-budget mixing: a source smaller than its target is kept
-    WHOLE (cap, no upsampling); a dominant source is downsampled toward
-    its token target; unlisted sources are dropped; membership is stable
-    across repartitioning."""
-    from gis_shapefile_spark.operators import splits as SP
-
-    rows = [(i, "big", "w " * 50) for i in range(400)]        # 20k tokens
-    rows += [(1000 + i, "tiny", "t " * 10) for i in range(5)]  # 50 tokens
-    rows += [(2000 + i, "other", "x y z") for i in range(50)]  # unlisted
-    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-
-    kept = SP.mixture_sample(
-        df, "doc_id", "source",
-        {"big": 500000, "tiny": 500000}, budget_tokens=4000,
-    )
-    by_src = {r[0]: r[1] for r in kept.groupBy("source").count().collect()}
-    assert "other" not in by_src
-    assert by_src["tiny"] == 5  # target 2000 tokens >> 50 -> keep all
-    # big: target 2000 of 20000 tokens -> ~10% keep rate (hash variance)
-    assert 20 <= by_src["big"] <= 65
-
-    ids1 = {r.doc_id for r in kept.collect()}
-    ids2 = {
-        r.doc_id
-        for r in SP.mixture_sample(
-            df.repartition(13), "doc_id", "source",
-            {"big": 500000, "tiny": 500000}, budget_tokens=4000,
-        ).collect()
-    }
-    assert ids1 == ids2
-
-
-def test_epoch_mixture_sample_upsamples_scarce_source(spark):
-    """Repeat-epoch mixing: a source at half its token target appears
-    exactly twice (1 full epoch + full-threshold partial); a source at
-    4x its target downsamples to ~25% with epoch 0 only; expected token
-    mass tracks the targets."""
-    from gis_shapefile_spark.operators import splits as SP
-
-    rows = [(i, "scarce", "s " * 10) for i in range(10)]   # 100 tokens
-    rows += [(100 + i, "big", "b " * 10) for i in range(80)]  # 800 tokens
-    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    kept = SP.epoch_mixture_sample(
-        df, "doc_id", "source",
-        {"scarce": 500000, "big": 500000}, budget_tokens=400,
-    ).collect()
-    # scarce: target 200 vs mass 100 -> _full=2, rem 0 -> epochs {0,1}, all docs
-    sc = [r for r in kept if r.source == "scarce"]
-    assert len(sc) == 20 and {r.epoch for r in sc} == {0, 1}
-    assert all(sum(1 for r in sc if r.doc_id == i) == 2 for i in range(10))
-    # big: target 200 vs mass 800 -> _full=0, thr 2500 -> ~25% in epoch 0
-    bg = [r for r in kept if r.source == "big"]
-    assert {r.epoch for r in bg} == {0}
-    assert 8 <= len(bg) <= 35  # hash variance around 20
-
-
-def test_crossmodal_alignment_planted_pairs(spark):
-    """Integerized cross-modal cosine: an embedding equal to its caption's
-    hashed-BoW vector scores ~+1e9, the negated embedding ~-1e9, an
-    orthogonal one-hot (on an empty BoW bucket) scores 0."""
-    from gis_shapefile_spark.operators import similarity as SIM
-
-    dim = 8
-    cap = "the cat sat on the mat"
-    bow = [2.0, 0.0, 1.0, 1.0, 0.0, 2.0, 0.0, 0.0]  # verified vs duckdb
-    ortho = [0.0, 1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0]  # hits only empty bucket
-    df = spark.createDataFrame(
-        [(0, cap, bow), (1, cap, [-v for v in bow]), (2, cap, ortho),
-         (3, "   ", bow)],  # blank caption -> zero vector -> score 0
-        "doc_id long, text string, embedding array<double>",
-    )
-    align = SIM.cosine_u_sql(
-        SIM.dot_u_sql("embedding", "txtvec", "spark"),
-        SIM.norm_u_sql("embedding", "spark"),
-        SIM.norm_u_sql("txtvec", "spark"),
-    )
-    out = {
-        r.doc_id: r.align_u
-        for r in df.select(
-            "doc_id",
-            F.expr(TA.bow_vec_sql("text", dim, "spark")).alias("txtvec"),
-            "embedding",
-        ).select("doc_id", F.expr(align).alias("align_u")).collect()
-    }
-    assert abs(out[0] - 10**9) <= 2
-    assert abs(out[1] + 10**9) <= 2
-    assert out[2] == 0
-    assert out[3] == 0  # blank caption must not score via a phantom token
 
 
 def test_pii_scrub_redactions(spark):
@@ -1213,77 +1015,6 @@ def test_seq_pack_boundary_semantics(spark):
     assert got[2] == 0          # starts at 8 (< 10): overflow stays in pack 0
     assert got[3] == 1          # starts at 12
     assert got[10] == 0         # independent per-source stream
-
-
-def test_interleave_pack_semantics(spark):
-    """Interleaved multimodal packing: a doc's cost is text tokens +
-    tokens_per_image * n attached images; zero-image docs reduce exactly
-    to seq_pack; assignments match a pandas prefix-sum oracle."""
-    from gis_shapefile_spark.operators import splits as SP
-
-    rows = [
-        (0, "a", "w w w w"),   # 4 tok + 2 img*3 = 10
-        (1, "a", "x x x x"),   # 4 tok + 0     = 4
-        (2, "a", "y y y y"),   # 4 tok + 1 img*3 = 7
-        (3, "a", "z z"),       # 2 tok
-        (10, "b", "only doc in b"),
-    ]
-    docs = spark.createDataFrame(
-        rows, "doc_id long, source string, text string"
-    )
-    image_docs = spark.createDataFrame(
-        [(0,), (0,), (2,)], "doc_id long"
-    )
-    got = {
-        r.doc_id: (r.n_img, r.pack_id)
-        for r in SP.interleave_pack(
-            docs, image_docs, tokens_per_image=3, budget_tokens=10
-        ).collect()
-    }
-    # prefix sums in doc order for source a: 0, 10, 14, 21
-    assert got[0] == (2, 0)    # starts at 0
-    assert got[1] == (0, 1)    # starts at 10 -> pack 1
-    assert got[2] == (1, 1)    # starts at 14 -> pack 1
-    assert got[3] == (0, 2)    # starts at 21 -> pack 2
-    assert got[10] == (0, 0)   # independent per-source stream
-
-    # with no images at all, interleave_pack == seq_pack on every doc
-    empty = spark.createDataFrame([], "doc_id long")
-    a = {
-        r.doc_id: r.pack_id
-        for r in SP.interleave_pack(
-            docs, empty, tokens_per_image=3, budget_tokens=10
-        ).collect()
-    }
-    b = {
-        r.doc_id: r.pack_id
-        for r in SP.seq_pack(df=docs, budget_tokens=10).collect()
-    }
-    assert a == b
-
-
-def test_paragraph_dedup_first_occurrence_semantics(spark):
-    """Cross-corpus paragraph dedup: a repeated paragraph survives only
-    in its first (doc_id, pos) occurrence; docs re-assemble in order;
-    a doc whose every paragraph is a repeat still emits an empty row;
-    whitespace-only paragraphs are dropped without deduping each other."""
-    docs = [
-        (1, "alpha\n\nshared one\n\nbeta"),
-        (2, "shared one\n\ngamma\n\nshared two"),
-        (3, "shared two\n\nshared one"),          # all repeats
-        (4, "   \n\ndelta\n\n   "),               # whitespace paras
-        (5, "alpha"),                             # repeat of doc 1 pos 0
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    out = {
-        r.doc_id: (r.clean_text, r.n_kept, r.n_dropped)
-        for r in DD.paragraph_dedup(df).collect()
-    }
-    assert out[1] == ("alpha\n\nshared one\n\nbeta", 3, 0)
-    assert out[2] == ("gamma\n\nshared two", 2, 1)
-    assert out[3] == ("", 0, 2)   # fully-deduped doc still present
-    assert out[4] == ("delta", 1, 0)  # whitespace paras neither kept nor counted
-    assert out[5] == ("", 0, 1)
 
 
 def _greedy_pack_oracle(sizes, cap):
@@ -1405,80 +1136,6 @@ def test_shard_pack_kernel_fuzz_vs_oracle():
         cases.append((sizes, cap))
     for sizes, cap in cases:
         assert kernel(sizes, cap) == _greedy_pack_oracle(sizes, cap), (sizes, cap)
-
-
-# ---------------------------------------------------------------------------
-# exact substring (duplicate-span) dedup
-# ---------------------------------------------------------------------------
-
-def _ssd_oracle(texts: list[tuple[int, str]], k: int) -> dict:
-    """Sequential reference: first global occurrence (doc order, then
-    position) of every k-gram keeps; every later occurrence's k tokens
-    drop."""
-    toks = {d: [t for t in txt.split(" ") if t] for d, txt in texts}
-    seen: set[str] = set()
-    cov: dict[int, set] = {d: set() for d, _ in texts}
-    for d in sorted(toks):
-        tt = toks[d]
-        for i in range(len(tt) - k + 1):
-            g = " ".join(tt[i : i + k])
-            if g in seen:
-                cov[d].update(range(i, i + k))
-            else:
-                seen.add(g)
-    out = {}
-    for d in sorted(toks):
-        kept = [t for i, t in enumerate(toks[d]) if i not in cov[d]]
-        out[d] = (" ".join(kept), len(kept), len(toks[d]) - len(kept))
-    return out
-
-
-def _run_ssd(spark, texts, k):
-    df = spark.createDataFrame(pd.DataFrame(texts, columns=["doc_id", "text"]))
-    got = DD.substring_dedup(df, k=k).collect()
-    return {r.doc_id: (r.clean_text, r.n_kept, r.n_dropped) for r in got}
-
-
-def test_substring_dedup_planted_spans(spark):
-    tail = "alpha beta gamma delta epsilon zeta eta theta"  # 8 tokens
-    texts = [
-        (0, "unique words one " + tail),          # first occurrence keeps
-        (1, "other prefix two three " + tail),    # loses exactly the tail
-        (2, "totally unrelated text with no repeats at all here"),
-        (3, tail),                                # fully duplicated doc
-        (4, "short doc"),                         # < k tokens: untouched
-    ]
-    got = _run_ssd(spark, texts, k=8)
-    assert got == _ssd_oracle(texts, 8)
-    assert got[0][0].endswith(tail)          # first keeps the span
-    assert got[1] == ("other prefix two three", 4, 8)
-    assert got[3] == ("", 0, 8)              # row survives, text empty
-    assert got[4] == ("short doc", 2, 0)
-
-
-def test_substring_dedup_intra_doc_repetition(spark):
-    span = "a1 b2 c3 d4 e5 f6 g7 h8"
-    texts = [(0, span + " filler " + span)]
-    got = _run_ssd(spark, texts, k=8)
-    assert got == _ssd_oracle(texts, 8)
-    # the second occurrence inside the SAME doc drops
-    assert got[0][0] == span + " filler"
-
-
-def test_substring_dedup_fuzz_matches_python_oracle(spark):
-    rng = np.random.default_rng(31)
-    vocab = [f"w{i}" for i in range(12)]  # tiny vocab forces collisions
-    texts = [
-        (d, " ".join(rng.choice(vocab, size=int(rng.integers(3, 40)))))
-        for d in range(60)
-    ]
-    for k in (2, 3, 5):
-        assert _run_ssd(spark, texts, k=k) == _ssd_oracle(texts, k), k
-
-
-def test_substring_dedup_rejects_bad_k(spark):
-    with pytest.raises(ValueError):
-        DD.substring_dedup(None, k=1)
 
 
 def test_pq_encode_and_adc_match_numpy_twin(spark):
@@ -1681,167 +1338,3 @@ def test_ivfpq_index_matches_pq_brute_and_prunes(spark, tmp_path):
         SIM.pq_encode(df.where("label = 1"), cbs), queries, cbs, k=5
     )
     assert key(filtered.collect()) == key(brute_f.collect())
-
-
-# ---------------------------------------------------------------------------
-# BM25 ranked retrieval (functions/text_analysis.py::bm25_term_score_sql)
-# ---------------------------------------------------------------------------
-
-def test_bm25_idf_ln_parity_exhaustive(spark):
-    """The ONE libm call in the BM25 tree (ln in the idf) pinned
-    engine-vs-oracle over the ENTIRE df domain the corpora can produce:
-    every df in 0..N for several N, crossed with representative
-    (tf, dl, sum_dl) values, must floor-integerize identically in Spark
-    (JVM Math.log) and DuckDB (std::log). Exhaustive over the actual
-    input set, not a sample — if this passes, the gate's hash can never
-    flip on an idf ulp."""
-    import duckdb
-
-    rows = []
-    for n_docs, sum_dl in ((500, 24_000), (601, 90_017)):
-        for df in range(0, n_docs + 1):
-            for tf, dl in ((1, 7), (3, 40), (25, 553)):
-                rows.append((tf, df, dl, n_docs, sum_dl))
-    pdf = pd.DataFrame(
-        rows, columns=["tf", "df", "dl", "n_docs", "sum_dl"]
-    ).astype("int64")
-    expr = TA.bm25_term_score_sql("tf", "df", "dl", "n_docs", "sum_dl")
-    got = (
-        spark.createDataFrame(pdf)
-        .select("tf", "df", F.expr(expr).alias("s"))
-        .toPandas()
-        .sort_values(["df", "tf"])["s"]
-        .tolist()
-    )
-    con = duckdb.connect()
-    con.register("t", pdf)
-    exp = (
-        con.sql(f"SELECT tf, df, {expr} AS s FROM t ORDER BY df, tf")
-        .df()["s"]
-        .tolist()
-    )
-    assert got == exp
-
-
-def test_bm25_rank_matches_python_twin_and_orders_sanely(spark):
-    """End-to-end BM25 over a hand corpus == a python twin evaluating
-    the same expression tree with math.log (exact integer equality),
-    and the ranking behaves: term-stuffed short doc first, passing
-    mention later, term-free docs score exactly 0 and sort by doc_id."""
-    import math
-
-    texts = {
-        0: "spark spark spark join",                      # stuffed, short
-        1: "the corpus has one spark mention " + "filler " * 20,
-        2: "nothing relevant here at all " + "pad " * 10,
-        3: "join window join window spark",               # all three terms
-        4: "plain words only",
-    }
-    terms = ("spark", "join", "window")
-    pdf = pd.DataFrame(
-        {"doc_id": list(texts), "text": list(texts.values())}
-    )
-    docs = spark.createDataFrame(pdf)
-    toks = TA.tokens_sql("text", "spark")
-    per = docs.select(
-        "doc_id",
-        F.expr(TA._arr_len(toks, "spark")).alias("dl"),
-        *[
-            F.expr(TA.term_tf_sql(toks, t, "spark")).alias(f"tf{i}")
-            for i, t in enumerate(terms)
-        ],
-    )
-    stats = per.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("dl").cast("long").alias("sum_dl"),
-        *[
-            F.sum((F.col(f"tf{i}") > 0).cast("long")).alias(f"df{i}")
-            for i in range(len(terms))
-        ],
-    )
-    score = " + ".join(
-        TA.bm25_term_score_sql(f"tf{i}", f"df{i}", "dl", "n_docs", "sum_dl")
-        for i in range(len(terms))
-    )
-    got = {
-        r.doc_id: r.score_u
-        for r in per.crossJoin(F.broadcast(stats))
-        .withColumn("score_u", F.expr(score))
-        .collect()
-    }
-
-    # python twin: same tree, same evaluation order, floor per term
-    tok = {d: t.strip().lower().split() for d, t in texts.items()}
-    n = len(texts)
-    dls = {d: len(ts) for d, ts in tok.items()}
-    sum_dl = sum(dls.values())
-    exp = {}
-    for d, ts in tok.items():
-        s = 0
-        for t in terms:
-            tf = ts.count(t)
-            df = sum(1 for ts2 in tok.values() if t in ts2)
-            idf = math.log((n - df + 0.5) / (df + 0.5) + 1.0)
-            sat = (tf * 2.2) / (tf + 1.2 * (1.0 - 0.75 + 0.75 * dls[d] / (sum_dl / n)))
-            s += math.floor(1000000.0 * idf * sat)
-        exp[d] = s
-    assert got == exp
-    order = sorted(got, key=lambda d: (-got[d], d))
-    assert order[0] == 3 or order[0] == 0  # term-rich docs lead
-    assert got[2] == 0 and got[4] == 0     # term-free docs score exactly 0
-    assert got[0] > got[1]                 # stuffed short beats passing mention
-
-
-def test_bm25_term_tf_rejects_unsafe_literals():
-    with pytest.raises(ValueError):
-        TA.term_tf_sql("toks", "o'brien")
-
-
-def test_doc_logprob_matches_python_twin(spark):
-    """Unigram-LM scoring == a math.log python twin evaluating the same
-    integerized trees (floor@1e6 per token BEFORE the doc sum, final
-    floored mean of two exact integers); ranking sanity: the doc made
-    of corpus-common tokens scores a LOWER mean surprise than the doc
-    of hapaxes."""
-    import math
-
-    texts = {
-        0: "the the the cat sat",
-        1: "the cat sat on the mat",
-        2: "zyx qwv plk jhg",          # all hapaxes
-        3: "the the the the",
-    }
-    pdf = pd.DataFrame({"doc_id": list(texts), "text": list(texts.values())})
-    docs = spark.createDataFrame(pdf)
-    toks = TA.tokens_sql("text", "spark")
-    ex = docs.select(
-        "doc_id", F.explode(F.expr(toks)).alias("token")
-    ).where(F.col("token") != "")
-    vocab = ex.groupBy("token").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    total = vocab.agg(F.sum("cnt").cast("long").alias("total"))
-    logp = ("CAST(floor(CAST(1000000 AS DOUBLE) * "
-            "ln(CAST(cnt AS DOUBLE) / CAST(total AS DOUBLE))) AS BIGINT)")
-    model = vocab.crossJoin(F.broadcast(total)).selectExpr(
-        "token", f"{logp} AS logp_u"
-    )
-    got = {
-        r.doc_id: (r.n_tokens, r.sum_logp_u)
-        for r in ex.join(F.broadcast(model), "token")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_tokens"),
-             F.sum("logp_u").alias("sum_logp_u"))
-        .collect()
-    }
-
-    tok = {d: t.split() for d, t in texts.items()}
-    cnt: dict = {}
-    for ts in tok.values():
-        for t in ts:
-            cnt[t] = cnt.get(t, 0) + 1
-    total_n = sum(cnt.values())
-    lp = {t: math.floor(1000000.0 * math.log(c / total_n))
-          for t, c in cnt.items()}
-    exp = {d: (len(ts), sum(lp[t] for t in ts)) for d, ts in tok.items()}
-    assert got == exp
-    mean = {d: -s / n for d, (n, s) in got.items()}
-    assert mean[3] < mean[0] < mean[2]  # common-only < mixed < hapax-only

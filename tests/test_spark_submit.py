@@ -21,7 +21,7 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from gis_shapefile_spark.session import _package_zip  # noqa: E402
+from gis_shapefile_spark.session import _package_zip, host_cpus  # noqa: E402
 
 REPO = Path(__file__).resolve().parents[1]
 
@@ -41,6 +41,8 @@ def test_spark_submit_pyfiles_roundtrip(tmp_path):
     if submit is None:
         pytest.skip("no spark-submit binary available")
     zip_path = _package_zip()
+    # sized like session.get_spark: $SPARK_GRAFT_CPUS, else nproc
+    master = f"local[{int(os.environ.get('SPARK_GRAFT_CPUS') or host_cpus())}]"
 
     env = dict(os.environ)
     # neutral PYTHONPATH: the engine must come from --py-files, not the
@@ -53,7 +55,7 @@ def test_spark_submit_pyfiles_roundtrip(tmp_path):
         [
             submit,
             "--master",
-            "local[4]",
+            master,
             "--py-files",
             zip_path,
             str(REPO / "tools" / "submit_job.py"),
@@ -67,7 +69,7 @@ def test_spark_submit_pyfiles_roundtrip(tmp_path):
     assert proc.returncode == 0, proc.stderr[-3000:]
     line = [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
     out = json.loads(line)
-    assert out["master"] == "local[4]"
+    assert out["master"] == master
     assert out["pip_rows"] == 6  # every probe point lands in a state
     assert out["knn_rows"] == 18  # 6 points x k=3
     assert out["scrubbed"] == "mail me <EMAIL> or call <PHONE>"

@@ -2,7 +2,7 @@
 
 Run as:
 
-    spark-submit --master local[4] \
+    spark-submit --master "local[$(nproc)]" \
         --py-files /tmp/gis_shapefile_spark_pyfiles.zip \
         tools/submit_job.py
 
