@@ -29,11 +29,13 @@ strictly planar — Euclidean distance on raw degrees, axis-aligned bboxes
 cell system would *break* parity at tile edges while adding nothing the
 join planner uses; (b) this sandbox has no h3/s2 libraries and both
 index sides (JVM codegen expression AND the DuckDB oracle) need the cell
-function as portable integer SQL, which the Morton interleave gives in a
-handful of shifts; (c) every property the joins rely on — fixed-res equi
-keys, O(1) parent/child, ring neighbors, bbox covers — is shared by H3/S2/
-quadkey alike, so swapping in H3 on a real deployment changes one function
-pair (``cell_sql``/``cell_of_numpy``), not the operators.
+function as portable integer SQL, which the Morton interleave gives as
+one shift-and-mask term per bit (the text grows linearly with the
+resolution, so planning a key stays cheap); (c) every property the joins
+rely on — fixed-res equi keys, O(1) parent/child, ring neighbors, bbox
+covers — is shared by H3/S2/quadkey alike, so swapping in H3 on a real
+deployment changes one function pair (``cell_sql``/``cell_of_numpy``),
+not the operators.
 """
 
 from __future__ import annotations
@@ -69,12 +71,17 @@ def _shr(x: str, n: int, dialect: str) -> str:
     return f"({x} >> {n})"
 
 
-def _spread_sql(v: str, dialect: str) -> str:
-    """Interleave-spread a 26-bit int into even bit positions (52 bits)."""
-    e = v
-    for shift, mask in ((16, _M16), (8, _M8), (4, _M4), (2, _M2), (1, _M1)):
-        e = f"(({e} | {_shl(e, shift, dialect)}) & {mask})"
-    return e
+def _or_sql(terms: list[str]) -> str:
+    return f"({' | '.join(terms)})"
+
+
+def _spread_sql(v: str, bits: int, dialect: str) -> str:
+    """Spread the low ``bits`` bits of ``v`` to the even positions: bit
+    ``i`` moves to ``2i``. One term per bit, so the text grows linearly
+    with ``bits`` (a doubling chain quotes its input twice per step and
+    carries 32 copies of it). ``v`` appears ``max(bits, 1)`` times."""
+    return _or_sql([f"({_shl(v, i, dialect)} & {1 << 2 * i})"
+                    for i in range(max(bits, 1))])
 
 
 def axis_index_sql(coord: str, offset: float, extent: float, res: int, dialect: str) -> str:
@@ -87,11 +94,12 @@ def axis_index_sql(coord: str, offset: float, extent: float, res: int, dialect: 
 
 
 def pack_xy_sql(xi: str, yi: str, res: int, dialect: str = "spark") -> str:
-    """SQL packing of pre-quantized axis indices (the ``pack_xy`` twin);
-    lets distributed operators enumerate covering cells IN the plan
-    (sequence-explode over xi/yi ranges) instead of on the driver."""
-    sx = _spread_sql(f"({xi})", dialect)
-    sy = _spread_sql(f"({yi})", dialect)
+    """SQL packing of pre-quantized axis indices in ``[0, 2^res)`` (the
+    ``pack_xy`` twin); lets distributed operators enumerate covering
+    cells IN the plan (sequence-explode over xi/yi ranges) instead of on
+    the driver."""
+    sx = _spread_sql(f"({xi})", res, dialect)
+    sy = _spread_sql(f"({yi})", res, dialect)
     return f"({res << RES_SHIFT} | {sx} | {_shl(sy, 1, dialect)})"
 
 
@@ -110,12 +118,9 @@ def cell_sql(lng: str, lat: str, res: int, dialect: str = "spark") -> str:
 
 def _compact_sql(v: str, dialect: str) -> str:
     """Inverse of ``_spread_sql``: gather the even bits of a 52-bit morton
-    back into a dense 26-bit integer (the SQL twin of ``_compact_np``)."""
-    e = f"({v} & {_M1})"
-    for shift, mask in ((1, _M2), (2, _M4), (4, _M8), (8, _M16),
-                        (16, (1 << 26) - 1)):
-        e = f"(({e} | {_shr(e, shift, dialect)}) & {mask})"
-    return e
+    back into a dense 26-bit integer (the SQL twin of ``_compact_np``),
+    one term per bit: bit ``2i`` moves to ``i``."""
+    return _or_sql([f"({_shr(v, i, dialect)} & {1 << i})" for i in range(MAX_RES)])
 
 
 def cell_axis_sql(cell: str, axis: str, dialect: str = "spark") -> str:

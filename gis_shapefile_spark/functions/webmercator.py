@@ -33,15 +33,7 @@ import math
 
 import numpy as np
 
-from .cells import (
-    MORTON_MASK,
-    RES_SHIFT,
-    _shl,
-    _shr,
-    _spread_sql,
-    cell_xy,
-    pack_xy,
-)
+from .cells import MORTON_MASK, _shr, cell_xy, pack_xy, pack_xy_sql
 
 MAX_LAT = 85.05112878  # Web-Mercator square-world latitude clamp
 MAX_Z = 26  # same budget as cells.MAX_RES (52-bit morton)
@@ -83,9 +75,8 @@ def wm_cell_sql(lng: str, lat: str, z: int, dialect: str = "spark") -> str:
     """
     if not 0 <= z <= MAX_Z:
         raise ValueError(f"z must be in [0, {MAX_Z}]")
-    sx = _spread_sql(f"({tile_x_sql(lng, z, dialect)})", dialect)
-    sy = _spread_sql(f"({tile_y_sql(lat, z, dialect)})", dialect)
-    return f"({z << RES_SHIFT} | {sx} | {_shl(sy, 1, dialect)})"
+    return pack_xy_sql(tile_x_sql(lng, z, dialect), tile_y_sql(lat, z, dialect),
+                       z, dialect)
 
 
 def quadkey_sql(cell: str, z: int, dialect: str = "spark") -> str:

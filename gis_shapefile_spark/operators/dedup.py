@@ -8,9 +8,7 @@ document-level dedup. Four families, all DataFrame-native:
 * MinHash+LSH  — shingle → minhash → band → bucket equi-join;
 * Hamming      — pigeonhole block tables for hamming <= k over any
   integer signature (image perceptual hashes);
-* n-gram Jaccard — exact verify kernel for candidate pairs, plus a
-  sketch-free prefix-filtering self-join (``jaccard_join_prefix``) whose
-  candidate set is provably complete for Jaccard >= t.
+* n-gram Jaccard — exact verify kernel for candidate pairs.
 
 Scale design (10^12 docs, 1000 executors):
 
@@ -237,119 +235,6 @@ def near_duplicate_pairs(
     """
     cand = lsh_candidate_pairs(
         docs, id_col, text_col, bands, rows_per_band, shingle_n, max_bucket
-    )
-    if materialize:
-        cand = cand.localCheckpoint(eager=True)
-    scored = ngram_jaccard_pairs(cand, docs, id_col, text_col, shingle_n)
-    return scored.where(F.col("jaccard_u") >= int(threshold * 1000000))
-
-
-def jaccard_prefix_candidates(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Candidate pairs for an EXACT Jaccard-threshold self-join via
-    prefix filtering (the SSJoin/PPJoin family) — no sketches, no recall
-    loss.
-
-    Principle: J(A,B) >= t implies |A∩B| >= t·|A∪B| >= t·max(|A|,|B|),
-    and the SMALLEST shared shingle in any common total order must sit
-    within the first |S| - ceil(t·|S|) + 1 shingles of BOTH documents
-    (if it sat later in one of them, that document would hold >= ceil(
-    t·|S|) unshared shingles before it, leaving fewer than ceil(t·|S|)
-    shared — contradiction). Ordering shingles by ascending global
-    document frequency makes those prefixes the RAREST shingles, so the
-    prefix-shingle equi-join produces ~no candidates for unrelated
-    documents while provably missing none at or above the threshold —
-    the exact-completeness complement to ``lsh_candidate_pairs``
-    (probabilistic recall, no global frequency pass).
-
-    Scale shape (10^12 docs): explode -> partial-agg document-frequency
-    counts (one shuffle on shingle) -> per-doc rank window (one shuffle
-    on id) -> prefix equi-join on shingle. The PPJoin length filter
-    (100·min(|A|,|B|) >= t·100·max) prunes size-incompatible pairs
-    before verification. Prefix lengths use pure integer arithmetic
-    (ceil(t·s) as (s·t_pct + 99) DIV 100), so the filter is exact for
-    any corpus size.
-    """
-    from pyspark.sql import Window
-
-    tnum = int(round(threshold * 100))
-    sh_expr = TA.shingles_sql(
-        TA.tokens_sql(text_col, "spark"), shingle_n, "spark"
-    )
-    shs = docs.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(F.expr(sh_expr))).alias("sh"),
-    )
-    dfreq = shs.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
-    # rank and set size share ONE per-doc window shuffle: count(*) over
-    # the same partition replaces a separate groupBy(id) + join back
-    # (one fewer full shuffle of the exploded shingle table)
-    w_doc = Window.partitionBy(id_col)
-    prefix = (
-        shs.join(dfreq, "sh")
-        .withColumn("rk", F.row_number().over(w_doc.orderBy("df", "sh")))
-        .withColumn("sz", F.count(F.lit(1)).over(w_doc))
-        .where(
-            F.col("rk")
-            <= F.col("sz")
-            - F.expr(f"CAST((sz * {tnum} + 99) DIV 100 AS BIGINT)")
-            + F.lit(1)
-        )
-        .select(F.col(id_col), "sh", "sz", "rk")
-    )
-    a = prefix.select(
-        F.col(id_col).alias("id_1"), "sh",
-        F.col("sz").alias("sz1"), F.col("rk").alias("rk1"),
-    )
-    b = prefix.select(
-        F.col(id_col).alias("id_2"), "sh",
-        F.col("sz").alias("sz2"), F.col("rk").alias("rk2"),
-    )
-    # PPJoin positional filter: J >= t needs overlap i with
-    # i*(100+t_pct) >= t_pct*(sz1+sz2); all shared shingles sit at or
-    # after the FIRST shared one in both docs' common frequency order,
-    # so that row bounds i <= 1 + min(sz1-rk1, sz2-rk2). Filtering each
-    # matched row keeps the pair iff its first-shared-shingle row
-    # passes — completeness preserved, and it prunes the dominant cost
-    # (measured at the 20k-doc bench corpus: 1.22M candidate pairs ->
-    # ~6k, and the verify stage's 11 s -> sub-second).
-    return (
-        a.join(b, "sh")
-        .where(F.col("id_1") < F.col("id_2"))
-        .where(
-            F.least("sz1", "sz2") * 100 >= F.greatest("sz1", "sz2") * tnum
-        )
-        .where(
-            (F.lit(1) + F.least(F.col("sz1") - F.col("rk1"),
-                                F.col("sz2") - F.col("rk2")))
-            * (100 + tnum)
-            >= tnum * (F.col("sz1") + F.col("sz2"))
-        )
-        .select("id_1", "id_2")
-        .distinct()
-    )
-
-
-def jaccard_join_prefix(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    shingle_n: int = 3,
-    materialize: bool = True,
-) -> DataFrame:
-    """``near_duplicate_pairs``' exact twin: prefix-filter candidates ->
-    exact n-gram Jaccard >= threshold. Output (id_1, id_2, jaccard_u).
-    Unlike the MinHash path this returns EVERY pair at or above the
-    threshold (candidate completeness is a theorem, not a recall curve);
-    the price is the global document-frequency aggregation."""
-    cand = jaccard_prefix_candidates(
-        docs, id_col, text_col, threshold, shingle_n
     )
     if materialize:
         cand = cand.localCheckpoint(eager=True)

@@ -159,7 +159,7 @@ def reverse_geocode(
         (features_pdf["shape_type"] == 5)
         & (features_pdf["NAME_1"].astype(str) != "")
     ]
-    index = SJ.PolygonIndex(spark, feats, res)
+    index = SJ._index(spark, feats, res)
 
     centroids = spark.createDataFrame(
         pd.DataFrame(

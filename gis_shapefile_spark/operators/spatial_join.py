@@ -36,7 +36,10 @@ Scale design (10^12-point table, dimension-scale polygon side):
 
 from __future__ import annotations
 
+import hashlib
 import math
+import pickle
+import threading
 
 import numpy as np
 import pandas as pd
@@ -406,14 +409,36 @@ def point_in_polygon_left_join(
     return _pip_rows(points, _index(spark, features_pdf, res), lng_col, lat_col, "left")
 
 
+# (content digest, res) -> the index built from that content, all in one
+# SparkSession: the first lookup from another session empties it. The
+# lock covers streaming batch threads that build indexes too.
+_INDEXES: dict[tuple[str, int], PolygonIndex] = {}
+_INDEXES_LOCK = threading.Lock()
+
+
 def _index(spark: SparkSession, features: pd.DataFrame | PolygonIndex,
            res: int) -> PolygonIndex:
-    """``features`` itself when it is a prebuilt index, else a new one."""
-    if not isinstance(features, PolygonIndex):
-        return PolygonIndex(spark, features, res)
-    if features.res != res and res != DEFAULT_RES:
-        raise ValueError("res conflicts with the prebuilt PolygonIndex")
-    return features
+    """``features`` itself when it is a prebuilt index, else the session's
+    index of that content at ``res``, built on first use.
+
+    The key is a digest of the whole pickled frame, attributes included,
+    so an equal frame reuses the index and any edit misses it (a layout
+    difference may miss too, never hit). The index is built from its own
+    unpickled copy, which a later in-place edit of the caller's frame
+    cannot reach.
+    """
+    if isinstance(features, PolygonIndex):
+        if features.res != res and res != DEFAULT_RES:
+            raise ValueError("res conflicts with the prebuilt PolygonIndex")
+        return features
+    blob = pickle.dumps(features, protocol=pickle.HIGHEST_PROTOCOL)
+    key = (hashlib.sha256(blob).hexdigest(), res)
+    with _INDEXES_LOCK:
+        for k in [k for k, ix in _INDEXES.items() if ix.spark is not spark]:
+            del _INDEXES[k]
+        if key not in _INDEXES:
+            _INDEXES[key] = PolygonIndex(spark, pickle.loads(blob), res)
+        return _INDEXES[key]
 
 
 def _keyed_points(points: DataFrame, lng_col: str, lat_col: str, res: int) -> DataFrame:
@@ -771,7 +796,6 @@ def bbox_join(
         pd.DataFrame(rows, columns=["cell", "record_number", "minx", "miny", "maxx", "maxy"]),
         _BOX_DDL,
     )
-    n = 1 << res
     q = (
         queries.withColumn("__x0", F.expr(C.axis_index_sql("qminx", 180.0, 360.0, res, "spark")))
         .withColumn("__x1", F.expr(C.axis_index_sql("qmaxx", 180.0, 360.0, res, "spark")))
@@ -779,14 +803,7 @@ def bbox_join(
         .withColumn("__y1", F.expr(C.axis_index_sql("qmaxy", 90.0, 180.0, res, "spark")))
         .withColumn("__xi", F.explode(F.sequence("__x0", "__x1")))
         .withColumn("__yi", F.explode(F.sequence("__y0", "__y1")))
-        .withColumn(
-            "__cell",
-            F.expr(
-                f"({res << C.RES_SHIFT} | "
-                f"{C._spread_sql('__xi', 'spark')} | "
-                f"shiftleft({C._spread_sql('__yi', 'spark')}, 1))"
-            ),
-        )
+        .withColumn("__cell", F.expr(C.pack_xy_sql("__xi", "__yi", res, "spark")))
     )
     out = (
         q.join(F.broadcast(dim), q["__cell"] == dim["cell"], "inner")

@@ -208,7 +208,8 @@ class CheckpointTable:
         self._commit(m)
         return entry
 
-    def stage(self, name: str, fingerprint: str, fn, metrics=None) -> DataFrame:
+    def stage(self, name: str, fingerprint: str, fn, metrics=None,
+              lineage: str | None = None) -> DataFrame:
         """Run-or-resume one pipeline stage.
 
         ``fn() -> DataFrame`` is executed only when no committed version of
@@ -221,6 +222,9 @@ class CheckpointTable:
         .cast("long"))}``) are observed IN-FLIGHT during the write via
         Spark's Observation API — data-quality numbers land in the
         manifest without a second pass over the data.
+
+        ``lineage`` (optional) names the stream lineage that committed
+        the stage; the entry records it (``streaming/sink.py::fold_sink``).
         """
         if self.completed(name, fingerprint):
             return self.read_stage(name)
@@ -256,6 +260,7 @@ class CheckpointTable:
             "wall_s": round(time.time() - t0, 3),
             "committed_at_version": m["version"],
             "metrics": observed,
+            "lineage": lineage,
         }
         self._commit(m)
         return self.spark.read.parquet(final)

@@ -80,4 +80,5 @@ def streaming_merge_sink(
             current = spark.createDataFrame([], batch_df.select(*cols).schema)
         return MG.merge_upsert(current, batch_df, key_cols, delete_col=delete_col)
 
-    return fold_sink(updates_stream, table, stage_name, checkpoint_dir, fold)
+    return fold_sink(updates_stream, table, stage_name, checkpoint_dir, fold,
+                     idempotent=True)

@@ -19,11 +19,14 @@ lineage id and one fold-into-stage.
 * ``fold_sink`` — fold each micro-batch into one committed
   ``CheckpointTable`` stage: ``fold(committed or None, batch)`` returns
   the new stage, committed under the fingerprint
-  ``ck=<lineage_id>|batch:<id>``. A replayed batch finds its
-  fingerprint already committed and neither reads nor folds anything —
-  exactly-once at the manifest level on top of the stream checkpoint
-  (Armbrust et al., "Structured Streaming", SIGMOD 2018: idempotent
-  ``foreachBatch`` writes keyed by batch id).
+  ``ck=<lineage_id>|batch:<id>`` with the lineage id in its manifest
+  entry. A replayed batch finds its fingerprint already committed and
+  neither reads nor folds anything — exactly-once at the manifest level
+  on top of the stream checkpoint (Armbrust et al., "Structured
+  Streaming", SIGMOD 2018: idempotent ``foreachBatch`` writes keyed by
+  batch id). A new lineage re-delivers every file of the feed, so a
+  fold that is not idempotent (a count) refuses a stage another lineage
+  committed instead of counting those files again.
 
 Single-writer: a stage belongs to ONE stream at a time, like the
 table's ``vacuum``/``compact`` contract.
@@ -98,17 +101,34 @@ def fold_sink(
     stage_name: str,
     checkpoint_dir: str,
     fold: Callable[[DataFrame | None, DataFrame], DataFrame],
+    *,
+    idempotent: bool,
 ) -> StreamingQuery:
     """Drain ``stream``, folding each micro-batch into the committed
     ``stage_name`` of ``table`` (a ``CheckpointTable``):
     ``fold(committed_or_None, batch_df)`` returns the new stage. Returns
-    the terminated query."""
+    the terminated query.
+
+    ``idempotent`` says whether folding the feed's files again, in order,
+    leaves the stage as it was (an upsert, an elementwise max). Only such
+    a fold continues a stage committed by another lineage (a wiped or new
+    stream checkpoint, which re-delivers every file); any other fold
+    raises there, before it reads the batch."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
+        lineage = lineage_id(checkpoint_dir)
+        entry = table.manifest()["stages"].get(stage_name)
+        if not idempotent and entry is not None and entry.get("lineage") != lineage:
+            raise RuntimeError(
+                f"stage {stage_name!r} was committed by stream lineage "
+                f"{entry.get('lineage')!r}, not {lineage!r}: a new stream "
+                "checkpoint re-delivers the feed, and this fold would count "
+                "it again")
         table.stage(
             stage_name,
-            f"ck={lineage_id(checkpoint_dir)}|batch:{batch_id}",
+            f"ck={lineage}|batch:{batch_id}",
             lambda: fold(committed_stage(table, stage_name), batch_df),
+            lineage=lineage,
         )
 
     return drain_batches(stream, checkpoint_dir, process)

@@ -42,4 +42,5 @@ def streaming_hll_sink(
         batch_grid = SK.hll_build(batch_df, item_col, group_cols=group_cols)
         return batch_grid if committed is None else SK.hll_merge(committed, batch_grid)
 
-    return fold_sink(items_stream, table, stage_name, checkpoint_dir, fold)
+    return fold_sink(items_stream, table, stage_name, checkpoint_dir, fold,
+                     idempotent=True)

@@ -47,10 +47,11 @@ def streaming_pyramid_sink(
     ``stage_name`` pyramid snapshot of ``table`` (a ``CheckpointTable``).
 
     Single-writer: the sink commits under ``stage_name`` itself, so one
-    stage belongs to ONE stream; restarting with a fresh stream
-    checkpoint continues the existing snapshot, and a fresh checkpoint
-    over the same feed re-delivers every file and counts it again.
-    Returns the (terminated) StreamingQuery.
+    stage belongs to ONE stream lineage. A fresh stream checkpoint over
+    the same feed would re-deliver every file and count it again, so its
+    first batch raises instead (``sink.fold_sink``, not idempotent);
+    restarting on the same checkpoint continues the snapshot. Returns
+    the (terminated) StreamingQuery.
     """
 
     def fold(current, batch_df: DataFrame) -> DataFrame:
@@ -64,4 +65,5 @@ def streaming_pyramid_sink(
         )
         return MG.merge_upsert(current, delta, ["res", "cell"])
 
-    return fold_sink(points_stream, table, stage_name, checkpoint_dir, fold)
+    return fold_sink(points_stream, table, stage_name, checkpoint_dir, fold,
+                     idempotent=False)

@@ -374,6 +374,22 @@ def test_demorton_roundtrip_three_way(spark, res):
     assert ((sp.cy.to_numpy() >= miny) & (sp.cy.to_numpy() < maxy)).all()
 
 
+@pytest.mark.parametrize("dialect", ["spark", "duckdb"])
+@pytest.mark.parametrize("res", [0, 8, 11, 26])
+def test_key_sql_grows_linearly_with_bits(res, dialect):
+    """A key quotes its input once per bit, not once per step of a
+    doubling chain: a chain puts 32 copies of each quantize expression
+    into ``cell_sql`` and of the morton into ``cell_axis_sql``, and
+    planning a key costs in proportion to its text."""
+    key = C.cell_sql("lng_in", "lat_in", res, dialect)
+    for coord in ("lng_in", "lat_in"):
+        axis = key.count(f"floor((({coord})")
+        assert 1 <= axis <= max(res, 1), (coord, axis)
+    assert key.count("floor(") <= 2 * max(res, 1)
+    for axis in ("x", "y"):
+        assert C.cell_axis_sql("cell_in", axis, dialect).count("cell_in") <= C.MAX_RES
+
+
 def _parent_probe_points(res: int) -> tuple[np.ndarray, np.ndarray]:
     """Random points, points on (and one ulp off) cell and sub-cell
     borders at res+3, and points at and beyond the ±180/±90 clamp."""

@@ -286,7 +286,9 @@ def test_gate_records_one_machine_readable_row_per_query(spark, monkeypatch):
     failures = CC.check_queries(spark, con, "", verbose=False, records=records)
     assert [f.split(":")[0] for f in failures] == ["red"]
     for rec in records:
-        assert isinstance(rec.pop("spark_s"), float)
+        build_s, spark_s = rec.pop("build_s"), rec.pop("spark_s")
+        assert isinstance(build_s, float) and isinstance(spark_s, float)
+        assert build_s <= spark_s
     assert records == [
         {"name": "green", "ok": True, "spark_rows": 3, "oracle_rows": 3},
         {"name": "red", "ok": False, "spark_rows": 3, "oracle_rows": 2},

@@ -93,82 +93,6 @@ def test_near_duplicate_pairs_lsh(spark, docs_df):
     assert pairs[(0, 1)] == expected
 
 
-def _brute_jaccard_pairs(docs: list, t: float, n: int = 3) -> dict:
-    """All-pairs python-set oracle: {(id_1, id_2): jaccard_u >= t}."""
-    sets = {i: set(_shingles(txt, n)) for i, txt in docs}
-    out = {}
-    for i, si in sets.items():
-        for j, sj in sets.items():
-            if i < j and si and sj:
-                jac = len(si & sj) / len(si | sj)
-                if jac >= t:
-                    out[(i, j)] = int(np.floor(1e6 * jac))
-    return out
-
-
-def test_jaccard_prefix_join_matches_bruteforce(spark):
-    """Prefix-filtering candidate generation is provably complete for
-    Jaccard >= t: the full join must EQUAL the all-pairs oracle (both
-    directions — no missed pair, no extra pair), on a corpus with exact
-    dups, token-drop/substitution near-dups at several sizes, and
-    unrelated docs sharing common shingles."""
-    rng = np.random.default_rng(11)
-    vocab = [f"w{k}" for k in range(120)]
-    docs = []
-    did = 0
-    for base in range(30):
-        toks = list(rng.choice(vocab, size=int(rng.integers(8, 40))))
-        docs.append((did, " ".join(toks)))
-        did += 1
-        kind = base % 3
-        if kind == 0:  # exact duplicate
-            docs.append((did, " ".join(toks)))
-            did += 1
-        elif kind == 1:  # drop one token: high-but-lossy overlap
-            docs.append((did, " ".join(toks[1:])))
-            did += 1
-        # kind == 2: singleton
-    for t in (0.5, 0.8):
-        expected = _brute_jaccard_pairs(docs, t)
-        df = spark.createDataFrame(
-            pd.DataFrame(docs, columns=["doc_id", "text"])
-        )
-        got = {
-            (r.id_1, r.id_2): r.jaccard_u
-            for r in DD.jaccard_join_prefix(df, threshold=t).collect()
-        }
-        assert got == expected, (
-            t,
-            sorted(set(expected) - set(got))[:5],
-            sorted(set(got) - set(expected))[:5],
-        )
-        assert expected, "degenerate fixture: oracle found no pairs"
-
-
-def test_jaccard_prefix_plan_is_equi_join_only(spark, docs_df):
-    """The exact join must never degrade to an all-pairs plan: every join
-    in the physical plan is a hash/sort-merge EQUI join (prefix-shingle
-    key or verify-stage id keys) — no cartesian product, no nested-loop
-    fallback, at any size."""
-    out = DD.jaccard_join_prefix(docs_df, threshold=0.5, materialize=False)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_jaccard_prefix_join_docs_fixture(spark, docs_df):
-    """On the shared DOCS fixture the exact join finds the exact-dup and
-    the near-dup pair with the same jaccard_u values as the LSH path's
-    verify stage, and never pairs dissimilar or sub-shingle docs."""
-    pairs = {
-        (r.id_1, r.id_2): r.jaccard_u
-        for r in DD.jaccard_join_prefix(docs_df, threshold=0.5).collect()
-    }
-    assert pairs == _brute_jaccard_pairs(DOCS, 0.5)
-    assert pairs[(0, 3)] == 1000000
-    assert not any(4 in p or 5 in p for p in pairs)
-
-
 def test_lsh_max_bucket_caps_degenerate_buckets(spark):
     # 30 copies of the same text -> one bucket of 30; cap at 10 kills it
     pdf = pd.DataFrame(

@@ -661,6 +661,56 @@ def test_pip_anti_join_is_exact_complement(spark, features, points_pdf):
     assert anti_ids and oracle_in  # both sides non-trivial on the fixture
 
 
+# --- one polygon index per (session, features content, res) ----------------
+
+def test_index_shared_by_content_equal_frames(spark):
+    """Two frames with equal content, built apart, share one index."""
+    a, b = FX.make_features(), FX.make_features()
+    assert a is not b
+    assert SJ._index(spark, a, 8) is SJ._index(spark, b, 8)
+    prebuilt = SJ.PolygonIndex(spark, a, 8)
+    assert SJ._index(spark, prebuilt, 8) is prebuilt
+
+
+def test_index_rebuilt_on_edit_res_and_session(spark):
+    feats = FX.make_features()
+    first = SJ._index(spark, feats, 8)
+    assert SJ._index(spark, feats, 7) is not first
+    assert SJ._index(spark, feats, 7).res == 7
+    feats.loc[feats.index[0], "num_attr"] = -1.5
+    edited = SJ._index(spark, feats, 8)
+    assert edited is not first
+    # the first index kept its own copy of the frame
+    assert first.features_pdf["num_attr"].iloc[0] != -1.5
+    assert edited.features_pdf["num_attr"].iloc[0] == -1.5
+    other = spark.newSession()
+    theirs = SJ._index(other, feats, 8)
+    assert theirs is not edited and theirs.spark is other
+    # seeing the other session's entry drops it: one session's entries only
+    mine = SJ._index(spark, feats, 8)
+    assert mine is not theirs and mine is not edited and mine.spark is spark
+
+
+def test_pip_attrs_follow_an_in_place_edit(spark, features, points_pdf):
+    """After the caller edits its frame in place, the joined attributes
+    are the caller's new values, not those of the index built before."""
+    feats = features.copy()
+    points = spark.createDataFrame(points_pdf)
+
+    def names():
+        got = SJ.point_in_polygon_join(spark, points, feats, res=8, attrs=["NAME_1"])
+        return {(r.record_number, r.NAME_1) for r in got.collect()}
+
+    want = dict(zip(feats["record_number"], feats["NAME_1"]))
+    before = names()
+    assert before and all(want[rec] == name for rec, name in before)
+    hit = next(iter(before))[0]
+    feats.loc[feats["record_number"] == hit, "NAME_1"] = "Edited"
+    after = names()
+    assert {rec for rec, _ in after} == {rec for rec, _ in before}
+    assert all(name == ("Edited" if rec == hit else want[rec]) for rec, name in after)
+
+
 # --- sub-cell masks + SQL ray-cast: exactness and plan shape ----------------
 
 EX_RES = 8

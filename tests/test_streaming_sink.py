@@ -11,7 +11,8 @@ add a new file, rerun at the same path with ``maxFilesPerTrigger`` at
 least the file count (so the fresh batch 0 carries the new rows), then
 compare the committed state against one batch pass over every file.
 The merge and HLL folds are idempotent, so re-folding the old file
-cannot move their state.
+cannot move their state. The pyramid fold counts, so a fresh lineage
+over its stage must raise rather than count the old file again.
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ from gis_shapefile_spark.sources import fixtures as FX
 from gis_shapefile_spark.streaming import geocode_stream as GS
 from gis_shapefile_spark.streaming import merge_stream as MS
 from gis_shapefile_spark.streaming import sketch_stream as SS
+from gis_shapefile_spark.streaming import tiles_stream as TS
 
 
 def _stream(spark, feed, schema):
@@ -90,6 +92,34 @@ def test_hll_sink_survives_checkpoint_wipe(spark, tmp_path):
     got = {r.bucket: r.r for r in table.read_stage("hll").collect()}
     exp = SK.hll_build(spark.read.parquet(feed), "token").collect()
     assert got == {r.bucket: r.r for r in exp}
+
+
+def test_pyramid_sink_refuses_a_new_lineage(spark, tmp_path):
+    """A wiped checkpoint re-delivers the one-file feed; the pyramid
+    counts points, so the rerun raises and the stage keeps its 100."""
+    table = CheckpointTable(spark, str(tmp_path / "tbl"))
+    feed, ckpt = str(tmp_path / "feed"), str(tmp_path / "ckpt")
+    spark.createDataFrame(
+        [(-110.0 + i * 0.1, 30.0 + i * 0.05) for i in range(100)], "lng double, lat double"
+    ).coalesce(1).write.parquet(feed)
+
+    def run():
+        TS.streaming_pyramid_sink(
+            spark, _stream(spark, feed, "lng double, lat double"), table, "pyr", [8], ckpt)
+
+    def n_points():
+        return sum(r.n_points for r in table.read_stage("pyr").collect())
+
+    run()
+    entry = table.manifest()["stages"]["pyr"]
+    assert n_points() == 100 and entry["lineage"] in entry["fingerprint"]
+    run()  # same lineage, nothing new: no commit, no raise
+    version = table.manifest()["version"]
+    shutil.rmtree(ckpt)
+    with pytest.raises(Exception, match="committed by stream lineage"):
+        run()
+    assert table.manifest()["version"] == version
+    assert n_points() == 100
 
 
 @pytest.fixture(scope="module")

@@ -123,20 +123,24 @@ def check_queries(spark, con, sf_dir: str, only=None, verbose=True,
     the same dtype-class + value-hash contract the driver checks.
 
     ``records``, when given, gets one dict per query run: ``name``,
-    ``ok`` (None when the query has no oracle), ``spark_s``,
-    ``spark_rows`` and ``oracle_rows`` (None where that side failed)."""
+    ``ok`` (None when the query has no oracle), ``build_s`` (seconds
+    until the query function returned its DataFrame), ``spark_s`` (that
+    plus collecting it), ``spark_rows`` and ``oracle_rows`` (None where
+    that side failed)."""
     qs, oracles = E.queries(), E.oracle_sql()
     failures: list[str] = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        rec = {"name": name, "ok": False, "spark_s": None,
+        rec = {"name": name, "ok": False, "build_s": None, "spark_s": None,
                "spark_rows": None, "oracle_rows": None}
         if records is not None:
             records.append(rec)
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            df = fn(spark, sf_dir)
+            rec["build_s"] = round(time.time() - t0, 3)
+            sdf = df.toPandas()
         except Exception as exc:  # noqa: BLE001
             failures.append(f"{name}: spark error: {exc}")
             if verbose:
@@ -211,6 +215,8 @@ def main() -> int:
     records: list[dict] = []
     failures = check_queries(spark, con, sf_dir, only=only, records=records)
     print(json.dumps(records))
+    for key in ("build_s", "spark_s"):
+        print(f"SUM {key}: {sum(r[key] or 0 for r in records):.1f}")
     print("FAILURES:", len(failures))
     return 1 if failures else 0
 
